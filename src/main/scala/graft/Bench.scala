@@ -123,6 +123,39 @@ object Bench {
       else (s(s.size / 2 - 1) + s(s.size / 2)) / 2
     }
 
+  /** `%.<digits>f` of `v` in `Locale.ROOT`: the JVM-default locale
+    * would print a comma decimal under e.g. de_DE and break the JSON
+    * Bench writes. */
+  private[graft] def fixed(v: Double, digits: Int): String =
+    String.format(java.util.Locale.ROOT, s"%.${digits}f", Double.box(v))
+
+  /** Bench's last stdout line: one JSON object, parsed by the harness
+    * that runs Bench. `queries` is the full per-query map (name ->
+    * reported seconds, -1.0 = failed row), kept on stdout because the
+    * per-query comparison (PERF geomean, regressions, the scaling block)
+    * reads only this line; compact 3-decimal floats keep it ~12 KB for 384 rows.
+    * `headline` repeats the 8 spotlight rows for cross-round continuity.
+    * gate_blockers/anchor_ratio carry the self-check verdict
+    * (anchor_ratio 0 = no anchors loaded). */
+  private[graft] def totalLine(total: Double, queries: Seq[(String, Double)],
+      artifactBuildSec: Double, gateBlockers: Int, exonerated: Int,
+      drift: Double, anchorRatio: Double, failed: Int, anchorMissing: Int,
+      sfDir: String): String = {
+    val headline = Seq("t_q01", "t_q05", "t_q18", "c_join_5way",
+      "h_minhash_lsh_dedup", "h_cosine_topk", "h_ngram_jaccard", "g_session_30m")
+    val hq = queries.filter { case (k, _) => headline.contains(k) }
+      .map { case (k, v) => s"\"" + k + "\":" + v }.mkString("{", ",", "}")
+    val qsc = queries.map { case (k, v) => "\"" + k + "\":" + fixed(v, 3) }
+      .mkString("{", ",", "}")
+    s"""{"metric":"total","value":$total,"unit":"sec",""" +
+      s""""queries":$qsc,"headline":$hq,""" +
+      s""""artifact_build_sec":${fixed(artifactBuildSec, 2)},""" +
+      s""""gate_blockers":$gateBlockers,"exonerated_host":$exonerated,""" +
+      s""""host_drift":${fixed(drift, 2)},"anchor_ratio":${fixed(anchorRatio, 2)},""" +
+      s""""failed":$failed,"anchor_missing":$anchorMissing,""" +
+      s""""sf":"$sfDir"}"""
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
@@ -584,7 +617,7 @@ object Bench {
         }
         val d = m1.zip(m0).map { case (a, b) => a - b }
         evidence(name) =
-          f"""{"wall_sec":$eSec%.2f,"ok":$eOk,"task_run_ms":${d(0)},""" +
+          s"""{"wall_sec":${fixed(eSec, 2)},"ok":$eOk,"task_run_ms":${d(0)},""" +
             s""""task_gc_ms":${d(1)},"shuffle_read_mb":${d(2) / 1048576},""" +
             s""""shuffle_write_mb":${d(3) / 1048576},""" +
             s""""fetch_wait_ms":${d(4)},"shuffle_write_ms":${d(5)},""" +
@@ -686,15 +719,15 @@ object Bench {
       val dir = java.nio.file.Paths.get("target")
       java.nio.file.Files.createDirectories(dir)
       val ws = warmSec.entrySet().asScala.toSeq.sortBy(_.getKey)
-        .map(e => s"\"" + e.getKey + "\":" + f"${e.getValue}%.2f")
+        .map(e => s"\"" + e.getKey + "\":" + fixed(e.getValue, 2))
         .mkString("{", ",", "}")
       val rs = retrySec.toSeq
         .map { case (k, vs) =>
-          s"\"" + k + "\":" + vs.map(v => f"$v%.2f").mkString("[", ",", "]")
+          s"\"" + k + "\":" + vs.map(fixed(_, 2)).mkString("[", ",", "]")
         }
         .mkString("{", ",", "}")
       val raws = rawSec.toSeq
-        .map { case (k, v) => s"\"" + k + "\":" + f"$v%.2f" }
+        .map { case (k, v) => s"\"" + k + "\":" + fixed(v, 2) }
         .mkString("{", ",", "}")
       // per-row warm CPU (task run time attributed via job group) —
       // paired with warm_sec's wall, this separates "expensive row"
@@ -703,14 +736,14 @@ object Bench {
         .filter(_.getKey.startsWith("warm:"))
         .map(e => e.getKey.substring(5) -> e.getValue.get() / 1e3)
         .sortBy(_._1)
-        .map { case (k, v) => s"\"" + k + "\":" + f"$v%.2f" }
+        .map { case (k, v) => s"\"" + k + "\":" + fixed(v, 2) }
         .mkString("{", ",", "}")
       val fl = failed.toSeq
         .map { case (k, v) => s"\"" + k + "\":" + v }.mkString("{", ",", "}")
       val ev = evidence.toSeq
         .map { case (k, v) => s"\"" + k + "\":" + v }.mkString("{", ",", "}")
       val am = anchorMissing.map("\"" + _ + "\"").mkString("[", ",", "]")
-      val cs = canaryReadings.map(v => f"$v%.3f").mkString("[", ",", "]")
+      val cs = canaryReadings.map(fixed(_, 3)).mkString("[", ",", "]")
       val ex = exonerated.map("\"" + _._1 + "\"").mkString("[", ",", "]")
       java.nio.file.Files.write(dir.resolve("bench_full.json"),
         (s"""{"metric":"per_query","queries":$qs,"sf":"$sfDir",""" +
@@ -719,46 +752,25 @@ object Bench {
           s""""warm_sec":$ws,""" +
           s""""warm_cpu_sec":$wcpu,""" +
           s""""warm_wall_sec":$warmWallSec,""" +
-          f""""artifact_build_sec":$artifactBuildSec%.2f,""" +
+          s""""artifact_build_sec":${fixed(artifactBuildSec, 2)},""" +
           s""""raw_sec":$raws,""" +
           s""""retry_sec":$rs,""" +
           s""""failed":$fl,""" +
           s""""evidence":$ev,""" +
           s""""anchor_missing":$am,""" +
           s""""canary_sec":$cs,""" +
-          f""""canary_anchor":$canaryAnchor%.3f,""" +
-          f""""host_drift":$drift%.3f,""" +
+          s""""canary_anchor":${fixed(canaryAnchor, 3)},""" +
+          s""""host_drift":${fixed(drift, 3)},""" +
           s""""exonerated_host":$ex,""" +
           s""""gate_blockers":${gateBlockers.length},""" +
           s""""deadline_hit":$deadlineHit,""" +
           s""""phase_c_deadline_hit":$phaseCDeadlineHit}""")
           .getBytes(java.nio.charset.StandardCharsets.UTF_8))
     } catch { case _: Throwable => () }
-    val headline = Seq("t_q01", "t_q05", "t_q18", "c_join_5way",
-      "h_minhash_lsh_dedup", "h_cosine_topk", "h_ngram_jaccard", "g_session_30m")
-    val hq = results.filter { case (k, _, _) => headline.contains(k) }
-      .map { case (k, v, _) => s"\"" + k + "\":" + v }.mkString("{", ",", "}")
-    // Full per-query map ON STDOUT (r15 VERDICT item 1): the driver's
-    // per-query comparison (PERF geomean, regressions, the scaling
-    // block) reads only this line — the r1-era worry that a full map
-    // would truncate the driver's stdout capture no longer holds at
-    // compact 3-decimal floats (~12 KB for 384 rows). `headline` stays
-    // for cross-round continuity of the 8 spotlight rows. Values are
-    // the same reported seconds as bench_full.json's `queries`
-    // (min over successful attempts; -1.0 = failed row).
-    val qsc = results.map { case (k, v, _) => "\"" + k + "\":" + f"$v%.3f" }
-      .mkString("{", ",", "}")
-    // gate_blockers/anchor_ratio carry the self-check verdict into the
-    // driver-captured line (anchor_ratio 0 = no anchors loaded).
     val anchorRatio = if (anchorTotal > 0) total / anchorTotal else 0.0
-    println(s"""{"metric":"total","value":$total,"unit":"sec",""" +
-      s""""queries":$qsc,"headline":$hq,""" +
-      f""""artifact_build_sec":$artifactBuildSec%.2f,""" +
-      f""""gate_blockers":${gateBlockers.length},""" +
-      f""""exonerated_host":${exonerated.length},""" +
-      f""""host_drift":$drift%.2f,"anchor_ratio":$anchorRatio%.2f,""" +
-      s""""failed":${failed.size},"anchor_missing":${anchorMissing.length},""" +
-      s""""sf":"$sfDir"}""")
+    println(totalLine(total, results.map { case (k, v, _) => (k, v) },
+      artifactBuildSec, gateBlockers.length, exonerated.length, drift,
+      anchorRatio, failed.size, anchorMissing.length, sfDir))
     spark.stop()
   }
 }

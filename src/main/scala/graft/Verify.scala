@@ -67,7 +67,8 @@ object Verify {
     var drift = 0
     expected.foreach { case (t, cols) =>
       try {
-        // raw footer read (NOT Io.table — the point is the physical type)
+        // raw footer read (NOT Io.table — the point is the physical type,
+        // so it bypasses the catalog's schema cache on purpose)
         val sch = spark.read.parquet(s"$sfDir/$t.parquet").schema
         val got = sch.fields.map(f => f.name -> f.dataType.simpleString).toMap
         cols.foreach { case (c, want) =>

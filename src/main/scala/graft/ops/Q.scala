@@ -342,11 +342,12 @@ object Q {
     * run under the block-manager and GC pressure of hundreds of dead
     * sf0.001 artifacts — measured as a ~2× across-the-board inflation
     * of the r5 bench. Correctness-neutral: a released artifact simply
-    * rebuilds on next use.
+    * rebuilds on next use. The session's `Io.views` frames go too.
     */
   def releaseSession(s: SparkSession): Unit = {
     val sid = System.identityHashCode(s)
     pctlScratch.remove(sid) // blocks unpersisted below with everything else
+    graft.io.Io.releaseSession(s)
     val it = memo.keySet.iterator()
     while (it.hasNext) if (it.next()._1 == sid) it.remove()
     val lit = buildLocks.keySet.iterator()

@@ -65,8 +65,7 @@ object TpchOps {
     * register equivalent checkpointed frames; last wins). */
   private def psView(s: SparkSession, d: String): String = {
     val view = s"ps_cat_${Q.dirDigest(d)}"
-    Q.memoized(s, d, "tpchPsCat") {
-      Io.views(s, d)
+    Q.memoized(s, d, "tpchPsCat") { // callers register the views first
       val df = Q.materialize(s, d, "tpchPsCat")(s.sql(psDerivation))
       df.createOrReplaceTempView(view)
       df

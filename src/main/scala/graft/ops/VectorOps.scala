@@ -249,7 +249,7 @@ object VectorOps {
     * machinery. `prefix` keeps the two rows' materialize labels
     * distinct. */
   private def hnswVisitedByHop(s: SparkSession, d: String, mat: Boolean,
-      prefix: String, matEvery: Int = 1): (Seq[DataFrame], DataFrame, DataFrame) = {
+      prefix: String): (Seq[DataFrame], DataFrame, DataFrame) = {
     val edges = hnswEdges(s, d)
     val e = withDoubles(s, d)
       .select(col("vec_id"), col("dv"), sqrt(dot(col("dv"), col("dv"))).as("nrm"))
@@ -257,16 +257,15 @@ object VectorOps {
       .select(col("vec_id").as("q_id"), col("dv").as("qv"), col("nrm").as("qn"))
     val en = e.select(col("vec_id").as("node"), col("dv").as("nv"),
       col("nrm").as("nn"))
-    // matEvery = 2 checkpoints every SECOND hop (plus hop 0 and the
-    // final hop): an un-checkpointed hop's subtree re-evaluates twice
-    // inside the next hop's build (beam window + union — the BFS
-    // lesson), but the doubling is contained by the surrounding
-    // checkpoints, trading one bounded recompute for one fewer eager
-    // materialization job per skipped hop (r15 VERDICT item 6).
-    def m(h: Int, name: String)(df: DataFrame): DataFrame =
-      if (mat && (h % matEvery == 0 || h == hnswH))
-        Q.materialize(s, d, name)(df)
-      else df
+    // Every hop is checkpointed. Measured and rejected (r16): a
+    // `matEvery = 2` knob that checkpointed every SECOND hop (plus hop 0
+    // and the final hop) to save one eager materialization job per
+    // skipped hop probed 2.10-2.33 s steady vs 2.06-2.09 s with all four
+    // checkpoints — the skipped hop's subtree (distinct shuffle + score
+    // join) re-evaluates twice inside the next hop's build (beam window
+    // + union — the BFS lesson) and costs more than the saved job.
+    def m(name: String)(df: DataFrame): DataFrame =
+      if (mat) Q.materialize(s, d, name)(df) else df
     // examined r15, left planner-chosen: forcing broadcast(candidates)
     // per hop measured SLOWER (2.26 → 3.01 s) — AQE already broadcasts
     // the vector frame once and REUSES that exchange across hops, while
@@ -285,13 +284,13 @@ object VectorOps {
         Seq("band", "band_val"))
       .filter(col("q_id") =!= col("node"))
       .select("q_id", "node").distinct()
-    val visited0 = m(0, s"${prefix}0")(score(seeds))
+    val visited0 = m(s"${prefix}0")(score(seeds))
     val visiteds = (1 to hnswH).scanLeft(visited0) { (vis, h) =>
       val beam = vis.withColumn("rn", row_number().over(wBeam))
         .filter(col("rn") <= hnswB).select(col("q_id"), col("node"))
       val cand = beam.join(edges.withColumnRenamed("src", "node"), "node")
         .select(col("q_id"), col("dst").as("node")).distinct()
-      m(h, s"$prefix$h")(vis.unionByName(score(cand))
+      m(s"$prefix$h")(vis.unionByName(score(cand))
         .select("q_id", "node", "sim").distinct())
     }
     (visiteds, q, en)
@@ -312,11 +311,6 @@ object VectorOps {
   }
 
   private def hnswSearch(s: SparkSession, d: String, mat: Boolean): DataFrame = {
-    // examined r16 (VERDICT item 6), kept at per-hop materialization:
-    // matEvery = 2 (skip hop 1's checkpoint) probed 2.10-2.33 s steady
-    // vs 2.06-2.09 s with all four checkpoints — the skipped hop's
-    // subtree (distinct shuffle + score join) re-evaluates twice inside
-    // hop 2's build and costs more than the one saved eager job.
     val (visiteds, q, en) = hnswVisitedByHop(s, d, mat, "hnswVis")
     val visited = visiteds.last
     val wBeam = Window.partitionBy(col("q_id"))
