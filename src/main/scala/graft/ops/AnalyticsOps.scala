@@ -27,11 +27,15 @@ object AnalyticsOps {
   /** The Markov-attribution transition matrices, one per variant
     * (variant, src, dst, p): journeys truncated at first purchase,
     * per-channel removal redirects transitions into the channel to
-    * DROP, CONV/DROP get absorbing self-loops. Exposed un-materialized
-    * so PlanShapeSpec can pin the journey-window build shape (the
-    * checked query memoizes + materializes it — bfsDistBuildForPlan
-    * precedent). */
-  private[graft] def markovM0Build(s: org.apache.spark.sql.SparkSession,
+    * DROP, CONV/DROP get absorbing self-loops. Memoized and
+    * materialized: the squaring chain reads it twice per stage. */
+  private[graft] def markovM0(s: org.apache.spark.sql.SparkSession,
+      d: String): org.apache.spark.sql.DataFrame =
+    Q.memoized(s, d, "mkvM0") {
+      Q.materialize(s, d, "mkvM0")(markovM0Build(s, d))
+    }
+
+  private def markovM0Build(s: org.apache.spark.sql.SparkSession,
       d: String) = {
     val wu = Window.partitionBy(col("user_id"))
       .orderBy(col("ts_us"), col("event_id"))
@@ -3759,9 +3763,7 @@ object AnalyticsOps {
       // (the i_graph_bfs lesson; measured 29 s cold at sf0.1, 1.5 s
       // materialized). The stages are ≤~200-row metadata; the memo also
       // shares the chain across the session.
-      val m0 = Q.memoized(s, d, "mkvM0") {
-        Q.materialize(s, d, "mkvM0")(markovM0Build(s, d))
-      }
+      val m0 = markovM0(s, d)
       def sq(k: Int, m: org.apache.spark.sql.DataFrame) =
         Q.memoized(s, d, s"mkvM$k") {
           Q.materialize(s, d, s"mkvM$k")(

@@ -63,21 +63,12 @@ object DedupOps {
     * Consumers group/join on `mask` (valid for both types) and pick the
     * matching Jaccard kernel via [[maskJaccard]].
     */
-  private def docMasks(s: SparkSession, d: String): DataFrame =
-    Q.memoized(s, d, "docMasks") { docMasksBuild(s, d) }
+  private[graft] def docMasks(s: SparkSession, d: String): DataFrame =
+    Q.memoized(s, d, "docMasks") {
+      Q.materialize(s, d, "docMasks") { docMasksBuild(s, d) }
+    }
 
-  private def docMasksBuild(s: SparkSession, d: String): DataFrame =
-    Q.materialize(s, d, "docMasks") { docMasksBuildBody(s, d, mat = true) }
-
-  /** The memoized+materialized docMasks truncates lineage; mat=false
-    * exposes the un-materialized BUILD plan for shape pins (the wide
-    * route must read as ONE map-side ngram_set_mask projection over a
-    * broadcast vocabulary — no per-token explode/groupBy, no cartesian).
-    */
-  private[graft] def docMasksBuildForPlan(s: SparkSession, d: String): DataFrame =
-    docMasksBuildBody(s, d, mat = false)
-
-  private def docMasksBuildBody(s: SparkSession, d: String, mat: Boolean): DataFrame = {
+  private def docMasksBuild(s: SparkSession, d: String): DataFrame = {
     // The bench corpus is one parquet file → a 1-task scan, so the
     // explode/join would run single-threaded without the repartition
     // (at 100 TB the scan itself is parallel and this is a no-op cost-
@@ -95,11 +86,9 @@ object DedupOps {
     // final collect reducer is bounded by the vocabulary domain, never
     // by the data. Materialized so the scalar width probe below and
     // the mask build don't recompute it.
-    val vocabArr =
-      if (mat) Q.materialize(s, d, "docMasksVocab") {
-        tok.agg(sort_array(collect_set(col("token"))).as("varr"))
-      }
-      else tok.agg(sort_array(collect_set(col("token"))).as("varr"))
+    val vocabArr = Q.materialize(s, d, "docMasksVocab") {
+      tok.agg(sort_array(collect_set(col("token"))).as("varr"))
+    }
     val nVocab = vocabArr.select(size(col("varr"))).head.getInt(0)
     if (nVocab <= 64) {
       // single-long fast path (shiftleft wraps mod 64 — valid exactly
@@ -151,23 +140,20 @@ object DedupOps {
     * h_ngram_jaccard and h_minhash_widevocab.
     */
   private def bigramMasks(s: SparkSession, d: String): DataFrame =
-    Q.memoized(s, d, "bigramMasks") { bigramMasksBuild(s, d, mat = true) }
+    Q.memoized(s, d, "bigramMasks") { bigramMasksBuild(s, d) }
 
-  /** mat=false leaves the full lineage visible for plan-shape tests. */
-  private def bigramMasksBuild(s: SparkSession, d: String, mat: Boolean): DataFrame = {
+  private def bigramMasksBuild(s: SparkSession, d: String): DataFrame = {
     graft.functions.ExplodeNgrams.register(s)
     graft.functions.NgramSetMask.register(s)
-    def m(name: String)(df: DataFrame): DataFrame =
-      if (mat) Q.materialize(s, d, name)(df) else df
     val docs = Io.table(s, d, "documents")
       .repartition(s.sparkContext.defaultParallelism)
-    val vocabRow = m("bigramVocab") {
+    val vocabRow = Q.materialize(s, d, "bigramVocab") {
       docs.select(expr("explode_ngrams(text, 2)").as("b"))
         .agg(sort_array(collect_set(col("b"))).as("varr"))
     }
     val nWords = math.max(1,
       (vocabRow.select(size(col("varr"))).head.getInt(0) + 63) / 64)
-    m("bigramMasksTable") {
+    Q.materialize(s, d, "bigramMasksTable") {
       docs.crossJoin(broadcast(vocabRow))
         .select(col("doc_id"), col("lang"),
           expr(s"ngram_set_mask(text, varr, 2, $nWords)").as("mask"))
@@ -202,30 +188,19 @@ object DedupOps {
       |      / CAST(len(list_distinct(a.bg || b.bg)) AS DOUBLE) >= 0.9
       |ORDER BY doc_a, doc_b""".stripMargin
 
-  private def widevocabPairs(s: SparkSession, d: String): DataFrame =
+  private[graft] def widevocabPairs(s: SparkSession, d: String): DataFrame =
     Q.memoized(s, d, "widevocabPairs") {
-      Q.materialize(s, d, "widevocabPairs") {
-        widevocabPairsBuild(s, d, mat = true)
-      }
+      Q.materialize(s, d, "widevocabPairs") { widevocabPairsBuild(s, d) }
     }
 
-  /** The un-checkpointed wide-vocab pipeline for plan tests (mat=false
-    * also bypasses the materialized mask artifact, so the WHOLE lineage
-    * — shingling, masks, signatures, band join — is one visible plan). */
-  private[graft] def widevocabPairsBuildForPlan(s: SparkSession, d: String): DataFrame =
-    widevocabPairsBuild(s, d, mat = false)
-
-  /** Prefix-postings build for h_prefix_filter_pairs — exposed
-    * un-materialized so PlanShapeSpec can pin the build's shape (the
-    * memoized artifact truncates lineage). The rarity order the prefix
-    * cut needs is simply (document frequency, bigram): a total order
+  /** Prefix-postings build for h_prefix_filter_pairs. The rarity order
+    * the prefix cut needs is simply (document frequency, bigram): a total order
     * over the vocabulary that sorts INSIDE the doc-keyed window — no
     * vocab-wide rank (and so no single-partition WindowExec) exists
     * anywhere in the build. The df table attaches by a b-keyed
     * equi-join; AQE broadcasts it while it fits and falls back to a
     * shuffle join once the vocabulary outgrows the threshold. */
-  private[graft] def prefixPostingsBuildForPlan(
-      s: SparkSession, d: String): DataFrame = {
+  private def prefixPostingsBuild(s: SparkSession, d: String): DataFrame = {
     graft.functions.ExplodeNgrams.register(s)
     // per-doc distinct-bigram count read off the memoized masks
     // (popcount sum) — no second pass over the corpus
@@ -245,21 +220,19 @@ object DedupOps {
       .select("doc_id", "b", "n")
   }
 
-  private def widevocabPairsBuild(s: SparkSession, d: String, mat: Boolean): DataFrame = {
+  private def widevocabPairsBuild(s: SparkSession, d: String): DataFrame = {
     graft.functions.MinHashSig.register(s)
-    def m(name: String)(df: DataFrame): DataFrame =
-      if (mat) Q.materialize(s, d, name)(df) else df
     val numHashes = 64; val bands = 16; val rowsPerBand = numHashes / bands
     // empty shingle sets (single-token docs) drop out: a zero mask
     // would contract with other zero masks into fake j=1 pairs while
     // the oracle's 0/0 Jaccard is NULL — mirror its len(bg) > 0 cut.
-    val masks = (if (mat) bigramMasks(s, d) else bigramMasksBuild(s, d, mat = false))
+    val masks = bigramMasks(s, d)
       .filter(expr("exists(mask, x -> x != 0)"))
       .select(col("doc_id"), col("mask"))
-    val nodeIds = m("wv_nodes") {
+    val nodeIds = Q.materialize(s, d, "wv_nodes") {
       masks.groupBy(col("mask")).agg(min(col("doc_id")).as("nid"))
     }
-    val docNode = m("wv_docNode") {
+    val docNode = Q.materialize(s, d, "wv_docNode") {
       masks.join(nodeIds, "mask").select(col("doc_id"), col("nid"))
     }
     val toksC = split(col("text"), " ")
@@ -280,7 +253,7 @@ object DedupOps {
         (0 until rowsPerBand).map(r => element_at(col("sig"), b * rowsPerBand + r + 1)): _*),
         lit(b))
     }: _*)
-    val reps = m("wv_reps") {
+    val reps = Q.materialize(s, d, "wv_reps") {
       nodeIds.join(t, nodeIds("nid") === t("doc_id"))
         .withColumn("sig", expr(s"minhash_sig(bg, $numHashes)"))
         .select(col("nid"), col("mask"), posexplode(bandHashes).as(Seq("band", "bh")))
@@ -314,11 +287,11 @@ object DedupOps {
     * (P[miss | j ≥ 0.9] = (1 − 0.9⁴)¹⁶ ≈ 3.6e-8), node contraction on
     * identical token sets before banding, exact mask-Jaccard verify on
     * band collisions, membership-join pair reconstitution (never
-    * collect_list). With `byLang` the contraction, candidate join and
-    * output all carry the language (pairs must agree on it); without,
-    * pairs span languages — exactly the two oracle contracts.
+    * collect_list). With `byLang` the output carries the language and
+    * keeps only pairs that agree on it; without, pairs span languages —
+    * exactly the two oracle contracts.
     */
-  private def minhashNearDupPairs(s: SparkSession, d: String,
+  private[graft] def minhashNearDupPairs(s: SparkSession, d: String,
       byLang: Boolean): DataFrame =
     // memoized per variant: the j >= 0.9 pair table feeds
     // h_minhash_lsh_dedup + h_incremental_dedup (byLang=false) and
@@ -331,9 +304,7 @@ object DedupOps {
     // single most expensive artifact in the dedup chain).
     Q.memoized(s, d, s"minhashPairs:$byLang") {
       if (!byLang)
-        Q.materialize(s, d, "minhashPairsAll") {
-          minhashNearDupPairsBuild(s, d, byLang = false, mat = true)
-        }
+        Q.materialize(s, d, "minhashPairsAll") { minhashNearDupPairsBuild(s, d) }
       else Q.materialize(s, d, "minhashPairsLang") {
         val langs = graft.io.Io.table(s, d, "documents")
           .select(col("doc_id"), col("lang"))
@@ -345,19 +316,7 @@ object DedupOps {
       }
     }
 
-  /** The un-checkpointed pair pipeline, for plan-shape tests: the
-    * memoized value's lineage is truncated by localCheckpoint, so the
-    * candidate-join shape (native minhash_sig, (band, hash) equi-join,
-    * no cartesian) is only visible on the build plan. Note: production
-    * same-lang pairs are derived by lang-filtering the byLang=false
-    * table (see minhashNearDupPairs); the byLang=true BUILD path is
-    * retained here solely so plan tests can pin the shape of a
-    * language-carrying banding pipeline. */
-  private[graft] def minhashPairsBuildForPlan(s: SparkSession, d: String,
-      byLang: Boolean): DataFrame = minhashNearDupPairsBuild(s, d, byLang)
-
-  private def minhashNearDupPairsBuild(s: SparkSession, d: String,
-      byLang: Boolean, mat: Boolean = false): DataFrame = {
+  private def minhashNearDupPairsBuild(s: SparkSession, d: String): DataFrame = {
     val numHashes = 64; val bands = 16; val rowsPerBand = numHashes / bands
     graft.functions.MinHashSig.register(s)
     graft.functions.DotProduct.register(s) // bitmask_jaccard (wide-vocab masks)
@@ -368,54 +327,38 @@ object DedupOps {
         (0 until rowsPerBand).map(r => element_at(col("sig"), b * rowsPerBand + r + 1)): _*),
         lit(b))
     }: _*)
-    // r16 (guide §1.2-1): with mat=true the twice/4×-consumed build
-    // frames checkpoint once — reps feeds BOTH self-join sides (the
-    // native 64-hash minhash_sig over every rep's token set ran twice),
-    // docNode feeds memA, memB and both within-group sides. Sizes are
-    // bounded: reps = nodes×bands rows, docNode = |docs| rows. The
-    // ForPlan twin keeps mat=false so plan pins see the full lineage.
-    def m(name: String)(df: DataFrame): DataFrame =
-      if (mat) Q.scratch(name)(df) else df
-    val grpKeys = if (byLang) Seq("lang", "mask") else Seq("mask")
-    val masks = docMasks(s, d).select(("doc_id" +: grpKeys).map(col): _*)
-    val nodeIds = masks.groupBy(grpKeys.map(col): _*).agg(min(col("doc_id")).as("nid"))
-    val docNode = m("minhashDocNode")(
-      masks.join(nodeIds, grpKeys).select(col("doc_id"), col("nid")))
-    val langOf: Seq[Column] = if (byLang) Seq(col("lang")) else Nil
-    val reps = m("minhashReps")(nodeIds.join(t, nodeIds("nid") === t("doc_id"))
+    // r16 (guide §1.2-1): the twice/4×-consumed build frames scratch
+    // once — reps feeds BOTH self-join sides (the native 64-hash
+    // minhash_sig over every rep's token set ran twice), docNode feeds
+    // memA, memB and both within-group sides. Sizes are bounded:
+    // reps = nodes×bands rows, docNode = |docs| rows.
+    val masks = docMasks(s, d).select(col("doc_id"), col("mask"))
+    val nodeIds = masks.groupBy(col("mask")).agg(min(col("doc_id")).as("nid"))
+    val docNode = Q.scratch("minhashDocNode")(
+      masks.join(nodeIds, "mask").select(col("doc_id"), col("nid")))
+    val reps = Q.scratch("minhashReps")(nodeIds.join(t, nodeIds("nid") === t("doc_id"))
       .withColumn("sig", sig)
-      .select(Seq(col("nid"), col("mask")) ++ langOf :+
-        posexplode(bandHashes).as(Seq("band", "bh")): _*))
-    val aSide = reps.select(Seq(col("nid").as("na"), col("mask").as("ma"),
-      col("band"), col("bh")) ++ (if (byLang) Seq(col("lang").as("la")) else Nil): _*)
-    val bSide = reps.select(Seq(col("nid").as("nb"), col("mask").as("mb"),
-      col("band").as("band_b"), col("bh").as("bh_b")) ++
-      (if (byLang) Seq(col("lang").as("lb")) else Nil): _*)
-    val cond0 = col("band") === col("band_b") && col("bh") === col("bh_b") &&
-      col("na") < col("nb")
-    val cond = if (byLang) cond0 && col("la") === col("lb") else cond0
-    val nodePairs = aSide.join(bSide, cond)
+      .select(col("nid"), col("mask"), posexplode(bandHashes).as(Seq("band", "bh"))))
+    val aSide = reps.select(col("nid").as("na"), col("mask").as("ma"),
+      col("band"), col("bh"))
+    val bSide = reps.select(col("nid").as("nb"), col("mask").as("mb"),
+      col("band").as("band_b"), col("bh").as("bh_b"))
+    val nodePairs = aSide.join(bSide,
+        col("band") === col("band_b") && col("bh") === col("bh_b") &&
+          col("na") < col("nb"))
       .withColumn("j", maskJaccard(masks, "ma", "mb"))
       .filter(col("j") >= 0.9)
-      .select(Seq(col("na"), col("nb"), r6(col("j")).as("jaccard")) ++
-        (if (byLang) Seq(col("la").as("lang")) else Nil): _*)
+      .select(col("na"), col("nb"), r6(col("j")).as("jaccard"))
       .distinct()
     val memA = docNode.select(col("nid").as("na"), col("doc_id").as("da"))
     val memB = docNode.select(col("nid").as("nb"), col("doc_id").as("db"))
     val cross = nodePairs.join(memA, "na").join(memB, "nb")
-      .select(Seq(least(col("da"), col("db")).as("doc_a"),
-        greatest(col("da"), col("db")).as("doc_b"), col("jaccard")) ++ langOf: _*)
-    val withinBase = docNode.select(col("nid"), col("doc_id").as("da"))
+      .select(least(col("da"), col("db")).as("doc_a"),
+        greatest(col("da"), col("db")).as("doc_b"), col("jaccard"))
+    val within = docNode.select(col("nid"), col("doc_id").as("da"))
       .join(docNode.select(col("nid"), col("doc_id").as("db")), "nid")
       .filter(col("da") < col("db"))
-    val within =
-      if (byLang)
-        withinBase.join(nodeIds.select(col("nid"), col("lang")), "nid")
-          .select(col("da").as("doc_a"), col("db").as("doc_b"),
-            lit(1.0).as("jaccard"), col("lang"))
-      else
-        withinBase.select(col("da").as("doc_a"), col("db").as("doc_b"),
-          lit(1.0).as("jaccard"))
+      .select(col("da").as("doc_a"), col("db").as("doc_b"), lit(1.0).as("jaccard"))
     cross.union(within)
   }
 
@@ -970,7 +913,7 @@ object DedupOps {
       // would otherwise re-execute the tok/df/window chain twice
       val prefix = Q.memoized(s, d, "prefixPostings") {
         Q.materialize(s, d, "prefixPostings")(
-          prefixPostingsBuildForPlan(s, d))
+          prefixPostingsBuild(s, d))
       }
       // size filter INSIDE the candidate join (postings carry n): at
       // τ=0.9 the 10·min ≥ 9·max cut discards most in-bucket pairs

@@ -274,8 +274,7 @@ object EtlOps {
           SnapshotStore.readVersion(s, root, 0), cur,
           "o_orderkey", Seq("o_totalprice"))
         SnapshotStore.writeVersion(merged, root, 1)
-        System.err.println(f"[artifact] snapOrders built in ${
-          (System.nanoTime() - t0) / 1e9}%.2f s")
+        Q.logArtifact("snapOrders", t0)
         s.range(1).toDF("marker")
       }
       val prev = SnapshotStore.readVersion(s, root, 0)

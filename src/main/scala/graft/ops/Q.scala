@@ -18,6 +18,21 @@ final case class Q(
     fn: (SparkSession, String) => DataFrame,
     oracle: Option[String])
 
+/** Shared query helpers, and the one scratch lifecycle.
+  *
+  * Every eager checkpoint in the engine goes through one private path,
+  * `checkpoint`: an eager `localCheckpoint` at MEMORY_AND_DISK_SER, one
+  * `[artifact]` stderr line, and the checkpoint's RDD id recorded for
+  * its session. [[materialize]] (local store), [[scratch]] and
+  * [[rankScratch]] are its only callers. Artifacts stay pinned until
+  * [[releaseSession]]; scratch checkpoints share one per-session cap of
+  * 32, beyond which the oldest is unpersisted. [[releaseSession]]
+  * unpersists exactly the ids its session recorded, so sessions sharing
+  * a SparkContext never free each other's blocks. [[memoized]] keys
+  * artifacts by session, so a fresh `newSession()` rebuilds them — the
+  * way `graft.BuildPlans` captures a production build's checkpoint
+  * plans for PlanShapeSpec and PlanDump.
+  */
 object Q {
 
   /** Exact, accumulation-order-independent sum of a double column: cast
@@ -56,49 +71,6 @@ object Q {
     */
   def coin(id: String): String =
     s"(CAST($id AS DECIMAL(38,0)) * 2654435761) % 4294967296"
-
-  // uniquifies the per-call ranked-table artifact name (two queries may
-  // rank the same (key, v) pair; the artifact is per-execution scratch,
-  // never shared)
-  private val pctlSeq = new java.util.concurrent.atomic.AtomicInteger(0)
-
-  // Per-session registry of the percentile ranked-table scratch
-  // checkpoints, so a long session repeatedly CONSTRUCTING percentile
-  // queries does not accumulate pinned storage until releaseSession /
-  // ContextCleaner GC (r11 ADVICE): the oldest scratch beyond the cap
-  // is unpersisted eagerly. The cap (32) is far above any
-  // construct-many-then-run-the-first window a real caller has — an
-  // unpersisted localCheckpoint cannot recompute (lineage truncated),
-  // so a consumer must not hold >32 un-run percentile queries before
-  // running the first; every harness caller (Verify/Bench/specs) runs
-  // each query as it is built.
-  private val pctlScratch = new java.util.concurrent.ConcurrentHashMap[
-    Int, java.util.ArrayDeque[org.apache.spark.rdd.RDD[_]]]
-  private val PctlScratchCap = 32
-
-  private def trackPctlScratch(s: SparkSession, df: DataFrame): Unit =
-    try {
-      df.queryExecution.logical match {
-        case l: org.apache.spark.sql.execution.LogicalRDD =>
-          val dq = pctlScratch.computeIfAbsent(System.identityHashCode(s),
-            _ => new java.util.ArrayDeque[org.apache.spark.rdd.RDD[_]])
-          dq.synchronized {
-            dq.addLast(l.rdd)
-            while (dq.size > PctlScratchCap) dq.pollFirst().unpersist(false)
-          }
-        case _ => ()
-      }
-    } catch { case scala.util.control.NonFatal(_) => () }
-
-  /** Unpersist every tracked percentile scratch checkpoint of session
-    * `s` — the scoped release hook for callers that construct many
-    * percentile queries and are done consuming them. */
-  def releasePercentileScratch(s: SparkSession): Unit = {
-    val dq = pctlScratch.remove(System.identityHashCode(s))
-    if (dq != null) dq.synchronized {
-      while (!dq.isEmpty) dq.pollFirst().unpersist(false)
-    }
-  }
 
   /** Exact interpolated percentiles (QUANTILE_CONT semantics — identical
     * interpolation to Spark's holistic `percentile`/`median` and
@@ -219,25 +191,16 @@ object Q {
     * a separate input-sized checkpoint (guide §1.2-1/§5). Carries every
     * column of `df` (callers project first — guide §2.3); adds `_pid`
     * (range partition id) and `_lrn` (row_number per (partition, key)
-    * ordered by v). Always a localCheckpoint, never the parquet
-    * artifact store: input-sized, per-call-unique scratch. */
+    * ordered by v). A [[scratch]], never the parquet artifact store:
+    * input-sized, per-call-unique. */
   def rankScratch(df: DataFrame, key: String, v: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val s = df.sparkSession
-    val parts = s.sparkContext.defaultParallelism
+    val parts = df.sparkSession.sparkContext.defaultParallelism
     val wLoc = Window.partitionBy(col("_pid"), col(key)).orderBy(col(v))
-    val t0 = System.nanoTime()
-    val out = df
+    scratch(s"pctl_${key}_$v")(df
       .repartitionByRange(parts, col(key), col(v))
       .withColumn("_pid", spark_partition_id())
-      .withColumn("_lrn", row_number().over(wLoc))
-      .localCheckpoint(true,
-        org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
-    System.err.println(f"[artifact] pctl_${key}_${v}_" +
-      f"${pctlSeq.incrementAndGet()} built in " +
-      f"${(System.nanoTime() - t0) / 1e9}%.2f s")
-    trackPctlScratch(s, out)
-    out
+      .withColumn("_lrn", row_number().over(wLoc)))
   }
 
   /** Percentile selection over a [[rankScratch]] result: per-key offset
@@ -334,27 +297,33 @@ object Q {
     }
   }
 
-  /** Drop every memoized artifact of session `s` and unpersist all of
-    * its persistent RDDs. Bench calls this between the sf0.001 warm-up
-    * sweep and the timed pass: the memo's strong references keep every
-    * warm-up artifact's checkpoint blocks alive (ContextCleaner only
-    * reaps unreferenced RDDs), so without the release the timed queries
-    * run under the block-manager and GC pressure of hundreds of dead
-    * sf0.001 artifacts — measured as a ~2× across-the-board inflation
-    * of the r5 bench. Correctness-neutral: a released artifact simply
-    * rebuilds on next use. The session's `Io.views` frames go too.
+  /** Drop every memoized artifact of session `s` and unpersist the
+    * checkpoints `s` made — only those: other sessions on the same
+    * SparkContext keep their memo entries AND the blocks behind them.
+    * Bench calls this between the sf0.001 warm-up sweep and the timed
+    * pass: the memo's strong references keep every warm-up artifact's
+    * checkpoint blocks alive (ContextCleaner only reaps unreferenced
+    * RDDs), so without the release the timed queries run under the
+    * block-manager and GC pressure of hundreds of dead sf0.001
+    * artifacts — measured as a ~2× across-the-board inflation of the r5
+    * bench. Correctness-neutral: a released artifact simply rebuilds on
+    * next use. The session's `Io.views` frames go too.
     */
   def releaseSession(s: SparkSession): Unit = {
     val sid = System.identityHashCode(s)
-    pctlScratch.remove(sid) // blocks unpersisted below with everything else
     graft.io.Io.releaseSession(s)
     val it = memo.keySet.iterator()
     while (it.hasNext) if (it.next()._1 == sid) it.remove()
     val lit = buildLocks.keySet.iterator()
     while (lit.hasNext) if (lit.next()._1 == sid) lit.remove()
-    // blocking: let the removal storm finish HERE, not asynchronously
-    // under the first timed queries
-    s.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
+    val c = checkpoints.remove(sid)
+    if (c != null) {
+      val ids = c.synchronized(c.artifacts.toSeq ++ c.scratch)
+      val live = s.sparkContext.getPersistentRDDs
+      // blocking: let the removal storm finish HERE, not asynchronously
+      // under the first timed queries
+      ids.foreach(id => live.get(id).foreach(_.unpersist(blocking = true)))
+    }
   }
 
   /** Collision-resistant corpus-directory digest for artifact naming:
@@ -371,11 +340,11 @@ object Q {
       .take(6).map(b => f"$b%02x").mkString
   }
 
-  /** Root-convention path for corpus-derived artifact DIRECTORIES that
-    * live outside the memo/materialize flow (derived CSV/JSON copies,
-    * partitioned-parquet layouts, snapshot roots): one spelling of the
-    * artifact root + corpus prefix, so a convention change lands
-    * everywhere at once. */
+  /** Root-convention path for corpus-derived artifact DIRECTORIES —
+    * [[materialize]]'s parquet store and the copies that live outside
+    * the memo (derived CSV/JSON copies, partitioned-parquet layouts,
+    * snapshot roots): one spelling of the artifact root + corpus
+    * prefix, so a convention change lands everywhere at once. */
   def artifactPath(s: SparkSession, d: String, name: String): String = {
     val base = s.conf.get("spark.graft.artifactDir",
       sys.props("java.io.tmpdir") + "/graft-artifacts")
@@ -392,69 +361,107 @@ object Q {
     try s.conf.get("spark.graft.artifactStore", "local")
     catch { case _: Throwable => "local" }
 
-  /** Per-execution SCRATCH checkpoint (r16, ADVICE r15): always a
-    * localCheckpoint, NEVER the parquet artifact store — for frames that
-    * are consumed more than once inside ONE query execution but are not
-    * pipeline artifacts (d_agg_cms_freq's per-user count table). In
-    * parquet store mode `materialize` would write such a frame to the
-    * shared store and read it back once — at large user cardinality the
-    * store becomes the bottleneck the query exists to avoid. Same
-    * serialized storage level and [artifact] log line as materialize's
-    * local branch. */
-  def scratch(name: String)(df: DataFrame): DataFrame = {
+  /** RDD ids of the checkpoints one session made. `artifacts` (the
+    * local store of [[materialize]]) live until [[releaseSession]];
+    * `scratch` ([[scratch]], [[rankScratch]]) keeps only the newest
+    * [[ScratchCap]] — the oldest beyond the cap is unpersisted at once.
+    * Ids, not RDD references: an unreferenced checkpoint stays
+    * reapable by ContextCleaner. */
+  private final class Checkpoints {
+    val artifacts = scala.collection.mutable.ArrayBuffer.empty[Int]
+    val scratch = scala.collection.mutable.Queue.empty[Int]
+  }
+  private val checkpoints =
+    new java.util.concurrent.ConcurrentHashMap[Int, Checkpoints]
+
+  /** Scratch checkpoints a session keeps pinned. Far above any
+    * construct-many-then-run-the-first window a real caller has — an
+    * evicted localCheckpoint cannot recompute (lineage truncated), so a
+    * consumer must not hold more than 32 un-run scratch-backed queries
+    * before running the first; every harness (Verify/Bench/specs) runs
+    * each query as it is built. */
+  private val ScratchCap = 32
+
+  /** The scratch RDD ids session `s` currently tracks, oldest first. */
+  private[graft] def trackedScratch(s: SparkSession): Seq[Int] = {
+    val c = checkpoints.get(System.identityHashCode(s))
+    if (c == null) Nil else c.synchronized(c.scratch.toList)
+  }
+
+  /** THE eager checkpoint: serialized blocks, not deserialized row
+    * objects — a bench run accumulates ~50 artifact checkpoints, and
+    * deserialized MEMORY_AND_DISK (the localCheckpoint default) keeps
+    * millions of live row objects in old gen (the r8 GC log showed
+    * 8-10 s young pauses copying them). MEMORY_AND_DISK_SER stores
+    * compact byte buffers (GC cost ~ number of blocks, not rows) at a
+    * small per-read deserialization cost. Prints the one [artifact]
+    * line and records the checkpoint's RDD id for its session. */
+  private def checkpoint(name: String, scratch: Boolean)(df: DataFrame): DataFrame = {
     val t0 = System.nanoTime()
     val out = df.localCheckpoint(true,
       org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
-    System.err.println(
-      f"[artifact] $name built in ${(System.nanoTime() - t0) / 1e9}%.2f s")
+    logArtifact(name, t0)
+    val s = df.sparkSession
+    val c = checkpoints.computeIfAbsent(System.identityHashCode(s),
+      _ => new Checkpoints)
+    out.queryExecution.logical.collectFirst {
+      case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd.id
+    }.foreach { id =>
+      val evicted = c.synchronized {
+        if (!scratch) { c.artifacts += id; None }
+        else {
+          c.scratch.enqueue(id)
+          if (c.scratch.size > ScratchCap) Some(c.scratch.dequeue()) else None
+        }
+      }
+      evicted.foreach(e =>
+        s.sparkContext.getPersistentRDDs.get(e).foreach(_.unpersist(false)))
+    }
     out
   }
+
+  /** Per-execution SCRATCH checkpoint (r16, ADVICE r15): always the
+    * local checkpoint, NEVER the parquet artifact store — for frames
+    * that are consumed more than once inside ONE query execution but
+    * are not pipeline artifacts (d_agg_cms_freq's per-user count
+    * table). In parquet store mode `materialize` would write such a
+    * frame to the shared store and read it back once — at large user
+    * cardinality the store becomes the bottleneck the query exists to
+    * avoid. Counts against the session's [[ScratchCap]]. */
+  def scratch(name: String)(df: DataFrame): DataFrame =
+    checkpoint(name, scratch = true)(df)
 
   /** Materialize a pipeline-shared artifact (pair table, CC labels,
     * token masks). Two stores, chosen by the session conf
     * `spark.graft.artifactStore`:
     *
-    *  - `local` (default): `localCheckpoint(eager = true)` — blocks on
-    *    executor block managers. Fastest, right for single-JVM runs,
-    *    but the truncated lineage is unrecoverable if an executor dies:
-    *    NOT the cluster story.
-    *  - `parquet`: write-and-reread under `spark.graft.artifactDir`
-    *    (shared storage on a real cluster — HDFS/object store). Any
-    *    executor can re-read a lost partition from the store, the
-    *    artifact survives the session, and a downstream job (or a
-    *    fresh session — see ArtifactStoreSpec) can consume it without
-    *    recomputing the chain. The write is one extra pass over a
-    *    table that is already bounded (pairs/labels/masks are
-    *    corpus-artifact-sized, not input-sized).
+    *  - `local` (default): the eager [[checkpoint]] — blocks on
+    *    executor block managers, held until [[releaseSession]].
+    *    Fastest, right for single-JVM runs, but the truncated lineage
+    *    is unrecoverable if an executor dies: NOT the cluster story.
+    *  - `parquet`: write-and-reread at [[artifactPath]] (shared storage
+    *    on a real cluster — HDFS/object store). Any executor can
+    *    re-read a lost partition from the store, the artifact survives
+    *    the session, and a downstream job (or a fresh session — see
+    *    ArtifactStoreSpec) can consume it without recomputing the
+    *    chain. The write is one extra pass over a table that is already
+    *    bounded (pairs/labels/masks are corpus-artifact-sized, not
+    *    input-sized).
     *
     * The artifact file name folds in the input dir so two corpora never
-    * collide under one artifact root.
+    * collide under one artifact root. Either store prints one
+    * [artifact] line per build, so every bench total decomposes into
+    * build-vs-query time without external probes (VERDICT r6 item 5).
     */
-  def materialize(s: SparkSession, dir: String, name: String)(df: DataFrame): DataFrame = {
-    val t0 = System.nanoTime()
-    val out = storeMode(s) match {
+  def materialize(s: SparkSession, dir: String, name: String)(df: DataFrame): DataFrame =
+    storeMode(s) match {
       case "parquet" =>
-        val base = s.conf.get("spark.graft.artifactDir",
-          sys.props("java.io.tmpdir") + "/graft-artifacts")
-        val path = s"$base/${dirDigest(dir)}_$name"
+        val t0 = System.nanoTime()
+        val path = artifactPath(s, dir, name)
         df.write.mode("overwrite").parquet(path)
-        s.read.parquet(path)
-      case _ =>
-        // serialized blocks, not deserialized row objects: a bench run
-        // accumulates ~50 artifact checkpoints, and deserialized
-        // MEMORY_AND_DISK (the localCheckpoint default) keeps millions
-        // of live row objects in old gen — the r8 GC log showed 8-10 s
-        // young pauses copying them. MEMORY_AND_DISK_SER stores compact
-        // byte buffers (GC cost ~ number of blocks, not rows) at a
-        // small per-read deserialization cost on tables that are
-        // corpus-artifact-sized anyway.
-        df.localCheckpoint(true,
-          org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
+        val out = s.read.parquet(path)
+        logArtifact(name, t0)
+        out
+      case _ => checkpoint(name, scratch = false)(df)
     }
-    // one line per artifact build so every bench total decomposes into
-    // build-vs-query time without external probes (VERDICT r6 item 5)
-    System.err.println(
-      f"[artifact] $name built in ${(System.nanoTime() - t0) / 1e9}%.2f s")
-    out
-  }
 }

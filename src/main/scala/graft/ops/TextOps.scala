@@ -68,21 +68,18 @@ object TextOps {
     * vocab-size column in ONE broadcast row-set instead of a separate
     * one-row attach.
     */
-  private[ops] def nbModel(s: org.apache.spark.sql.SparkSession, d: String):
+  private[graft] def nbModel(s: org.apache.spark.sql.SparkSession, d: String):
       (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame) = {
     val model = Q.memoized(s, d, "nbModel") {
-      Q.materialize(s, d, "nbModel")(nbModelBuildForPlan(s, d))
+      Q.materialize(s, d, "nbModel")(nbModelBuild(s, d))
     }
     val priors = Q.memoized(s, d, "nbPriors") {
-      Q.materialize(s, d, "nbPriors")(nbPriorsBuildForPlan(s, d))
+      Q.materialize(s, d, "nbPriors")(nbPriorsBuild(s, d))
     }
     (model, priors)
   }
 
-  /** Un-memoized build twins, exposed so PlanShapeSpec can pin the
-    * BUILD shape (a materialized artifact truncates lineage to `Scan
-    * ExistingRDD` — the pqCodesBuildForPlan lesson). */
-  private[graft] def nbModelBuildForPlan(
+  private def nbModelBuild(
       s: org.apache.spark.sql.SparkSession, d: String):
       org.apache.spark.sql.DataFrame = {
     val dec12 = org.apache.spark.sql.types.DecimalType(38, 12)
@@ -104,7 +101,7 @@ object TextOps {
           .cast(dec12).cast("double").as("lp"))
   }
 
-  private[graft] def nbPriorsBuildForPlan(
+  private def nbPriorsBuild(
       s: org.apache.spark.sql.SparkSession, d: String):
       org.apache.spark.sql.DataFrame = {
     val dec12 = org.apache.spark.sql.types.DecimalType(38, 12)
@@ -1921,9 +1918,7 @@ object TextOps {
     * tokenizer-training job writes its vocab once). */
   private def bpeChain(s: org.apache.spark.sql.SparkSession,
       d: String): Seq[(org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame)] = {
-    val words = Q.memoized(s, d, "bpeWords") {
-      Q.materialize(s, d, "bpeWords")(bpeWordsBuildForPlan(s, d))
-    }
+    val words = bpeWords(s, d)
     def round(n: Int, t: org.apache.spark.sql.DataFrame) = {
       val b = Q.memoized(s, d, s"bpeB$n") {
         Q.materialize(s, d, s"bpeB$n")(bpeBestPair(t))
@@ -1940,15 +1935,17 @@ object TextOps {
   }
 
   /** The one CORPUS-sized pass of BPE training: scan → word-frequency
-    * hash aggregate → marker-delimited symbol strings. Exposed
-    * un-materialized so PlanShapeSpec can pin the build shape. */
-  private[graft] def bpeWordsBuildForPlan(s: org.apache.spark.sql.SparkSession,
+    * hash aggregate → marker-delimited symbol strings, memoized and
+    * materialized per corpus. */
+  private[graft] def bpeWords(s: org.apache.spark.sql.SparkSession,
       d: String): org.apache.spark.sql.DataFrame =
-    Io.table(s, d, "documents")
-      .select(explode(expr(
-        "regexp_extract_all(lower(text), '[a-z]+', 0)")).as("w"))
-      .groupBy(col("w")).agg(count(lit(1)).as("freq"))
-      .select(regexp_replace(col("w"), "(.)", "<$1>").as("ws"), col("freq"))
+    Q.memoized(s, d, "bpeWords") {
+      Q.materialize(s, d, "bpeWords")(Io.table(s, d, "documents")
+        .select(explode(expr(
+          "regexp_extract_all(lower(text), '[a-z]+', 0)")).as("w"))
+        .groupBy(col("w")).agg(count(lit(1)).as("freq"))
+        .select(regexp_replace(col("w"), "(.)", "<$1>").as("ws"), col("freq")))
+    }
 
   /** Argmax adjacent symbol pair by freq-weighted count, total-ordered
     * (cnt DESC, pair ASC) for a deterministic winner. Vocab-bounded. */

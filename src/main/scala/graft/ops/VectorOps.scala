@@ -218,14 +218,13 @@ object VectorOps {
     * the top-[[hnswM]] out-edges per node (sim DESC, dst tiebreak).
     * 100 TB shape: one (band, band_val) shuffle + one src-keyed window
     * — both key-partitioned; the stored graph is n×M rows. */
-  private def hnswEdges(s: SparkSession, d: String): DataFrame =
+  private[graft] def hnswEdges(s: SparkSession, d: String): DataFrame =
     Q.memoized(s, d, "hnswEdges") {
-      Q.materialize(s, d, "hnswEdges")(hnswEdgesBuildForPlan(s, d))
+      Q.materialize(s, d, "hnswEdges")(hnswEdgesBuild(s, d))
     }
 
-  /** The beam search over [[hnswEdges]] (shared by the checked query
-    * and the plan twin). Each query's visited set is SEEDED with its
-    * full scored LSH bucket (every candidate sharing ≥1 band — exactly
+  /** The beam search over [[hnswEdges]]. Each query's visited set is
+    * SEEDED with its full scored LSH bucket (every candidate sharing ≥1 band — exactly
     * h_ann_lsh's candidate scan), then the graph expands the top-B
     * beam H hops to recover what the bucket missed. Two cheaper seeds
     * were measured and rejected: a single global entry point strands
@@ -236,19 +235,17 @@ object VectorOps {
     * search cannot escape a bad seed). Per-query seeding with the
     * bucket's own scores is exactly the job HNSW's upper layers do in
     * the full algorithm; the checked numbers then show what the graph
-    * hops ADD over the pure-bucket path. With `mat = true` each hop's
-    * visited set is materialized (localCheckpoint via Q.materialize —
-    * the i_graph_bfs lesson: a step referenced twice, by the beam
-    * window AND the next union, re-evaluates 2^H times without it);
-    * `mat = false` keeps the full hop lineage visible to plan
-    * assertions. The per-hop deltas are queries × B×M rows —
-    * metadata-sized at any SF. */
+    * hops ADD over the pure-bucket path. Each hop's visited set is
+    * materialized (the i_graph_bfs lesson: a step referenced twice, by
+    * the beam window AND the next union, re-evaluates 2^H times without
+    * it). The per-hop deltas are queries × B×M rows — metadata-sized at
+    * any SF. */
   /** Core of the beam search: the per-hop visited sets (index 0 =
     * scored seeds) plus the query and node vector frames, so both the
     * headline row (final recall) and the hop curve consume ONE
     * machinery. `prefix` keeps the two rows' materialize labels
     * distinct. */
-  private def hnswVisitedByHop(s: SparkSession, d: String, mat: Boolean,
+  private def hnswVisitedByHop(s: SparkSession, d: String,
       prefix: String): (Seq[DataFrame], DataFrame, DataFrame) = {
     val edges = hnswEdges(s, d)
     val e = withDoubles(s, d)
@@ -264,8 +261,6 @@ object VectorOps {
     // checkpoints — the skipped hop's subtree (distinct shuffle + score
     // join) re-evaluates twice inside the next hop's build (beam window
     // + union — the BFS lesson) and costs more than the saved job.
-    def m(name: String)(df: DataFrame): DataFrame =
-      if (mat) Q.materialize(s, d, name)(df) else df
     // examined r15, left planner-chosen: forcing broadcast(candidates)
     // per hop measured SLOWER (2.26 → 3.01 s) — AQE already broadcasts
     // the vector frame once and REUSES that exchange across hops, while
@@ -284,13 +279,13 @@ object VectorOps {
         Seq("band", "band_val"))
       .filter(col("q_id") =!= col("node"))
       .select("q_id", "node").distinct()
-    val visited0 = m(s"${prefix}0")(score(seeds))
+    val visited0 = Q.materialize(s, d, s"${prefix}0")(score(seeds))
     val visiteds = (1 to hnswH).scanLeft(visited0) { (vis, h) =>
       val beam = vis.withColumn("rn", row_number().over(wBeam))
         .filter(col("rn") <= hnswB).select(col("q_id"), col("node"))
       val cand = beam.join(edges.withColumnRenamed("src", "node"), "node")
         .select(col("q_id"), col("dst").as("node")).distinct()
-      m(s"$prefix$h")(vis.unionByName(score(cand))
+      Q.materialize(s, d, s"$prefix$h")(vis.unionByName(score(cand))
         .select("q_id", "node", "sim").distinct())
     }
     (visiteds, q, en)
@@ -310,8 +305,8 @@ object VectorOps {
       .select(col("q_id"), col("node"))
   }
 
-  private def hnswSearch(s: SparkSession, d: String, mat: Boolean): DataFrame = {
-    val (visiteds, q, en) = hnswVisitedByHop(s, d, mat, "hnswVis")
+  private def hnswSearch(s: SparkSession, d: String): DataFrame = {
+    val (visiteds, q, en) = hnswVisitedByHop(s, d, "hnswVis")
     val visited = visiteds.last
     val wBeam = Window.partitionBy(col("q_id"))
       .orderBy(col("sim").desc, col("node"))
@@ -334,13 +329,7 @@ object VectorOps {
         col("n_scanned"), col("n_edges"))
   }
 
-  private[graft] def hnswSearchForPlan(s: SparkSession, d: String): DataFrame =
-    hnswSearch(s, d, mat = false)
-
-  /** Un-memoized build twin for the PlanShapeSpec pin (a materialized
-    * artifact truncates consumer lineage to Scan ExistingRDD — the
-    * pqCodesBuildForPlan lesson). */
-  private[graft] def hnswEdgesBuildForPlan(s: SparkSession, d: String): DataFrame = {
+  private def hnswEdgesBuild(s: SparkSession, d: String): DataFrame = {
     val sig = lshSigs(s, d)
     val cand = sig.select(col("vec_id").as("id_a"), col("band"), col("band_val"))
       .join(sig.select(col("vec_id").as("id_b"), col("band"), col("band_val")),
@@ -424,15 +413,12 @@ object VectorOps {
     * row_number exactly. The assert_true filter makes a ragged embedding
     * column fail LOUDLY in Spark (the DuckDB generate_series side would
     * diverge, not error). */
-  private def pqCodes(s: SparkSession, d: String): DataFrame =
+  private[graft] def pqCodes(s: SparkSession, d: String): DataFrame =
     Q.memoized(s, d, "pqCodes") {
-      Q.materialize(s, d, "pqCodes")(pqCodesBuildForPlan(s, d))
+      Q.materialize(s, d, "pqCodes")(pqCodesBuild(s, d))
     }
 
-  /** Un-materialized pqCodes BUILD pipeline — the shape PlanShapeSpec
-    * pins and PlanDump renders (the checked queries serve the memoized
-    * artifact, whose truncated lineage hides the build). */
-  private[graft] def pqCodesBuildForPlan(s: SparkSession, d: String): DataFrame = {
+  private def pqCodesBuild(s: SparkSession, d: String): DataFrame = {
     val (dim, nSubs) = pqDims(s, d)
     val e = Io.table(s, d, "embeddings")
       .filter(assert_true(size(col("embedding")) === dim,
@@ -1295,7 +1281,7 @@ object VectorOps {
     // Shape at 100 TB: the build is one (band, band_val) equi-join +
     // one src-keyed top-M window; each search hop touches ≤ queries ×
     // B×M rows; ground truth is per-QUERY linear, not all-pairs.
-    Q("h_ann_hnsw", (s, d) => hnswSearch(s, d, mat = true), Some(
+    Q("h_ann_hnsw", (s, d) => hnswSearch(s, d), Some(
       s"""WITH $duckSig,
          |cand AS (
          |  SELECT DISTINCT x.vec_id AS id_a, y.vec_id AS id_b
@@ -1395,7 +1381,7 @@ object VectorOps {
     // census; ground truth is the shared per-query linear scan. All
     // emitted values are integers or int/int divisions.
     Q("h_ann_hnsw_hops", (s, d) => {
-      val (visiteds, q, en) = hnswVisitedByHop(s, d, mat = true, "hnswHop")
+      val (visiteds, q, en) = hnswVisitedByHop(s, d, "hnswHop")
       val fh = visiteds.zipWithIndex.map { case (v, h) =>
         v.select(col("q_id"), col("node"), col("sim"), lit(h).as("fh"))
       }.reduce(_.unionByName(_))
@@ -2209,7 +2195,7 @@ object VectorOps {
     // (1−λ)·max_{s∈S} sim(d,s), λ = 0.7, 5 picks from the top-20
     // candidates of the dense arm. Scale split: the corpus-facing work
     // is ONE scan + fused top-20 (memoized mmrCand artifact; build
-    // shape pinned via the un-materialized twin) and a 20×20
+    // shape pinned on its captured build) and a 20×20
     // broadcast pair table (mmrPairs); the greedy loop is 5 unrolled
     // relational steps over those two bounded file-backed tables —
     // per-query cost is independent of corpus size. Float discipline:
@@ -2289,9 +2275,8 @@ object VectorOps {
 
   /** Top-20 dense candidates for the MMR row: one corpus scan + fused
     * top-k vs the broadcast query vector, relevance floor-snapped to
-    * integer micros. Memoized + materialized (the retrieval "model");
-    * the un-materialized twin below carries the plan shape. */
-  private def mmrCand(s: SparkSession, d: String): DataFrame =
+    * integer micros. Memoized + materialized (the retrieval "model"). */
+  private[graft] def mmrCand(s: SparkSession, d: String): DataFrame =
     Q.memoized(s, d, "mmrCand") {
       Q.materialize(s, d, "mmrCand")(mmrCandBuild(s, d))
     }
@@ -2307,11 +2292,6 @@ object VectorOps {
           .as("rel_u"))
       .orderBy(col("rel_u").desc, col("doc_id")).limit(20)
   }
-
-  /** Un-materialized twin for PlanShapeSpec (memoized artifacts
-    * truncate lineage — the pin must see the build, not the scan). */
-  def mmrCandBuildForPlan(s: SparkSession, d: String): DataFrame =
-    mmrCandBuild(s, d)
 
   /** 20×20 candidate pair similarities in integer micros — the
     * bounded broadcast self-join the greedy penalty terms read. */
@@ -2342,15 +2322,12 @@ object VectorOps {
     * materialized once per corpus (dim² values — broadcast-sized at any
     * corpus size; the data-sized work is one scan + one (i,j)-keyed
     * aggregate with map-side combine). */
-  private def pcaScatter(s: SparkSession, d: String): DataFrame =
+  private[graft] def pcaScatter(s: SparkSession, d: String): DataFrame =
     Q.memoized(s, d, "pcaScatter") {
-      Q.materialize(s, d, "pcaScatter")(pcaScatterBuildForPlan(s, d))
+      Q.materialize(s, d, "pcaScatter")(pcaScatterBuild(s, d))
     }
 
-  /** Un-materialized scatter BUILD pipeline — the shape PlanShapeSpec
-    * pins (the checked queries serve the memoized artifact, whose
-    * truncated lineage hides the build). */
-  private[graft] def pcaScatterBuildForPlan(s: SparkSession, d: String): DataFrame = {
+  private def pcaScatterBuild(s: SparkSession, d: String): DataFrame = {
     val long = pcaLong(s, d)
     val n = Io.table(s, d, "embeddings").agg(count(lit(1)).as("n"))
     // The two corpus-sized sums ride the integer-picounit spine

@@ -103,9 +103,10 @@ class PlanShapeSpec extends AnyFunSuite {
       (2L, words.take(70).mkString(" "), "en", "s0", 1L))
       .toDF("doc_id", "text", "lang", "source", "n_chars")
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")
-    val df = graft.ops.DedupOps.docMasksBuildForPlan(spark, dir)
-    df.collect()
-    val p = executedPlan(df)
+    // the production build: vocab checkpoint, width probe, mask
+    // checkpoint — each plan as it ran
+    val c = BuildPlans.capture(spark)(graft.ops.DedupOps.docMasks(_, dir))
+    val p = c.builds.map(_.plan).mkString("\n")
     // the native expression carries the mask build (vocab derivation
     // upstream still explodes+aggregates — that branch is vocabulary-
     // bounded); the single-long kernel (shiftleft sum) must be absent
@@ -116,34 +117,37 @@ class PlanShapeSpec extends AnyFunSuite {
     assert(!p.contains("CartesianProduct"),
       "unexpected cartesian (scalar vocab attach should broadcast):\n" + p.take(1500))
     // and the masks are array<long> of ceil(80/64) = 2 words
-    val row = df.select(col("mask")).head.getSeq[Long](0)
+    val row = c.rows.head.getSeq[Long](c.rows.head.fieldIndex("mask"))
     assert(row.length === 2, s"expected 2-long masks, got ${row.length}")
   }
 
   test("hnsw graph build keys on (band, band_val); search stays keyed") {
-    // Build twin (the artifact truncates consumer lineage): candidates
-    // come from the LSH (band, band_val) equi-join — a cartesian or a
-    // nested loop here means the band join degenerated. The degree cap
-    // is a src-keyed window, not a global sort.
-    val bp = executedPlan(graft.ops.VectorOps.hnswEdgesBuildForPlan(spark, sf))
-      .split("== Initial Plan ==").head
+    // Graph build, as captured from the production artifact (which
+    // truncates consumer lineage): candidates come from the LSH (band,
+    // band_val) equi-join — a cartesian or a nested loop here means the
+    // band join degenerated. The degree cap is a src-keyed window, not
+    // a global sort.
+    val bp = BuildPlans.capture(spark)(graft.ops.VectorOps.hnswEdges(_, sf))
+      .finalPlans
     assert(!bp.contains("CartesianProduct") &&
       !bp.contains("BroadcastNestedLoopJoin"),
       "hnsw graph build fell off the (band, band_val) equi-join")
-    // Search twin (the checked query materializes each hop's visited
-    // set — truncated lineage): every hop is a keyed join; no
-    // cartesian anywhere. BNLJ count is not asserted on the twin — the
-    // un-materialized fold duplicates the sanctioned one-row entry
-    // attach per referencing subtree (exactly why the checked query
-    // materializes per hop).
-    val sp = executedPlan(graft.ops.VectorOps.hnswSearchForPlan(spark, sf))
-      .split("== Initial Plan ==").head
+    // The checked query on a fresh session: the graph build and every
+    // hop's visited-set checkpoint run as captured plans — every hop is
+    // a keyed join; no cartesian and, with each hop checkpointed, no
+    // nested-loop join at all (the one-row entry attach lives in the
+    // consumer plan below).
+    val search = BuildPlans.capture(spark)(Registry.queries("h_ann_hnsw")(_, sf))
+    val sp = search.finalPlans
+    assert(search.checkpoints.size >= 5, "graph + seed + 3 hop checkpoints not captured")
     assert(!sp.contains("CartesianProduct"),
       "a data-sized cartesian appeared in the hnsw search")
-    // Checked query (per-hop checkpoints in place): the only
+    assert(!sp.contains("BroadcastNestedLoopJoin"),
+      "a nested-loop join appeared in a checkpointed hnsw hop")
+    // Its consumer plan (per-hop checkpoints in place): the only
     // nested-loop joins left are the truth query fan-out and the final
     // counts attach.
-    val p = plan("h_ann_hnsw").split("== Initial Plan ==").head
+    val p = search.consumer.finalPlan
     assert(!p.contains("CartesianProduct"),
       "a data-sized cartesian appeared in the checked hnsw search")
     val bnlj = "BroadcastNestedLoopJoin".r.findAllIn(p).size
@@ -153,9 +157,13 @@ class PlanShapeSpec extends AnyFunSuite {
 
   test("minhash candidate join keys on (band, hash), never a cartesian") {
     // the pair table is memoized + localCheckpoint'ed (its lineage is
-    // truncated in consumer queries), so pin the BUILD pipeline's plan.
-    val df = graft.ops.DedupOps.minhashPairsBuildForPlan(spark, sf, byLang = false)
-    val p = executedPlan(df)
+    // truncated in consumer queries), so pin the production BUILD's
+    // captured plans: the docNode and reps scratches and the pair
+    // checkpoint (the docMasks artifact is prebuilt — its one-row
+    // vocabulary attach is pinned by the wide docMasks test).
+    val p = BuildPlans.capture(spark, graft.ops.DedupOps.docMasks(_, sf))(
+      graft.ops.DedupOps.minhashNearDupPairs(_, sf, byLang = false))
+      .builds.map(_.plan).mkString("\n")
     assert(!p.contains("CartesianProduct") && !p.contains("BroadcastNestedLoopJoin"))
     assert(p.contains("minhash_sig"), "native one-pass signature expression missing")
   }
@@ -357,9 +365,9 @@ class PlanShapeSpec extends AnyFunSuite {
     // with the bitmask popcount loop — and candidates must come from
     // the (band, hash) equi-join, never an all-pairs join.
     // the checked query serves the memoized pair table (truncated
-    // lineage), so pin the BUILD pipeline — mat=false keeps the whole
-    // lineage (shingling → masks → signatures → band join) in one
-    // visible plan. Expression-level assertions read the OPTIMIZED
+    // lineage), so pin the production BUILD's captured plans — every
+    // checkpoint from shingling → masks → signatures → band join.
+    // Expression-level assertions read the OPTIMIZED
     // plan: the physical HashAggregate fuses expressions into its
     // result list and prints only output names, and long projection
     // lists truncate at the 25-field default — raise the limit so
@@ -367,10 +375,9 @@ class PlanShapeSpec extends AnyFunSuite {
     val saved = spark.conf.getOption("spark.sql.debug.maxToStringFields")
     spark.conf.set("spark.sql.debug.maxToStringFields", "4000")
     try {
-      val df = graft.ops.DedupOps.widevocabPairsBuildForPlan(spark, sf)
-      df.collect()
-      val opt = df.queryExecution.optimizedPlan.toString
-      val p = df.queryExecution.executedPlan.toString
+      val c = BuildPlans.capture(spark)(graft.ops.DedupOps.widevocabPairs(_, sf))
+      val opt = c.builds.map(_.qe.optimizedPlan.toString).mkString("\n")
+      val p = c.builds.map(_.plan).mkString("\n")
       assert(!opt.contains("raise_error") && !p.contains("raise_error"),
         "vocabulary-bound mask guard reachable in the wide-vocab plan")
       assert(opt.contains("minhash_sig"), "native signature expression missing")
@@ -388,6 +395,11 @@ class PlanShapeSpec extends AnyFunSuite {
         .toList
       assert(badBnlj.isEmpty,
         "conditioned nested-loop join in the wide-vocab plan:\n" + badBnlj.mkString("\n"))
+      // checkpointed, the build holds exactly one such attach: the
+      // bigram vocabulary row onto the mask build
+      val bnlj = c.builds.map(r =>
+        "BroadcastNestedLoopJoin".r.findAllIn(r.finalPlan).size).sum
+      assert(bnlj <= 1, s"$bnlj nested-loop joins (> the one vocabulary attach)")
     } finally saved.fold(spark.conf.unset("spark.sql.debug.maxToStringFields"))(
       spark.conf.set("spark.sql.debug.maxToStringFields", _))
   }
@@ -653,10 +665,11 @@ class PlanShapeSpec extends AnyFunSuite {
     // each hop is frontier⋈edges + anti-join visited; all of them must
     // key on node ids — a cartesian or nested-loop fallback here is
     // the 100 TB scale-killer for any iterative graph op. The checked
-    // query materializes per hop (truncated lineage), so the pin runs
-    // on the un-checkpointed build twin, like the minhash pair test.
-    val df = graft.ops.GraphOps.bfsDistBuildForPlan(spark, sf)
-    val p = executedPlan(df).split("== Initial Plan ==").head
+    // query materializes per hop (truncated lineage), so the pin reads
+    // the production build's captured per-hop checkpoint plans.
+    val c = BuildPlans.capture(spark)(graft.ops.GraphOps.bfsDist(_, sf))
+    assert(c.checkpoints.size >= 5, "per-hop checkpoints not captured")
+    val p = c.finalPlans
     assert(!p.contains("CartesianProduct"), "data-sized cartesian in BFS")
     assert(!p.contains("BroadcastNestedLoopJoin"),
       "nested-loop join in BFS (no scalar cross joins exist in this build)")
@@ -667,12 +680,11 @@ class PlanShapeSpec extends AnyFunSuite {
     // the gathered codebook (K rows of D-dim arrays) attaches via ONE
     // crossJoin(broadcast(...)) — a bounded BNLJ, the IVF house
     // pattern. The checked query serves the memoized artifact (whose
-    // truncated lineage would make this pin vacuous), so the pin runs
-    // the un-materialized BUILD twin — the corpus-sized pass that must
-    // never degrade to a data-sized cartesian or lose sq_dist_dec.
-    val p = executedPlan(
-      graft.ops.VectorOps.pqCodesBuildForPlan(spark, sf))
-      .split("== Initial Plan ==").head
+    // truncated lineage would make this pin vacuous), so the pin reads
+    // the production BUILD's captured plans — the corpus-sized pass
+    // that must never degrade to a data-sized cartesian or lose
+    // sq_dist_dec.
+    val p = BuildPlans.capture(spark)(graft.ops.VectorOps.pqCodes(_, sf)).finalPlans
     assert(p.contains("sq_dist_dec"), "native sq_dist_dec missing from the build")
     assert(!p.contains("CartesianProduct"))
     val bnlj = "BroadcastNestedLoopJoin".r.findAllIn(p).size
@@ -849,10 +861,8 @@ class PlanShapeSpec extends AnyFunSuite {
     // map-side combine — never a data-sized cartesian. The Σx·Σy /
     // n-count corrections attach as broadcast joins over dim-sized
     // frames. The checked queries serve the memoized artifact, so the
-    // pin runs the un-materialized BUILD twin.
-    val p = executedPlan(
-      graft.ops.VectorOps.pcaScatterBuildForPlan(spark, sf))
-      .split("== Initial Plan ==").head
+    // pin reads the production BUILD's captured plan.
+    val p = BuildPlans.capture(spark)(graft.ops.VectorOps.pcaScatter(_, sf)).finalPlans
     assert(!p.contains("CartesianProduct"), "a data-sized cartesian appeared")
     assert(p.contains("SortMergeJoin") || p.contains("ShuffledHashJoin")
       || p.contains("BroadcastHashJoin"),
@@ -879,17 +889,16 @@ class PlanShapeSpec extends AnyFunSuite {
     // BPE's 100 TB claim: the only corpus-sized work is the word-
     // frequency build (one scan + one hash aggregate with map-side
     // combine); every merge round then runs over the vocab-bounded
-    // word table. Pin both stages un-materialized: the words build
-    // must be a pure scan+agg (no join at all), and the round-1
-    // pair-count argmax must stay a hash aggregate with no cartesian.
-    val pw = executedPlan(
-      graft.ops.TextOps.bpeWordsBuildForPlan(spark, sf))
-      .split("== Initial Plan ==").head
+    // word table. Pin both stages as production runs them: the words
+    // build checkpoint must be a pure scan+agg (no join at all), and
+    // the round-1 pair-count argmax over it must stay a hash aggregate
+    // with no cartesian.
+    val c = BuildPlans.capture(spark)(s =>
+      graft.ops.TextOps.bpeBestPair(graft.ops.TextOps.bpeWords(s, sf)))
+    val pw = c.finalPlans
     assert(pw.contains("HashAggregate"), "word-frequency agg lost hash form")
     assert(!pw.contains("Join"), "corpus pass grew a join")
-    val pp = executedPlan(graft.ops.TextOps.bpeBestPair(
-      graft.ops.TextOps.bpeWordsBuildForPlan(spark, sf)))
-      .split("== Initial Plan ==").head
+    val pp = c.consumer.finalPlan
     assert(pp.contains("HashAggregate"), "pair count lost hash-agg form")
     assert(!pp.contains("CartesianProduct"), "a cartesian appeared")
     assert(pp.contains("TakeOrderedAndProject") || pp.contains("GlobalLimit"),
@@ -975,13 +984,14 @@ class PlanShapeSpec extends AnyFunSuite {
   }
 
   test("naive Bayes model build: vocab-bounded attaches, merged scalars") {
-    // The un-memoized build twin (artifact lineage truncates to Scan
-    // ExistingRDD — the pqCodesBuildForPlan lesson): the vocab spine
-    // crosses ONE L-row broadcast (per-lang totals carrying the merged
-    // vocab-size column) plus the one-row vocabN attach inside it —
-    // ≤2 BNLJs total; the counts join stays keyed.
-    val df = graft.ops.TextOps.nbModelBuildForPlan(spark, sf)
-    val p = executedPlan(df).split("== Initial Plan ==").head
+    // The production build's captured model checkpoint (the artifact's
+    // lineage truncates to Scan ExistingRDD in consumers; nbModel builds
+    // the model, then the priors): the vocab spine crosses ONE L-row
+    // broadcast (per-lang totals carrying the merged vocab-size column)
+    // plus the one-row vocabN attach inside it — ≤2 BNLJs total; the
+    // counts join stays keyed.
+    val p = BuildPlans.capture(spark)(graft.ops.TextOps.nbModel(_, sf)._1)
+      .checkpoints.head.finalPlan
     assert(!p.contains("CartesianProduct"), "a data-sized cartesian appeared")
     val bnlj = "BroadcastNestedLoopJoin".r.findAllIn(p).size
     assert(bnlj <= 2,
@@ -1111,13 +1121,13 @@ class PlanShapeSpec extends AnyFunSuite {
 
   test("markov attribution: one corpus window pass, bounded matrix chain") {
     // The matrix chain is memoized/materialized (lineage truncated), so
-    // the corpus-sided build shape is pinned via its un-materialized
-    // twin: journey windows partitioned by user (never global), no
-    // CartesianProduct, the variant×base expansion as the only data
-    // BNLJ. The checked query itself must stay cartesian-free with only
-    // scalar attaches.
-    val b = executedPlan(graft.ops.AnalyticsOps.markovM0Build(spark, sf))
-      .split("== Initial Plan ==").head
+    // the corpus-sided build shape is pinned on the production m0
+    // build's captured plan: journey windows partitioned by user (never
+    // global), no CartesianProduct, the variant×base expansion as the
+    // only data BNLJ. The checked query itself must stay cartesian-free
+    // with only scalar attaches.
+    val b = BuildPlans.capture(spark)(graft.ops.AnalyticsOps.markovM0(_, sf))
+      .finalPlans
     assert(!b.contains("CartesianProduct"), "m0 build: a cartesian appeared")
     assert(b.contains("windowspecdefinition(user_id"),
       "m0 build: journey window lost its user partition")
@@ -1224,9 +1234,10 @@ class PlanShapeSpec extends AnyFunSuite {
 
   test("h_mmr_rerank: candidate build is a fused top-20, pair table broadcasts") {
     // the corpus-facing stage of MMR is the memoized mmrCand artifact;
-    // its un-materialized twin must show scan + TakeOrderedAndProject
+    // its captured build must show scan + TakeOrderedAndProject
     // (a global Sort before the 20-row cut would be the 100 TB mistake)
-    val p = executedPlan(graft.ops.VectorOps.mmrCandBuildForPlan(spark, sf))
+    val p = BuildPlans.capture(spark)(graft.ops.VectorOps.mmrCand(_, sf))
+      .builds.map(_.plan).mkString("\n")
     assert(p.contains("TakeOrderedAndProject"),
       "mmrCand build lost its fused top-20")
     assert(!p.contains("SortMergeJoin"),
@@ -1258,8 +1269,8 @@ class PlanShapeSpec extends AnyFunSuite {
     // nodes; the survivors below are each individually justified as
     // running over a BOUNDED (post-aggregation, metadata-sized) table,
     // so growth is capped by construction, not by luck. Memoized
-    // artifacts truncate lineage, so build-side windows are pinned via
-    // their *BuildForPlan twins in the dedicated tests above/below.
+    // artifacts truncate lineage, so build-side windows are pinned on
+    // the builds' captured plans (BuildPlans) in the dedicated tests.
     // r16 (VERDICT r15 item 7 / ADVICE item 2): each whitelist entry is
     // scoped to the EXACT number of single-partition windows it
     // justifies, not the query name alone — a future unbounded global

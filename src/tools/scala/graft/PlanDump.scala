@@ -56,25 +56,18 @@ object PlanDump {
       "g_markov_attribution" -> "removal-effect attribution: variant-keyed matrix chain over materialized stages",
       "i_graph_betweenness" -> "betweenness: σ from walk-count powers ⋈ min-plus distances, all keyed",
       "g_logistic_gd" -> "logistic GD epoch: map-side sigmoid pass + hash-agg all-reduce, weights broadcast")
-    // the checked widevocab query serves its memoized pair table
-    // (truncated lineage) — dump the BUILD pipeline instead, where the
-    // shingling/mask/signature/band-join shape is visible; same for the
-    // per-hop-materialized BFS distance table.
-    val custom: Map[String, () => org.apache.spark.sql.DataFrame] = Map(
-      "h_minhash_widevocab" ->
-        (() => graft.ops.DedupOps.widevocabPairsBuildForPlan(spark, sfDir)),
-      "i_graph_bfs" ->
-        (() => graft.ops.GraphOps.bfsDistBuildForPlan(spark, sfDir)),
-      // the checked query serves the memoized code artifact (truncated
-      // lineage) — dump the BUILD pipeline, where the codebook
-      // broadcast / sq_dist_dec / argmin shape is visible
-      "h_pq_encode" ->
-        (() => graft.ops.VectorOps.pqCodesBuildForPlan(spark, sfDir)),
-      // the checked query serves the memoized graph + per-hop
-      // checkpointed search — dump the graph BUILD, where the LSH
-      // candidate join and the bounded-degree window are visible
-      "h_ann_hnsw" ->
-        (() => graft.ops.VectorOps.hnswEdgesBuildForPlan(spark, sfDir)))
+    // these checked queries serve memoized artifacts (truncated
+    // lineage) — dump the production BUILD's own final checkpoint plan
+    // instead, where the shingling/band-join (widevocab), per-hop
+    // frontier (BFS), codebook broadcast / sq_dist_dec / argmin (PQ) and
+    // LSH candidate join + bounded-degree window (hnsw graph) are visible
+    def build(f: (SparkSession, String) => org.apache.spark.sql.DataFrame) =
+      () => BuildPlans.capture(spark)(f(_, sfDir)).checkpoints.last.plan
+    val custom: Map[String, () => String] = Map(
+      "h_minhash_widevocab" -> build(graft.ops.DedupOps.widevocabPairs),
+      "i_graph_bfs" -> build(graft.ops.GraphOps.bfsDist),
+      "h_pq_encode" -> build(graft.ops.VectorOps.pqCodes),
+      "h_ann_hnsw" -> build(graft.ops.VectorOps.hnswEdges))
     // durable per-query prose that must survive regeneration (a note
     // hand-edited into PLANS.md would be silently dropped here)
     val notes: Map[String, String] = Map(
@@ -92,12 +85,15 @@ object PlanDump {
     sb.append("Regenerate with `sbt \"runMain graft.PlanDump\"` (sf0.001; AQE settled\n")
     sb.append(s"by executing each query first). Full inventory: SURVEY.md §2.\n")
     for ((name, why) <- picks) {
-      val df = custom.get(name).map(_()).getOrElse(SparkEntry.queries(name)(spark, sfDir))
-      df.collect()
+      val plan = custom.get(name).map(_()).getOrElse {
+        val df = SparkEntry.queries(name)(spark, sfDir)
+        df.collect()
+        df.queryExecution.executedPlan.toString
+      }
       sb.append(s"\n## $name — $why\n")
       notes.get(name).foreach(n => sb.append(s"\n$n\n"))
       sb.append("\n```\n")
-      sb.append(df.queryExecution.executedPlan.toString.linesIterator
+      sb.append(plan.linesIterator
         .map(_.replaceAll("#\\d+[L]?", "").take(140)).take(60).mkString("\n"))
       sb.append("\n```\n")
     }
