@@ -28,11 +28,25 @@ import org.apache.spark.sql.catalyst.rules.Rule
   * into the join and shuffling one row per (join key): the rewrite cuts
   * both the join's probe volume and the post-join aggregation state.
   *
+  * Where it fires: the pushed side must be a single-relation subtree —
+  * no Join and no Aggregate anywhere below it (filters, projections and
+  * the scan only). That is Yan & Larson's eager group-by ("Eager
+  * Aggregation and Lazy Aggregation", VLDB 1995): one join input is
+  * pre-aggregated right beside its join, the fact leaf of TPC-H q3/q18.
+  * A join subtree is refused because the partial aggregate would sit on
+  * top of it and the rule would then push again one join lower: in a
+  * broadcast star chain (q5, q7, q10, c_join_5way) every one of those
+  * joins is already map-side, so each level only adds a
+  * HashAggregate → Exchange → HashAggregate stage. An Aggregate on the
+  * pushed side, also one that ColumnPruning has wrapped in a Project,
+  * already yields one row per key, so a second one would re-group
+  * unique rows; this is also the refire guard, since the rewritten plan
+  * has our own partial Aggregate there.
+  *
   * Deliberately narrow (bails otherwise): inner joins, non-distinct
   * unfiltered SUM/COUNT/MIN/MAX, aggregate inputs wholly from one join
-  * side, grouping expressions wholly from the other, pushed side not
-  * already an Aggregate (also the refire guard: the rewritten plan has
-  * an Aggregate there). Registered via GraftExtensions
+  * side, grouping expressions wholly from the other, pushed side a
+  * single-relation subtree (above). Registered via GraftExtensions
   * (`spark.sql.extensions=graft.functions.GraftExtensions`).
   */
 object EagerAggregation extends Rule[LogicalPlan] {
@@ -86,7 +100,7 @@ object EagerAggregation extends Rule[LogicalPlan] {
     // become partial grouping keys below the join)
     val pushed = Seq(join.left, join.right).find { side =>
       fnRefs.nonEmpty && fnRefs.subsetOf(side.outputSet) &&
-        !side.isInstanceOf[Aggregate] // also prevents refiring on our own output
+        !side.exists(n => n.isInstanceOf[Join] || n.isInstanceOf[Aggregate])
     }.getOrElse(return None)
     val (pushedGroups, stayGroups) = agg.groupingExpressions.partition { g =>
       g.references.nonEmpty && g.references.subsetOf(pushed.outputSet)

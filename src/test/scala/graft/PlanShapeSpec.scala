@@ -175,6 +175,50 @@ class PlanShapeSpec extends AnyFunSuite {
       "EagerAggregation rule did not fire on the q18 shape")
   }
 
+  private def eagerPartials(df: DataFrame) = {
+    import org.apache.spark.sql.catalyst.expressions.Alias
+    import org.apache.spark.sql.catalyst.plans.logical.Aggregate
+    df.queryExecution.optimizedPlan.collectWithSubqueries {
+      case a: Aggregate if a.aggregateExpressions.exists {
+        case al: Alias => al.name == "_eager_partial"
+        case _ => false
+      } => a
+    }
+  }
+
+  test("eager aggregation stays off broadcast star chains (q5, q7, q10, 5-way star)") {
+    // every join of these chains is a broadcast hash join; a partial
+    // aggregate above a join subtree only adds a hash exchange per level
+    for (q <- Seq("t_q05", "t_q07", "t_q10", "c_join_5way")) {
+      val df = Registry.queries(q)(spark, sf)
+      assert(eagerPartials(df).isEmpty,
+        s"$q: eager partial aggregate in\n${df.queryExecution.optimizedPlan}")
+    }
+  }
+
+  test("q5's final plan shuffles at most twice: the group-by and the ORDER BY") {
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    object Aqe extends AdaptiveSparkPlanHelper
+    val df = Registry.queries("t_q05")(spark, sf)
+    df.collect()
+    val shuffles = Aqe.collect(df.queryExecution.executedPlan) {
+      case e: ShuffleExchangeExec => e
+    }
+    assert(shuffles.size <= 2,
+      s"${shuffles.size} shuffle exchanges:\n${df.queryExecution.executedPlan}")
+  }
+
+  test("every TPC-H eager partial aggregate sits on a single-relation input") {
+    import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Join}
+    val tpch = Registry.queries.keys.filter(_.startsWith("t_q")).toSeq.sorted
+    assert(tpch.size == 22)
+    for (q <- tpch; a <- eagerPartials(Registry.queries(q)(spark, sf))) {
+      assert(!a.child.exists(n => n.isInstanceOf[Join] || n.isInstanceOf[Aggregate]),
+        s"$q: eager partial aggregate above a join or aggregate:\n$a")
+    }
+  }
+
   test("exact pair enumerations run as equi-joins, never nested-loop/cartesian") {
     // the blocked triangle layout (PairJoins) and the banded-minhash
     // candidate stage must surface as shuffled equi-joins; a

@@ -18,7 +18,7 @@ object PlanDump {
     spark.sparkContext.setLogLevel("ERROR")
     val picks = Seq(
       "c_join_bcast" -> "dim⋈dim equi join → BroadcastHashJoin, no fact shuffle",
-      "c_join_5way" -> "5-way star: dims broadcast, fact shuffles once per key",
+      "c_join_5way" -> "5-way star: dims broadcast onto the fact scan, one group-by shuffle + the ORDER BY",
       "c_join_theta_range" -> "banded theta join → pre-aggregated bucket-expansion equi join",
       "t_q18" -> "TPC-H q18 with EagerAggregation: fact partial-aggregates BELOW the join",
       "d_agg_groupby" -> "hash aggregation, partial+final, whole-stage codegen",
