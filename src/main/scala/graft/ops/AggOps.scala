@@ -264,14 +264,12 @@ object AggOps {
       // the derived fences must start from the snapped common value.
       val snap = (c: Column) =>
         c.cast(org.apache.spark.sql.types.DecimalType(38, 6)).cast("double")
-      // examined r15, left re-computed: qs is consumed twice (outlier
-      // join + final read-out), but a measured 3-row materialization
-      // read 2.39-2.43 s vs the 2.01-2.20 s recompute readings — the
-      // extra eager checkpoint job costs more than re-running the
-      // rank-selection aggregate over the already-checkpointed scratch.
-      // r16 (guide §1.2-1): in exact mode the outlier census reads the
-      // SAME ranked scratch the quartiles rank over (it holds every
-      // (flag, price) row) instead of a third lineitem parquet scan.
+      // qs is read once: the outlier census groups by the flag plus
+      // the (per-flag constant) quartile and fence columns, so the
+      // quartile selection is not re-run for a final join. In exact
+      // mode the census reads the SAME ranked scratch the quartiles
+      // rank over (it holds every (flag, price) row) instead of a
+      // further lineitem parquet scan.
       val mode =
         try s.conf.get("spark.graft.percentileMode", "exact")
         catch { case _: Throwable => "exact" }
@@ -291,20 +289,20 @@ object AggOps {
         .withColumn("iqr", col("q3") - col("q1"))
         .withColumn("lo_fence", col("q1") - lit(1.5) * col("iqr"))
         .withColumn("hi_fence", col("q3") + lit(1.5) * col("iqr"))
-      val outliers = ranked.map(_.select(col("l_returnflag"),
-          col("l_extendedprice"))).getOrElse(li)
-        .join(broadcast(qs), "l_returnflag")
-        .groupBy(col("l_returnflag"))
-        .agg(count(lit(1)).as("n_rows"),
-          sum(when(col("l_extendedprice") < col("lo_fence") ||
-            col("l_extendedprice") > col("hi_fence"), 1L).otherwise(0L))
-            .as("n_outliers"))
       // quartiles/fences ship UNrounded: they are bit-identical doubles
       // on both engines (selection + the same IEEE arithmetic, no
       // accumulation-order variance), while ROUND would not be —
       // 1.5×iqr constructs exact half-boundary values (…59875 at 1e-4,
       // observed) where the engines' rounding rules disagree.
-      qs.join(outliers, "l_returnflag")
+      ranked.map(_.select(col("l_returnflag"), col("l_extendedprice")))
+        .getOrElse(li)
+        .join(broadcast(qs), "l_returnflag")
+        .groupBy(Seq("l_returnflag", "q1", "med", "q3", "iqr", "lo_fence",
+          "hi_fence").map(col): _*)
+        .agg(count(lit(1)).as("n_rows"),
+          sum(when(col("l_extendedprice") < col("lo_fence") ||
+            col("l_extendedprice") > col("hi_fence"), 1L).otherwise(0L))
+            .as("n_outliers"))
         .select(col("l_returnflag"), col("n_rows"),
           col("q1"), col("med"), col("q3"), col("iqr"),
           col("lo_fence"), col("hi_fence"), col("n_outliers"))

@@ -21,6 +21,11 @@ import Q._
   * 100 TB design — a coarse quantizer (label centroids) turns the O(n²)
   * into per-cell searches, the classic IVF layout: at 1000 executors
   * each cell's candidate list is a shuffle partition, never a cartesian.
+  *
+  * One coarse quantizer: [[centroidRanks]] is the only nearest-centroid
+  * ranking. k-means and silhouette rank against [[kmCent1]]; the IVF
+  * rows rank against the PQ codebook's label centroids ([[ivfRanks]]
+  * over [[pqCent]]), never re-deriving them from the corpus.
   */
 object VectorOps {
 
@@ -70,18 +75,28 @@ object VectorOps {
     Io.table(s, d, "embeddings").withColumn("dv", col("embedding"))
   }
 
-  /** One Lloyd assignment pass: nearest of the broadcast centroids by
-    * exact-decimal squared distance, ties to the smaller cid. Shared by
-    * h_kmeans_lloyd and h_silhouette. */
-  private def kmAssign(s: SparkSession, d: String, cent: DataFrame): DataFrame = {
-    val e = Io.table(s, d, "embeddings").select(col("vec_id"), col("embedding"))
-    val w = Window.partitionBy(col("vec_id")).orderBy(col("d2"), col("cid"))
-    e.crossJoin(broadcast(cent))
-      .select(col("vec_id"), col("embedding"), col("cid"),
-        expr("sq_dist_dec(embedding, carr)").as("d2"))
-      .withColumn("rn", row_number().over(w)).filter(col("rn") === 1)
-      .select(col("vec_id"), col("embedding"), col("cid"), col("d2"))
+  /** The one nearest-centroid ranking of the vector family: every row of
+    * `vecs` (vec_id, embedding, …) against every broadcast centroid row
+    * of `cent` (key, carr), giving (…, key, d2, rn) — d2 the exact-
+    * decimal native sq_dist_dec, rn the rank per vec_id by (d2, key).
+    * rn = 1 is the Lloyd assignment / IVF home cell; rn ≤ k are the k
+    * probe cells. */
+  private def centroidRanks(vecs: DataFrame, cent: DataFrame, key: String): DataFrame = {
+    graft.functions.SqDistDec.register(vecs.sparkSession)
+    vecs.crossJoin(broadcast(cent))
+      .withColumn("d2", expr("sq_dist_dec(embedding, carr)")).drop("carr")
+      .withColumn("rn", row_number().over(
+        Window.partitionBy(col("vec_id")).orderBy(col("d2"), col(key))))
   }
+
+  private def embeddingVecs(s: SparkSession, d: String): DataFrame =
+    Io.table(s, d, "embeddings").select(col("vec_id"), col("embedding"))
+
+  /** One Lloyd assignment pass: nearest of the broadcast centroids by
+    * exact-decimal squared distance, ties to the smaller cid. */
+  private def kmAssign(s: SparkSession, d: String, cent: DataFrame): DataFrame =
+    centroidRanks(embeddingVecs(s, d), cent, "cid").filter(col("rn") === 1)
+      .select(col("vec_id"), col("embedding"), col("cid"), col("d2"))
 
   /** The round-1 Lloyd centroids (seed = vecs 0..3, one assign + one
     * exact-decimal mean update), memoized + materialized — built once
@@ -89,8 +104,7 @@ object VectorOps {
     * way a production pipeline scores against one trained model. */
   private def kmCent1(s: SparkSession, d: String): DataFrame =
     Q.memoized(s, d, "kmC1") {
-      val e = Io.table(s, d, "embeddings").select(col("vec_id"), col("embedding"))
-      val cent0 = e.filter(col("vec_id") < 4)
+      val cent0 = embeddingVecs(s, d).filter(col("vec_id") < 4)
         .select(col("vec_id").cast("int").as("cid"), dvec(col("embedding")).as("carr"))
       Q.materialize(s, d, "kmC1")(
         kmAssign(s, d, cent0)
@@ -370,8 +384,10 @@ object VectorOps {
   /** PQ codebook (label, pos, c): per-label exact-decimal centroid
     * coordinates — K = |labels| codewords per subspace (see h_pq_encode's
     * scaladoc for why a deterministic codebook stands in for trained
-    * k-means here). Memoized + materialized per corpus: the encode pass
-    * and the ADC search consume one artifact, exactly as a production
+    * k-means here). The same label centroids, gathered whole by
+    * [[pqCentArr]], are the IVF rows' coarse quantizer ([[ivfRanks]]).
+    * Memoized + materialized per corpus: the encode pass, the ADC search
+    * and the IVF cells consume one artifact, exactly as a production
     * index build writes its codebook once. */
   private def pqCent(s: SparkSession, d: String): DataFrame =
     Q.memoized(s, d, "pqCent") {
@@ -384,11 +400,22 @@ object VectorOps {
     }
 
   /** Codebook gathered to pos-ordered double arrays (K rows) — the
-    * broadcast-ready form every PQ distance pass probes. */
+    * broadcast-ready form every PQ distance pass and the IVF coarse
+    * quantizer probe. */
   private def pqCentArr(s: SparkSession, d: String): DataFrame =
     pqCent(s, d).groupBy(col("label").as("c_label"))
       .agg(transform(array_sort(collect_list(struct(col("pos"), col("c")))),
         x => x.getField("c")).as("carr"))
+
+  /** IVF cell ranks (vec_id, embedding, c_label, d2, rn) of every
+    * vector: the label centroids as coarse quantizer, ties to the lower
+    * label. A vec_id filter pushes below the window to the scan. */
+  private def ivfRanks(s: SparkSession, d: String): DataFrame =
+    centroidRanks(embeddingVecs(s, d), pqCentArr(s, d), "c_label")
+
+  /** Every vector's IVF home cell (vec_id, cell) — the inverted file. */
+  private def ivfCells(ranks: DataFrame): DataFrame =
+    ranks.filter(col("rn") === 1).select(col("vec_id"), col("c_label").as("cell"))
 
   /** Per-subspace squared distances of `in`'s raw vectors against the
     * broadcast codebook: (vec_id, c_label, sub, d2), map-side — one
@@ -468,6 +495,21 @@ object VectorOps {
        |  SELECT vec_id, sub, label AS code FROM dist
        |  QUALIFY ROW_NUMBER() OVER (PARTITION BY vec_id, sub
        |                             ORDER BY d2, label) = 1)""".stripMargin
+
+  /** DuckDB twin of [[ivfRanks]] — CTEs `cdist`/`ranked`/`cells` over
+    * [[duckPqCodes]]' `lng`/`cent` (the label centroids are the IVF
+    * coarse quantizer in both engines). Shared by the five IVF oracles. */
+  private val duckIvfCells =
+    """cdist AS (
+      |  SELECT l.vec_id, c.label AS c_label,
+      |    CAST(SUM(CAST((l.v - c.c) * (l.v - c.c) AS DECIMAL(38,12)))
+      |         AS DOUBLE) AS d2
+      |  FROM lng l JOIN cent c ON l.pos = c.pos GROUP BY 1, 2),
+      |ranked AS (
+      |  SELECT vec_id, c_label,
+      |    ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY d2, c_label) AS rn
+      |  FROM cdist),
+      |cells AS (SELECT vec_id, c_label AS cell FROM ranked WHERE rn = 1)""".stripMargin
 
   /** DuckDB twin of the per-query ADC distance table (CTE `dt`) —
     * `dist` restricted to the vec_id < 20 query set. */
@@ -660,27 +702,7 @@ object VectorOps {
     // within the probe cell. The 100 TB shape: centroids broadcast,
     // vectors shuffle once by cell id, per-cell search is local.
     Q("h_ann_ivf", (s, d) => {
-      graft.functions.SqDistDec.register(s)
-      val e = Io.table(s, d, "embeddings")
-      // cell centroids (exact decimal means, long form) — 10×64 rows,
-      // gathered into pos-ordered arrays and broadcast.
-      val cent = e.select(col("label").as("c_label"), posexplode(col("embedding")).as(Seq("pos0", "v")))
-        .groupBy(col("c_label"), col("pos0"))
-        .agg((decSum12(col("v").cast("double")) / count(lit(1))).as("c"))
-      val centArr = cent.groupBy(col("c_label"))
-        .agg(transform(array_sort(collect_list(struct(col("pos0"), col("c")))),
-          x => x.getField("c")).as("carr"))
-      // distance² of every vector to every centroid: map-side native
-      // sq_dist_dec against the broadcast centroids — same exact-decimal
-      // value as the relational long form the oracle runs, without the
-      // |V|·dim·|C|-row aggregation.
-      val dist = e.select(col("vec_id"), col("embedding"))
-        .crossJoin(broadcast(centArr))
-        .select(col("vec_id"), col("c_label"),
-          expr("sq_dist_dec(embedding, carr)").as("d2"))
-      val wCell = Window.partitionBy(col("vec_id")).orderBy(col("d2"), col("c_label"))
-      val cells = dist.withColumn("rn", row_number().over(wCell)).filter(col("rn") === 1)
-        .select(col("vec_id"), col("c_label").as("cell"))
+      val cells = ivfCells(ivfRanks(s, d))
       // top-3 cosine within the query's cell.
       val ev = withDoubles(s, d).select(col("vec_id"), col("dv"))
         .join(cells, "vec_id")
@@ -694,23 +716,8 @@ object VectorOps {
         .select(col("q_id"), col("rn"), col("vec_id").as("nn_id"), col("cell"), col("sim"))
         .orderBy("q_id", "rn")
     }, Some(
-      s"""WITH cent AS (
-         |  SELECT label AS c_label, i AS pos,
-         |    ${dSum12("CAST(embedding[i] AS DOUBLE)")} / COUNT(*) AS c
-         |  FROM embeddings,
-         |    (SELECT UNNEST(generate_series(1,
-         |       (SELECT MAX(len(embedding)) FROM embeddings))) AS i)
-         |  GROUP BY label, i),
-         |dist AS (
-         |  SELECT e.vec_id, cent.c_label,
-         |    CAST(SUM(CAST((CAST(e.embedding[cent.pos] AS DOUBLE) - cent.c)
-         |                  * (CAST(e.embedding[cent.pos] AS DOUBLE) - cent.c)
-         |             AS DECIMAL(38,12))) AS DOUBLE) AS d2
-         |  FROM embeddings e, cent
-         |  GROUP BY e.vec_id, cent.c_label),
-         |cells AS (
-         |  SELECT vec_id, c_label AS cell FROM dist
-         |  QUALIFY ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY d2, c_label) = 1),
+      s"""$duckPqCodes,
+         |$duckIvfCells,
          |ev AS (
          |  SELECT e.vec_id, e.embedding, cells.cell
          |  FROM embeddings e JOIN cells USING (vec_id))
@@ -734,23 +741,8 @@ object VectorOps {
     // label) is engine-identical and the oracle replicates the whole
     // approximation, recall included.
     Q("h_ann_ivf_probe2", (s, d) => {
-      graft.functions.SqDistDec.register(s)
-      val e = Io.table(s, d, "embeddings")
-      val cent = e.select(col("label").as("c_label"),
-          posexplode(col("embedding")).as(Seq("pos0", "v")))
-        .groupBy(col("c_label"), col("pos0"))
-        .agg((decSum12(col("v").cast("double")) / count(lit(1))).as("c"))
-      val centArr = cent.groupBy(col("c_label"))
-        .agg(transform(array_sort(collect_list(struct(col("pos0"), col("c")))),
-          x => x.getField("c")).as("carr"))
-      val dist = e.select(col("vec_id"), col("embedding"))
-        .crossJoin(broadcast(centArr))
-        .select(col("vec_id"), col("c_label"),
-          expr("sq_dist_dec(embedding, carr)").as("d2"))
-      val wCell = Window.partitionBy(col("vec_id")).orderBy(col("d2"), col("c_label"))
-      val ranked = dist.withColumn("rn", row_number().over(wCell))
-      val cells = ranked.filter(col("rn") === 1)
-        .select(col("vec_id"), col("c_label").as("cell"))
+      val ranked = ivfRanks(s, d)
+      val cells = ivfCells(ranked)
       val probes = ranked.filter(col("rn") <= 2 && col("vec_id") < 20)
         .select(col("vec_id").as("q_id"), col("c_label").as("probe_cell"))
       val ev = withDoubles(s, d).select(col("vec_id"), col("dv")).join(cells, "vec_id")
@@ -765,27 +757,11 @@ object VectorOps {
         .select(col("q_id"), col("rn"), col("vec_id").as("nn_id"), col("cell"), col("sim"))
         .orderBy("q_id", "rn")
     }, Some(
-      s"""WITH cent AS (
-         |  SELECT label AS c_label, i AS pos,
-         |    ${dSum12("CAST(embedding[i] AS DOUBLE)")} / COUNT(*) AS c
-         |  FROM embeddings,
-         |    (SELECT UNNEST(generate_series(1,
-         |       (SELECT MAX(len(embedding)) FROM embeddings))) AS i)
-         |  GROUP BY label, i),
-         |dist AS (
-         |  SELECT e.vec_id, cent.c_label,
-         |    CAST(SUM(CAST((CAST(e.embedding[cent.pos] AS DOUBLE) - cent.c)
-         |                  * (CAST(e.embedding[cent.pos] AS DOUBLE) - cent.c)
-         |             AS DECIMAL(38,12))) AS DOUBLE) AS d2
-         |  FROM embeddings e, cent
-         |  GROUP BY e.vec_id, cent.c_label),
-         |cells AS (
-         |  SELECT vec_id, c_label AS cell FROM dist
-         |  QUALIFY ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY d2, c_label) = 1),
+      s"""$duckPqCodes,
+         |$duckIvfCells,
          |probes AS (
-         |  SELECT vec_id AS q_id, c_label AS probe_cell FROM dist
-         |  WHERE vec_id < 20
-         |  QUALIFY ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY d2, c_label) <= 2),
+         |  SELECT vec_id AS q_id, c_label AS probe_cell FROM ranked
+         |  WHERE rn <= 2 AND vec_id < 20),
          |ev AS (
          |  SELECT e.vec_id, e.embedding, cells.cell
          |  FROM embeddings e JOIN cells USING (vec_id))
@@ -810,31 +786,14 @@ object VectorOps {
     // all-pairs yardstick). Everything emitted is an integer or an
     // int/int division (engine-exact, no snaps).
     Q("h_ann_nprobe_curve", (s, d) => {
-      graft.functions.SqDistDec.register(s)
-      val e = Io.table(s, d, "embeddings")
-      val cent = e.select(col("label").as("c_label"),
-          posexplode(col("embedding")).as(Seq("pos0", "v")))
-        .groupBy(col("c_label"), col("pos0"))
-        .agg((decSum12(col("v").cast("double")) / count(lit(1))).as("c"))
-      val centArr = cent.groupBy(col("c_label"))
-        .agg(transform(array_sort(collect_list(struct(col("pos0"), col("c")))),
-          x => x.getField("c")).as("carr"))
-      val dist = e.select(col("vec_id"), col("embedding"))
-        .crossJoin(broadcast(centArr))
-        .select(col("vec_id"), col("c_label"),
-          expr("sq_dist_dec(embedding, carr)").as("d2"))
-      val wCell = Window.partitionBy(col("vec_id"))
-        .orderBy(col("d2"), col("c_label"))
-      val ranked = dist.withColumn("rn", row_number().over(wCell))
-      val cells = ranked.filter(col("rn") === 1)
-        .select(col("vec_id"), col("c_label").as("cell"))
+      val ranked = ivfRanks(s, d)
+      val cells = ivfCells(ranked)
       val qprobes = ranked.filter(col("rn") <= 4 && col("vec_id") < 20)
         .select(col("vec_id").as("q_id"), col("c_label").as("probe_cell"),
           col("rn").as("prn"))
-      val ev = e.select(col("vec_id")).join(cells, "vec_id")
       // candidate census per (query, probe rank): home cells are
       // unique, so each (q, v) candidate appears at exactly one prn
-      val cand = qprobes.join(ev,
+      val cand = qprobes.join(cells,
           col("probe_cell") === col("cell") && col("q_id") =!= col("vec_id"))
         .select(col("q_id"), col("vec_id"), col("prn"))
       val spine = s.range(1, 5).select(col("id").cast("int").as("nprobe"))
@@ -872,26 +831,8 @@ object VectorOps {
               col("n_truth").cast("double")).as("recall_at_3"))
         .orderBy("nprobe")
     }, Some(
-      s"""WITH cent AS (
-         |  SELECT label AS c_label, i AS pos,
-         |    ${dSum12("CAST(embedding[i] AS DOUBLE)")} / COUNT(*) AS c
-         |  FROM embeddings,
-         |    (SELECT UNNEST(generate_series(1,
-         |       (SELECT MAX(len(embedding)) FROM embeddings))) AS i)
-         |  GROUP BY label, i),
-         |dist AS (
-         |  SELECT e.vec_id, cent.c_label,
-         |    CAST(SUM(CAST((CAST(e.embedding[cent.pos] AS DOUBLE) - cent.c)
-         |                  * (CAST(e.embedding[cent.pos] AS DOUBLE) - cent.c)
-         |             AS DECIMAL(38,12))) AS DOUBLE) AS d2
-         |  FROM embeddings e, cent
-         |  GROUP BY e.vec_id, cent.c_label),
-         |ranked AS (
-         |  SELECT vec_id, c_label,
-         |    ROW_NUMBER() OVER (PARTITION BY vec_id
-         |                       ORDER BY d2, c_label) AS rn
-         |  FROM dist),
-         |cells AS (SELECT vec_id, c_label AS cell FROM ranked WHERE rn = 1),
+      s"""$duckPqCodes,
+         |$duckIvfCells,
          |qprobes AS (
          |  SELECT vec_id AS q_id, c_label AS probe_cell, rn AS prn
          |  FROM ranked WHERE rn <= 4 AND vec_id < 20),
@@ -945,7 +886,6 @@ object VectorOps {
     // (tie-break cid) is engine-identical — the oracle re-derives both
     // iterations relationally.
     Q("h_kmeans_lloyd", (s, d) => {
-      graft.functions.SqDistDec.register(s)
       kmAssign(s, d, kmCent1(s, d))
         .select(col("vec_id"), col("cid").as("cluster"),
           col("d2").cast(dec6).cast("double").as("d2"))
@@ -970,15 +910,8 @@ object VectorOps {
     // K broadcast centroids × one map-side pass — the same plan as the
     // k-means assignment itself; no pair stage.
     Q("h_silhouette", (s, d) => {
-      graft.functions.SqDistDec.register(s)
-      val e = Io.table(s, d, "embeddings").select(col("vec_id"), col("embedding"))
-      val w = Window.partitionBy(col("vec_id"))
-        .orderBy(col("d2d"), col("cid"))
-      val ranked = e.crossJoin(broadcast(kmCent1(s, d)))
-        .select(col("vec_id"), col("cid"),
-          expr("sq_dist_dec(embedding, carr)").cast("double").as("d2d"))
-        .withColumn("rn", row_number().over(w))
-        .filter(col("rn") <= 2)
+      val ranked = centroidRanks(embeddingVecs(s, d), kmCent1(s, d), "cid")
+        .filter(col("rn") <= 2).withColumn("d2d", col("d2").cast("double"))
       val ab = ranked.groupBy(col("vec_id"))
         .agg(min(when(col("rn") === 1, col("cid"))).as("cluster"),
           min(when(col("rn") === 1, col("d2d"))).as("a"),
@@ -1910,16 +1843,10 @@ object VectorOps {
     // and the per-query top-3 is windowed on the (q, nn) aggregate.
     Q("h_ann_ivfpq", (s, d) => {
       val (_, nSubs) = pqDims(s, d)
-      graft.functions.SqDistDec.register(s)
       val e = Io.table(s, d, "embeddings")
       val qs = e.filter(col("vec_id") < 20)
-      val cells = qs.crossJoin(broadcast(pqCentArr(s, d)))
-        .select(col("vec_id").as("q_id"), col("c_label"),
-          expr("sq_dist_dec(embedding, carr)").as("d2c"))
-        .withColumn("rn", row_number().over(
-          Window.partitionBy(col("q_id")).orderBy(col("d2c"), col("c_label"))))
-        .filter(col("rn") <= 2)
-        .select(col("q_id"), col("c_label").as("cell"))
+      val cells = ivfRanks(s, d).filter(col("rn") <= 2 && col("vec_id") < 20)
+        .select(col("vec_id").as("q_id"), col("c_label").as("cell"))
       val cand = e.select(col("vec_id").as("nn_id"), col("label").as("cell"))
         .join(broadcast(cells), "cell")
         .filter(col("nn_id") =!= col("q_id"))
@@ -1939,19 +1866,13 @@ object VectorOps {
         .orderBy("q_id", "rn")
     }, Some(
       s"""$duckPqCodes,
-         |cdist AS (
-         |  SELECT l.vec_id AS q_id, c.label,
-         |    CAST(SUM(CAST((l.v - c.c) * (l.v - c.c) AS DECIMAL(38,12)))
-         |         AS DOUBLE) AS d2c
-         |  FROM lng l JOIN cent c ON l.pos = c.pos
-         |  WHERE l.vec_id < 20 GROUP BY 1, 2),
-         |cells AS (SELECT q_id, label AS cell FROM cdist
-         |          QUALIFY ROW_NUMBER() OVER (PARTITION BY q_id
-         |                                     ORDER BY d2c, label) <= 2),
+         |$duckIvfCells,
+         |probes AS (SELECT vec_id AS q_id, c_label AS cell FROM ranked
+         |           WHERE rn <= 2 AND vec_id < 20),
          |cand AS (
-         |  SELECT cells.q_id, e.vec_id AS nn_id
-         |  FROM embeddings e JOIN cells ON e.label = cells.cell
-         |  WHERE e.vec_id <> cells.q_id),
+         |  SELECT probes.q_id, e.vec_id AS nn_id
+         |  FROM embeddings e JOIN probes ON e.label = probes.cell
+         |  WHERE e.vec_id <> probes.q_id),
          |$duckAdcDt,
          |adc AS (
          |  SELECT cand.q_id, cand.nn_id,
@@ -1986,22 +1907,7 @@ object VectorOps {
     // per-cell pair join is bounded by the largest cell — the paper's
     // own K knob controls that bound.
     Q("h_semdedup", (s, d) => {
-      graft.functions.SqDistDec.register(s)
-      val e = Io.table(s, d, "embeddings")
-      val cent = e.select(col("label").as("c_label"),
-          posexplode(col("embedding")).as(Seq("pos0", "v")))
-        .groupBy(col("c_label"), col("pos0"))
-        .agg((decSum12(col("v").cast("double")) / count(lit(1))).as("c"))
-      val centArr = cent.groupBy(col("c_label"))
-        .agg(transform(array_sort(collect_list(struct(col("pos0"), col("c")))),
-          x => x.getField("c")).as("carr"))
-      val dist = e.select(col("vec_id"), col("embedding"))
-        .crossJoin(broadcast(centArr))
-        .select(col("vec_id"), col("c_label"),
-          expr("sq_dist_dec(embedding, carr)").as("d2"))
-      val wCell = Window.partitionBy(col("vec_id")).orderBy(col("d2"), col("c_label"))
-      val cells = dist.withColumn("rn", row_number().over(wCell)).filter(col("rn") === 1)
-        .select(col("vec_id"), col("c_label").as("cell"))
+      val cells = ivfCells(ivfRanks(s, d))
       val ev = withDoubles(s, d).select(col("vec_id"), col("dv")).join(cells, "vec_id")
       val a = ev.select(col("cell"), col("vec_id").as("id_a"), col("dv").as("va"))
       val b = ev.select(col("cell"), col("vec_id").as("id_b"), col("dv").as("vb"))
@@ -2018,22 +1924,8 @@ object VectorOps {
           (col("n_items") - coalesce(col("n_dropped"), lit(0L))).as("n_kept"))
         .orderBy("cell")
     }, Some(
-      s"""WITH cent AS (
-         |  SELECT label AS c_label, i AS pos,
-         |    ${dSum12("CAST(embedding[i] AS DOUBLE)")} / COUNT(*) AS c
-         |  FROM embeddings,
-         |    (SELECT UNNEST(generate_series(1,
-         |       (SELECT MAX(len(embedding)) FROM embeddings))) AS i)
-         |  GROUP BY label, i),
-         |dist AS (
-         |  SELECT e.vec_id, cent.c_label,
-         |    CAST(SUM(CAST((CAST(e.embedding[cent.pos] AS DOUBLE) - cent.c)
-         |                  * (CAST(e.embedding[cent.pos] AS DOUBLE) - cent.c)
-         |             AS DECIMAL(38,12))) AS DOUBLE) AS d2
-         |  FROM embeddings e, cent GROUP BY e.vec_id, cent.c_label),
-         |cells AS (
-         |  SELECT vec_id, c_label AS cell FROM dist
-         |  QUALIFY ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY d2, c_label) = 1),
+      s"""$duckPqCodes,
+         |$duckIvfCells,
          |pairs AS (
          |  SELECT ca.cell, a.vec_id AS id_a, b.vec_id AS id_b
          |  FROM embeddings a JOIN cells ca ON ca.vec_id = a.vec_id

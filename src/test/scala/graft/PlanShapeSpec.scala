@@ -784,11 +784,12 @@ class PlanShapeSpec extends AnyFunSuite {
     // the recall/cost-curve row (r12): the coarse quantizer must be the
     // native map-side sq_dist_dec against broadcast centroids, the
     // candidate census a KEYED (cell) equi-join, and every nested-loop
-    // join a BOUNDED-side broadcast — the 10-row centroid array (×2:
-    // quantizer + truth prep), the 20-query exact-truth side, the
-    // 4-row nprobe spine (costs + hits) and the one-row n_truth
-    // scalar: ≤6 total. A data-sized cartesian or an unkeyed
-    // candidate path would be the 100 TB mistake.
+    // join a BOUNDED-side broadcast — the 10-row centroid array of the
+    // shared ranking (×2: home cells, and the 20 queries' probe cells,
+    // whose vec_id filter is pushed below the rank window), the
+    // 20-query exact-truth side, the 4-row nprobe spine (costs + hits)
+    // and the one-row n_truth scalar: ≤6 total. A data-sized cartesian
+    // or an unkeyed candidate path would be the 100 TB mistake.
     val p = plan("h_ann_nprobe_curve").split("== Initial Plan ==").head
     assert(p.contains("sq_dist_dec"),
       "native sq_dist_dec missing — quantizer is not map-side")
@@ -818,6 +819,39 @@ class PlanShapeSpec extends AnyFunSuite {
     assert(p.contains("SortMergeJoin") || p.contains("ShuffledHashJoin")
       || p.contains("BroadcastHashJoin"),
       "within-cell pair enumeration is not a keyed join")
+  }
+
+  test("IVF family: one shared coarse quantizer bounds the embeddings scans") {
+    // the cells come from one nearest-centroid ranking over the memoized
+    // label centroids (pqCent), so no row re-derives the centroids from
+    // the corpus, and the nprobe curve joins the probes onto the cells
+    // directly, not onto a corpus scan joined with them. Counted in the
+    // pre-AQE physical plan the way ProbeScanCount counts.
+    for ((q, maxScans) <- Seq("h_ann_nprobe_curve" -> 10, "h_ann_ivf" -> 4,
+        "h_ann_ivf_probe2" -> 4, "h_semdedup" -> 5)) {
+      val census = ProbeScanCount.scanCensus(
+        Registry.queries(q)(spark, sf).queryExecution.sparkPlan)
+      val n = census.getOrElse("embeddings.parquet", 0)
+      assert(n >= 1, s"$q: no embeddings scan found in $census")
+      assert(n <= maxScans, s"$q: $n embeddings scans (> $maxScans)")
+    }
+  }
+
+  test("boxplot: the quartile frame is selected once, no final re-join") {
+    // the outlier census groups by the flag plus the quartile/fence
+    // columns, so no final join re-runs the quartile selection and
+    // broadcasts its inputs again: 2 broadcast stages remain (the
+    // per-partition rank offsets the selection reads, and the fence
+    // table the census joins).
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanHelper, BroadcastQueryStageExec}
+    object Aqe extends AdaptiveSparkPlanHelper
+    val df = Registry.queries("d_agg_boxplot")(spark, sf)
+    df.collect()
+    val stages = Aqe.collect(df.queryExecution.executedPlan) {
+      case b: BroadcastQueryStageExec => b
+    }
+    assert(stages.size <= 2,
+      s"${stages.size} broadcast stages:\n${df.queryExecution.executedPlan}")
   }
 
   test("dsir weights: model tables join keyed, scoring in one doc aggregate") {

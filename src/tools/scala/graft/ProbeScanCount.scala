@@ -1,5 +1,6 @@
 package graft
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
 
 /** Registry-wide duplicate-scan census: for every declared query,
   * count how many times each parquet table appears as a scan in the
@@ -8,6 +9,13 @@ import org.apache.spark.sql.SparkSession
   * one query are multi-consumption recompute candidates (guide §1.2-1).
   */
 object ProbeScanCount {
+  /** Parquet scans per table (root directory name) in one physical
+    * plan. PlanShapeSpec's scan pins count through this same function. */
+  def scanCensus(plan: SparkPlan): Map[String, Int] =
+    plan.collect { case f: FileSourceScanExec =>
+      f.relation.location.rootPaths.headOption.map(_.getName).getOrElse("?")
+    }.groupBy(identity).view.mapValues(_.size).toMap
+
   def main(args: Array[String]): Unit = {
     val d = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
     val spark = SparkSession.builder().master("local[8]")
@@ -20,12 +28,8 @@ object ProbeScanCount {
     val names = if (args.nonEmpty) args.toSeq else SparkEntry.queries.keys.toSeq.sorted
     for (n <- names) {
       try {
-        val plan = SparkEntry.queries(n)(spark, d).queryExecution.sparkPlan
-        val scans = plan.collect {
-          case f: org.apache.spark.sql.execution.FileSourceScanExec =>
-            f.relation.location.rootPaths.headOption.map(_.getName).getOrElse("?")
-        }
-        val dup = scans.groupBy(identity).view.mapValues(_.size).filter(_._2 >= 3)
+        val dup = scanCensus(SparkEntry.queries(n)(spark, d).queryExecution.sparkPlan)
+          .filter(_._2 >= 3)
         if (dup.nonEmpty)
           println(s"$n  " + dup.toSeq.sortBy(-_._2)
             .map { case (t, c) => s"$t x$c" }.mkString(", "))
