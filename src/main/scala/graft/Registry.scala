@@ -15,8 +15,16 @@ object Registry {
       FuncExtraOps.all ++ EtlOps.all ++ TpchOps.all ++ EngineSurfaceOps.all ++
       ContaminationOps.all ++ MixOps.all ++ DqOps.all ++ GraphOps.all
 
+  /** Each query installs the native functions its session lacks first
+    * (the one registration path for sessions built without
+    * `GraftExtensions`; a no-op for those built with it). */
   lazy val queries: Map[String, (SparkSession, String) => DataFrame] =
-    all.map(q => q.name -> q.fn).toMap
+    all.map { q =>
+      q.name -> { (s: SparkSession, d: String) =>
+        graft.functions.GraftExtensions.install(s)
+        q.fn(s, d)
+      }
+    }.toMap
 
   lazy val oracles: Map[String, String] =
     all.flatMap(q => q.oracle.map(o => q.name -> o)).toMap

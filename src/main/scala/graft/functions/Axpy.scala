@@ -1,9 +1,7 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Cast, Expression, ExpressionInfo, TernaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Cast, Expression, TernaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types.{DataType, DoubleType}
 
@@ -57,11 +55,4 @@ object Axpy {
   def build(children: Seq[Expression]): Axpy =
     Axpy(Cast(children(0), DoubleType), Cast(children(1), DoubleType),
       Cast(children(2), DoubleType))
-
-  def register(s: SparkSession): Unit = {
-    s.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("axpy"),
-      new ExpressionInfo(classOf[Axpy].getName, "axpy"),
-      (children: Seq[Expression]) => build(children))
-  }
 }

@@ -1,9 +1,7 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
@@ -84,20 +82,4 @@ case class DotProduct(left: Expression, right: Expression)
 
   override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression): Expression =
     copy(left = newLeft, right = newRight)
-}
-
-object DotProduct {
-  /** Register `dot_product(arr, arr)` in the session's function registry
-    * so operators can use it via `expr("dot_product(a, b)")`. Idempotent.
-    */
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("dot_product"),
-      new ExpressionInfo(classOf[DotProduct].getName, "dot_product"),
-      (children: Seq[Expression]) => DotProduct(children(0), children(1)))
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("bitmask_jaccard"),
-      new ExpressionInfo(classOf[BitmaskJaccard].getName, "bitmask_jaccard"),
-      (children: Seq[Expression]) => BitmaskJaccard(children(0), children(1)))
-  }
 }

@@ -1,9 +1,7 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Generator, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, Generator, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
@@ -39,15 +37,4 @@ case class ExplodeNgrams(child: Expression, n: Int)
 
   override def prettyName: String = "explode_ngrams"
   override protected def withNewChildInternal(c: Expression): ExplodeNgrams = copy(child = c)
-}
-
-object ExplodeNgrams {
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("explode_ngrams"),
-      new ExpressionInfo(classOf[ExplodeNgrams].getName, "explode_ngrams"),
-      (children: Seq[Expression]) => ExplodeNgrams(
-        children.head,
-        children(1).eval().asInstanceOf[Number].intValue()))
-  }
 }

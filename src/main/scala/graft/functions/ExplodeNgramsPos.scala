@@ -1,9 +1,7 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Generator, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, Generator, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.types.{IntegerType, StringType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
@@ -42,15 +40,4 @@ case class ExplodeNgramsPos(child: Expression, n: Int)
   override def prettyName: String = "explode_ngrams_pos"
   override protected def withNewChildInternal(c: Expression): ExplodeNgramsPos =
     copy(child = c)
-}
-
-object ExplodeNgramsPos {
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("explode_ngrams_pos"),
-      new ExpressionInfo(classOf[ExplodeNgramsPos].getName, "explode_ngrams_pos"),
-      (children: Seq[Expression]) => ExplodeNgramsPos(
-        children.head,
-        children(1).eval().asInstanceOf[Number].intValue()))
-  }
 }

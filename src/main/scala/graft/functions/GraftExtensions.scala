@@ -1,74 +1,59 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSessionExtensions
+import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
 /** SparkSessionExtensions entry point: registers the engine's native
-  * functions at session build time, so a deployment can enable them
+  * functions at session build time, so a deployment enables them
   * fleet-wide with
-  * `spark.sql.extensions=graft.functions.GraftExtensions` instead of
-  * calling `DotProduct.register` per session. (Operators still register
-  * defensively — both paths are idempotent.)
+  * `spark.sql.extensions=graft.functions.GraftExtensions`. A session
+  * built without the extension gets them from [[GraftExtensions.install]]
+  * (every registry query runs it first).
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction((
-      FunctionIdentifier("dot_product"),
-      new ExpressionInfo(classOf[DotProduct].getName, "dot_product"),
-      (children: Seq[Expression]) => DotProduct(children(0), children(1))))
-    ext.injectFunction((
-      FunctionIdentifier("bitmask_jaccard"),
-      new ExpressionInfo(classOf[BitmaskJaccard].getName, "bitmask_jaccard"),
-      (children: Seq[Expression]) => BitmaskJaccard(children(0), children(1))))
-    ext.injectFunction((
-      FunctionIdentifier("bitmask_inter"),
-      new ExpressionInfo(classOf[BitmaskInter].getName, "bitmask_inter"),
-      (children: Seq[Expression]) => BitmaskInter(children(0), children(1))))
-    ext.injectFunction((
-      FunctionIdentifier("minhash_sig"),
-      new ExpressionInfo(classOf[MinHashSig].getName, "minhash_sig"),
-      (children: Seq[Expression]) => MinHashSig(
-        children.head, children(1).eval().asInstanceOf[Number].intValue())))
-    ext.injectFunction((
-      FunctionIdentifier("lsh_bands"),
-      new ExpressionInfo(classOf[LshBands].getName, "lsh_bands"),
-      (children: Seq[Expression]) => LshBands(children.head)))
-    ext.injectFunction((
-      FunctionIdentifier("sq_dist_dec"),
-      new ExpressionInfo(classOf[SqDistDec].getName, "sq_dist_dec"),
-      (children: Seq[Expression]) => SqDistDec(children(0), children(1))))
-    ext.injectFunction((
-      FunctionIdentifier("jaro_winkler"),
-      new ExpressionInfo(classOf[JaroWinkler].getName, "jaro_winkler"),
-      (children: Seq[Expression]) => JaroWinkler(children(0), children(1))))
-    ext.injectFunction((
-      FunctionIdentifier("simhash32"),
-      new ExpressionInfo(classOf[SimHash32].getName, "simhash32"),
-      (children: Seq[Expression]) => SimHash32(children.head)))
-    ext.injectFunction((
-      FunctionIdentifier("ngram_set_mask"),
-      new ExpressionInfo(classOf[NgramSetMask].getName, "ngram_set_mask"),
-      (children: Seq[Expression]) => NgramSetMask(
-        children.head, children(1),
-        children(2).eval().asInstanceOf[Number].intValue(),
-        children(3).eval().asInstanceOf[Number].intValue())))
-    ext.injectFunction((
-      FunctionIdentifier("explode_ngrams"),
-      new ExpressionInfo(classOf[ExplodeNgrams].getName, "explode_ngrams"),
-      (children: Seq[Expression]) => ExplodeNgrams(
-        children.head, children(1).eval().asInstanceOf[Number].intValue())))
-    ext.injectFunction((
-      FunctionIdentifier("explode_ngrams_pos"),
-      new ExpressionInfo(classOf[ExplodeNgramsPos].getName, "explode_ngrams_pos"),
-      (children: Seq[Expression]) => ExplodeNgramsPos(
-        children.head, children(1).eval().asInstanceOf[Number].intValue())))
-    ext.injectFunction((
-      FunctionIdentifier("axpy"),
-      new ExpressionInfo(classOf[Axpy].getName, "axpy"),
-      (children: Seq[Expression]) => Axpy.build(children)))
+    GraftExtensions.functions.foreach { case (name, cls, build) =>
+      ext.injectFunction((FunctionIdentifier(name),
+        new ExpressionInfo(cls.getName, name), build))
+    }
     ext.injectPlannerStrategy(_ => graft.plans.AsOfJoinStrategy)
     ext.injectOptimizerRule(_ => graft.plans.EagerAggregation)
     ext.injectColumnar(_ => new graft.plans.ColumnarAxpyRule)
+  }
+}
+
+object GraftExtensions {
+  private def int(e: Expression): Int = e.eval().asInstanceOf[Number].intValue()
+
+  /** Every native function: SQL name, expression class, builder. */
+  private val functions: Seq[(String, Class[_], Seq[Expression] => Expression)] = Seq(
+    ("dot_product", classOf[DotProduct], c => DotProduct(c(0), c(1))),
+    ("bitmask_jaccard", classOf[BitmaskJaccard], c => BitmaskJaccard(c(0), c(1))),
+    ("bitmask_inter", classOf[BitmaskInter], c => BitmaskInter(c(0), c(1))),
+    ("minhash_sig", classOf[MinHashSig], c => MinHashSig(c.head, int(c(1)))),
+    ("lsh_bands", classOf[LshBands], c => LshBands(c.head)),
+    ("sq_dist_dec", classOf[SqDistDec], c => SqDistDec(c(0), c(1))),
+    ("jaro_winkler", classOf[JaroWinkler], c => JaroWinkler(c(0), c(1))),
+    ("simhash32", classOf[SimHash32], c => SimHash32(c.head)),
+    ("ngram_set_mask", classOf[NgramSetMask],
+      c => NgramSetMask(c.head, c(1), int(c(2)), int(c(3)))),
+    ("explode_ngrams", classOf[ExplodeNgrams], c => ExplodeNgrams(c.head, int(c(1)))),
+    ("explode_ngrams_pos", classOf[ExplodeNgramsPos],
+      c => ExplodeNgramsPos(c.head, int(c(1)))),
+    ("axpy", classOf[Axpy], c => Axpy.build(c)))
+
+  /** Registers each native function session `s` lacks. Idempotent and
+    * never replaces an entry, so a session built with the extension
+    * (the harnesses, the specs) is left untouched. */
+  def install(s: SparkSession): Unit = {
+    val reg = s.sessionState.functionRegistry
+    reg.synchronized {
+      functions.foreach { case (name, cls, build) =>
+        val id = FunctionIdentifier(name)
+        if (!reg.functionExists(id))
+          reg.registerFunction(id, new ExpressionInfo(cls.getName, name), build)
+      }
+    }
   }
 }

@@ -1,9 +1,7 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
@@ -81,16 +79,4 @@ case class NgramSetMask(left: Expression, right: Expression, n: Int, nWords: Int
 
   override protected def withNewChildrenInternal(l: Expression, r: Expression): NgramSetMask =
     copy(left = l, right = r)
-}
-
-object NgramSetMask {
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("ngram_set_mask"),
-      new ExpressionInfo(classOf[NgramSetMask].getName, "ngram_set_mask"),
-      (children: Seq[Expression]) => NgramSetMask(
-        children.head, children(1),
-        children(2).eval().asInstanceOf[Number].intValue(),
-        children(3).eval().asInstanceOf[Number].intValue()))
-  }
 }

@@ -251,10 +251,10 @@ object AggOps {
 
     // Boxplot (five-number + Tukey fences + outlier census) per group —
     // the distribution report a dashboard draws. Quartiles come from
-    // Q.exactPercentiles (mergeable windowed selection, no holistic
+    // Q.exactPercentiles (sketch-bracketed selection, no holistic
     // buffer); fences are plain arithmetic on engine-identical doubles;
     // the outlier count is a second pass joining the tiny per-group
-    // fence table back (broadcast). Two keyed shuffles total.
+    // fence table back (broadcast).
     Q("d_agg_boxplot", (s, d) => {
       val li = Io.table(s, d, "lineitem")
         .select(col("l_returnflag"), col("l_extendedprice"))
@@ -266,24 +266,10 @@ object AggOps {
         c.cast(org.apache.spark.sql.types.DecimalType(38, 6)).cast("double")
       // qs is read once: the outlier census groups by the flag plus
       // the (per-flag constant) quartile and fence columns, so the
-      // quartile selection is not re-run for a final join. In exact
-      // mode the census reads the SAME ranked scratch the quartiles
-      // rank over (it holds every (flag, price) row) instead of a
-      // further lineitem parquet scan.
-      val mode =
-        try s.conf.get("spark.graft.percentileMode", "exact")
-        catch { case _: Throwable => "exact" }
-      val ranked =
-        if (mode == "approx") None
-        else Some(Q.rankScratch(li, "l_returnflag", "l_extendedprice"))
-      val qsRaw = ranked match {
-        case Some(r) => Q.percentilesFromRanked(r, "l_returnflag",
-          "l_extendedprice",
+      // quartile selection is not re-run for a final join; the census
+      // reads lineitem itself
+      val qs = Q.exactPercentiles(li, "l_returnflag", "l_extendedprice",
           Seq((0.25, "q1r"), (0.5, "medr"), (0.75, "q3r")))
-        case None => Q.exactPercentiles(li, "l_returnflag", "l_extendedprice",
-          Seq((0.25, "q1r"), (0.5, "medr"), (0.75, "q3r")))
-      }
-      val qs = qsRaw
         .select(col("l_returnflag"), snap(col("q1r")).as("q1"),
           snap(col("medr")).as("med"), snap(col("q3r")).as("q3"))
         .withColumn("iqr", col("q3") - col("q1"))
@@ -294,9 +280,7 @@ object AggOps {
       // accumulation-order variance), while ROUND would not be —
       // 1.5×iqr constructs exact half-boundary values (…59875 at 1e-4,
       // observed) where the engines' rounding rules disagree.
-      ranked.map(_.select(col("l_returnflag"), col("l_extendedprice")))
-        .getOrElse(li)
-        .join(broadcast(qs), "l_returnflag")
+      li.join(broadcast(qs), "l_returnflag")
         .groupBy(Seq("l_returnflag", "q1", "med", "q3", "iqr", "lo_fence",
           "hi_fence").map(col): _*)
         .agg(count(lit(1)).as("n_rows"),
@@ -388,20 +372,14 @@ object AggOps {
          |FROM c ORDER BY l_returnflag""".stripMargin)),
 
     // l_quantity is integral-valued double → exact percentile interpolation.
-    // Computed via Q.exactPercentiles (windowed two-pass selection), not
+    // Computed via Q.exactPercentiles (sketch-bracketed selection), not
     // the holistic `percentile`/`median` aggregates whose single buffer
     // holds every group value — same interpolation, mergeable plan.
-    // boundedDomain (r15): l_quantity's domain is the 50 integral
-    // quantities at ANY corpus size, so the count-histogram form (one
-    // map-side-combined hash agg + a ≤50-row-per-key cumulative window)
-    // replaces the range shuffle + sampling job + input-sized ranked
-    // scratch — value-identical rank selection.
     Q("d_agg_percentile", (s, d) => {
       Q.exactPercentiles(
         Io.table(s, d, "lineitem").select(col("l_returnflag"), col("l_quantity")),
         "l_returnflag", "l_quantity",
-        Seq((0.5, "med_qty"), (0.25, "p25_qty"), (0.75, "p75_qty")),
-        boundedDomain = true)
+        Seq((0.5, "med_qty"), (0.25, "p25_qty"), (0.75, "p75_qty")))
         .select(col("l_returnflag"), col("med_qty"), col("p25_qty"), col("p75_qty"))
         .orderBy("l_returnflag")
     }, Some(
@@ -499,13 +477,11 @@ object AggOps {
     // of it — deterministic per engine, identical flags across engines.
     Q("d_agg_approx_pctl", (s, d) => {
       val li = Io.table(s, d, "lineitem").select(col("l_returnflag"), col("l_quantity"))
-      // exact reference via the mergeable windowed selection (no
+      // exact reference via the sketch-bracketed selection (no
       // holistic buffer); the sketch side stays approx_percentile —
       // KLL-style sketches merge, so that aggregate already scales.
-      // boundedDomain (r15): l_quantity is a 50-value integral domain —
-      // histogram form, no range shuffle/sampling/ranked scratch
       val exact = Q.exactPercentiles(li, "l_returnflag", "l_quantity",
-        Seq((0.5, "exact_med")), boundedDomain = true)
+        Seq((0.5, "exact_med")))
       val approx = li.groupBy(col("l_returnflag"))
         .agg(expr("approx_percentile(l_quantity, 0.5, 1000)").as("approx_med"))
       exact.join(approx, "l_returnflag")
@@ -618,12 +594,9 @@ object AggOps {
     Q("d_agg_kll_quantiles", (s, d) => {
       val li = Io.table(s, d, "lineitem")
         .select(col("l_returnflag"), col("l_quantity"))
-      // boundedDomain (r15): l_quantity is a 50-value integral domain —
-      // histogram form, no range shuffle/sampling/ranked scratch
       val exact = Q.exactPercentiles(li, "l_returnflag", "l_quantity",
         Seq((0.4375, "lo50"), (0.5, "exact_med"), (0.5625, "hi50"),
-          (0.84375, "lo90"), (0.9, "exact_p90"), (0.96875, "hi90")),
-        boundedDomain = true)
+          (0.84375, "lo90"), (0.9, "exact_p90"), (0.96875, "hi90")))
       val sk = li.groupBy(col("l_returnflag"))
         .agg(expr("kll_sketch_agg_double(CAST(l_quantity AS DOUBLE), 200)").as("sk"),
           count(lit(1)).as("n_rows"))

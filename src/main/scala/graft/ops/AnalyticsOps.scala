@@ -888,67 +888,25 @@ object AnalyticsOps {
     // wild value shifts a mean, not a median) per event type; events
     // whose |value − median| exceeds 3×MAD are flagged. Both medians
     // are exact with the same even-count interpolation as DuckDB's
-    // MEDIAN, but computed via Q.exactPercentiles — sort-based windowed
-    // selection, spillable — rather than the holistic `median`
-    // aggregate, whose single buffer would swallow an entire skewed
-    // event type at 100 TB. Two windowed passes + broadcast joins back
-    // (the per-type median tables are type-cardinality-sized).
+    // MEDIAN, but computed via Q.exactPercentiles — sketch-bracketed
+    // selection — rather than the holistic `median` aggregate, whose
+    // single buffer would swallow an entire skewed event type at
+    // 100 TB. The MAD is a second selection over |v − med|; both
+    // per-type tables broadcast back (type-cardinality-sized).
     Q("g_anomaly_mad", (s, d) => {
       val ev = Io.events(s, d)
         .select(col("event_id"), col("event_type"), col("value"))
-      val mode =
-        try s.conf.get("spark.graft.percentileMode", "exact")
-        catch { case _: Throwable => "exact" }
-      if (mode == "approx") {
-        // sketch mode (the 100 TB swap): no ranked scratch exists to
-        // share, so keep the r15 structure — one materialized dev frame
-        // feeding the MAD sketch aggregate and the scoring join.
-        val med = Q.exactPercentiles(ev, "event_type", "value",
-          Seq((0.5, "med")))
-        val withDev = Q.materialize(s, d, "mad_withdev")(
-          ev.join(broadcast(med), "event_type")
-            .withColumn("dev", abs(col("value") - col("med"))))
-        val mad = Q.exactPercentiles(
-          withDev.select(col("event_type"), col("dev")),
-          "event_type", "dev", Seq((0.5, "mad")))
-        withDev.join(broadcast(mad), "event_type")
-          .filter(col("dev") > col("mad") * 3.0)
-          .select(col("event_type"), col("event_id"), col("value"),
-            r6(col("med")).as("med"), r6(col("mad")).as("mad"),
-            r6(col("dev") / col("mad")).as("mad_score"))
-          .orderBy("event_type", "event_id")
-      } else {
-        // r16 (guide §1.2-1, §5): ONE ranked base scratch — carrying
-        // event_id — serves the median selection, the deviation rank
-        // pass AND the final scoring, replacing the r15 chain of three
-        // input-sized checkpoints (median ranked scratch + materialized
-        // withDev + dev ranked scratch) and a third parquet events scan.
-        // withDev below is a broadcast hash join over the in-memory
-        // scratch (re-evaluated per consumer, but each evaluation is an
-        // in-memory scan — cheaper than an extra eager checkpoint, the
-        // d_agg_boxplot r15 measurement).
-        val base = Q.rankScratch(ev, "event_type", "value")
-        val med = Q.percentilesFromRanked(base, "event_type", "value",
-          Seq((0.5, "med")))
-        // withDev is its own narrow scratch (the r15 layout), but built
-        // from the in-memory base instead of a THIRD parquet events
-        // scan; the dev rank pass and the final scoring read it exactly
-        // as before
-        val withDev = Q.scratch("mad_withdev")(base
-          .select(col("event_id"), col("event_type"), col("value"))
-          .join(broadcast(med), "event_type")
-          .withColumn("dev", abs(col("value") - col("med"))))
-        val devRanked = Q.rankScratch(
-          withDev.select(col("event_type"), col("dev")), "event_type", "dev")
-        val mad = Q.percentilesFromRanked(devRanked, "event_type", "dev",
-          Seq((0.5, "mad")))
-        withDev.join(broadcast(mad), "event_type")
-          .filter(col("dev") > col("mad") * 3.0)
-          .select(col("event_type"), col("event_id"), col("value"),
-            r6(col("med")).as("med"), r6(col("mad")).as("mad"),
-            r6(col("dev") / col("mad")).as("mad_score"))
-          .orderBy("event_type", "event_id")
-      }
+      val med = Q.exactPercentiles(ev, "event_type", "value", Seq((0.5, "med")))
+      val withDev = ev.join(broadcast(med), "event_type")
+        .withColumn("dev", abs(col("value") - col("med")))
+      val mad = Q.exactPercentiles(withDev.select(col("event_type"), col("dev")),
+        "event_type", "dev", Seq((0.5, "mad")))
+      withDev.join(broadcast(mad), "event_type")
+        .filter(col("dev") > col("mad") * 3.0)
+        .select(col("event_type"), col("event_id"), col("value"),
+          r6(col("med")).as("med"), r6(col("mad")).as("mad"),
+          r6(col("dev") / col("mad")).as("mad_score"))
+        .orderBy("event_type", "event_id")
     }, Some(
       """WITH med AS (
         |  SELECT event_type, MEDIAN(CAST(value AS DOUBLE)) AS med
@@ -2314,17 +2272,16 @@ object AnalyticsOps {
     // purchases (user-keyed LAG window — distributed, no global
     // exchange), then n/mean/p50/p90 of the gap in days over all gaps.
     // The mean is an exact BIGINT micros sum; gap days divide the same
-    // literal on both engines; percentiles run through the two-pass
-    // range-rank (single logical key — the offset windows stay
-    // ≤32-row, the ranked shuffle ranges on the value) paired with
+    // literal on both engines; percentiles run through the
+    // sketch-bracketed selection (Q.exactPercentiles) paired with
     // quantile_cont at 1e-6.
     Q("g_interpurchase_time", (s, d) => {
       val w = Window.partitionBy(col("user_id"))
         .orderBy(col("ts_us"), col("event_id"))
       // materialized (r15): gaps feeds the count/mean aggregate AND the
-      // percentile pass (whose range partitioner samples its input), so
-      // the user-keyed LAG window ran three times without it. The frame
-      // is purchase-gap-sized.
+      // percentile's sketch and bracket passes, so the user-keyed LAG
+      // window would run three times without it. The frame is
+      // purchase-gap-sized.
       val gaps = Q.materialize(s, d, "interpurchase_gaps")(
         Io.events(s, d)
           .filter(col("event_type") === "purchase")
@@ -2732,18 +2689,18 @@ object AnalyticsOps {
     // deterministic under heavy ties — every tied customer lands in
     // the same bucket, no rank tiebreak needed. Output is the bounded
     // ≤125-row segment census. Scale shape: one hash-agg over orders →
-    // customer-aggregate-sized table; the threshold pass is
-    // Q.exactPercentiles on a constant key (a single-partition window
-    // over CUSTOMER AGGREGATES — fine here, and the documented 100 TB
-    // swap is approx_percentile over the same rows, scores unchanged
-    // except at the 1e-? threshold epsilon); the 12 thresholds
+    // customer-aggregate-sized table; the threshold pass is ONE
+    // Q.exactPercentiles keyed by dimension (sketch-bracketed selection
+    // over CUSTOMER AGGREGATES; the documented 100 TB swap is
+    // approx_percentile over the same rows, scores unchanged except at
+    // the 1e-? threshold epsilon); the 12 thresholds fold into one row
     // broadcast back, scoring is map-side, final agg is ≤125 groups.
     Q("g_rfm_segments", (s, d) => {
-      // materialized (r15): rfm is consumed FIVE times (the watermark
-      // agg, three threshold passes, the scoring pass) — without the
-      // checkpoint each consumer re-runs the orders scan + hash agg.
-      // The table is customer-aggregate-sized, the class Q.materialize
-      // exists for.
+      // materialized (r15): rfm is consumed four times (the watermark
+      // agg, the threshold sketch and bracket passes, the scoring pass)
+      // — without the checkpoint each consumer re-runs the orders scan
+      // + hash agg. The table is customer-aggregate-sized, the class
+      // Q.materialize exists for.
       val rfm = Q.materialize(s, d, "rfm_cust")(
         Io.table(s, d, "orders")
           .select(col("o_custkey"), col("o_orderdate").cast("date").as("od"),
@@ -2754,24 +2711,23 @@ object AnalyticsOps {
       val mx = rfm.agg(max(col("last_d")).as("mxd"))
       val base = rfm.crossJoin(broadcast(mx))
         .withColumn("rec", datediff(col("mxd"), col("last_d")).cast("long"))
-        .withColumn("k", lit(1))
-      // boundedDomain (r15) for rec (day-grain lag, calendar-bounded)
-      // and freq (orders per customer, activity-bounded): histogram
-      // form. monet is a continuous decimal — it keeps the general
-      // range-rank form.
-      def th(v: String, pfx: String, bounded: Boolean = false) = broadcast(
-        Q.exactPercentiles(base.select(col("k"), col(v)), "k", v,
-          Seq((0.2, s"${pfx}q20"), (0.4, s"${pfx}q40"),
-            (0.6, s"${pfx}q60"), (0.8, s"${pfx}q80")),
-          boundedDomain = bounded).drop("k"))
+      // one selection for all three dimensions: the values stack under
+      // a dimension key (the integral ones exactly as doubles), and the
+      // 3 × 4 thresholds fold into one row attached once
+      val qs = Seq(20, 40, 60, 80)
+      val pct = Q.exactPercentiles(
+        base.select(expr("stack(3, 'r', CAST(rec AS DOUBLE), " +
+          "'f', CAST(freq AS DOUBLE), 'm', monet) AS (dim, val)")),
+        "dim", "val", qs.map(q => (q / 100.0, s"q$q")))
+      val ths = for (dim <- Seq("r", "f", "m"); q <- qs)
+        yield max(when(col("dim") === dim, col(s"q$q"))).as(s"${dim}q$q")
+      val th = pct.agg(ths.head, ths.tail: _*)
       def score(v: String, pfx: String) =
         (col(v) > col(s"${pfx}q20")).cast("int") +
           (col(v) > col(s"${pfx}q40")).cast("int") +
           (col(v) > col(s"${pfx}q60")).cast("int") +
           (col(v) > col(s"${pfx}q80")).cast("int")
-      base.crossJoin(th("rec", "r", bounded = true))
-        .crossJoin(th("freq", "f", bounded = true))
-        .crossJoin(th("monet", "m"))
+      base.crossJoin(broadcast(th))
         .withColumn("rscore", lit(5) - score("rec", "r"))
         .withColumn("fscore", lit(1) + score("freq", "f"))
         .withColumn("mscore", lit(1) + score("monet", "m"))
@@ -3494,11 +3450,10 @@ object AnalyticsOps {
 
     // Fulfillment-latency SLA read: ship-minus-order days per lineitem,
     // p50/p90/p99 per order priority via Q.exactPercentiles (the
-    // mergeable two-pass windowed selection — no holistic percentile
-    // buffer at any scale). Latencies are exact integer day diffs; the
-    // interpolated quantiles snap at 1e-6 (the d_agg_boxplot
-    // discipline: the engines' QUANTILE_CONT associations differ in
-    // the last ulps). One join shuffle + one priority-keyed window.
+    // sketch-bracketed selection — no holistic percentile buffer at any
+    // scale). Latencies are exact integer day diffs; the interpolated
+    // quantiles snap at 1e-6 (the d_agg_boxplot discipline: the
+    // engines' QUANTILE_CONT associations differ in the last ulps).
     Q("g_fulfillment_latency", (s, d) => {
       val lat = Io.table(s, d, "lineitem")
         .select(col("l_orderkey"),
@@ -3513,12 +3468,8 @@ object AnalyticsOps {
           (col("sday") - col("oday")).cast("double").as("lat_days"))
       val n = lat.groupBy(col("o_orderpriority"))
         .agg(count(lit(1)).as("n_lines"))
-      // boundedDomain (r15): lat_days is a day-grain integer-valued lag
-      // bounded by the calendar span (≈5k distinct at any corpus size) —
-      // histogram form, no range shuffle/sampling/ranked scratch
       Q.exactPercentiles(lat, "o_orderpriority", "lat_days",
-          Seq((0.5, "p50r"), (0.9, "p90r"), (0.99, "p99r")),
-          boundedDomain = true)
+          Seq((0.5, "p50r"), (0.9, "p90r"), (0.99, "p99r")))
         .select(col("o_orderpriority"), snap6(col("p50r")).as("p50_days"),
           snap6(col("p90r")).as("p90_days"), snap6(col("p99r")).as("p99_days"))
         .join(n, "o_orderpriority")
@@ -3543,9 +3494,9 @@ object AnalyticsOps {
     // g_funnel's step counts: per acquisition day-of-week (DOW of the
     // user's first click), the p50/p90 of hours from first click to
     // first subsequent purchase. Two keyed aggregates (first click per
-    // user, first qualifying purchase per user) and the distributed
-    // two-pass range-rank percentiles (Q.exactPercentiles — no
-    // single-partition window, swap-to-sketch knob included); the mean
+    // user, first qualifying purchase per user) and the
+    // sketch-bracketed percentiles (Q.exactPercentiles — no holistic
+    // buffer, swap-to-sketch knob included); the mean
     // is an exact BIGINT micros sum over converters. Latency doubles
     // are int→double conversions divided by the same literal on both
     // engines; percentile interpolation is snapped at 1e-6 against
@@ -3555,9 +3506,9 @@ object AnalyticsOps {
       val c0 = ev.filter(col("event_type") === "click")
         .groupBy(col("user_id")).agg(min(col("ts_us")).as("c0"))
       // materialized (r15): conv feeds the count/mean aggregate AND the
-      // percentile pass — whose range partitioner runs a SAMPLING job
-      // over its input — so without the checkpoint the two events scans
-      // + join ran three times. The frame is converter-sized.
+      // percentile's sketch and bracket passes, so without the
+      // checkpoint the two events scans + join would run three times.
+      // The frame is converter-sized.
       val conv = Q.materialize(s, d, "funnel_time_conv")(
         ev.filter(col("event_type") === "purchase")
           .join(c0, "user_id").filter(col("ts_us") >= col("c0"))

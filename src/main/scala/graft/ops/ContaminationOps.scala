@@ -40,7 +40,6 @@ object ContaminationOps {
     */
   private[ops] def docShingles(s: SparkSession, d: String) =
     Q.memoized(s, d, "docShingles") {
-      graft.functions.ExplodeNgrams.register(s)
       Q.materialize(s, d, "docShingles") {
         Io.table(s, d, "documents")
           .repartition(s.sparkContext.defaultParallelism)

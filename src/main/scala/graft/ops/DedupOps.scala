@@ -101,7 +101,6 @@ object DedupOps {
     } else {
       // width-adaptive wide path: one map-side pass, no per-token
       // explode/groupBy at all — the mask is built from `text` directly
-      graft.functions.NgramSetMask.register(s)
       val nWords = (nVocab + 63) / 64
       docs.crossJoin(broadcast(vocabArr))
         .select(col("doc_id"), col("lang"),
@@ -143,8 +142,6 @@ object DedupOps {
     Q.memoized(s, d, "bigramMasks") { bigramMasksBuild(s, d) }
 
   private def bigramMasksBuild(s: SparkSession, d: String): DataFrame = {
-    graft.functions.ExplodeNgrams.register(s)
-    graft.functions.NgramSetMask.register(s)
     val docs = Io.table(s, d, "documents")
       .repartition(s.sparkContext.defaultParallelism)
     val vocabRow = Q.materialize(s, d, "bigramVocab") {
@@ -201,7 +198,6 @@ object DedupOps {
     * equi-join; AQE broadcasts it while it fits and falls back to a
     * shuffle join once the vocabulary outgrows the threshold. */
   private def prefixPostingsBuild(s: SparkSession, d: String): DataFrame = {
-    graft.functions.ExplodeNgrams.register(s)
     // per-doc distinct-bigram count read off the memoized masks
     // (popcount sum) — no second pass over the corpus
     val sizes = bigramMasks(s, d).select(col("doc_id"),
@@ -221,7 +217,6 @@ object DedupOps {
   }
 
   private def widevocabPairsBuild(s: SparkSession, d: String): DataFrame = {
-    graft.functions.MinHashSig.register(s)
     val numHashes = 64; val bands = 16; val rowsPerBand = numHashes / bands
     // empty shingle sets (single-token docs) drop out: a zero mask
     // would contract with other zero masks into fake j=1 pairs while
@@ -318,8 +313,6 @@ object DedupOps {
 
   private def minhashNearDupPairsBuild(s: SparkSession, d: String): DataFrame = {
     val numHashes = 64; val bands = 16; val rowsPerBand = numHashes / bands
-    graft.functions.MinHashSig.register(s)
-    graft.functions.DotProduct.register(s) // bitmask_jaccard (wide-vocab masks)
     val t = docToks(s, d)
     val sig = expr(s"minhash_sig(toks, $numHashes)")
     val bandHashes = array((0 until bands).map { b =>
@@ -370,7 +363,6 @@ object DedupOps {
     * Emits (doc_id, toks, band, bh). */
   private[graft] def bandedDocSigs(s: SparkSession, docs: DataFrame): DataFrame = {
     val numHashes = 64; val bands = 16; val rowsPerBand = numHashes / bands
-    graft.functions.MinHashSig.register(s)
     val bandHashes = array((0 until bands).map { b =>
       xxhash64(concat_ws(",",
         (0 until rowsPerBand).map(r =>
@@ -433,7 +425,6 @@ object DedupOps {
   private def simhashPairs(s: SparkSession, d: String): DataFrame =
     Q.memoized(s, d, "simhashPairs") {
       Q.materialize(s, d, "simhashPairs") {
-        graft.functions.SimHash32.register(s)
         val masks = docMasks(s, d).select(col("doc_id"), col("mask"))
         val nodeIds = masks.groupBy(col("mask")).agg(min(col("doc_id")).as("nid"))
         val docNode = masks.join(nodeIds, "mask").select(col("doc_id"), col("nid"))
@@ -679,7 +670,6 @@ object DedupOps {
     // (which benched ~14 s at sf0.1; this form is a plain same-lang
     // pair join with a 16-long bit loop per pair).
     Q("h_ngram_jaccard", (s, d) => {
-      graft.functions.NgramSetMask.register(s)
       // Wide bitmask set encoding from the shared width-adaptive
       // bigramMasks artifact (see its scaladoc): vocabulary collected
       // once (partially aggregated, ≤|vocab| rows per mapper), masks
@@ -727,7 +717,6 @@ object DedupOps {
     // jaccard are integer-ratio doubles both engines compute
     // bit-identically. Inner doc = smaller bigram set (tie → lower id).
     Q("h_containment_pairs", (s, d) => {
-      graft.functions.BitmaskInter.register(s)
       val masks = bigramMasks(s, d)
         .withColumn("nbg",
           expr("aggregate(transform(mask, x -> bit_count(x)), 0, (acc, v) -> acc + v)"))
@@ -779,7 +768,6 @@ object DedupOps {
     // quadratic is in building pairs (see h_ngram_jaccard's notes), the
     // sweep itself is metadata-sized.
     Q("h_dedup_threshold_sweep", (s, d) => {
-      graft.functions.NgramSetMask.register(s)
       val masks = bigramMasks(s, d)
       val pairs = PairJoins.trianglePairs(masks, Seq("lang"), "doc_id", 8)
         .withColumn("jr", r6(expr("bitmask_jaccard(a.mask, b.mask)")))
@@ -905,8 +893,6 @@ object DedupOps {
     // broadcasts it when it fits, shuffles when the vocab outgrows the
     // threshold — no vocab-sized single-partition stage anywhere).
     Q("h_prefix_filter_pairs", (s, d) => {
-      graft.functions.ExplodeNgrams.register(s)
-      graft.functions.DotProduct.register(s) // registers bitmask_jaccard
       val masks = bigramMasks(s, d)
       // prefix postings memoized+materialized per corpus: a production
       // pipeline builds the postings index once; the self-join below
@@ -1426,7 +1412,6 @@ object DedupOps {
     // interactions and the final keep bit per document — is what gets
     // hash-checked.
     Q("h_pipeline_verdict", (s, d) => {
-      graft.functions.ExplodeNgrams.register(s)
       val docs = Io.table(s, d, "documents")
       // materialized (r15): eh feeds the keeper census AND the verdict
       // join — each execution re-hashed every document text.

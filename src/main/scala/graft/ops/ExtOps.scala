@@ -112,7 +112,6 @@ object ExtOps {
     // trailing-empty-token retention on both engines — the tokenizer-
     // parity class). Top-20 fused via TakeOrderedAndProject.
     Q("u_udtf_ngrams", (s, d) => {
-      graft.functions.ExplodeNgrams.register(s)
       Io.table(s, d, "documents")
         .selectExpr("explode_ngrams(text, 3) AS trigram")
         .groupBy(col("trigram")).agg(count(lit(1)).as("cnt"))

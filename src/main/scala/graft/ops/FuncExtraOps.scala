@@ -246,7 +246,6 @@ object FuncExtraOps {
     // DuckDB's `jaro_winkler_similarity`, snapped at 1e-6 on both
     // sides before the threshold so the cut cannot knife-edge.
     Q("f_str_jarowinkler", (s, d) => {
-      graft.functions.JaroWinkler.register(s)
       val names = Io.table(s, d, "part")
         .groupBy(col("p_name")).agg(min(col("p_partkey")).as("nid"))
       PairJoins.trianglePairs(names, Nil, "nid", 4)

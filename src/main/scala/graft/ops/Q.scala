@@ -1,8 +1,8 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DecimalType
+import org.apache.spark.sql.types.{DecimalType, LongType, StructField, StructType}
 
 /** One declared operator: a `SparkEntry.queries` entry plus (usually) a
   * DuckDB oracle SQL twin. `oracle == None` → the driver records a weaker
@@ -23,8 +23,8 @@ final case class Q(
   * Every eager checkpoint in the engine goes through one private path,
   * `checkpoint`: an eager `localCheckpoint` at MEMORY_AND_DISK_SER, one
   * `[artifact]` stderr line, and the checkpoint's RDD id recorded for
-  * its session. [[materialize]] (local store), [[scratch]] and
-  * [[rankScratch]] are its only callers. Artifacts stay pinned until
+  * its session. [[materialize]] (local store) and [[scratch]] are its
+  * only callers. Artifacts stay pinned until
   * [[releaseSession]]; scratch checkpoints share one per-session cap of
   * 32, beyond which the oldest is unpersisted. [[releaseSession]]
   * unpersists exactly the ids its session recorded, so sessions sharing
@@ -72,52 +72,41 @@ object Q {
   def coin(id: String): String =
     s"(CAST($id AS DECIMAL(38,0)) * 2654435761) % 4294967296"
 
-  /** Exact interpolated percentiles (QUANTILE_CONT semantics — identical
-    * interpolation to Spark's holistic `percentile`/`median` and
-    * DuckDB's `quantile_cont`) WITHOUT a holistic aggregation buffer.
+  /** Exact interpolated percentiles (QUANTILE_CONT semantics — the
+    * interpolation of Spark's holistic `percentile` and DuckDB's
+    * `quantile_cont`; nulls are ignored) WITHOUT a holistic aggregation
+    * buffer — the engine's one exact percentile path: a mergeable
+    * sketch brackets each rank, one pass selects it exactly (the
+    * sketch-then-refine pattern of *Approximation Algorithms for Large
+    * Scale Data Analysis*, PODS 2021, PAPERS.md).
     *
-    * Spark's `percentile(x, p)` is an ImperativeAggregate that buffers
-    * every group value in one aggregation buffer — an OOM at 100 TB, and
-    * skewed groups funnel entirely into one buffer. This helper is the
-    * mergeable two-pass form with a RANGE-PARTITIONED rank (the
-    * e_win_ntile_pct pattern): repartitionByRange on (key, v) spreads
-    * every group across the cluster, row_number ranks per (partition,
-    * key) in parallel, and the |keys|·|partitions|-row count table
-    * prefix-sums into per-key offsets (windowed per KEY over ≤32 pid
-    * rows — metadata-sized). A key-partitioned global window would
-    * instead sort each ENTIRE group on one task — for a handful of
-    * groups (or the constant-key whole-table percentile) that is a
-    * corpus-sized single-partition funnel, the exact class the
-    * PlanShapeSpec window gate bans. Then ONE hash aggregate picks the
-    * two boundary ranks per percentile and the interpolation
-    * `lo + (hi − lo)·frac` is plain arithmetic. Value-identical to the
-    * holistic form: the kth smallest of a sorted multiset does not
-    * depend on tie order (ties may split across range partitions; their
-    * ranks still form a contiguous block over equal values), and the
-    * interpolation expression is the same double arithmetic both
-    * engines run. The ranked table is materialized because two branches
-    * consume the range-sampled partitioning (bounds re-sample per
-    * execution — the g_cusum_changepoint lesson).
+    *  - **Pass 1** (eager; keys × |ps| rows reach the driver): one
+    *    map-side-combined hash aggregate per key of `count(v)` and a
+    *    single `percentile_approx` sketch (accuracy A =
+    *    [[SketchAccuracy]], rank error ≤ n/A) read at p ± [[Margin]]. A
+    *    key with fewer than A values brackets its exact [min, max].
+    *  - **Pass 2** (lazy — the returned plan): the brackets [L, H]
+    *    broadcast back; per key and p one aggregate counts the values
+    *    below L, equal to L and equal to H, and collects those strictly
+    *    inside. Rank r is L, the (r − below − eqL)-th sorted inside
+    *    value, or H; the interpolation is `lo + (hi − lo)·frac`.
+    *  - **Bracket check.** The counts prove the bracket held ranks lo
+    *    and lo + 1 (and that n did not change between the passes); a
+    *    miss never yields a value, it fails with [[BracketMiss]].
+    *  - **Bounded buffer.** Ties collapse into the eqL/eqH counts, so a
+    *    bracket collects ≤ (2m + 2/A)·n values. Where that would pass
+    *    [[BracketCap]] (≳ 10⁸ values per key), eager narrowing rounds
+    *    sketch the inside values on a 1/[[NarrowGrid]] grid and
+    *    re-bracket first (~200× narrower per round).
     *
     * `ps` maps fraction → output column name; output is one row per key.
-    *
-    * **The 100 TB swap is a tested knob, not prose**: with the session
-    * conf `spark.graft.percentileMode=approx` this routes to ONE
-    * mergeable hash aggregate of `approx_percentile` sketches
-    * (accuracy from `spark.graft.percentileAccuracy`, default 10000 —
-    * rank error ≤ n/accuracy) instead of the two-pass exact rank. Same
-    * output schema (key + named double columns); values carry the
-    * sketch's rank-error bound instead of exact interpolation.
-    * PercentileSwapSpec proves the consumer rows' outputs are
-    * row-identical (g_rfm_segments at sf0.01), boundary-sliver-bounded
-    * (rfm at sf0.1: 14 of 14,999 customers move — tied integer
-    * dimensions put quintile thresholds ON data values, where the
-    * sketch may return the adjacent order statistic), or inside the
-    * rank-error band (the percentile-emitting consumers).
+    * With the session conf `spark.graft.percentileMode=approx` (the
+    * 100 TB swap) this is pass 1 alone, lazy: `approx_percentile` at
+    * accuracy `spark.graft.percentileAccuracy` (default 10000), same
+    * schema, values within its rank-error bound (PercentileSwapSpec).
     */
   def exactPercentiles(df: DataFrame, key: String, v: String,
-      ps: Seq[(Double, String)], boundedDomain: Boolean = false): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
+      ps: Seq[(Double, String)]): DataFrame = {
     val s = df.sparkSession
     val mode =
       try s.conf.get("spark.graft.percentileMode", "exact")
@@ -126,115 +115,120 @@ object Q {
       val acc =
         try s.conf.get("spark.graft.percentileAccuracy", "10000").toInt
         catch { case _: Throwable => 10000 }
-      // one mergeable sketch aggregate — partial sketches merge
-      // map-side, no input-sized scratch, no range shuffle; the cast
-      // keeps the exact path's double output type (approx_percentile
-      // returns an actual element of v's input type)
+      // the cast keeps the exact path's double output type
       val aggs = ps.map { case (p, name) =>
         percentile_approx(col(v), lit(p), lit(acc)).cast("double").as(name)
       }
-      return df.groupBy(col(key)).agg(aggs.head, aggs.tail: _*)
-    }
-    if (boundedDomain) {
-      // Count-histogram form, for value columns the CALLER asserts have
-      // a bounded distinct domain at any corpus size (integral
-      // quantities, day-grain lags bounded by the calendar span).
-      // PRECONDITION (ADVICE r15): the value column must be NON-NULL.
-      // This branch's min(when(_cum >= lo, v)) skips a null group and
-      // returns the first non-null value, whereas the rank form would
-      // return NULL at a null-occupied rank — a nullable caller would
-      // silently shift every percentile. All current callers pass
-      // arithmetic results of non-null columns; a new caller with a
-      // nullable column must filter isNotNull FIRST (and decide what
-      // its oracle does with nulls) before asserting boundedDomain. One
-      // map-side-combined hash aggregate collapses the corpus to
-      // |keys|·|domain| (value, count) rows; the per-key cumulative
-      // window below runs over ≤|domain| rows — metadata-sized, never a
-      // corpus funnel — so the range shuffle, its per-execution
-      // sampling job, and the input-sized ranked-scratch checkpoint of
-      // the general form all disappear (guide §2.4: remove shuffles
-      // outright). Value-identical to the rank form: the value at rank
-      // r of a sorted multiset is the smallest v whose cumulative count
-      // reaches r, and the interpolation below is the same expression
-      // on the same (lo, hi, n, p).
-      val hist = df.groupBy(col(key), col(v)).agg(count(lit(1)).as("_hc"))
-      val wCum = Window.partitionBy(col(key)).orderBy(col(v))
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      val wAll = Window.partitionBy(col(key))
-      val cum = hist
-        .withColumn("_cum", sum(col("_hc")).over(wCum))
-        .withColumn("_n", sum(col("_hc")).over(wAll))
-      val aggs = ps.flatMap { case (p, name) =>
-        val lo = floor((col("_n") - 1) * lit(p)) + 1
-        Seq(min(when(col("_cum") >= lo, col(v))).as(s"_lo_$name"),
-          min(when(col("_cum") >= lo + 1, col(v))).as(s"_hi_$name"))
-      }
-      val g = cum.groupBy(col(key)).agg(max(col("_n")).as("_cnt"), aggs: _*)
-      val outs = ps.map { case (p, name) =>
-        val pos = (col("_cnt") - 1) * lit(p)
-        val frac = pos - floor(pos)
-        (col(s"_lo_$name") +
-          (coalesce(col(s"_hi_$name"), col(s"_lo_$name")) - col(s"_lo_$name")) * frac)
-          .as(name)
-      }
-      return g.select(col(key) +: outs: _*)
-    }
-    percentilesFromRanked(rankScratch(df.select(col(key), col(v)), key, v),
-      key, v, ps)
+      df.groupBy(col(key)).agg(aggs.head, aggs.tail: _*)
+    } else bracketed(df, key, v, ps, Margin, BracketCap)
   }
 
-  /** Range-partitioned ranked SCRATCH of `df` on (key, v) — the shared
-    * base of the two-pass exact-percentile machinery, exposed (r16) so
-    * a query needing both the percentile selection AND the ranked rows
-    * themselves (d_agg_boxplot's outlier census, g_anomaly_mad's
-    * deviation scoring) builds ONE scratch instead of one per pass plus
-    * a separate input-sized checkpoint (guide §1.2-1/§5). Carries every
-    * column of `df` (callers project first — guide §2.3); adds `_pid`
-    * (range partition id) and `_lrn` (row_number per (partition, key)
-    * ordered by v). A [[scratch]], never the parquet artifact store:
-    * input-sized, per-call-unique. */
-  def rankScratch(df: DataFrame, key: String, v: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val parts = df.sparkSession.sparkContext.defaultParallelism
-    val wLoc = Window.partitionBy(col("_pid"), col(key)).orderBy(col(v))
-    scratch(s"pctl_${key}_$v")(df
-      .repartitionByRange(parts, col(key), col(v))
-      .withColumn("_pid", spark_partition_id())
-      .withColumn("_lrn", row_number().over(wLoc)))
-  }
+  // the sketch's accuracy A, the bracket half-width (5× its rank error),
+  // the most values one (key, p) bracket collects, the narrowing grid
+  private val SketchAccuracy = 10000
+  private val Margin = 5.0 / SketchAccuracy
+  private val BracketCap = 1L << 17
+  private val NarrowGrid = 1000
+  /** The named error of a bracket that did not hold its ranks. */
+  val BracketMiss = "PERCENTILE_BRACKET_MISS"
 
-  /** Percentile selection over a [[rankScratch]] result: per-key offset
-    * prefix sums (≤|partitions| rows per key), global rank, one hash
-    * aggregate picking the two boundary ranks per percentile, then the
-    * shared `lo + (hi − lo)·frac` interpolation. Split from
-    * [[exactPercentiles]] (r16) so multiple passes can read one scratch. */
-  def percentilesFromRanked(ranked: DataFrame, key: String, v: String,
-      ps: Seq[(Double, String)]): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    // per-(key, partition) counts → per-key exclusive prefix offsets +
-    // group sizes; the windows below run over ≤|partitions| rows per key
-    val offs = ranked.groupBy(col(key), col("_pid"))
-      .agg(count(lit(1)).as("_pcnt"))
-      .withColumn("_off", coalesce(sum(col("_pcnt")).over(
-        Window.partitionBy(col(key)).orderBy(col("_pid"))
-          .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-      .withColumn("_n", sum(col("_pcnt")).over(Window.partitionBy(col(key))))
-      .select(col(key), col("_pid"), col("_off"), col("_n"))
-    val g0 = ranked.select(col(key), col(v), col("_pid"), col("_lrn"))
-      .join(broadcast(offs), Seq(key, "_pid"))
-      .withColumn("_rn", col("_lrn") + col("_off"))
-    val aggs = ps.flatMap { case (p, name) =>
-      val lo = floor((col("_n") - 1) * lit(p)) + 1
-      Seq(max(when(col("_rn") === lo, col(v))).as(s"_lo_$name"),
-        max(when(col("_rn") === lo + 1, col(v))).as(s"_hi_$name"))
+  /** One key's brackets: `l(i)`/`h(i)` bound p_i's two ranks, `est(i)`
+    * bounds the values strictly inside. */
+  private final case class Brackets(k: Any, n: Long, l: Seq[Any], h: Seq[Any],
+      est: Seq[Double])
+
+  /** [[exactPercentiles]]' exact path with its margin and cap exposed,
+    * so specs can drive the miss and narrowing branches. */
+  private[graft] def bracketed(df: DataFrame, key: String, v: String,
+      ps: Seq[(Double, String)], margin: Double, cap: Long): DataFrame = {
+    require(cap >= 16, s"bracket cap $cap < 16 cannot narrow")
+    val s = df.sparkSession
+    val in = df.select(col(key), col(v))
+    val (kt, vt) = (in.schema(0).dataType, in.schema(1).dataType)
+    val eps = 1.0 / SketchAccuracy
+    def miss(what: String) = s"$BracketMiss: $what (key column $key, value $v)"
+    val fr = Seq(0.0, 1.0) ++ ps.flatMap { case (p, _) =>
+      Seq(math.max(p - margin, 0.0), math.min(p + margin, 1.0)) }
+    var cur = in.groupBy(col(key)).agg(count(col(v)),
+        percentile_approx(col(v), array(fr.map(lit): _*), lit(SketchAccuracy)))
+      .collect().toSeq.map { r =>
+        val n = r.getLong(1)
+        val sk = if (r.isNullAt(2)) Seq.fill[Any](fr.size)(null) else r.getSeq[Any](2)
+        val whole = n < SketchAccuracy
+        Brackets(r.get(0), n,
+          ps.indices.map(i => if (whole) sk(0) else sk(2 + 2 * i)),
+          ps.indices.map(i => if (whole) sk(1) else sk(3 + 2 * i)),
+          ps.map(_ => if (whole) n.toDouble else (2 * margin + 2 * eps) * n))
+      }
+    def frame(bs: Seq[Brackets]): DataFrame = s.createDataFrame(
+      java.util.Arrays.asList(bs.map(b =>
+        Row.fromSeq(Seq(b.k, b.n) ++ b.l.zip(b.h).flatMap(t => Seq(t._1, t._2)))): _*),
+      StructType(Seq(StructField("_k", kt), StructField("_n", LongType)) ++
+        ps.indices.flatMap(i => Seq(StructField(s"_L$i", vt), StructField(s"_H$i", vt)))))
+    def lh(i: Int) = (col(s"_L$i"), col(s"_H$i"))
+    def inside(i: Int) = col(v) > lh(i)._1 && col(v) < lh(i)._2
+    def counts(i: Int) = Seq(count(when(col(v) < lh(i)._1, 1)).as(s"_b$i"),
+      count(when(col(v) === lh(i)._1, 1)).as(s"_e$i"),
+      count(when(col(v) === lh(i)._2 && lh(i)._2 > lh(i)._1, 1)).as(s"_f$i"))
+    // narrowing rounds (only keys whose brackets could pass the cap): the
+    // counts locate each rank inside its bracket, a grid sketch of the
+    // inside values re-brackets it
+    var round = 0
+    while (cur.exists(_.est.exists(_ > cap))) {
+      round += 1
+      require(round <= 8, miss("brackets did not narrow under the cap"))
+      val grid = array((0 to NarrowGrid).map(g => lit(g.toDouble / NarrowGrid)): _*)
+      val got = in.join(broadcast(frame(cur.filter(_.est.exists(_ > cap)))),
+          col(key) <=> col("_k"))
+        .groupBy(col(key)).agg(count(col(v)).as("_cnt"), ps.indices.flatMap(i =>
+          counts(i) ++ Seq(count(when(inside(i), 1)).as(s"_m$i"),
+            percentile_approx(when(inside(i), col(v)), grid, lit(SketchAccuracy))
+              .as(s"_g$i"))): _*)
+        .collect().map(r => r.get(0) -> r).toMap
+      cur = cur.map(b => got.get(b.k).fold(b) { r =>
+        if (r.getLong(1) != b.n) throw new IllegalStateException(miss("input changed"))
+        val next = ps.indices.map { i =>
+          if (b.est(i) <= cap) (b.l(i), b.h(i), b.est(i)) else {
+            val Seq(below, e, f, m) = (0 to 3).map(j => r.getLong(2 + 5 * i + j))
+            val lo = math.floor((b.n - 1) * ps(i)._1).toLong + 1
+            val hi = math.min(lo + 1, b.n)
+            val (jl, jh) = (lo - below, hi - below)
+            if (jl < 1 || jh > e + m + f)
+              throw new IllegalStateException(miss(s"rank $lo outside its bracket"))
+            def g(x: Double) =
+              r.getSeq[Any](6 + 5 * i)(math.min(math.max(x, 0.0), NarrowGrid).toInt)
+            (if (jl <= e) b.l(i) else if (jl > e + m) b.h(i)
+              else g(math.floor(((jl - e).toDouble / m - margin) * NarrowGrid) - 1),
+              if (jh > e + m) b.h(i) else if (jh <= e) b.l(i)
+              else g(math.ceil(((jh - e).toDouble / m + margin) * NarrowGrid) + 1),
+              math.min(m, (2 * margin + 4.0 / NarrowGrid + 2 * eps) * m + 2))
+          }
+        }
+        b.copy(l = next.map(_._1), h = next.map(_._2), est = next.map(_._3))
+      })
     }
-    val g = g0.groupBy(col(key)).agg(count(lit(1)).as("_cnt"), aggs: _*)
-    val outs = ps.map { case (p, name) =>
+    // pass 2: count below/at the brackets and collect the inside values
+    val g = in.join(broadcast(frame(cur)), col(key) <=> col("_k"), "left")
+      .groupBy(col(key)).agg(count(col(v)).as("_cnt"), max(col("_n")).as("_n") +:
+        ps.indices.flatMap(i => counts(i) ++ Seq(
+          collect_list(when(inside(i), col(v))).as(s"_c$i"),
+          max(lh(i)._1).as(s"_L$i"), max(lh(i)._2).as(s"_H$i"))): _*)
+      .select(col("*") +: ps.indices.map(i => array_sort(col(s"_c$i")).as(s"_s$i")): _*)
+    val outs = ps.zipWithIndex.map { case ((p, name), i) =>
+      val (b, e, f, sorted) = (col(s"_b$i"), col(s"_e$i"), col(s"_f$i"), col(s"_s$i"))
+      val m = size(sorted)
       val pos = (col("_cnt") - 1) * lit(p)
       val frac = pos - floor(pos)
-      (col(s"_lo_$name") +
-        (coalesce(col(s"_hi_$name"), col(s"_lo_$name")) - col(s"_lo_$name")) * frac)
-        .as(name)
+      val lo = floor(pos) + 1
+      val hi = least(lo + 1, col("_cnt"))
+      def at(r: Column) = when(r - b <= e, lh(i)._1)
+        .when(r - b <= e + m, element_at(sorted, (r - b - e).cast("int")))
+        .otherwise(lh(i)._2)
+      val held = col("_cnt") <=> col("_n") && lo - b >= 1 &&
+        hi - b <= e + m + f && m <= cap
+      when(col("_cnt") === 0, lit(null))
+        .when(!held, raise_error(lit(miss("a rank fell outside its bracket"))))
+        .otherwise(at(lo) + (at(hi) - at(lo)) * frac).as(name)
     }
     g.select(col(key) +: outs: _*)
   }
@@ -363,7 +357,7 @@ object Q {
 
   /** RDD ids of the checkpoints one session made. `artifacts` (the
     * local store of [[materialize]]) live until [[releaseSession]];
-    * `scratch` ([[scratch]], [[rankScratch]]) keeps only the newest
+    * `scratch` ([[scratch]]) keeps only the newest
     * [[ScratchCap]] — the oldest beyond the cap is unpersisted at once.
     * Ids, not RDD references: an unreferenced checkpoint stays
     * reapable by ContextCleaner. */

@@ -34,7 +34,6 @@ object TextOps {
   private[ops] def lmModel(s: org.apache.spark.sql.SparkSession, d: String):
       (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame,
         org.apache.spark.sql.DataFrame) = {
-    graft.functions.ExplodeNgrams.register(s)
     val docs = Io.table(s, d, "documents")
     val bg = Q.memoized(s, d, "lmBigrams") {
       Q.materialize(s, d, "lmBigrams")(
@@ -499,7 +498,6 @@ object TextOps {
     // answer at window granularity. dup_ratio is an integer-ratio
     // double (bit-identical division both engines).
     Q("h_substring_dup_spans", (s, d) => {
-      graft.functions.ExplodeNgramsPos.register(s)
       val docs = Io.table(s, d, "documents")
         .repartition(s.sparkContext.defaultParallelism)
       val n = docs.select(col("doc_id"), size(split(col("text"), " ")).as("n_tok"))
@@ -962,7 +960,6 @@ object TextOps {
     // the ranking key is the snapped value with the bigram string as
     // tiebreak, so the top-20 cut is engine-identical.
     Q("h_bigram_pmi", (s, d) => {
-      graft.functions.ExplodeNgrams.register(s)
       val docs = Io.table(s, d, "documents")
       val uni = docs.select(explode(toks).as("tok"))
         .groupBy(col("tok")).agg(count(lit(1)).as("c_t"))

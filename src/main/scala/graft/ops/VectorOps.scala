@@ -71,7 +71,6 @@ object VectorOps {
     * to dominate broadcast-build time, and at half the broadcast bytes.
     */
   private def withDoubles(s: SparkSession, d: String): DataFrame = {
-    graft.functions.DotProduct.register(s)
     Io.table(s, d, "embeddings").withColumn("dv", col("embedding"))
   }
 
@@ -82,7 +81,6 @@ object VectorOps {
     * rn = 1 is the Lloyd assignment / IVF home cell; rn ≤ k are the k
     * probe cells. */
   private def centroidRanks(vecs: DataFrame, cent: DataFrame, key: String): DataFrame = {
-    graft.functions.SqDistDec.register(vecs.sparkSession)
     vecs.crossJoin(broadcast(cent))
       .withColumn("d2", expr("sq_dist_dec(embedding, carr)")).drop("carr")
       .withColumn("rn", row_number().over(
@@ -162,7 +160,6 @@ object VectorOps {
     * on (band, band_val) — never a cartesian.
     */
   private def lshSigs(s: SparkSession, d: String): DataFrame = {
-    graft.functions.LshBands.register(s)
     Io.table(s, d, "embeddings")
       .select(col("vec_id"),
         posexplode(expr("lsh_bands(embedding)")).as(Seq("band", "band_val")))
@@ -424,7 +421,6 @@ object VectorOps {
     * (vec, sub, label) aggregate. */
   private def pqSubDist(s: SparkSession, d: String, in: DataFrame,
       nSubs: Int): DataFrame = {
-    graft.functions.SqDistDec.register(s)
     in.crossJoin(broadcast(pqCentArr(s, d)))
       .select(col("vec_id"), col("c_label"),
         posexplode(array((0 until nSubs).map(m =>
@@ -1555,7 +1551,6 @@ object VectorOps {
     // the cosine pass is map-side native dot_product; one final
     // lang-keyed agg. Raw-double averages (quotient-snap rule).
     Q("h_embed_lang_cohesion", (s, d) => {
-      graft.functions.DotProduct.register(s)
       val lang = Io.table(s, d, "documents")
         .select(col("doc_id").as("vec_id"), col("lang"))
       val e = Io.table(s, d, "embeddings").join(lang, "vec_id")
@@ -1781,7 +1776,6 @@ object VectorOps {
     // division in both engines.
     Q("h_pq_adc_recall", (s, d) => {
       val e = Io.table(s, d, "embeddings")
-      graft.functions.SqDistDec.register(s)
       val qs = e.filter(col("vec_id") < 20)
         .select(col("vec_id").as("q_id"), dvec(col("embedding")).as("qv"))
       val ex = e.crossJoin(broadcast(qs))
@@ -2020,7 +2014,6 @@ object VectorOps {
     // association. Scale: both arms are scan + fused top-k (the classic
     // distributed retrieval shape); fusion touches 100 rows.
     Q("h_rrf_fusion", (s, d) => {
-      graft.functions.DotProduct.register(s)
       val terms = Seq("spark", "join", "stream")
       val toks = split(col("text"), " ")
       val lexTop = Io.table(s, d, "documents")
@@ -2174,7 +2167,6 @@ object VectorOps {
     }
 
   private def mmrCandBuild(s: SparkSession, d: String): DataFrame = {
-    graft.functions.DotProduct.register(s)
     val e = Io.table(s, d, "embeddings")
     val qv = e.filter(col("vec_id") === 0).select(col("embedding").as("qemb"))
     e.filter(col("vec_id") =!= 0)
@@ -2190,7 +2182,6 @@ object VectorOps {
   private def mmrPairs(s: SparkSession, d: String): DataFrame =
     Q.memoized(s, d, "mmrPairs") {
       Q.materialize(s, d, "mmrPairs") {
-        graft.functions.DotProduct.register(s)
         val c = mmrCand(s, d)
         val a = c.select(col("doc_id").as("a"), col("embedding").as("ea"))
         val b = c.select(col("doc_id").as("b"), col("embedding").as("eb"))

@@ -53,7 +53,7 @@ class BucketSpec extends AnyFunSuite {
     val ext = new org.apache.spark.sql.SparkSessionExtensions
     new graft.functions.GraftExtensions()(ext)
     // and the runtime-registry path, end to end through SQL
-    graft.functions.DotProduct.register(spark)
+    graft.functions.GraftExtensions.install(spark)
     val r = spark.sql("SELECT dot_product(array(1.0d, 2.0d), array(3.0d, 4.0d)) AS d")
       .collect().head.getDouble(0)
     assert(r === 11.0)

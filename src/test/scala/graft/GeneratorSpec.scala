@@ -13,7 +13,7 @@ class GeneratorSpec extends AnyFunSuite {
   import TestSpark._
 
   test("explode_ngrams(text, 2) == zip_with bigram construction") {
-    ExplodeNgrams.register(spark)
+    graft.functions.GraftExtensions.install(spark)
     val docs = Io.table(spark, sf, "documents").filter(col("doc_id") < 100)
     val viaGenerator = docs.selectExpr("doc_id", "explode_ngrams(text, 2) AS bigram")
     val t = split(col("text"), " ")
@@ -29,7 +29,7 @@ class GeneratorSpec extends AnyFunSuite {
   }
 
   test("explode_ngrams_pos == transform/slice relational window construction") {
-    graft.functions.ExplodeNgramsPos.register(spark)
+    graft.functions.GraftExtensions.install(spark)
     val docs = Io.table(spark, sf, "documents").filter(col("doc_id") < 100)
     val viaGenerator = docs.select(col("doc_id"),
       expr("explode_ngrams_pos(text, 8)").as(Seq("st", "g")))
@@ -45,7 +45,7 @@ class GeneratorSpec extends AnyFunSuite {
   }
 
   test("explode_ngrams handles short texts and trigram sizes") {
-    ExplodeNgrams.register(spark)
+    graft.functions.GraftExtensions.install(spark)
     import spark.implicits._
     val df = Seq((1L, "a b c d"), (2L, "x"), (3L, "p q")).toDF("id", "txt")
     val tri = df.selectExpr("id", "explode_ngrams(txt, 3) AS g")
@@ -54,7 +54,7 @@ class GeneratorSpec extends AnyFunSuite {
   }
 
   test("generator plans through GenerateExec") {
-    ExplodeNgrams.register(spark)
+    graft.functions.GraftExtensions.install(spark)
     val df = Io.table(spark, sf, "documents").limit(10)
       .selectExpr("explode_ngrams(text, 2) AS g")
     df.collect()

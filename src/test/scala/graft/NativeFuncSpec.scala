@@ -13,10 +13,7 @@ class NativeFuncSpec extends AnyFunSuite {
   import TestSpark._
 
   private lazy val emb = {
-    graft.functions.DotProduct.register(spark)
-    graft.functions.LshBands.register(spark)
-    graft.functions.SqDistDec.register(spark)
-    graft.functions.SimHash32.register(spark)
+    graft.functions.GraftExtensions.install(spark)
     spark.read.parquet(s"$sf/embeddings.parquet")
   }
 
@@ -81,7 +78,7 @@ class NativeFuncSpec extends AnyFunSuite {
       .groupBy(col("vec_id"), col("band"))
       .agg(expr("sum(CAST(CASE WHEN pr >= 0.0 THEN shiftleft(1, p % 4) ELSE 0 END AS BIGINT))")
         .as("band_val"))
-    graft.functions.LshBands.register(spark)
+    graft.functions.GraftExtensions.install(spark)
     val native = vecs.select(col("vec_id"),
       posexplode(expr("lsh_bands(embedding)")).as(Seq("band", "band_val")))
     assert(native.except(
@@ -158,7 +155,7 @@ class NativeFuncSpec extends AnyFunSuite {
   }
 
   test("bitmask_inter equals the HOF popcount fold and composes to bitmask_jaccard") {
-    graft.functions.BitmaskInter.register(spark)
+    graft.functions.GraftExtensions.install(spark)
     // bitmask_jaccard comes from GraftExtensions on the test session
     // random-ish but deterministic two-long masks
     val df = spark.range(200).selectExpr(
@@ -291,7 +288,7 @@ class NativeFuncSpec extends AnyFunSuite {
   }
 
   test("jaro_winkler matches reference values and survives codegen round-trip") {
-    graft.functions.JaroWinkler.register(spark)
+    graft.functions.GraftExtensions.install(spark)
     import spark.implicits._
     // classic record-linkage pairs with hand-checked JW values (also
     // verified against DuckDB's jaro_winkler_similarity this session),
@@ -321,8 +318,7 @@ class NativeFuncSpec extends AnyFunSuite {
   }
 
   test("ngram_set_mask equals the explode + vocab-join + conditional-sum masks") {
-    graft.functions.NgramSetMask.register(spark)
-    graft.functions.ExplodeNgrams.register(spark)
+    graft.functions.GraftExtensions.install(spark)
     val docs = spark.read.parquet(s"$sf/documents.parquet")
     val vocabRow = docs.select(expr("explode_ngrams(text, 2)").as("b"))
       .agg(sort_array(collect_set(col("b"))).as("varr"))
@@ -360,7 +356,7 @@ class NativeFuncSpec extends AnyFunSuite {
     // runs on the scan's column vectors, ColumnarToRow moves ABOVE it),
     // and its output must equal the relational a*x+b projection
     // BIT-FOR-BIT — both paths are the same IEEE expression.
-    graft.functions.Axpy.register(spark)
+    graft.functions.GraftExtensions.install(spark)
     val li = spark.read.parquet(s"$sf/lineitem.parquet")
       .select(col("l_extendedprice"))
     val columnar = li.select(expr("axpy(l_extendedprice, 2.5, -3.0)").as("y"))

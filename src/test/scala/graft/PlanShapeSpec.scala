@@ -450,7 +450,7 @@ class PlanShapeSpec extends AnyFunSuite {
 
   test("exact percentiles run without a holistic aggregation buffer") {
     // d_agg_percentile / g_anomaly_mad / d_agg_approx_pctl's exact side
-    // must go through the windowed two-pass selection
+    // must go through the sketch-bracketed selection
     // (Q.exactPercentiles): no `percentile`/`median` ImperativeAggregate
     // (which buffers every group value in one aggregation buffer) may
     // appear in the executed plan. approx_percentile is allowed — the
@@ -461,6 +461,45 @@ class PlanShapeSpec extends AnyFunSuite {
       assert("(?<!approx_)percentile\\(".r.findFirstIn(p).isEmpty
         && "\\bmedian\\(".r.findFirstIn(p).isEmpty,
         s"$q: holistic percentile/median aggregate in executed plan:\n" + p.take(2000))
+    }
+  }
+
+  test("percentile callers: no range exchange but the final ORDER BY, no scratch checkpoint") {
+    // Q.exactPercentiles is a sketch pass plus one bracketed hash
+    // aggregate: no caller may range-partition its data (the retired
+    // rank scratch's repartitionByRange and its sampling job) or pin an
+    // input-sized checkpoint. The only range exchange allowed is the
+    // one under the final global sort, and the only LogicalRDD a
+    // caller's plan holds is its own memoized pipeline artifact.
+    import org.apache.spark.sql.catalyst.plans.physical.RangePartitioning
+    import org.apache.spark.sql.execution.{LogicalRDD, SortExec}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    object Aqe extends AdaptiveSparkPlanHelper
+    val artifacts = Map("g_interpurchase_time" -> 1, "g_funnel_time" -> 1,
+      "g_rfm_segments" -> 1)
+    for (q <- Seq("d_agg_boxplot", "d_agg_percentile", "d_agg_approx_pctl",
+        "d_agg_kll_quantiles", "g_anomaly_mad", "g_interpurchase_time",
+        "g_rfm_segments", "g_fulfillment_latency", "g_funnel_time")) {
+      val s = spark.newSession()
+      try {
+        val df = Registry.queries(q)(s, sf)
+        df.collect()
+        assert(graft.ops.Q.trackedScratch(s).isEmpty, s"$q built a scratch checkpoint")
+        val rdds = df.queryExecution.analyzed.collect { case l: LogicalRDD => l.rdd.id }
+        assert(rdds.distinct.size === artifacts.getOrElse(q, 0), s"$q: LogicalRDDs $rdds")
+        val plan = df.queryExecution.executedPlan
+        val ranged = Aqe.collect(plan) {
+          case e: ShuffleExchangeExec if e.outputPartitioning.isInstanceOf[RangePartitioning] =>
+            e.outputPartitioning.asInstanceOf[RangePartitioning].ordering
+        }
+        val finalSort = Aqe.find(plan) {
+          case so: SortExec => so.global
+          case _ => false
+        }.map(_.asInstanceOf[SortExec].sortOrder)
+        assert(ranged.isEmpty || (ranged.size == 1 && finalSort.contains(ranged.head)),
+          s"$q: range exchange beyond the final ORDER BY:\n$plan")
+      } finally graft.ops.Q.releaseSession(s)
     }
   }
 
@@ -841,7 +880,7 @@ class PlanShapeSpec extends AnyFunSuite {
     // the outlier census groups by the flag plus the quartile/fence
     // columns, so no final join re-runs the quartile selection and
     // broadcasts its inputs again: 2 broadcast stages remain (the
-    // per-partition rank offsets the selection reads, and the fence
+    // percentile brackets the selection pass joins, and the fence
     // table the census joins).
     import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanHelper, BroadcastQueryStageExec}
     object Aqe extends AdaptiveSparkPlanHelper
@@ -1398,16 +1437,7 @@ class PlanShapeSpec extends AnyFunSuite {
       // centered 7-observation MA over the day-grain revenue series —
       // calendar-bounded (≤ data range in days), same class as
       // g_survival_km's duration histogram
-      "g_stl_decompose" -> (2, "day-grain revenue series (≤ data range in days)"),
-      // r15 bounded-domain percentile histograms on the constant
-      // whole-population key: recency is a day-grain lag (≤ data range
-      // in days), frequency an orders-per-customer count — both
-      // distinct-VALUE histograms after a map-side-combined hash agg,
-      // never the raw customer rows (monet keeps the range-rank form).
-      // 4 = (cum + total) windows × 2 histograms — exactly the
-      // bounded-histogram windows, nothing else is exempt here
-      "g_rfm_segments" ->
-        (4, "day-grain recency + order-count quintile histograms (2 windows each)"))
+      "g_stl_decompose" -> (2, "day-grain revenue series (≤ data range in days)"))
     val counts = Registry.queries.toSeq.sortBy(_._1).map {
       case (name, fn) =>
         val plan = fn(spark, sf).queryExecution.sparkPlan

@@ -18,25 +18,92 @@ class PropertySpec extends AnyFunSuite {
   private def samples[A](g: Gen[A], n: Int = 100): Seq[A] =
     (0 until n).flatMap(i => g.apply(Gen.Parameters.default, Seed(42L + i)))
 
+  /** `sel` against Spark's holistic `percentile` at every fraction of
+    * `ps`: both directions of EXCEPT (null-safe), one row per key. */
+  private def assertHolistic(df: org.apache.spark.sql.DataFrame, ps: Seq[Double],
+      sel: Seq[(Double, String)] => org.apache.spark.sql.DataFrame): Unit = {
+    import org.apache.spark.sql.functions._
+    val named = ps.zipWithIndex.map { case (p, i) => (p, s"p$i") }
+    val got = sel(named)
+    val holistic = df.groupBy(col("k")).agg(
+      percentile(col("v"), lit(ps.head)).as("p0"),
+      named.tail.map { case (p, n) => percentile(col("v"), lit(p)).as(n) }: _*)
+    val diff = got.except(holistic).union(holistic.except(got))
+    assert(diff.isEmpty, s"differs from the holistic percentile:\n" +
+      diff.collect().mkString("\n"))
+    assert(got.count() == df.select("k").distinct().count())
+  }
+
+  /** Groups the bracketed selection must get exactly right: one group
+    * holding most of the rows (past the sketch-bracket threshold) with
+    * nulls, heavy ties, n = 1, n = 2, the 20-rows-5-nulls case, and an
+    * all-null group. Values are multiples of 1/8, so at dyadic
+    * fractions both interpolation formulas are exact. */
+  private def edgeGroups = {
+    import TestSpark._
+    import org.apache.spark.sql.functions._
+    val id = col("id")
+    spark.range(0, 30000).select(lit(0L).as("k"),
+        when(id % 10 === 3, lit(null))
+          .otherwise(pmod(id * 2654435761L, lit(997)).cast("double") / 8.0).as("v"))
+      .union(spark.range(0, 500).select(lit(1L), (id % 3).cast("double")))
+      .union(spark.range(0, 1).select(lit(2L), lit(4.5)))
+      .union(spark.range(0, 2).select(lit(3L), id.cast("double") * 3.0))
+      .union(spark.range(1, 21).select(lit(4L),
+        when(id % 4 === 0, lit(null)).otherwise(id.cast("double"))))
+      .union(spark.range(0, 3).select(lit(5L), lit(null).cast("double")))
+  }
+
   test("Q.exactPercentiles equals the holistic percentile aggregate") {
-    // the windowed two-pass selection (what the checked queries run —
+    // the sketch-bracketed selection (what the checked queries run —
     // no single aggregation buffer) must be VALUE-identical to Spark's
     // holistic percentile at every requested fraction, on data with
-    // ties, uneven groups, and non-integral values.
+    // ties, uneven groups, non-integral values, nulls (ignored, as in
+    // quantile_cont), groups of one and two rows, one dominant group,
+    // and the end fractions p = 0 and p = 1.
     import TestSpark._
     import org.apache.spark.sql.functions._
     val df = spark.range(0, 2000).select(
       (col("id") % 7).as("k"),
       (pmod(col("id") * 2654435761L, lit(997)).cast("double") / 8.0).as("v"))
-    val windowed = graft.ops.Q.exactPercentiles(df, "k", "v",
-      Seq((0.25, "p25"), (0.5, "p50"), (0.75, "p75"), (0.9, "p90")))
-    val holistic = df.groupBy(col("k")).agg(
-      percentile(col("v"), lit(0.25)).as("p25"),
-      percentile(col("v"), lit(0.5)).as("p50"),
-      percentile(col("v"), lit(0.75)).as("p75"),
-      percentile(col("v"), lit(0.9)).as("p90"))
-    assert(windowed.except(holistic).isEmpty && holistic.except(windowed).isEmpty)
-    assert(windowed.count() == 7)
+    assertHolistic(df, Seq(0.25, 0.5, 0.75, 0.9),
+      graft.ops.Q.exactPercentiles(df, "k", "v", _))
+    val edge = edgeGroups
+    assertHolistic(edge, Seq(0.0, 0.25, 0.5, 0.75, 1.0),
+      graft.ops.Q.exactPercentiles(edge, "k", "v", _))
+    // nulls are ignored: the 15 values of 1..20 (5 nulls) give
+    // p25 = 5.5 and p50 = 10.0, as the holistic percentile does
+    val r = graft.ops.Q.exactPercentiles(edge.filter(col("k") === 4), "k", "v",
+      Seq((0.25, "p25"), (0.5, "p50"))).head()
+    assert((r.getDouble(1), r.getDouble(2)) === ((5.5, 10.0)))
+  }
+
+  test("bracketed selection: narrowing rounds stay exact under a small cap") {
+    // a 16-value cap forces every group past it through eager narrowing
+    // rounds (grid sketch of the inside values, re-bracket) before the
+    // final pass — the 100 TB branch, driven at test scale
+    val edge = edgeGroups
+    assertHolistic(edge, Seq(0.0, 0.25, 0.5, 0.75, 1.0),
+      graft.ops.Q.bracketed(edge, "k", "v", _, 5e-4, 16))
+  }
+
+  test("bracketed selection: a bracket miss fails by name, never a wrong value") {
+    // adversarial ties: 10000 × 1.0 then 10000 × 2.0, so the median's
+    // two ranks (10000, 10001) straddle the tie boundary. With a zero
+    // margin the sketch brackets a single tie value — [1, 1] or
+    // [2, 2] — and one rank falls outside; the counts must catch it.
+    import TestSpark._
+    import org.apache.spark.sql.functions._
+    val df = spark.range(0, 20000).select(lit("t").as("k"),
+      when(col("id") < 10000, 1.0).otherwise(2.0).as("v"))
+    val ps = Seq((0.5, "med"))
+    val e = intercept[Exception](graft.ops.Q.bracketed(df, "k", "v", ps, 0.0, 1L << 17).collect())
+    val msgs = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .flatMap(t => Option(t.getMessage))
+    assert(msgs.exists(_.contains(graft.ops.Q.BracketMiss)), e.toString)
+    // the production margin brackets both tie values and gets the
+    // interpolated median
+    assert(graft.ops.Q.exactPercentiles(df, "k", "v", ps).head().getDouble(1) === 1.5)
   }
 
   test("prefix filtering is lossless: every J>=0.9 pair collides in both prefixes") {

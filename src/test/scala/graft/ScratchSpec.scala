@@ -53,11 +53,11 @@ class ScratchSpec extends AnyFunSuite {
     } finally Q.releaseSession(s)
   }
 
-  test("rankScratch evicts its oldest checkpoint beyond 32") {
+  test("scratch evicts its oldest checkpoint beyond 32") {
     val s = spark.newSession()
     try {
       val df = s.range(0, 200).select((col("id") % 3).as("k"), col("id").as("v"))
-      val frames = (1 to 33).map(_ => Q.rankScratch(df, "k", "v"))
+      val frames = (1 to 33).map(_ => Q.scratch("spec_scratch")(df))
       val ids = Q.trackedScratch(s)
       assert(ids.size === 32)
       val live = persisted

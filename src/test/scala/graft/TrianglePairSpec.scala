@@ -29,7 +29,7 @@ class TrianglePairSpec extends AnyFunSuite {
   }
 
   test("h_cosine_topk blocked triangle equals the brute-force nested-loop form") {
-    graft.functions.DotProduct.register(spark)
+    graft.functions.GraftExtensions.install(spark)
     val got = Registry.queries("h_cosine_topk")(spark, sf).collect().map(_.toString)
     val e = spark.read.parquet(s"$sf/embeddings.parquet")
       .select(col("vec_id"), col("embedding").as("dv"))

@@ -35,7 +35,8 @@ object PlanDump {
       "g_ohlc" -> "OHLC bars: asc/desc windows + aggregate share ONE hash exchange",
       "e_dq_rules" -> "DQ rules: row-local counters in one scan/table + FK left-join checks",
       "e_win_ntile_pct" -> "global ranking WITHOUT a global window: range-partitioned two-pass rank",
-      "d_agg_percentile" -> "exact percentiles via bounded-domain count histogram (r15), no holistic buffer, no range shuffle",
+      "d_agg_percentile" -> "exact percentiles: sketch brackets broadcast onto ONE bracketed hash aggregate, no holistic buffer, no range shuffle",
+      "d_agg_boxplot" -> "boxplot: sketch-bracketed quartiles + broadcast fence census over lineitem, no scratch",
       "h_minhash_widevocab" -> "open-vocabulary MinHash dedup BUILD: adaptive-width masks, no vocab guard",
       "t_q11" -> "q11: value CTE materialized ONCE — threshold subquery and main block both scan the artifact",
       "i_graph_pagerank_seeded" -> "personalized PageRank iteration: one edge join + one decimal hash-agg per round",
