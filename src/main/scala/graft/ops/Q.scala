@@ -80,7 +80,7 @@ object Q {
     * sketch-then-refine pattern of *Approximation Algorithms for Large
     * Scale Data Analysis*, PODS 2021, PAPERS.md).
     *
-    *  - **Pass 1** (eager; keys × |ps| rows reach the driver): one
+    *  - **Pass 1** (eager; keys × |ps| rows are collected to the planning JVM): one
     *    map-side-combined hash aggregate per key of `count(v)` and a
     *    single `percentile_approx` sketch (accuracy A =
     *    [[SketchAccuracy]], rank error ≤ n/A) read at p ± [[Margin]]. A

@@ -14,7 +14,7 @@ import org.apache.spark.sql.catalyst.expressions.XXH64
   *  - `entries`: the entries the row added to `CodeGenerator`'s class
   *    cache on its first execution, counted as (classloader, code body)
   *    pairs — the cache's own key — and `bodies`, the distinct code
-  *    bodies among them (the driver's compile check and the executors'
+  *    bodies among them (the planning JVM's compile check and the executors'
   *    session classloader each hold a whole-stage class);
   *  - `compiles`: codegen compiles on each execution (a row whose
   *    second or third execution compiles emits code that varies per
