@@ -631,7 +631,7 @@ object AnalyticsOps {
         .groupBy(col("from_type"), col("to_type"))
         .agg(count(lit(1)).as("n")))
       val r = c.groupBy(col("from_type")).agg(sum(col("n")).as("rs"))
-      val tr = Q.materialize(s, d, "markovSteadyTr")(
+      val tr = Q.scratch("markovSteadyTr")(
         c.join(r, "from_type")
           .select(col("from_type"), col("to_type"),
             (col("n").cast("double") / col("rs")).as("pr")))
@@ -1243,11 +1243,11 @@ object AnalyticsOps {
       import org.apache.spark.sql.expressions.Window
       val w = Window.partitionBy(col("user_id"))
         .orderBy(col("ts_us"), col("event_id"))
-      // materialized (r15): trans is consumed FOUR times (source
+      // scratch (r15): trans is consumed FOUR times (source
       // marginal, total, conditional term, destination marginal) — each
       // execution re-ran the events scan + user-keyed LEAD window. The
       // table is |types|² rows.
-      val trans = Q.materialize(s, d, "seqent_trans")(
+      val trans = Q.scratch("seqent_trans")(
         Io.events(s, d)
           .select(col("user_id"), col("ts_us"), col("event_id"),
             col("event_type").as("src"))
@@ -1312,11 +1312,11 @@ object AnalyticsOps {
     // residual is an exact dyadic double and the 3×MAD comparison is
     // engine-identical. Emits the anomalous days only.
     Q("g_seasonal_anomaly", (s, d) => {
-      // materialized (r15): daily feeds the per-dow median AND the
+      // scratch (r15): daily feeds the per-dow median AND the
       // residual join, and resid below feeds the MAD aggregate AND the
       // final scoring join — without the checkpoint the events scan +
       // hash agg ran three times. The table is |types|×|days| rows.
-      val daily = Q.materialize(s, d, "seasonal_daily")(
+      val daily = Q.scratch("seasonal_daily")(
         Io.events(s, d)
           .select(col("event_type"), expr("ts_us DIV 86400000000").as("day"))
           .groupBy(col("event_type"), col("day")).agg(count(lit(1)).as("y"))
@@ -1691,11 +1691,11 @@ object AnalyticsOps {
     // corpus-sized pass is the daily count aggregate.
     Q("g_theilsen_slope", (s, d) => {
       import org.apache.spark.sql.expressions.Window
-      // materialized (r15): daily is consumed FIVE times (base-day
+      // scratch (r15): daily is consumed FIVE times (base-day
       // scalar, both slope-pair sides, the residual pass, the n_days
       // census) — each execution re-ran the events scan + hash agg.
       // The table is |days| rows, calendar-bounded.
-      val daily = Q.materialize(s, d, "theilsen_daily")(
+      val daily = Q.scratch("theilsen_daily")(
         Io.events(s, d).filter(col("event_type") === "purchase")
           .select(expr("ts_us DIV 86400000000").as("day"))
           .groupBy(col("day")).agg(count(lit(1)).as("y")))
@@ -1947,7 +1947,7 @@ object AnalyticsOps {
       // sf0.01 the sample is the whole input and the bounds happened to
       // coincide). Freezing the ranged table once is also the 100 TB
       // shape — the range shuffle is paid once, not per consumer.
-      val local = Q.materialize(s, d, "cusum_ranged") {
+      val local = Q.scratch("cusum_ranged") {
         dev.repartitionByRange(parts, col("ts_us"), col("event_id"))
           .withColumn("pid", spark_partition_id())
           .withColumn("lc", sum(col("dv")).over(wLoc))
@@ -2049,9 +2049,9 @@ object AnalyticsOps {
         .agg(decSum(col("o_totalprice")).as("spend"))
       val wLocal = Window.partitionBy(col("pid"))
         .orderBy(col("spend"), col("o_custkey"))
-      // materialized: two consumers of a range-sampled partitioning —
+      // scratch: two consumers of a range-sampled partitioning —
       // see g_cusum_changepoint (bounds are sampled per execution)
-      val local = Q.materialize(s, d, "gini_ranked") {
+      val local = Q.scratch("gini_ranked") {
         spend
           .repartitionByRange(parts, col("spend"), col("o_custkey"))
           .withColumn("pid", spark_partition_id())
@@ -2278,11 +2278,11 @@ object AnalyticsOps {
     Q("g_interpurchase_time", (s, d) => {
       val w = Window.partitionBy(col("user_id"))
         .orderBy(col("ts_us"), col("event_id"))
-      // materialized (r15): gaps feeds the count/mean aggregate AND the
+      // scratch (r15): gaps feeds the count/mean aggregate AND the
       // percentile's sketch and bracket passes, so the user-keyed LAG
       // window would run three times without it. The frame is
       // purchase-gap-sized.
-      val gaps = Q.materialize(s, d, "interpurchase_gaps")(
+      val gaps = Q.scratch("interpurchase_gaps")(
         Io.events(s, d)
           .filter(col("event_type") === "purchase")
           .select(col("user_id"), col("event_id"), col("ts_us"))
@@ -2393,7 +2393,7 @@ object AnalyticsOps {
           sum(when(col("ts_us") >= col("mid_us"), col("value"))
             .otherwise(0.0).cast(dec18)).cast(dec16).as("y"))
         .withColumn("treat", (col("user_id") % 2).cast("int"))
-      val t = Q.materialize(s, d, "cupedTreatMoments")(
+      val t = Q.scratch("cupedTreatMoments")(
         users.groupBy(col("treat")).agg(
           count(lit(1)).as("n"),
           sum(col("x")).as("sx"), sum(col("y")).as("sy"),
@@ -2621,9 +2621,9 @@ object AnalyticsOps {
       val wLoc = Window.partitionBy(col("pid"))
         .orderBy(col("rev").desc, col("l_partkey"))
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      // materialized: two consumers of a range-sampled partitioning —
+      // scratch: two consumers of a range-sampled partitioning —
       // see g_cusum_changepoint (bounds are sampled per execution)
-      val local = Q.materialize(s, d, "abc_ranked") {
+      val local = Q.scratch("abc_ranked") {
         rev
           .repartitionByRange(parts, col("rev").desc, col("l_partkey"))
           .withColumn("pid", spark_partition_id())
@@ -2696,12 +2696,12 @@ object AnalyticsOps {
     // the 1e-? threshold epsilon); the 12 thresholds fold into one row
     // broadcast back, scoring is map-side, final agg is ≤125 groups.
     Q("g_rfm_segments", (s, d) => {
-      // materialized (r15): rfm is consumed four times (the watermark
+      // scratch (r15): rfm is consumed four times (the watermark
       // agg, the threshold sketch and bracket passes, the scoring pass)
       // — without the checkpoint each consumer re-runs the orders scan
       // + hash agg. The table is customer-aggregate-sized, the class
-      // Q.materialize exists for.
-      val rfm = Q.materialize(s, d, "rfm_cust")(
+      // Q.scratch exists for.
+      val rfm = Q.scratch("rfm_cust")(
         Io.table(s, d, "orders")
           .select(col("o_custkey"), col("o_orderdate").cast("date").as("od"),
             col("o_totalprice"))
@@ -3103,7 +3103,7 @@ object AnalyticsOps {
       val wLoc = Window.partitionBy(col("pid"))
         .orderBy(col("cents").desc, col("o_custkey"))
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      val local = Q.materialize(s, d, "pareto_ranked") {
+      val local = Q.scratch("pareto_ranked") {
         spend.repartitionByRange(parts, col("cents").desc, col("o_custkey"))
           .withColumn("pid", spark_partition_id())
           .withColumn("lc", sum(col("cents")).over(wLoc))
@@ -3293,10 +3293,10 @@ object AnalyticsOps {
       // degenerate at small SF — 15 users at sf0.001 ALL have a signup
       // — while the coin guarantees both arms at any scale; randomized
       // exposure also makes ATT ≈ naive a built-in sanity read)
-      // materialized (r15): users is consumed THREE times (both stratum
+      // scratch (r15): users is consumed THREE times (both stratum
       // arms + the naive contrast) — each execution re-ran the events
       // scan + per-user aggregate. The table is user-aggregate-sized.
-      val users = Q.materialize(s, d, "cem_users")(
+      val users = Q.scratch("cem_users")(
         ev.groupBy(col("user_id")).agg(
           max(when(expr(s"(${Q.coin("user_id")}) < 2147483648"), 1L)
             .otherwise(0L)).as("treated"),
@@ -3505,11 +3505,11 @@ object AnalyticsOps {
       val ev = Io.events(s, d)
       val c0 = ev.filter(col("event_type") === "click")
         .groupBy(col("user_id")).agg(min(col("ts_us")).as("c0"))
-      // materialized (r15): conv feeds the count/mean aggregate AND the
+      // scratch (r15): conv feeds the count/mean aggregate AND the
       // percentile's sketch and bracket passes, so without the
       // checkpoint the two events scans + join would run three times.
       // The frame is converter-sized.
-      val conv = Q.materialize(s, d, "funnel_time_conv")(
+      val conv = Q.scratch("funnel_time_conv")(
         ev.filter(col("event_type") === "purchase")
           .join(c0, "user_id").filter(col("ts_us") >= col("c0"))
           .groupBy(col("user_id"), col("c0"))
@@ -3891,7 +3891,7 @@ object AnalyticsOps {
           (col("event_type") === "purchase").cast("long").as("y"))
       val wLoc = Window.partitionBy(col("pid"))
         .orderBy(col("value").desc, col("event_id"))
-      val local = Q.materialize(s, d, "lift_ranked") {
+      val local = Q.scratch("lift_ranked") {
         ev.repartitionByRange(parts, col("value").desc, col("event_id"))
           .withColumn("pid", spark_partition_id())
           .withColumn("lrn", row_number().over(wLoc))
@@ -4065,7 +4065,7 @@ object AnalyticsOps {
       def s12(c: org.apache.spark.sql.Column) = snap12(c)
       val p = s12(lit(1.0) /
         (lit(1.0) + exp(-((col("value") - 40.0) / 30.0))))
-      val bins = Q.materialize(s, d, "calibBins")(
+      val bins = Q.scratch("calibBins")(
         Io.events(s, d)
           .filter(col("event_type").isin("purchase", "click") &&
             col("value").isNotNull)
@@ -4137,10 +4137,10 @@ object AnalyticsOps {
     // spelling — same frontier, independently derived.
     Q("g_pareto_skyline", (s, d) => {
       val parts = s.sparkContext.defaultParallelism
-      // materialized (r15): cust feeds the dominance census AND the
+      // scratch (r15): cust feeds the dominance census AND the
       // final member join — each execution re-ran the orders scan +
       // hash agg. The table is customer-aggregate-sized.
-      val cust = Q.materialize(s, d, "skyline_cust")(
+      val cust = Q.scratch("skyline_cust")(
         Io.table(s, d, "orders")
           .groupBy(col("o_custkey"))
           .agg(sum(expr("CAST(CAST(o_totalprice AS DECIMAL(12,2)) * 100" +
@@ -4149,7 +4149,7 @@ object AnalyticsOps {
       val m = cust.groupBy(col("cents")).agg(min(col("n_ord")).as("mn"))
       val wLoc = Window.partitionBy(col("pid")).orderBy(col("cents").desc)
         .rowsBetween(Window.unboundedPreceding, -1)
-      val local = Q.materialize(s, d, "skyline_ranged") {
+      val local = Q.scratch("skyline_ranged") {
         m.repartitionByRange(parts, col("cents").desc)
           .withColumn("pid", spark_partition_id())
           .withColumn("lpm", min(col("mn")).over(wLoc))

@@ -1413,9 +1413,9 @@ object DedupOps {
     // hash-checked.
     Q("h_pipeline_verdict", (s, d) => {
       val docs = Io.table(s, d, "documents")
-      // materialized (r15): eh feeds the keeper census AND the verdict
+      // scratch (r15): eh feeds the keeper census AND the verdict
       // join — each execution re-hashed every document text.
-      val eh = Q.materialize(s, d, "verdict_eh")(
+      val eh = Q.scratch("verdict_eh")(
         docs.select(col("doc_id"),
           sha2(trim(lower(col("text"))), 256).as("eh")))
       val keepers = eh.groupBy(col("eh")).agg(min(col("doc_id")).as("keep_id"))
@@ -1437,10 +1437,10 @@ object DedupOps {
         lit(0.4) * (lit(1.0) - size(filter(rt, x => x === "the" || x === "a")) / nTok) +
         lit(0.3) * least(nTok / 100.0, lit(1.0)))
         .cast(org.apache.spark.sql.types.DecimalType(38, 6)).cast("double")
-      // materialized (r15): scored feeds the per-lang threshold AND the
+      // scratch (r15): scored feeds the per-lang threshold AND the
       // low-quality flag join — each execution re-tokenized and
       // re-scored every document text.
-      val scored = Q.materialize(s, d, "verdict_scored")(
+      val scored = Q.scratch("verdict_scored")(
         docs.select(col("doc_id"), col("lang"), quality.as("quality")))
       val thr = scored
         .withColumn("cd", cume_dist().over(

@@ -290,26 +290,30 @@ object GraphOps {
       cur
     }
 
-  /** Unweighted synchronous-LPA labels after 4 fixed iterations —
-    * memoized and per-iteration-materialized; shared by the community
-    * census and the modularity score (see i_graph_community_lpa's
-    * determinism notes). */
-  private def lpaLabels(s: SparkSession, d: String): DataFrame =
-    Q.memoized(s, d, "gLpaLabels") {
-      val edges = supEdges(s, d)
+  /** Synchronous-LPA labels after 4 fixed iterations over an edge table
+    * `(src, dst)` and its BIGINT vote weight `w`: each node adopts the
+    * neighbor label of greatest summed weight, ties to the SMALLEST
+    * label. Memoized as `memo` and materialized per iteration
+    * (`${prefix}_0..4`); shared by the community census, the modularity
+    * score (unit weights — see i_graph_community_lpa's determinism
+    * notes) and the support-weighted row. */
+  private def lpaLabels(s: SparkSession, d: String, memo: String, prefix: String)
+      (edges: => DataFrame, w: Column): DataFrame =
+    Q.memoized(s, d, memo) {
+      val e = edges
       val nodes = supDeg(s, d).select(col("node"))
-      var l = Q.materialize(s, d, "glpa_0") {
+      var l = Q.materialize(s, d, s"${prefix}_0") {
         nodes.withColumn("lbl", col("node"))
       }
       for (i <- 1 to 4) {
-        val cnt = edges.join(l, edges("dst") === l("node"))
-          .groupBy(edges("src").as("n2"), col("lbl"))
-          .agg(count(lit(1)).as("cnt"))
+        val cnt = e.join(l, e("dst") === l("node"))
+          .groupBy(e("src").as("n2"), col("lbl"))
+          .agg(sum(w).as("wt"))
         val wMax = org.apache.spark.sql.expressions.Window.partitionBy(col("n2"))
-        val best = cnt.withColumn("mx", max(col("cnt")).over(wMax))
-          .filter(col("cnt") === col("mx"))
+        val best = cnt.withColumn("mx", max(col("wt")).over(wMax))
+          .filter(col("wt") === col("mx"))
           .groupBy(col("n2")).agg(min(col("lbl")).as("nlbl"))
-        l = Q.materialize(s, d, s"glpa_$i") {
+        l = Q.materialize(s, d, s"${prefix}_$i") {
           nodes.join(best, nodes("node") === best("n2"), "left")
             .select(nodes("node"),
               coalesce(col("nlbl"), nodes("node")).as("lbl"))
@@ -318,22 +322,30 @@ object GraphOps {
       l
     }
 
-  /** Oracle twin of [[lpaLabels]]: the lp0..lp4 CTE chain (layers on
-    * $supSql's `sedges`/`sdeg`; final labels in `lp4(node, lbl)`). */
-  private val lpaSql: String = {
+  /** The unit-weight [[lpaLabels]] over [[supEdges]]. */
+  private def lpaLabels(s: SparkSession, d: String): DataFrame =
+    lpaLabels(s, d, "gLpaLabels", "glpa")(supEdges(s, d), lit(1L))
+
+  /** Oracle twin of [[lpaLabels]]: the lp0..lp4 CTE chain over the edge
+    * CTE `edges` with vote weight `w` (layers on $supSql's `sdeg`; final
+    * labels in `lp4(node, lbl)`). */
+  private def lpaSql(edges: String, w: String): String = {
     val iter = (i: Int) =>
-      s"""lc$i AS (SELECT e.src AS node, l.lbl, COUNT(*) AS cnt
-         |  FROM sedges e JOIN lp${i - 1} l ON e.dst = l.node
+      s"""lc$i AS (SELECT e.src AS node, l.lbl, SUM($w) AS wt
+         |  FROM $edges e JOIN lp${i - 1} l ON e.dst = l.node
          |  GROUP BY 1, 2),
          |lm$i AS (SELECT node, MIN(lbl) AS lbl
-         |  FROM (SELECT node, lbl, cnt, MAX(cnt) OVER (PARTITION BY node) AS mx
+         |  FROM (SELECT node, lbl, wt, MAX(wt) OVER (PARTITION BY node) AS mx
          |        FROM lc$i)
-         |  WHERE cnt = mx GROUP BY node),
+         |  WHERE wt = mx GROUP BY node),
          |lp$i AS (SELECT n.node, COALESCE(m.lbl, n.node) AS lbl
          |  FROM (SELECT node FROM sdeg) n LEFT JOIN lm$i m ON m.node = n.node)""".stripMargin
     s"""lp0 AS (SELECT node, node AS lbl FROM sdeg),
        |${(1 to 4).map(iter).mkString(",\n")}""".stripMargin
   }
+
+  /** [[lpaSql]] with unit weights over $supSql's `sedges`. */
+  private val unitLpaSql = lpaSql("sedges", "CAST(1 AS BIGINT)")
 
   val all: Seq[Q] = Seq(
 
@@ -578,7 +590,7 @@ object GraphOps {
         .orderBy("size")
     }, Some(
       s"""$supSql,
-         |$lpaSql
+         |$unitLpaSql
          |SELECT size, COUNT(*) AS n_communities
          |FROM (SELECT lbl, COUNT(*) AS size FROM lp4 GROUP BY lbl)
          |GROUP BY size ORDER BY size""".stripMargin)),
@@ -620,7 +632,7 @@ object GraphOps {
           col("modularity"))
     }, Some(
       s"""$supSql,
-         |$lpaSql,
+         |$unitLpaSql,
          |intra AS (
          |  SELECT la.lbl, COUNT(*) AS e2
          |  FROM sedges e JOIN lp4 la ON e.src = la.node
@@ -738,49 +750,16 @@ object GraphOps {
     // shuffle only on graph keys — the identical 100 TB story as the
     // unweighted row. Output is the community-size histogram.
     Q("i_graph_community_lpa_weighted", (s, d) => {
-      val labels = Q.memoized(s, d, "gLpawLabels") {
-        val edges = supWEdges(s, d)
-        val nodes = supDeg(s, d).select(col("node"))
-        var l = Q.materialize(s, d, "glpaw_0") {
-          nodes.withColumn("lbl", col("node"))
-        }
-        for (i <- 1 to 4) {
-          val cnt = edges.join(l, edges("dst") === l("node"))
-            .groupBy(edges("src").as("n2"), col("lbl"))
-            .agg(sum(col("w")).as("wt"))
-          val wMax = org.apache.spark.sql.expressions.Window.partitionBy(col("n2"))
-          val best = cnt.withColumn("mx", max(col("wt")).over(wMax))
-            .filter(col("wt") === col("mx"))
-            .groupBy(col("n2")).agg(min(col("lbl")).as("nlbl"))
-          l = Q.materialize(s, d, s"glpaw_$i") {
-            nodes.join(best, nodes("node") === best("n2"), "left")
-              .select(nodes("node"),
-                coalesce(col("nlbl"), nodes("node")).as("lbl"))
-          }
-        }
-        l
-      }
+      val labels = lpaLabels(s, d, "gLpawLabels", "glpaw")(supWEdges(s, d), col("w"))
       labels.groupBy(col("lbl")).agg(count(lit(1)).as("size"))
         .groupBy(col("size")).agg(count(lit(1)).as("n_communities"))
         .orderBy("size")
-    }, Some {
-      val iter = (i: Int) =>
-        s"""lc$i AS (SELECT e.src AS node, l.lbl, SUM(e.w) AS wt
-           |  FROM swedges e JOIN lp${i - 1} l ON e.dst = l.node
-           |  GROUP BY 1, 2),
-           |lm$i AS (SELECT node, MIN(lbl) AS lbl
-           |  FROM (SELECT node, lbl, wt, MAX(wt) OVER (PARTITION BY node) AS mx
-           |        FROM lc$i)
-           |  WHERE wt = mx GROUP BY node),
-           |lp$i AS (SELECT n.node, COALESCE(m.lbl, n.node) AS lbl
-           |  FROM (SELECT node FROM sdeg) n LEFT JOIN lm$i m ON m.node = n.node)""".stripMargin
+    }, Some(
       s"""$supWSql,
-         |lp0 AS (SELECT node, node AS lbl FROM sdeg),
-         |${(1 to 4).map(iter).mkString(",\n")}
+         |${lpaSql("swedges", "e.w")}
          |SELECT size, COUNT(*) AS n_communities
          |FROM (SELECT lbl, COUNT(*) AS size FROM lp4 GROUP BY lbl)
-         |GROUP BY size ORDER BY size""".stripMargin
-    }),
+         |GROUP BY size ORDER BY size""".stripMargin)),
 
     // Adamic-Adar link prediction on the SUPPORTED graph: for node
     // pairs NOT yet connected, AA(a,b) = Σ_{z ∈ N(a)∩N(b)} 1/ln(deg z)
@@ -1366,20 +1345,7 @@ object GraphOps {
     // data-sized global sort.
     Q("i_graph_hits", (s, d) => {
       import org.apache.spark.sql.expressions.Window
-      val edges = Q.memoized(s, d, "hitsEdges") {
-        val w = Window.partitionBy(col("user_id"))
-          .orderBy(col("ts_us"), col("event_id"))
-        val trans = Io.events(s, d)
-          .select(col("user_id"), col("ts_us"), col("event_id"),
-            col("event_type").as("src"))
-          .withColumn("dst", lead(col("src"), 1).over(w))
-          .filter(col("dst").isNotNull)
-          .groupBy(col("src"), col("dst")).agg(count(lit(1)).as("n"))
-        val tot = trans.groupBy(col("src")).agg(sum(col("n")).as("tot"))
-        Q.materialize(s, d, "hitsEdges")(
-          trans.join(tot, "src").filter(col("n") * 5 >= col("tot"))
-            .select(col("src"), col("dst")))
-      }
+      val edges = typeGraphDirEdges(s, d)
       val nodes = Io.events(s, d).select(col("event_type").as("u")).distinct()
       // a0 = 1 ⇒ h1(u) = outdeg(u)
       val h1 = edges.groupBy(col("src").as("u")).agg(count(lit(1)).as("h"))
@@ -1705,14 +1671,14 @@ object GraphOps {
       val deg = supDeg(s, d)
       val pairs = supPairs(s, d)
       // per-degree census, range-cumulated: cum = #nodes with deg ≤ k.
-      // Materialized because three threshold branches consume it (a
+      // Scratch because three threshold branches consume it (a
       // range repartition samples fresh bounds per execution — the
       // g_cusum_changepoint lesson). The cross-partition offsets come
       // from a |partitions|²-cell self-join over the 32-row per-
       // partition count table instead of a prefix window — same
       // metadata-sized work, and this query's plan carries NO
       // unpartitioned WindowExec at all, bounded or otherwise.
-      val cum = Q.materialize(s, d, "richclub_cumdeg") {
+      val cum = Q.scratch("richclub_cumdeg") {
         val census = deg.groupBy(col("deg")).agg(count(lit(1)).as("cnt"))
           .repartitionByRange(s.sparkContext.defaultParallelism, col("deg"))
           .withColumn("pid", spark_partition_id())
@@ -1800,11 +1766,11 @@ object GraphOps {
       import org.apache.spark.sql.expressions.Window
       val w = Window.partitionBy(col("user_id"))
         .orderBy(col("ts_us"), col("event_id"))
-      // materialized (r15): the downstream fan-out (per-week totals,
+      // scratch (r15): the downstream fan-out (per-week totals,
       // the supported-edge filter consumed by the week spine and both
       // join arms) re-executed the events scan + user-keyed LEAD window
       // ~6 times. The table is |weeks|×|types|² rows.
-      val trans = Q.materialize(s, d, "edge_churn_trans")(
+      val trans = Q.scratch("edge_churn_trans")(
         Io.events(s, d)
           .select(col("user_id"), col("ts_us"), col("event_id"),
             col("event_type").as("src"))
@@ -1960,9 +1926,6 @@ object GraphOps {
          |ORDER BY n.u""".stripMargin))
   )
 
-  /** Symmetrized dominant-transition type-graph adjacency — shared by
-    * eccentricity and betweenness; built on the hitsEdges artifact
-    * (the one corpus-sized window pass, shared with i_graph_hits). */
   /** The DIRECTED dominant-transition edges (the shared hitsEdges
     * artifact — one corpus window pass, consumed by HITS, the motif
     * census, and the undirected adjacency below). */
@@ -1983,6 +1946,9 @@ object GraphOps {
           .select(col("src"), col("dst")))
     }
 
+  /** Symmetrized dominant-transition type-graph adjacency — shared by
+    * eccentricity and betweenness; built on the hitsEdges artifact
+    * (the one corpus-sized window pass, shared with i_graph_hits). */
   private def typeGraphAdj(s: SparkSession, d: String): DataFrame =
     Q.memoized(s, d, "typeAdj") {
       val dirEdges = typeGraphDirEdges(s, d)

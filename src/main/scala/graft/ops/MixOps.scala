@@ -825,7 +825,7 @@ object MixOps {
       val wLoc = Window.partitionBy(col("pid"))
         .orderBy(col("quality"), col("doc_id"))
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      val local = Q.materialize(s, d, "qnormRanked") {
+      val local = Q.scratch("qnormRanked") {
         scored.repartitionByRange(parts, col("quality"), col("doc_id"))
           .withColumn("pid", spark_partition_id())
           .withColumn("lrn", count(lit(1)).over(wLoc))

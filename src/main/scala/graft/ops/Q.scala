@@ -20,18 +20,19 @@ final case class Q(
 
 /** Shared query helpers, and the one scratch lifecycle.
   *
-  * Every eager checkpoint in the engine goes through one private path,
-  * `checkpoint`: an eager `localCheckpoint` at MEMORY_AND_DISK_SER, one
-  * `[artifact]` stderr line, and the checkpoint's RDD id recorded for
-  * its session. [[materialize]] (local store) and [[scratch]] are its
-  * only callers. Artifacts stay pinned until
-  * [[releaseSession]]; scratch checkpoints share one per-session cap of
-  * 32, beyond which the oldest is unpersisted. [[releaseSession]]
-  * unpersists exactly the ids its session recorded, so sessions sharing
-  * a SparkContext never free each other's blocks. [[memoized]] keys
-  * artifacts by session, so a fresh `newSession()` rebuilds them — the
-  * way `graft.BuildPlans` captures a production build's checkpoint
-  * plans for PlanShapeSpec and PlanDump.
+  * A checkpoint has one of two lifetimes. A memoized artifact is
+  * [[materialize]] inside a [[memoized]] build (anywhere else it fails
+  * with [[OutsideBuild]]), held until [[releaseSession]]. A scratch
+  * ([[scratch]]) is capped at [[ScratchCap]] per (session, thread), so
+  * only a later scratch of the thread that built it can evict it.
+  * Every eager checkpoint goes through one private path, `checkpoint`:
+  * an eager `localCheckpoint` at MEMORY_AND_DISK_SER, one `[artifact]`
+  * stderr line, and the checkpoint's RDD id recorded for its session.
+  * [[releaseSession]] unpersists exactly the ids its session recorded,
+  * so sessions sharing a SparkContext never free each other's blocks.
+  * [[memoized]] keys artifacts by session, so a fresh `newSession()`
+  * rebuilds them — the way `graft.BuildPlans` captures a production
+  * build's checkpoint plans for PlanShapeSpec and PlanDump.
   */
 object Q {
 
@@ -291,6 +292,14 @@ object Q {
     }
   }
 
+  /** The memoized frames session `s` currently holds. */
+  private[graft] def memoFrames(s: SparkSession): Seq[DataFrame] = {
+    val sid = System.identityHashCode(s)
+    val out = Seq.newBuilder[DataFrame]
+    memo.forEach((k, v) => if (k._1 == sid) out += v)
+    out.result()
+  }
+
   /** Drop every memoized artifact of session `s` and unpersist the
     * checkpoints `s` made — only those: other sessions on the same
     * SparkContext keep their memo entries AND the blocks behind them.
@@ -312,7 +321,7 @@ object Q {
     while (lit.hasNext) if (lit.next()._1 == sid) lit.remove()
     val c = checkpoints.remove(sid)
     if (c != null) {
-      val ids = c.synchronized(c.artifacts.toSeq ++ c.scratch)
+      val ids = c.synchronized(c.artifacts.toSeq ++ c.scratch.values.flatten)
       val live = s.sparkContext.getPersistentRDDs
       // blocking: let the removal storm finish HERE, not asynchronously
       // under the first timed queries
@@ -357,29 +366,35 @@ object Q {
 
   /** RDD ids of the checkpoints one session made. `artifacts` (the
     * local store of [[materialize]]) live until [[releaseSession]];
-    * `scratch` ([[scratch]]) keeps only the newest
-    * [[ScratchCap]] — the oldest beyond the cap is unpersisted at once.
-    * Ids, not RDD references: an unreferenced checkpoint stays
-    * reapable by ContextCleaner. */
+    * `scratch` ([[scratch]]) holds one FIFO per building thread's id,
+    * each keeping only its newest [[ScratchCap]] — the oldest beyond the
+    * cap is unpersisted at once. Ids, not RDD references: an
+    * unreferenced checkpoint stays reapable by ContextCleaner. */
   private final class Checkpoints {
     val artifacts = scala.collection.mutable.ArrayBuffer.empty[Int]
-    val scratch = scala.collection.mutable.Queue.empty[Int]
+    val scratch = scala.collection.mutable.Map.empty[Long, scala.collection.mutable.Queue[Int]]
   }
   private val checkpoints =
     new java.util.concurrent.ConcurrentHashMap[Int, Checkpoints]
 
-  /** Scratch checkpoints a session keeps pinned. Far above any
-    * construct-many-then-run-the-first window a real caller has — an
+  /** Scratch checkpoints one thread keeps pinned per session. Far above
+    * any construct-many-then-run-the-first window a real caller has — an
     * evicted localCheckpoint cannot recompute (lineage truncated), so a
-    * consumer must not hold more than 32 un-run scratch-backed queries
-    * before running the first; every harness (Verify/Bench/specs) runs
-    * each query as it is built. */
+    * thread must not hold more than 32 un-run scratch-backed queries
+    * before running the first; every harness runs each query as it is
+    * built, and concurrent builders never evict each other's scratch. */
   private val ScratchCap = 32
 
-  /** The scratch RDD ids session `s` currently tracks, oldest first. */
+  /** The scratch RDD ids session `s` tracks, each thread's oldest first. */
   private[graft] def trackedScratch(s: SparkSession): Seq[Int] = {
     val c = checkpoints.get(System.identityHashCode(s))
-    if (c == null) Nil else c.synchronized(c.scratch.toList)
+    if (c == null) Nil else c.synchronized(c.scratch.values.flatten.toList)
+  }
+
+  /** The artifact RDD ids (local store) session `s` currently tracks. */
+  private[graft] def trackedArtifacts(s: SparkSession): Seq[Int] = {
+    val c = checkpoints.get(System.identityHashCode(s))
+    if (c == null) Nil else c.synchronized(c.artifacts.toList)
   }
 
   /** THE eager checkpoint: serialized blocks, not deserialized row
@@ -404,8 +419,10 @@ object Q {
       val evicted = c.synchronized {
         if (!scratch) { c.artifacts += id; None }
         else {
-          c.scratch.enqueue(id)
-          if (c.scratch.size > ScratchCap) Some(c.scratch.dequeue()) else None
+          val q = c.scratch.getOrElseUpdate(Thread.currentThread.getId,
+            scala.collection.mutable.Queue.empty[Int])
+          q.enqueue(id)
+          if (q.size > ScratchCap) Some(q.dequeue()) else None
         }
       }
       evicted.foreach(e =>
@@ -414,20 +431,27 @@ object Q {
     out
   }
 
-  /** Per-execution SCRATCH checkpoint (r16, ADVICE r15): always the
-    * local checkpoint, NEVER the parquet artifact store — for frames
-    * that are consumed more than once inside ONE query execution but
-    * are not pipeline artifacts (d_agg_cms_freq's per-user count
-    * table). In parquet store mode `materialize` would write such a
-    * frame to the shared store and read it back once — at large user
-    * cardinality the store becomes the bottleneck the query exists to
-    * avoid. Counts against the session's [[ScratchCap]]. */
+  /** Per-construction SCRATCH checkpoint: always the local checkpoint,
+    * NEVER the parquet artifact store — for frames that one query
+    * execution consumes more than once but that are not pipeline
+    * artifacts (d_agg_cms_freq's per-user count table, a ranged table
+    * two branches read, an iteration step referenced by every later
+    * step). In parquet store mode such a frame would be written to the
+    * shared store and read back once, and two constructions would
+    * overwrite each other's files. Counts against the building thread's
+    * [[ScratchCap]] for the session. */
   def scratch(name: String)(df: DataFrame): DataFrame =
     checkpoint(name, scratch = true)(df)
 
+  /** The named error of a [[materialize]] with no [[memoized]] build in
+    * flight on its thread. */
+  private[graft] val OutsideBuild = "MATERIALIZE_OUTSIDE_MEMOIZED_BUILD"
+
   /** Materialize a pipeline-shared artifact (pair table, CC labels,
-    * token masks). Two stores, chosen by the session conf
-    * `spark.graft.artifactStore`:
+    * token masks) or one round of its build — only inside a [[memoized]]
+    * build on this thread, else it fails with [[OutsideBuild]]; a
+    * per-construction checkpoint is a [[scratch]]. Two stores, chosen by
+    * the session conf `spark.graft.artifactStore`:
     *
     *  - `local` (default): the eager [[checkpoint]] — blocks on
     *    executor block managers, held until [[releaseSession]].
@@ -447,7 +471,9 @@ object Q {
     * [artifact] line per build, so every bench total decomposes into
     * build-vs-query time without external probes (VERDICT r6 item 5).
     */
-  def materialize(s: SparkSession, dir: String, name: String)(df: DataFrame): DataFrame =
+  def materialize(s: SparkSession, dir: String, name: String)(df: DataFrame): DataFrame = {
+    if (buildStack.get.isEmpty) throw new IllegalStateException(
+      s"$OutsideBuild: '$name' is not inside a Q.memoized build; use Q.scratch")
     storeMode(s) match {
       case "parquet" =>
         val t0 = System.nanoTime()
@@ -458,4 +484,5 @@ object Q {
         out
       case _ => checkpoint(name, scratch = false)(df)
     }
+  }
 }

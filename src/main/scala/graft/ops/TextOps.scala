@@ -607,7 +607,7 @@ object TextOps {
     // floor-snapped at 1e-12 to BIGINT, per-source sums exact integer.
     Q("h_kl_source_shift", (s, d) => {
       val dec19 = org.apache.spark.sql.types.DecimalType(19, 0)
-      val st = Q.materialize(s, d, "klSourceTok")(
+      val st = Q.scratch("klSourceTok")(
         Io.table(s, d, "documents")
           .select(col("source"), explode(toks).as("t"))
           .groupBy(col("source"), col("t")).agg(count(lit(1)).as("c_st")))

@@ -61,8 +61,7 @@ object TpchOps {
     * hashpartitioning(l_partkey, l_suppkey) exchanges). Materializing
     * once and scanning the artifact is the standard warehouse shape: a
     * production deployment maintains the catalog as a table, not a CTE
-    * re-derived per query. Concurrent builds are benign (both threads
-    * register equivalent checkpointed frames; last wins). */
+    * re-derived per query. */
   private def psView(s: SparkSession, d: String): String = {
     val view = s"ps_cat_${Q.dirDigest(d)}"
     Q.memoized(s, d, "tpchPsCat") { // callers register the views first

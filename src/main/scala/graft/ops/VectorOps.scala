@@ -247,14 +247,14 @@ object VectorOps {
     * bucket's own scores is exactly the job HNSW's upper layers do in
     * the full algorithm; the checked numbers then show what the graph
     * hops ADD over the pure-bucket path. Each hop's visited set is
-    * materialized (the i_graph_bfs lesson: a step referenced twice, by
+    * a scratch checkpoint (the i_graph_bfs lesson: a step referenced twice, by
     * the beam window AND the next union, re-evaluates 2^H times without
     * it). The per-hop deltas are queries × B×M rows — metadata-sized at
     * any SF. */
   /** Core of the beam search: the per-hop visited sets (index 0 =
     * scored seeds) plus the query and node vector frames, so both the
     * headline row (final recall) and the hop curve consume ONE
-    * machinery. `prefix` keeps the two rows' materialize labels
+    * machinery. `prefix` keeps the two rows' scratch labels
     * distinct. */
   private def hnswVisitedByHop(s: SparkSession, d: String,
       prefix: String): (Seq[DataFrame], DataFrame, DataFrame) = {
@@ -290,13 +290,13 @@ object VectorOps {
         Seq("band", "band_val"))
       .filter(col("q_id") =!= col("node"))
       .select("q_id", "node").distinct()
-    val visited0 = Q.materialize(s, d, s"${prefix}0")(score(seeds))
+    val visited0 = Q.scratch(s"${prefix}0")(score(seeds))
     val visiteds = (1 to hnswH).scanLeft(visited0) { (vis, h) =>
       val beam = vis.withColumn("rn", row_number().over(wBeam))
         .filter(col("rn") <= hnswB).select(col("q_id"), col("node"))
       val cand = beam.join(edges.withColumnRenamed("src", "node"), "node")
         .select(col("q_id"), col("dst").as("node")).distinct()
-      Q.materialize(s, d, s"$prefix$h")(vis.unionByName(score(cand))
+      Q.scratch(s"$prefix$h")(vis.unionByName(score(cand))
         .select("q_id", "node", "sim").distinct())
     }
     (visiteds, q, en)
@@ -627,9 +627,9 @@ object VectorOps {
     // identically-rounded sqrt/product chains with zero-norm guards
     // (NULL on both engines).
     Q("h_embed_drift", (s, d) => {
-      // materialized: the even/odd branches below would otherwise each
+      // scratch: the even/odd branches below would otherwise each
       // re-run the posexploded corpus pass
-      val cent = Q.materialize(s, d, "embedDriftCent")(
+      val cent = Q.scratch("embedDriftCent")(
         Io.table(s, d, "embeddings")
           .select(col("label"), (col("vec_id") % 2).cast("int").as("half"),
             posexplode(col("embedding")).as(Seq("pos", "v")))
@@ -1326,7 +1326,7 @@ object VectorOps {
         .withColumn("rn", row_number().over(wH)).filter(col("rn") <= 10)
         .select(col("hops"), col("q_id"), col("node"))
       val scanned = fan.groupBy(col("hops")).agg(count(lit(1)).as("n_scanned"))
-      val truth = Q.materialize(s, d, "hnswHopTruth")(hnswTruth(q, en))
+      val truth = Q.scratch("hnswHopTruth")(hnswTruth(q, en))
       val hits = top10.join(truth.withColumn("_t", lit(1)),
           Seq("q_id", "node"), "left")
         .groupBy(col("hops")).agg(sum(coalesce(col("_t"), lit(0))).as("n_hits"))
@@ -2109,14 +2109,14 @@ object VectorOps {
               (lit(7L) * col("rel_u") - lit(3L) * col("pen_u")).as("score_u10"))
             .orderBy(col("score_u10").desc, col("doc_id")).limit(1)
         }
-      // each pick is materialized (r15 — the i_graph_bfs lesson): step k
+      // each pick is a scratch (r15 — the i_graph_bfs lesson): step k
       // references EVERY earlier pick (anti-join + penalty union), so
       // without per-step checkpoints pick 1's subtree re-evaluates
       // 2^4 times through pick 5 and the final union — dozens of tiny
       // stages over 1-row frames. Each checkpoint is a single row.
       var picks = Vector.empty[DataFrame]
       for (k <- 1 to 5)
-        picks = picks :+ Q.materialize(s, d, s"mmrPick$k")(pick(picks, k))
+        picks = picks :+ Q.scratch(s"mmrPick$k")(pick(picks, k))
       picks.reduce(_ unionByName _).orderBy("step")
     }, Some {
       def sk(k: Int): String =

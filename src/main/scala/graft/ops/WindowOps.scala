@@ -72,11 +72,11 @@ object WindowOps {
       val cust = Io.table(s, d, "customer").select(col("c_custkey"), col("c_acctbal"))
       val wLocal = Window.partitionBy(col("pid"))
         .orderBy(col("c_acctbal"), col("c_custkey"))
-      // materialized: two consumers of a range-sampled partitioning —
+      // scratch: two consumers of a range-sampled partitioning —
       // see g_cusum_changepoint in AnalyticsOps (repartitionByRange
       // draws bounds per execution; unmaterialized, the offsets branch
       // and the join branch can see different partitionings)
-      val local = graft.ops.Q.materialize(s, d, "ntile_ranked") {
+      val local = graft.ops.Q.scratch("ntile_ranked") {
         cust
           .repartitionByRange(parts, col("c_acctbal"), col("c_custkey"))
           .withColumn("pid", spark_partition_id())

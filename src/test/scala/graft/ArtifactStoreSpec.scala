@@ -57,4 +57,17 @@ class ArtifactStoreSpec extends AnyFunSuite {
     val docs = s2.read.parquet(s"$sf/documents.parquet").select(col("doc_id"))
     assert(labels.join(docs, "doc_id").count() == labels.count())
   }
+
+  test("parquet store: a second construction leaves the first frame's rows intact") {
+    val tmp = java.nio.file.Files.createTempDirectory("graft_artifacts").toString
+    for (q <- Seq("h_embed_drift", "g_cuped")) {
+      val expected = Registry.queries(q)(spark, sf).collect().map(_.toSeq).toSeq
+      val first = withParquetStore(tmp) {
+        val first = Registry.queries(q)(spark, sf)
+        Registry.queries(q)(spark, sf)
+        first.collect().map(_.toSeq).toSeq
+      }
+      assert(first == expected, s"$q: first parquet-store frame diverges from the local store")
+    }
+  }
 }

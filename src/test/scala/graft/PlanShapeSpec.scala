@@ -470,13 +470,14 @@ class PlanShapeSpec extends AnyFunSuite {
     // rank scratch's repartitionByRange and its sampling job) or pin an
     // input-sized checkpoint. The only range exchange allowed is the
     // one under the final global sort, and the only LogicalRDD a
-    // caller's plan holds is its own memoized pipeline artifact.
+    // caller's plan holds is the one small scratch its own construction
+    // checkpoints (per-customer gaps, conversion times, RFM scores).
     import org.apache.spark.sql.catalyst.plans.physical.RangePartitioning
     import org.apache.spark.sql.execution.{LogicalRDD, SortExec}
     import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
     import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
     object Aqe extends AdaptiveSparkPlanHelper
-    val artifacts = Map("g_interpurchase_time" -> 1, "g_funnel_time" -> 1,
+    val scratches = Map("g_interpurchase_time" -> 1, "g_funnel_time" -> 1,
       "g_rfm_segments" -> 1)
     for (q <- Seq("d_agg_boxplot", "d_agg_percentile", "d_agg_approx_pctl",
         "d_agg_kll_quantiles", "g_anomaly_mad", "g_interpurchase_time",
@@ -485,9 +486,10 @@ class PlanShapeSpec extends AnyFunSuite {
       try {
         val df = Registry.queries(q)(s, sf)
         df.collect()
-        assert(graft.ops.Q.trackedScratch(s).isEmpty, s"$q built a scratch checkpoint")
+        val scratch = graft.ops.Q.trackedScratch(s)
+        assert(scratch.size === scratches.getOrElse(q, 0), s"$q: scratch checkpoints $scratch")
         val rdds = df.queryExecution.analyzed.collect { case l: LogicalRDD => l.rdd.id }
-        assert(rdds.distinct.size === artifacts.getOrElse(q, 0), s"$q: LogicalRDDs $rdds")
+        assert(rdds.distinct === scratch, s"$q: LogicalRDDs $rdds")
         val plan = df.queryExecution.executedPlan
         val ranged = Aqe.collect(plan) {
           case e: ShuffleExchangeExec if e.outputPartitioning.isInstanceOf[RangePartitioning] =>
