@@ -165,10 +165,20 @@ object Bench {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.sql.warehouse.dir", "/tmp/graft-warehouse")
+      .config("spark.sql.warehouse.dir", graft.ops.Q.processDir("graft-warehouse"))
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    // a stopped SparkContext fails every later run the same way: stop the
+    // bench with one named line (the first of the sweep threads to see
+    // it prints) instead of logging a FAILED row per query
+    val contextStopped = new java.util.concurrent.atomic.AtomicBoolean(false)
+    def stopIfContextStopped(): Unit = if (spark.sparkContext.isStopped) {
+      if (contextStopped.compareAndSet(false, true))
+        System.err.println("[bench] SPARK_CONTEXT_STOPPED: the SparkContext " +
+          "stopped under the bench; exiting")
+      sys.exit(3)
+    }
     val metrics = new BenchMetrics
     spark.sparkContext.addSparkListener(metrics)
     // Warm-up sweep: run every query once at the smallest SF first, so
@@ -214,6 +224,7 @@ object Bench {
           warmSec.put(name, (System.nanoTime() - t0) / 1e9)
         } catch {
           case scala.util.control.NonFatal(e) =>
+            stopIfContextStopped()
             System.err.println(s"[bench] warm-up FAILED for $name: " +
               s"${e.getClass.getSimpleName}: ${e.getMessage}")
         } finally spark.sparkContext.clearJobGroup()
@@ -392,6 +403,7 @@ object Bench {
             warmSec.put(s"$n@timed_sf", (System.nanoTime() - t0) / 1e9)
           } catch {
             case scala.util.control.NonFatal(e) =>
+              stopIfContextStopped()
               System.err.println(s"[bench] tier run FAILED for $n: " +
                 s"${e.getClass.getSimpleName}: ${e.getMessage}")
           } finally spark.sparkContext.clearJobGroup()
@@ -515,6 +527,7 @@ object Bench {
         try { fn(spark, sfDir).count(); true }
         catch {
           case e: Throwable =>
+            stopIfContextStopped()
             System.err.println("[bench] run FAILED: " +
               s"${e.getClass.getSimpleName}: " +
               String.valueOf(e.getMessage).take(160))

@@ -41,7 +41,9 @@ object GraftExtensions {
     ("explode_ngrams", classOf[ExplodeNgrams], c => ExplodeNgrams(c.head, int(c(1)))),
     ("explode_ngrams_pos", classOf[ExplodeNgramsPos],
       c => ExplodeNgramsPos(c.head, int(c(1)))),
-    ("axpy", classOf[Axpy], c => Axpy.build(c)))
+    ("axpy", classOf[Axpy], c => Axpy.build(c)),
+    ("bracket_sketch", classOf[BracketSketch], c => BracketSketch.build(c)),
+    ("bracket_select", classOf[BracketSelect], c => BracketSelect.build(c)))
 
   /** Registers each native function session `s` lacks. Idempotent and
     * never replaces an entry, so a session built with the extension

@@ -281,15 +281,17 @@ object AggOps {
       // 1.5×iqr constructs exact half-boundary values (…59875 at 1e-4,
       // observed) where the engines' rounding rules disagree.
       li.join(broadcast(qs), "l_returnflag")
-        .groupBy(Seq("l_returnflag", "q1", "med", "q3", "iqr", "lo_fence",
-          "hi_fence").map(col): _*)
+        .groupBy(col("l_returnflag"), struct(Seq("q1", "med", "q3", "iqr", "lo_fence",
+          "hi_fence").map(col): _*).as("b"))
         .agg(count(lit(1)).as("n_rows"),
           sum(when(col("l_extendedprice") < col("lo_fence") ||
             col("l_extendedprice") > col("hi_fence"), 1L).otherwise(0L))
             .as("n_outliers"))
         .select(col("l_returnflag"), col("n_rows"),
-          col("q1"), col("med"), col("q3"), col("iqr"),
-          col("lo_fence"), col("hi_fence"), col("n_outliers"))
+          col("b.q1"), col("b.med"), col("b.q3"), col("b.iqr"),
+          col("b.lo_fence"), col("b.hi_fence"), col("n_outliers"))
+        // one row per flag: sorted in one partition, no range exchange
+        .coalesce(1)
         .orderBy("l_returnflag")
     }, Some(
       """WITH qs AS (

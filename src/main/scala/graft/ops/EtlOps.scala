@@ -207,7 +207,10 @@ object EtlOps {
     // CDC merge classification: previous snapshot (derived deterministic
     // subset with drifted prices) vs current; classify insert/update/
     // unchanged via a single full-outer join keyed on the PK — the merge
-    // shape that at 100 TB runs as one shuffle on the key.
+    // shape that at 100 TB runs as one shuffle on the key. The three
+    // classes are counted in one global aggregate and unpivoted, so the
+    // count needs no exchange keyed by status (classes with no rows are
+    // not emitted, as a GROUP BY would not).
     Q("e_cdc_merge", (s, d) => {
       val cur = Io.table(s, d, "orders")
         .select(col("o_orderkey"), col("o_totalprice"))
@@ -217,12 +220,11 @@ object EtlOps {
           when(col("o_orderkey") % 5 === 0, round(col("o_totalprice") * 0.9, 2))
             .otherwise(col("o_totalprice")).as("old_price"))
       cur.join(old, col("o_orderkey") === col("old_key"), "full_outer")
-        .withColumn("status",
-          when(col("old_key").isNull, "insert")
-            .when(col("o_totalprice") =!= col("old_price"), "update")
-            .otherwise("unchanged"))
-        .groupBy(col("status"))
-        .agg(count(lit(1)).as("n"))
+        .agg(count(lit(1)).as("all"), count(when(col("old_key").isNull, 1)).as("ins"),
+          count(when(col("o_totalprice") =!= col("old_price"), 1)).as("upd"))
+        .select(expr("stack(3, 'insert', ins, 'unchanged', `all` - ins - upd, " +
+          "'update', upd) AS (status, n)"))
+        .filter(col("n") > 0)
         .orderBy("status")
     }, Some(
       """WITH old AS (

@@ -2,7 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DecimalType, LongType, StructField, StructType}
+import org.apache.spark.sql.types.{ArrayType, DecimalType, LongType, StructField, StructType}
 
 /** One declared operator: a `SparkEntry.queries` entry plus (usually) a
   * DuckDB oracle SQL twin. `oracle == None` → the driver records a weaker
@@ -82,15 +82,20 @@ object Q {
     * Scale Data Analysis*, PODS 2021, PAPERS.md).
     *
     *  - **Pass 1** (eager; keys × |ps| rows are collected to the planning JVM): one
-    *    map-side-combined hash aggregate per key of `count(v)` and a
-    *    single `percentile_approx` sketch (accuracy A =
-    *    [[SketchAccuracy]], rank error ≤ n/A) read at p ± [[Margin]]. A
-    *    key with fewer than A values brackets its exact [min, max].
+    *    map-side-combined aggregate per key, `bracket_sketch`
+    *    ([[graft.functions.BracketSketch]]): a `percentile_approx`
+    *    sketch (accuracy A = [[SketchAccuracy]], rank error ≤ n/A) read
+    *    at p ± [[Margin]], and the count n of values it holds. A key
+    *    with fewer than A values brackets its exact [min, max].
     *  - **Pass 2** (lazy — the returned plan): the brackets [L, H]
-    *    broadcast back; per key and p one aggregate counts the values
-    *    below L, equal to L and equal to H, and collects those strictly
-    *    inside. Rank r is L, the (r − below − eqL)-th sorted inside
-    *    value, or H; the interpolation is `lo + (hi − lo)·frac`.
+    *    broadcast back; one `bracket_select` aggregate per key
+    *    ([[graft.functions.BracketSelect]]) counts per p the values
+    *    below L, equal to L and equal to H, and keeps those strictly
+    *    inside, on the executors. Rank r is L, the (r − below − eqL)-th
+    *    sorted inside value, or H; the aggregate picks each p's two
+    *    ranks and weight once, and the plan's only per-p code is the
+    *    interpolation `lo + (hi − lo)·frac` — the generated classes stay
+    *    small whatever |ps| is.
     *  - **Bracket check.** The counts prove the bracket held ranks lo
     *    and lo + 1 (and that n did not change between the passes); a
     *    miss never yields a value, it fails with [[BracketMiss]].
@@ -150,11 +155,12 @@ object Q {
     def miss(what: String) = s"$BracketMiss: $what (key column $key, value $v)"
     val fr = Seq(0.0, 1.0) ++ ps.flatMap { case (p, _) =>
       Seq(math.max(p - margin, 0.0), math.min(p + margin, 1.0)) }
-    var cur = in.groupBy(col(key)).agg(count(col(v)),
-        percentile_approx(col(v), array(fr.map(lit): _*), lit(SketchAccuracy)))
+    var cur = in.groupBy(col(key)).agg(call_function("bracket_sketch", col(v),
+        array(fr.map(lit): _*), lit(SketchAccuracy)))
       .collect().toSeq.map { r =>
-        val n = r.getLong(1)
-        val sk = if (r.isNullAt(2)) Seq.fill[Any](fr.size)(null) else r.getSeq[Any](2)
+        val q = r.getStruct(1)
+        val n = q.getLong(0)
+        val sk = if (q.isNullAt(1)) Seq.fill[Any](fr.size)(null) else q.getSeq[Any](1)
         val whole = n < SketchAccuracy
         Brackets(r.get(0), n,
           ps.indices.map(i => if (whole) sk(0) else sk(2 + 2 * i)),
@@ -162,11 +168,10 @@ object Q {
           ps.map(_ => if (whole) n.toDouble else (2 * margin + 2 * eps) * n))
       }
     def frame(bs: Seq[Brackets]): DataFrame = s.createDataFrame(
-      java.util.Arrays.asList(bs.map(b =>
-        Row.fromSeq(Seq(b.k, b.n) ++ b.l.zip(b.h).flatMap(t => Seq(t._1, t._2)))): _*),
-      StructType(Seq(StructField("_k", kt), StructField("_n", LongType)) ++
-        ps.indices.flatMap(i => Seq(StructField(s"_L$i", vt), StructField(s"_H$i", vt)))))
-    def lh(i: Int) = (col(s"_L$i"), col(s"_H$i"))
+      java.util.Arrays.asList(bs.map(b => Row(b.k, b.n, b.l, b.h)): _*),
+      StructType(Seq(StructField("_k", kt), StructField("_n", LongType),
+        StructField("_L", ArrayType(vt)), StructField("_H", ArrayType(vt)))))
+    def lh(i: Int) = (col("_L")(i), col("_H")(i))
     def inside(i: Int) = col(v) > lh(i)._1 && col(v) < lh(i)._2
     def counts(i: Int) = Seq(count(when(col(v) < lh(i)._1, 1)).as(s"_b$i"),
       count(when(col(v) === lh(i)._1, 1)).as(s"_e$i"),
@@ -208,30 +213,18 @@ object Q {
         b.copy(l = next.map(_._1), h = next.map(_._2), est = next.map(_._3))
       })
     }
-    // pass 2: count below/at the brackets and collect the inside values
-    val g = in.join(broadcast(frame(cur)), col(key) <=> col("_k"), "left")
-      .groupBy(col(key)).agg(count(col(v)).as("_cnt"), max(col("_n")).as("_n") +:
-        ps.indices.flatMap(i => counts(i) ++ Seq(
-          collect_list(when(inside(i), col(v))).as(s"_c$i"),
-          max(lh(i)._1).as(s"_L$i"), max(lh(i)._2).as(s"_H$i"))): _*)
-      .select(col("*") +: ps.indices.map(i => array_sort(col(s"_c$i")).as(s"_s$i")): _*)
-    val outs = ps.zipWithIndex.map { case ((p, name), i) =>
-      val (b, e, f, sorted) = (col(s"_b$i"), col(s"_e$i"), col(s"_f$i"), col(s"_s$i"))
-      val m = size(sorted)
-      val pos = (col("_cnt") - 1) * lit(p)
-      val frac = pos - floor(pos)
-      val lo = floor(pos) + 1
-      val hi = least(lo + 1, col("_cnt"))
-      def at(r: Column) = when(r - b <= e, lh(i)._1)
-        .when(r - b <= e + m, element_at(sorted, (r - b - e).cast("int")))
-        .otherwise(lh(i)._2)
-      val held = col("_cnt") <=> col("_n") && lo - b >= 1 &&
-        hi - b <= e + m + f && m <= cap
-      when(col("_cnt") === 0, lit(null))
-        .when(!held, raise_error(lit(miss("a rank fell outside its bracket"))))
-        .otherwise(at(lo) + (at(hi) - at(lo)) * frac).as(name)
-    }
-    g.select(col(key) +: outs: _*)
+    // pass 2: one bracket_select per key picks each p's two order
+    // statistics (or fails with the miss); the interpolation is the only
+    // per-p code the plan generates
+    val picked = in.join(broadcast(frame(cur)), col(key) <=> col("_k"), "left")
+      .groupBy(col(key)).agg(call_function("bracket_select", col(v), col("_n"),
+        col("_L"), col("_H"), array(ps.map(p => lit(p._1)): _*), lit(cap),
+        lit(miss("a rank fell outside its bracket"))).as("_r"))
+    val (vs, frac) = (col("_r.v"), col("_r.frac"))
+    picked.select(col(key) +: ps.zipWithIndex.map { case ((_, name), i) =>
+      val (lo, hi) = (vs(2 * i), vs(2 * i + 1))
+      (lo + (hi - lo) * frac(i)).as(name)
+    }: _*)
   }
 
   /** Session-scoped memo for pipeline-shared materialized intermediates
@@ -333,10 +326,7 @@ object Q {
     * SHA-1 prefix of the full path (the 32-bit String.hashCode used
     * before r12 made two corpora colliding — or two sessions on
     * different corpora sharing a tmp root — silently overwrite each
-    * other's derived copies mid-read). 12 hex chars = 48 bits; a
-    * deterministic function of the path, so cross-SESSION artifact
-    * reuse on the SAME corpus (ArtifactStoreSpec's fresh-session read)
-    * still works. */
+    * other's derived copies mid-read). 12 hex chars = 48 bits. */
   def dirDigest(d: String): String = {
     val md = java.security.MessageDigest.getInstance("SHA-1")
     md.digest(d.getBytes(java.nio.charset.StandardCharsets.UTF_8))
@@ -347,11 +337,39 @@ object Q {
     * [[materialize]]'s parquet store and the copies that live outside
     * the memo (derived CSV/JSON copies, partitioned-parquet layouts,
     * snapshot roots): one spelling of the artifact root + corpus
-    * prefix, so a convention change lands everywhere at once. */
+    * prefix, so a convention change lands everywhere at once.
+    *
+    * The root is the session conf `spark.graft.artifactDir`, else a
+    * directory of this process ([[processDir]]); the name carries the
+    * session's [[sessionTag]], so a session that rebuilds an artifact
+    * (a memo miss: a fresh `newSession()`, another JVM on a shared
+    * root) never overwrites files another session's frames still list. */
   def artifactPath(s: SparkSession, d: String, name: String): String = {
-    val base = s.conf.get("spark.graft.artifactDir",
-      sys.props("java.io.tmpdir") + "/graft-artifacts")
-    s"$base/${dirDigest(d)}_$name"
+    val base = s.conf.getOption("spark.graft.artifactDir")
+      .getOrElse(processDir("graft-artifacts"))
+    s"$base/${dirDigest(d)}_${sessionTag(s)}_$name"
+  }
+
+  private val processDirs = new java.util.concurrent.ConcurrentHashMap[String, String]
+
+  /** A fresh directory under `java.io.tmpdir` owned by this JVM, one per
+    * prefix, deleted when the JVM exits — for paths that two processes
+    * on one host must not share (the artifact root, a harness's
+    * warehouse). */
+  def processDir(prefix: String): String = processDirs.computeIfAbsent(prefix, _ => {
+    val dir = java.nio.file.Files.createTempDirectory(prefix + "-")
+    sys.addShutdownHook(org.apache.commons.io.FileUtils.deleteQuietly(dir.toFile))
+    dir.toString
+  })
+
+  private val sessionTags = new java.util.WeakHashMap[SparkSession, String]
+  private val nextTag = new java.util.concurrent.atomic.AtomicLong
+
+  /** A name unique to session `s` among every session of every process:
+    * the process id and a per-process counter. */
+  private def sessionTag(s: SparkSession): String = sessionTags.synchronized {
+    sessionTags.computeIfAbsent(s,
+      _ => s"p${ProcessHandle.current.pid}s${nextTag.incrementAndGet()}")
   }
 
   /** The one [artifact] stderr line every build prints (bench totals

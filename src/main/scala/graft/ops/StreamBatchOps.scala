@@ -51,11 +51,15 @@ object StreamBatchOps {
     // Sessionization with a 30-minute inactivity gap: lag → gap flag →
     // running sum = session id; portable SQL on both engines. The
     // streaming twin uses session_window(); SessionWindowSpec asserts the
-    // two agree.
+    // two agree. The events shuffle once, by range on the user: the
+    // windows, the per-session aggregate (keyed by user first) and the
+    // final ORDER BY all read that one partitioning.
     Q("g_session_30m", (s, d) => {
       val wOrd = Window.partitionBy(col("user_id")).orderBy(col("ts_us"), col("event_id"))
       val wRun = wOrd.rowsBetween(Window.unboundedPreceding, Window.currentRow)
       Io.events(s, d)
+        .select(col("event_id"), col("user_id"), col("ts_us"))
+        .repartitionByRange(col("user_id"))
         .withColumn("prev_us", lag(col("ts_us"), 1).over(wOrd))
         .withColumn("new_sess",
           when(col("prev_us").isNull || col("ts_us") - col("prev_us") > 1800000000L, 1L).otherwise(0L))

@@ -23,16 +23,22 @@ object WindowOps {
   val all: Seq[Q] = Seq(
     Q("e_win_rank", (s, d) => {
       // rank/dense_rank ordered on a tie-heavy key (priority); row_number
-      // gets a unique tiebreak of its own.
+      // gets a unique tiebreak of its own. The windows shuffle once, by
+      // range on the partition key: that exchange also serves the final
+      // ORDER BY, and rn follows (priority, orderkey) inside a customer,
+      // so ordering by those is ordering by rn — the window's own sort
+      // already delivers it (no second exchange, no final sort).
       val wTies = Window.partitionBy(col("o_custkey")).orderBy(col("o_orderpriority"))
       val wUniq = Window.partitionBy(col("o_custkey"))
         .orderBy(col("o_orderpriority"), col("o_orderkey"))
       Io.table(s, d, "orders")
+        .select(col("o_custkey"), col("o_orderkey"), col("o_orderpriority"))
+        .repartitionByRange(col("o_custkey"))
         .select(col("o_custkey"), col("o_orderkey"), col("o_orderpriority"),
           row_number().over(wUniq).as("rn"),
           rank().over(wTies).as("rk"),
           dense_rank().over(wTies).as("drk"))
-        .orderBy("o_custkey", "rn")
+        .orderBy("o_custkey", "o_orderpriority", "o_orderkey")
     }, Some(
       """SELECT o_custkey, o_orderkey, o_orderpriority,
         |  ROW_NUMBER() OVER (PARTITION BY o_custkey ORDER BY o_orderpriority, o_orderkey) AS rn,
@@ -130,8 +136,8 @@ object WindowOps {
       Io.events(s, d)
         .select(col("event_id"), col("user_id"), col("ts_us"),
           lag(col("ts_us"), 1).over(w).as("prev_us"),
-          lead(col("ts_us"), 1).over(w).as("next_us"),
-          (col("ts_us") - lag(col("ts_us"), 1).over(w)).as("gap_us"))
+          lead(col("ts_us"), 1).over(w).as("next_us"))
+        .withColumn("gap_us", col("ts_us") - col("prev_us"))
         .orderBy("event_id")
     }, Some(
       """SELECT event_id, user_id, epoch_us(ts) AS ts_us,

@@ -70,4 +70,23 @@ class ArtifactStoreSpec extends AnyFunSuite {
       assert(first == expected, s"$q: first parquet-store frame diverges from the local store")
     }
   }
+
+  test("two sessions building the same derived copy both keep reading it") {
+    // c_join_dpp's month-partitioned orders copy is memoized per session,
+    // so a second session rebuilds it; the rebuild must not overwrite the
+    // files the first session's frame lists
+    val (a, b) = (spark.newSession(), spark.newSession())
+    try {
+      val first = Registry.queries("c_join_dpp")(a, sf)
+      val second = Registry.queries("c_join_dpp")(b, sf)
+      val rows = first.collect().map(_.toSeq).toSeq
+      assert(rows.nonEmpty)
+      assert(second.collect().map(_.toSeq).toSeq == rows)
+      assert(graft.ops.Q.artifactPath(a, sf, "dpp_orders") !=
+        graft.ops.Q.artifactPath(b, sf, "dpp_orders"))
+    } finally {
+      graft.ops.Q.releaseSession(a)
+      graft.ops.Q.releaseSession(b)
+    }
+  }
 }

@@ -71,6 +71,13 @@ class PropertySpec extends AnyFunSuite {
     val edge = edgeGroups
     assertHolistic(edge, Seq(0.0, 0.25, 0.5, 0.75, 1.0),
       graft.ops.Q.exactPercentiles(edge, "k", "v", _))
+    // integer values and a null key: the selection compares in the
+    // value type's own ordering and the interpolation keeps its typing
+    val longs = spark.range(0, 3000).select(
+      when(col("id") % 5 === 0, lit(null)).otherwise(col("id") % 3).as("k"),
+      pmod(col("id") * 7919L, lit(101L)).as("v"))
+    assertHolistic(longs, Seq(0.1, 0.5, 0.95),
+      graft.ops.Q.exactPercentiles(longs, "k", "v", _))
     // nulls are ignored: the 15 values of 1..20 (5 nulls) give
     // p25 = 5.5 and p50 = 10.0, as the holistic percentile does
     val r = graft.ops.Q.exactPercentiles(edge.filter(col("k") === 4), "k", "v",

@@ -4,6 +4,7 @@ import java.util.Locale
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.UnsafeProjection
 import org.apache.spark.sql.catalyst.expressions.XXH64
+import org.apache.spark.sql.catalyst.expressions.codegen.CodeAndComment
 
 /** Codegen census of a list of query rows, run in one session the way
   * the `etl_batch_write` benchmark runs them: each pass constructs every
@@ -26,12 +27,31 @@ import org.apache.spark.sql.catalyst.expressions.XXH64
   * first compile), so no entry is evicted between the snapshots; the
   * default 100-entry cache is 4 LRU segments of 25.
   *
+  * With `--dump DIR`, every body a row added is written to
+  * `DIR/<row>/<nn>_<loader>.java` (`loader` is the classloader's class
+  * name: the planning JVM's `AppClassLoader` or the executors'
+  * `ExecutorClassLoader`), and `DIR/bodies.tsv` lists per body its row,
+  * loaders, source bytes and Janino compile time — the median of
+  * [[CompileReps]] compiles taken after the JIT has compiled the whole
+  * body set once, so two runs show which classes a change removed and
+  * what each cost.
+  *
   * Usage: `graft.CodegenCensus <data dir> <work dir> [--sink parquet|noop]
-  *   [--passes N] row...` — one JSON line per row, then a `total` line.
+  *   [--passes N] [--dump DIR] row...` — one JSON line per row, then a
+  *   `total` line.
   */
 object CodegenCensus {
-  private def cacheKeys(): Set[(Int, String)] = {
-    val gen = org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
+  // a def: touching CodeGenerator builds its cache, which must wait for
+  // the session's maxEntries conf
+  private def gen = org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
+
+  /** Compiles per body whose median `--dump` reports. */
+  private val CompileReps = 5
+
+  /** Each loader identity's class name, as the cache last showed it. */
+  private val loaderNames = scala.collection.mutable.Map.empty[Int, String]
+
+  private def cacheCode(): Map[(Int, String), CodeAndComment] = {
     val m = gen.getClass.getDeclaredMethod("cache")
     m.setAccessible(true)
     // NonFateSharingCache is private[spark]; its public `cache` is Guava's
@@ -41,9 +61,47 @@ object CodegenCensus {
     val keys = cache.asMap().keySet().toArray.toSeq
     keys.map { case (loader: AnyRef, code: AnyRef) =>
       val l = loader.getClass.getMethod("get").invoke(loader)
-      (System.identityHashCode(l),
-        code.asInstanceOf[org.apache.spark.sql.catalyst.expressions.codegen.CodeAndComment].body)
-    }.toSet
+      val id = System.identityHashCode(l)
+      if (l != null) loaderNames(id) = l.getClass.getSimpleName
+      val c = code.asInstanceOf[CodeAndComment]
+      (id, c.body) -> c
+    }.toMap
+  }
+
+  /** Janino compile time of one body, bypassing the cache. */
+  private def compileMs(c: CodeAndComment): Double = {
+    val m = gen.getClass.getDeclaredMethod("doCompile", classOf[CodeAndComment])
+    m.setAccessible(true)
+    val t0 = System.nanoTime()
+    m.invoke(gen, c)
+    (System.nanoTime() - t0) / 1e6
+  }
+
+  /** Writes every row's new bodies and `bodies.tsv` under `dir`. */
+  private def dump(dir: String, names: Seq[String],
+      entries: collection.Map[String, Set[(Int, String)]],
+      codes: collection.Map[String, CodeAndComment]): Unit = {
+    val byRow = names.map { q =>
+      q -> entries(q).groupBy(_._2).toSeq
+        .map { case (body, ks) => (body, ks.map(k => loaderNames.getOrElse(k._1, "?"))) }
+        .sortBy(-_._1.length)
+    }
+    // one untimed compile of the whole set, so the timed ones run JIT-warm
+    byRow.flatMap(_._2).foreach(b => compileMs(codes(b._1)))
+    def median(xs: Seq[Double]) = xs.sorted.apply(xs.size / 2)
+    val tsv = new java.io.PrintWriter(s"$dir/bodies.tsv", "UTF-8")
+    tsv.println("row\tfile\tloaders\tbytes\tcompile_ms")
+    try byRow.foreach { case (q, bodies) =>
+      new java.io.File(s"$dir/$q").mkdirs()
+      bodies.zipWithIndex.foreach { case ((body, loaders), i) =>
+        val file = f"$q/$i%02d_${loaders.toSeq.sorted.mkString("+")}.java"
+        val w = new java.io.PrintWriter(s"$dir/$file", "UTF-8")
+        try w.write(body) finally w.close()
+        val ms = median(Seq.fill(CompileReps)(compileMs(codes(body))))
+        tsv.println(s"$q\t$file\t${loaders.size}\t${body.length}\t" +
+          String.format(Locale.ROOT, "%.1f", Double.box(ms)))
+      }
+    } finally tsv.close()
   }
 
   private def compiles(): Long =
@@ -72,12 +130,14 @@ object CodegenCensus {
     val (data, work) = (argv(0), argv(1))
     var sink = "parquet"
     var passes = 3
+    var dumpDir: Option[String] = None
     val rows = Seq.newBuilder[String]
     var i = 2
     while (i < argv.length) {
       argv(i) match {
         case "--sink" => sink = argv(i + 1); i += 1
         case "--passes" => passes = argv(i + 1).toInt; i += 1
+        case "--dump" => dumpDir = Some(argv(i + 1)); i += 1
         case q => rows += q
       }
       i += 1
@@ -103,6 +163,13 @@ object CodegenCensus {
     val entries = scala.collection.mutable.Map.empty[String, Set[(Int, String)]]
     val comp = scala.collection.mutable.Map.empty[String, Seq[Long]].withDefaultValue(Nil)
     val wall = scala.collection.mutable.Map.empty[String, Seq[Double]].withDefaultValue(Nil)
+    // every body seen, kept past its cache entry for `--dump`
+    val code = scala.collection.mutable.Map.empty[String, CodeAndComment]
+    def cacheKeys(): Set[(Int, String)] = {
+      val now = cacheCode()
+      now.foreach { case ((_, body), c) => code(body) = c }
+      now.keySet
+    }
     var seen = cacheKeys()
     var out = 0
     for (_ <- 1 to passes; q <- names) {
@@ -137,6 +204,10 @@ object CodegenCensus {
     println(s"""{"row":"total","entries":${all.size},"bodies":${all.map(_._2).size},""" +
       s""""compiles_per_pass":${arr((0 until passes).map(p =>
         names.map(q => comp(q)(p)).sum))}}""")
+    dumpDir.foreach { d =>
+      new java.io.File(d).mkdirs()
+      dump(d, names, entries, code)
+    }
     spark.stop()
   }
 }
