@@ -369,7 +369,7 @@ object Bench {
         "h_bpe_merges", "h_bpe_tokenize", // bpeWords, bpeB*/bpeT*
         "h_kmeans_lloyd",       // kmC1 (k-means/silhouette)
         "g_markov_attribution", // mkvM0..4
-        "g_mannwhitney_u",      // mannwhitney_ranged
+        "g_mannwhitney_u",      // mannwhitney_agg
         "h_mmr_rerank",         // mmrCand -> mmrPairs (round-11)
         "h_ann_hnsw",           // hnswEdges navigable graph (round-15)
         "c_join_dpp",           // dppOrders partitioned copy

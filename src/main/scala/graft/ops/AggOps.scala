@@ -580,13 +580,14 @@ object AggOps {
 
     // KLL quantile sketch (Karnin-Lang-Liberty '16, Spark 4's
     // Datasketches surface): the MERGEABLE quantile summary a 100 TB
-    // pipeline keeps when the exact two-pass percentile
-    // (d_agg_percentile) is one pass too many — one keyed aggregate
-    // builds the sketch, quantiles read off the bytes. Checked values
-    // are the exact type-7 percentiles (the mergeable windowed
-    // machinery, no holistic buffer); the KLL-returned values are
-    // asserted inside the exact [p−6.25%, p+6.25%] rank band — ~4× the
-    // sketch's 1.33% rank-error bound at k=200, so the flag is
+    // pipeline keeps when the exact percentile (d_agg_percentile, a
+    // sketch pass plus a selection pass) is one pass too many — one
+    // keyed aggregate builds the sketch, quantiles read off the bytes.
+    // Checked values are the exact type-7 percentiles
+    // (Q.exactPercentiles' sketch-bracketed selection, no holistic
+    // buffer); the KLL-returned values are asserted inside the exact
+    // [p−6.25%, p+6.25%] rank band — ~4× the sketch's 1.33%
+    // rank-error bound at k=200, so the flag is
     // deterministic under any partial-merge order. Band edges use
     // DYADIC ps (7/16, 9/16, 27/32, 31/32): exactly-representable
     // doubles, so both engines interpolate bit-identically. The sketch

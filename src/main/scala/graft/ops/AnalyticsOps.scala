@@ -82,37 +82,24 @@ object AnalyticsOps {
     * g_auc_value: one row (u2x = 2·U₁, n1, n2, tsum = Σ(t³−t)) from
     * the distinct-value decomposition 2·U₁ = Σ_v na_v·(2·cumB<(v) +
     * nb_v) — pure BIGINT, with the exclusive prefix over distinct
-    * values run by the two-pass range-partition pattern (the ranged
-    * table memoized + materialized: two consumers of one range-sampled
-    * partitioning, the g_cusum_changepoint lesson). */
-  private def mwAgg(s: org.apache.spark.sql.SparkSession, d: String) = {
-    val parts = s.sparkContext.defaultParallelism
-    val dv = Io.events(s, d)
-      .filter(col("event_type").isin("purchase", "click"))
-      .groupBy(col("value"))
-      .agg(sum(when(col("event_type") === "purchase", 1L).otherwise(0L)).as("na_v"),
-        sum(when(col("event_type") === "click", 1L).otherwise(0L)).as("nb_v"))
-    val wLoc = Window.partitionBy(col("pid")).orderBy(col("value"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val local = Q.memoized(s, d, "mannwhitney_ranged") {
-      Q.materialize(s, d, "mannwhitney_ranged") {
-        dv.repartitionByRange(parts, col("value"))
-          .withColumn("pid", spark_partition_id())
-          .withColumn("lcb", coalesce(sum(col("nb_v")).over(wLoc), lit(0L)))
+    * values from [[Q.prefixScan]]. The materialized 1-row aggregate is
+    * the memoized artifact (it reads no scratch). */
+  private def mwAgg(s: org.apache.spark.sql.SparkSession, d: String) =
+    Q.memoized(s, d, "mannwhitney_agg") {
+      Q.materialize(s, d, "mannwhitney_agg") {
+        val dv = Io.events(s, d)
+          .filter(col("event_type").isin("purchase", "click"))
+          .groupBy(col("value"))
+          .agg(sum(when(col("event_type") === "purchase", 1L).otherwise(0L)).as("na_v"),
+            sum(when(col("event_type") === "click", 1L).otherwise(0L)).as("nb_v"))
+        val t = col("na_v") + col("nb_v")
+        Q.prefixScan(dv, "mannwhitney_ranged", Seq(col("value")), sums = Seq("nb_v"))
+          .agg(sum(col("na_v") *
+              (lit(2L) * coalesce(col("nb_v_excl"), lit(0L)) + col("nb_v"))).as("u2x"),
+            sum(col("na_v")).as("n1"), sum(col("nb_v")).as("n2"),
+            sum(t * t * t - t).as("tsum"))
       }
     }
-    val offs = local.groupBy(col("pid")).agg(sum(col("nb_v")).as("pt"))
-      .withColumn("off", coalesce(sum(col("pt")).over(
-        Window.orderBy(col("pid"))
-          .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-      .select(col("pid"), col("off"))
-    val t = col("na_v") + col("nb_v")
-    local.join(broadcast(offs), "pid")
-      .agg(sum(col("na_v") * (lit(2L) * (col("lcb") + col("off")) + col("nb_v")))
-        .as("u2x"),
-        sum(col("na_v")).as("n1"), sum(col("nb_v")).as("n2"),
-        sum(t * t * t - t).as("tsum"))
-  }
 
   /** Deterministic 1e-6 snap (HALF_UP in both engines when fed a
     * DOUBLE; DuckDB's decimal→decimal cast truncates — never feed it
@@ -1920,50 +1907,27 @@ object AnalyticsOps {
     // fraction through the stream. Two passes: the global mean (raw
     // double of an exact decimal sum — engine-identical), then an
     // EXACT decimal prefix sum of deviations in (ts, event_id) order
-    // via the distributed range-partition + local-cumsum + broadcast-
-    // offset pattern (4th user: ntile, gini, ABC) — no global window
-    // over the data. Deviations snap to DECIMAL(38,6) BEFORE summing,
-    // so every prefix value is exact and the argmax (tie → earliest
-    // event) is engine-identical; the oracle runs the literal
-    // one-window form, proving the decomposition again.
+    // from Q.prefixScan — no global window over the data. Deviations
+    // snap to DECIMAL(38,6) BEFORE summing, so every prefix value is
+    // exact and the argmax (tie → earliest event) is engine-identical;
+    // the oracle runs the literal one-window form, proving the
+    // decomposition again.
     Q("g_cusum_changepoint", (s, d) => {
       val dec6 = org.apache.spark.sql.types.DecimalType(38, 6)
-      val parts = s.sparkContext.defaultParallelism
       val ev = Io.events(s, d).filter(col("event_type") === "purchase")
         .select(col("event_id"), col("ts_us"), col("value"))
-      val m = ev.agg(decAvg(col("value")).as("mean"), count(lit(1)).as("n"))
+      val m = ev.agg(decAvg(col("value")).as("mean"))
       val dev = ev.crossJoin(broadcast(m))
-        .withColumn("dv", (col("value") - col("mean")).cast(dec6))
-      val wLoc = Window.partitionBy(col("pid"))
-        .orderBy(col("ts_us"), col("event_id"))
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      // MATERIALIZED, not lazy: `local` is consumed by TWO branches
-      // (the per-partition offsets and the final join), and
-      // repartitionByRange samples its bounds with a seed derived from
-      // the RDD id — a fresh id per execution, so two independent
-      // executions can draw DIFFERENT partition boundaries and the
-      // offsets then correct the wrong partitions (observed at sf0.1:
-      // peak_cusum -4388.70 vs the one-window oracle's -4172.49; at
-      // sf0.01 the sample is the whole input and the bounds happened to
-      // coincide). Freezing the ranged table once is also the 100 TB
-      // shape — the range shuffle is paid once, not per consumer.
-      val local = Q.scratch("cusum_ranged") {
-        dev.repartitionByRange(parts, col("ts_us"), col("event_id"))
-          .withColumn("pid", spark_partition_id())
-          .withColumn("lc", sum(col("dv")).over(wLoc))
-      }
-      val offs = local.groupBy(col("pid")).agg(sum(col("dv")).as("pt"))
-        .withColumn("off", coalesce(sum(col("pt")).over(
-          Window.orderBy(col("pid"))
-            .rowsBetween(Window.unboundedPreceding, -1)), lit(0).cast(dec6)))
-        .select(col("pid"), col("off"))
-      local.join(broadcast(offs), "pid")
-        .withColumn("cusum", (col("lc") + col("off")).cast("double"))
-        .select(col("n"), col("event_id"), col("ts_us"), col("cusum"),
+        .select(col("event_id"), col("ts_us"),
+          (col("value") - col("mean")).cast(dec6).as("dv"))
+      Q.prefixScan(dev, "cusum_ranged", Seq(col("ts_us"), col("event_id")),
+          sums = Seq("dv"))
+        .withColumn("cusum", col("dv_incl").cast("double"))
+        .select(col("n_total"), col("event_id"), col("ts_us"), col("cusum"),
           abs(col("cusum")).as("ac"))
         .orderBy(col("ac").desc, col("ts_us"), col("event_id"))
         .limit(1)
-        .select(col("n").as("n_events"), col("event_id").as("peak_event"),
+        .select(col("n_total").as("n_events"), col("event_id").as("peak_event"),
           col("ts_us").as("peak_ts_us"), col("cusum").as("peak_cusum"))
     }, Some(
       s"""WITH ev AS (
@@ -1987,12 +1951,11 @@ object AnalyticsOps {
     // U₁ = #{(a,b): a > b} + ½·#ties, computed EXACTLY with no rank
     // window at all via the distinct-value decomposition
     // 2·U₁ = Σ_v na_v·(2·cumB<(v) + nb_v) — pure BIGINT until the final
-    // z-score. The exclusive prefix count over distinct values is the
-    // distributed two-pass range-partition pattern (no same-value rows
-    // can straddle a partition: the prefix runs over the DISTINCT-value
-    // table). Tie correction Σ(t³−t) is likewise integer-exact; the
-    // z-score is one fixed-association double expression mirrored in
-    // the oracle, emitted raw (inputs engine-identical by construction).
+    // z-score. The exclusive prefix count over distinct values is
+    // Q.prefixScan over the DISTINCT-value table. Tie correction
+    // Σ(t³−t) is likewise integer-exact; the z-score is one
+    // fixed-association double expression mirrored in the oracle,
+    // emitted raw (inputs engine-identical by construction).
     Q("g_mannwhitney_u", (s, d) => {
       val agg = mwAgg(s, d)
       // degenerate guards (r12 sweep): one fully-tied value (zero tie
@@ -2036,51 +1999,27 @@ object AnalyticsOps {
     // Revenue concentration: Gini coefficient + top-1%/top-10% share of
     // per-customer spend. Gini uses the rank formula
     // G = 2·Σ(rank·x)/(n·Σx) − (n+1)/n, which needs a GLOBAL rank of
-    // every customer — produced by the same two-pass range-partitioned
-    // ranking as e_win_ntile_pct (repartitionByRange → per-partition
-    // row_number → prefix offsets), never a single-partition window.
-    // All sums ride DECIMAL(38,6) (order-independent); ranks and the
-    // top-k thresholds are exact integer arithmetic (k = max(1, n÷100)
-    // resp. n÷10), so both engines pick the same customer sets.
+    // every customer — Q.prefixScan's rn, never a single-partition
+    // window; with n on every ranked row, one aggregate computes Σx,
+    // Σ(rank·x) and both top-k sums. All sums ride DECIMAL(38,6)
+    // (order-independent); ranks and the top-k thresholds are exact
+    // integer arithmetic (k = max(1, n÷100) resp. n÷10), so both
+    // engines pick the same customer sets.
     Q("g_gini_spend", (s, d) => {
-      val parts = s.sparkContext.defaultParallelism
       val spend = Io.table(s, d, "orders")
         .groupBy(col("o_custkey"))
         .agg(decSum(col("o_totalprice")).as("spend"))
-      val wLocal = Window.partitionBy(col("pid"))
-        .orderBy(col("spend"), col("o_custkey"))
-      // scratch: two consumers of a range-sampled partitioning —
-      // see g_cusum_changepoint (bounds are sampled per execution)
-      val local = Q.scratch("gini_ranked") {
-        spend
-          .repartitionByRange(parts, col("spend"), col("o_custkey"))
-          .withColumn("pid", spark_partition_id())
-          .withColumn("lrn", row_number().over(wLocal))
-      }
-      // cluster-partitions-sized offset table (same scale argument as
-      // e_win_ntile_pct: the global window below runs over ≤|partitions|
-      // rows, not data)
-      val offs = local.groupBy(col("pid")).agg(count(lit(1)).as("cnt"))
-        .withColumn("off", coalesce(sum(col("cnt")).over(
-          Window.orderBy(col("pid"))
-            .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-        .select(col("pid"), col("off"))
-      val ranked = local.join(broadcast(offs), "pid")
-        .withColumn("rn", col("lrn") + col("off"))
-      val tot = ranked.agg(count(lit(1)).as("n"),
+      val ranked = Q.prefixScan(spend, "gini_ranked", Seq(col("spend"), col("o_custkey")))
+      def top(k: org.apache.spark.sql.Column) =
+        decSum(when(col("rn") > col("n_total") - k, col("spend")).otherwise(lit(0.0)))
+      val tot = ranked.agg(coalesce(max(col("n_total")), lit(0L)).as("n"),
         decSum(col("spend")).as("ts"),
-        decSum(col("rn") * col("spend")).as("rx"))
-      val tops = ranked.crossJoin(broadcast(tot))
-        .agg(decSum(when(
-            col("rn") > col("n") - greatest(lit(1L), expr("n DIV 100")),
-            col("spend")).otherwise(lit(0.0))).as("t1"),
-          decSum(when(
-            col("rn") > col("n") - greatest(lit(1L), expr("n DIV 10")),
-            col("spend")).otherwise(lit(0.0))).as("t10"))
+        decSum(col("rn") * col("spend")).as("rx"),
+        top(greatest(lit(1L), expr("n_total DIV 100"))).as("t1"),
+        top(greatest(lit(1L), expr("n_total DIV 10"))).as("t10"))
       // zero-spend guard (r12 sweep): total spend 0 zeroes every share
       // denominator — NULL matches DuckDB's /0 → NULL (oracle unchanged)
-      tot.crossJoin(tops)
-        .select(col("n").as("n_cust"), snap6(col("ts")).as("total_spend"),
+      tot.select(col("n").as("n_cust"), snap6(col("ts")).as("total_spend"),
           snap6(when(col("ts") =!= 0,
             lit(2.0) * col("rx") / (col("n") * col("ts")) -
               (col("n") + lit(1L)) / col("n").cast("double"))).as("gini"),
@@ -2602,59 +2541,34 @@ object AnalyticsOps {
     // ABC / Pareto classification — the classic inventory-analytics
     // cut: rank parts by revenue DESC, classify by cumulative revenue
     // share (A: cum ≤ 80%, B: ≤ 95%, C: rest), report the 3-row class
-    // census. The cumulative sum is the DISTRIBUTED two-pass prefix-sum
-    // (same pattern as g_gini_spend's global rank): range-partition on
-    // the sort key, exact decimal cumsum WITHIN each partition, then
-    // add broadcast per-partition offsets — no single-partition window
-    // over the data, and every cumulative value is an exact
+    // census. The cumulative sum is Q.prefixScan's exact decimal
+    // running total in (rev DESC, partkey) order — no single-partition
+    // window over the data, and every cumulative value is an exact
     // DECIMAL(38,6) so the 0.8/0.95 boundary classification is engine-
     // identical (the oracle runs the literal one-window form, proving
-    // the two-pass decomposition equal). Revenue terms are the TPC-H
+    // the decomposition equal). Revenue terms are the TPC-H
     // price*(1−discount) doubles, decimal-summed order-independently.
     Q("g_abc_classification", (s, d) => {
       val dec6 = org.apache.spark.sql.types.DecimalType(38, 6)
-      val parts = s.sparkContext.defaultParallelism
       val rev = Io.table(s, d, "lineitem")
         .groupBy(col("l_partkey"))
         .agg(decSum(col("l_extendedprice") * (lit(1.0) - col("l_discount")))
           .as("rev"))
-      val wLoc = Window.partitionBy(col("pid"))
-        .orderBy(col("rev").desc, col("l_partkey"))
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      // scratch: two consumers of a range-sampled partitioning —
-      // see g_cusum_changepoint (bounds are sampled per execution)
-      val local = Q.scratch("abc_ranked") {
-        rev
-          .repartitionByRange(parts, col("rev").desc, col("l_partkey"))
-          .withColumn("pid", spark_partition_id())
-          .withColumn("lcum", sum(col("rev").cast(dec6)).over(wLoc))
-      }
-      val offs = local.groupBy(col("pid"))
-        .agg(sum(col("rev").cast(dec6)).as("ptot"))
-        .withColumn("off", coalesce(sum(col("ptot")).over(
-          Window.orderBy(col("pid"))
-            .rowsBetween(Window.unboundedPreceding, -1)), lit(0).cast(dec6)))
-        .select(col("pid"), col("off"))
-      // total from the MATERIALIZED ranked table, not a second
-      // lineitem scan + hash agg (r15): `local` carries every rev row
-      // already, and DECIMAL(38,6) sums are exact and associative, so
-      // the total is bit-identical to summing the pre-shuffle aggregate
-      val tot = local.agg(sum(col("rev").cast(dec6)).as("total"))
+        .withColumn("rev6", col("rev").cast(dec6))
       // zero-revenue guard (r12 sweep): total = 0 → NULL share, which
       // falls through both <= branches to 'C' — the same path DuckDB's
       // natural /0 → NULL takes through its CASE (oracle unchanged)
-      val classed = local.join(broadcast(offs), "pid")
-        .crossJoin(broadcast(tot))
-        .withColumn("share", when(col("total") =!= 0,
-          (col("lcum") + col("off")).cast("double") /
-            col("total").cast("double")))
+      val classed = Q.prefixScan(rev, "abc_ranked", Seq(col("rev").desc, col("l_partkey")),
+          sums = Seq("rev6"))
+        .withColumn("share", when(col("rev6_total") =!= 0,
+          col("rev6_incl").cast("double") / col("rev6_total").cast("double")))
         .withColumn("abc", when(col("share") <= 0.8, "A")
           .when(col("share") <= 0.95, "B").otherwise("C"))
       classed.groupBy(col("abc"))
         .agg(count(lit(1)).as("n_parts"),
           snap6(decSum(col("rev"))).as("class_revenue"),
-          snap6(when(first(col("total")) =!= 0, decSum(col("rev")) /
-            first(col("total")).cast("double"))).as("revenue_share"))
+          snap6(when(first(col("rev6_total")) =!= 0, decSum(col("rev")) /
+            first(col("rev6_total")).cast("double"))).as("revenue_share"))
         .orderBy("abc")
     }, Some(
       s"""WITH rev AS (
@@ -3086,53 +3000,25 @@ object AnalyticsOps {
     // 50/80/90% of revenue") — the 80/20 read every mix/curation
     // decision starts from. Exact integer spine: per-customer spend in
     // CENTS (BIGINT), customers ranked by (spend DESC, custkey), the
-    // running revenue total via the distributed two-pass range-
-    // partition prefix pattern (materialized once — the
-    // repartitionByRange seed lesson, see g_cusum_changepoint), and
-    // each threshold answered by the FIRST rank whose cumulative share
-    // crosses it — the crossing test is pure int64 (cum·100 ≥ t·total;
-    // total cents ≤ ~2e15 at 100 TB, ×100 inside int64), and the two
-    // reported ratios are int/int IEEE divisions. min_by picks the
-    // crossing row deterministically (rank is unique).
+    // running revenue total from Q.prefixScan, and each threshold
+    // answered by the FIRST rank whose cumulative share crosses it —
+    // the crossing test is pure int64 (cum·100 ≥ t·total; total cents
+    // ≤ ~2e15 at 100 TB, ×100 inside int64), and the two reported
+    // ratios are int/int IEEE divisions. min_by picks the crossing row
+    // deterministically (rank is unique).
     Q("g_pareto_share", (s, d) => {
-      val parts = s.sparkContext.defaultParallelism
       val spend = Io.table(s, d, "orders")
         .groupBy(col("o_custkey"))
         .agg(sum(expr("CAST(CAST(o_totalprice AS DECIMAL(12,2)) * 100" +
           " AS BIGINT)")).as("cents"))
-      val wLoc = Window.partitionBy(col("pid"))
-        .orderBy(col("cents").desc, col("o_custkey"))
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      val local = Q.scratch("pareto_ranked") {
-        spend.repartitionByRange(parts, col("cents").desc, col("o_custkey"))
-          .withColumn("pid", spark_partition_id())
-          .withColumn("lc", sum(col("cents")).over(wLoc))
-          .withColumn("lrn", count(lit(1)).over(wLoc))
-      }
-      val offs = local.groupBy(col("pid"))
-        .agg(sum(col("cents")).as("pc"), count(lit(1)).as("pn"))
-        .withColumn("coff", coalesce(sum(col("pc")).over(
-          Window.orderBy(col("pid"))
-            .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-        .withColumn("noff", coalesce(sum(col("pn")).over(
-          Window.orderBy(col("pid"))
-            .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-        .select(col("pid"), col("coff"), col("noff"))
-      // totals from the MATERIALIZED ranked table (r15): `spend` here
-      // re-ran the orders scan + hash agg; BIGINT sums are exact and
-      // associative, so summing the checkpoint is bit-identical
-      val tot = local.agg(sum(col("cents")).as("tc"),
-        count(lit(1)).as("tn"))
-      val ranked = local.join(broadcast(offs), "pid")
-        .select((col("lc") + col("coff")).as("cum"),
-          (col("lrn") + col("noff")).as("rn"))
-      ranked.crossJoin(broadcast(tot))
+      Q.prefixScan(spend, "pareto_ranked", Seq(col("cents").desc, col("o_custkey")),
+          sums = Seq("cents"))
         .withColumn("thr", explode(array(lit(50L), lit(80L), lit(90L))))
-        .filter(col("cum") * 100 >= col("thr") * col("tc"))
+        .filter(col("cents_incl") * 100 >= col("thr") * col("cents_total"))
         .groupBy(col("thr").as("threshold_pct"))
         .agg(min(col("rn")).as("k_customers"),
-          min_by(col("cum"), col("rn")).as("cum_cents"),
-          first(col("tn")).as("tn"), first(col("tc")).as("tc"))
+          min_by(col("cents_incl"), col("rn")).as("cum_cents"),
+          first(col("n_total")).as("tn"), first(col("cents_total")).as("tc"))
         .select(col("threshold_pct"), col("k_customers"),
           (col("k_customers").cast("double") / col("tn")).as("pct_customers"),
           // zero-revenue guard (r12 sweep): NULL matches DuckDB's /0
@@ -3874,10 +3760,8 @@ object AnalyticsOps {
     // per score decile, the purchase rate, cumulative gain share and
     // lift over the base rate — what a targeting team reads to pick a
     // cutoff. Deciles come from the GLOBAL rank of every scored event
-    // via the distributed two-pass range-rank (range partition by
-    // (value DESC, event_id), per-partition row_number, ≤|partitions|
-    // offset rows — never a single-partition window; the ranged table
-    // is materialized, the cusum lesson), decile = (rn−1)·10 DIV n + 1
+    // in (value DESC, event_id) order — Q.prefixScan's rn, never a
+    // single-partition window — as decile = (rn−1)·10 DIV n + 1
     // in pure integers. Counts are integers; rate/share/lift are
     // int-derived doubles (rate raw int/int, lift a division of two
     // such — engine-exact, zero snaps); zero-positive corpora emit
@@ -3885,33 +3769,15 @@ object AnalyticsOps {
     // final census window runs over the 10 decile rows (bounded by
     // construction).
     Q("g_lift_decile", (s, d) => {
-      val parts = s.sparkContext.defaultParallelism
       val ev = Io.events(s, d)
         .select(col("event_id"), col("value"),
           (col("event_type") === "purchase").cast("long").as("y"))
-      val wLoc = Window.partitionBy(col("pid"))
-        .orderBy(col("value").desc, col("event_id"))
-      val local = Q.scratch("lift_ranked") {
-        ev.repartitionByRange(parts, col("value").desc, col("event_id"))
-          .withColumn("pid", spark_partition_id())
-          .withColumn("lrn", row_number().over(wLoc))
-      }
-      val offs = local.groupBy(col("pid")).agg(count(lit(1)).as("cnt"))
-        .withColumn("off", coalesce(sum(col("cnt")).over(
-          Window.orderBy(col("pid"))
-            .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-        .select(col("pid"), col("off"))
-      // totals from the MATERIALIZED ranked table (r15): `ev` here
-      // re-ran the events scan; integer count/sum over the checkpoint
-      // is identical
-      val tot = local.agg(count(lit(1)).as("n"), sum(col("y")).as("ty"))
-      val perDec = local.join(broadcast(offs), "pid")
-        .crossJoin(broadcast(tot))
-        .withColumn("decile",
-          expr("CAST((lrn + off - 1) * 10 DIV n AS INT) + 1"))
+      val perDec = Q.prefixScan(ev, "lift_ranked", Seq(col("value").desc, col("event_id")),
+          sums = Seq("y"))
+        .withColumn("decile", expr("CAST((rn - 1) * 10 DIV n_total AS INT) + 1"))
         .groupBy(col("decile"))
         .agg(count(lit(1)).as("n_events"), sum(col("y")).as("n_pos"),
-          max(col("n")).as("n"), max(col("ty")).as("ty"))
+          max(col("n_total")).as("n"), max(col("y_total")).as("ty"))
       val wCum = Window.orderBy(col("decile"))
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
       perDec
@@ -4127,16 +3993,14 @@ object AnalyticsOps {
     // strictly better in one). The naive spelling is an O(n²)
     // dominance anti-join; a 2-D skyline instead reduces to a
     // DISTRIBUTED PREFIX MIN: per distinct spend value take min
-    // orders, range-partition descending by spend, local strict-prefix
-    // min per partition window, cross-partition offsets via the ≤32-row
-    // pid table (the in-repo two-pass pattern — no single-partition
-    // window, no pairwise join), keep spend values whose min beats
-    // every strictly-larger spend, then one keyed join back to emit
-    // the frontier customers. All-integer (exact cents + counts), so
-    // dominance is engine-exact. The oracle keeps the NOT EXISTS
-    // spelling — same frontier, independently derived.
+    // orders, Q.prefixScan's exclusive running min in descending spend
+    // order (no single-partition window, no pairwise join), keep spend
+    // values whose min beats every strictly-larger spend, then one
+    // keyed join back to emit the frontier customers. All-integer
+    // (exact cents + counts), so dominance is engine-exact. The oracle
+    // keeps the NOT EXISTS spelling — same frontier, independently
+    // derived.
     Q("g_pareto_skyline", (s, d) => {
-      val parts = s.sparkContext.defaultParallelism
       // scratch (r15): cust feeds the dominance census AND the
       // final member join — each execution re-ran the orders scan +
       // hash agg. The table is customer-aggregate-sized.
@@ -4147,28 +4011,11 @@ object AnalyticsOps {
             " AS BIGINT)")).as("cents"),
             count(lit(1)).as("n_ord")))
       val m = cust.groupBy(col("cents")).agg(min(col("n_ord")).as("mn"))
-      val wLoc = Window.partitionBy(col("pid")).orderBy(col("cents").desc)
-        .rowsBetween(Window.unboundedPreceding, -1)
-      val local = Q.scratch("skyline_ranged") {
-        m.repartitionByRange(parts, col("cents").desc)
-          .withColumn("pid", spark_partition_id())
-          .withColumn("lpm", min(col("mn")).over(wLoc))
-      }
-      val offs = local.groupBy(col("pid")).agg(min(col("mn")).as("pm"))
-        .withColumn("poff", min(col("pm")).over(
-          Window.orderBy(col("pid"))
-            .rowsBetween(Window.unboundedPreceding, -1)))
-        .select(col("pid"), col("poff"))
-      val front = local.as("l")
-        .join(broadcast(offs.as("o")), col("l.pid") === col("o.pid"))
-        .withColumn("pre", least(
-          coalesce(col("l.lpm"), lit(Long.MaxValue)),
-          coalesce(col("o.poff"), lit(Long.MaxValue))))
-        .filter(col("l.mn") < col("pre"))
-        .select(col("l.cents").as("cents"), col("l.mn").as("mn"))
-      cust.join(front,
-          cust("cents") === front("cents") && cust("n_ord") === front("mn"))
-        .select(cust("o_custkey"), cust("cents"), cust("n_ord"))
+      val front = Q.prefixScan(m, "skyline_ranged", Seq(col("cents").desc), mins = Seq("mn"))
+        .filter(col("mn") < coalesce(col("mn_excl"), lit(Long.MaxValue)))
+        .select(col("cents").as("front_cents"), col("mn"))
+      cust.join(front, col("cents") === col("front_cents") && col("n_ord") === col("mn"))
+        .select(col("o_custkey"), col("cents"), col("n_ord"))
         .orderBy(col("cents").desc, col("o_custkey"))
     }, Some(
       """WITH cust AS (

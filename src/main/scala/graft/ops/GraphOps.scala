@@ -1656,50 +1656,23 @@ object GraphOps {
     // values, the h_quality_quantile discipline — an interpolated
     // percentile can land between integer degrees). The thresholds are
     // CUME_DIST cuts computed WITHOUT ranking the node table: group the
-    // degree census per distinct degree, two-pass range-partitioned
-    // prefix-sum it (local running sum per range partition + a
-    // |partitions|-row broadcast offset table — the e_win_ntile_pct
-    // pattern), and cum(k)/N ≥ p picks min k. No corpus-derived table
-    // ever crosses a single-partition WindowExec; the only global
-    // window left runs over the |partitions|-row offset table. All
-    // counts integer over the shared supported-graph artifacts: N(>k)
-    // from the degree table, E(>k) from one pair-table pass keyed on
+    // degree census per distinct degree, prefix-sum it with
+    // Q.prefixScan, and cum(k)/N ≥ p picks min k. No corpus-derived
+    // table ever crosses a single-partition WindowExec. All counts
+    // integer over the shared supported-graph artifacts: N(>k) from the
+    // degree table, E(>k) from one pair-table pass keyed on
     // min(deg_a, deg_b); φ = 2E/(N(N−1)) is one int/int division. The
     // three thresholds attach as a 3-row broadcast.
     Q("i_graph_rich_club", (s, d) => {
-      import org.apache.spark.sql.expressions.Window
       val deg = supDeg(s, d)
       val pairs = supPairs(s, d)
-      // per-degree census, range-cumulated: cum = #nodes with deg ≤ k.
-      // Scratch because three threshold branches consume it (a
-      // range repartition samples fresh bounds per execution — the
-      // g_cusum_changepoint lesson). The cross-partition offsets come
-      // from a |partitions|²-cell self-join over the 32-row per-
-      // partition count table instead of a prefix window — same
-      // metadata-sized work, and this query's plan carries NO
-      // unpartitioned WindowExec at all, bounded or otherwise.
-      val cum = Q.scratch("richclub_cumdeg") {
-        val census = deg.groupBy(col("deg")).agg(count(lit(1)).as("cnt"))
-          .repartitionByRange(s.sparkContext.defaultParallelism, col("deg"))
-          .withColumn("pid", spark_partition_id())
-          .withColumn("lcum", sum(col("cnt")).over(
-            Window.partitionBy(col("pid")).orderBy(col("deg"))))
-        val pcnts = census.groupBy(col("pid")).agg(sum(col("cnt")).as("pcnt"))
-        val tot = pcnts.agg(sum(col("pcnt")).as("n_total"))
-        val offs = pcnts.select(col("pid"), col("pcnt"))
-          .join(pcnts.select(col("pid").as("pid2"), col("pcnt").as("pcnt2")),
-            col("pid2") < col("pid"), "left")
-          .groupBy(col("pid"))
-          .agg(coalesce(sum(col("pcnt2")), lit(0L)).as("off"))
-          .crossJoin(broadcast(tot))
-          .select(col("pid"), col("off"), col("n_total"))
-        census.join(broadcast(offs), "pid")
-          .select(col("deg"), (col("lcum") + col("off")).as("cum"),
-            col("n_total"))
-      }
+      // per-degree census, cumulated: cum = #nodes with deg ≤ k
+      val cum = Q.prefixScan(deg.groupBy(col("deg")).agg(count(lit(1)).as("cnt")),
+          "richclub_cumdeg", Seq(col("deg")), sums = Seq("cnt"))
+        .select(col("deg"), col("cnt_incl").as("cum"), col("cnt_total").as("nodes"))
       val thr = Seq(0.5 -> "p50", 0.75 -> "p75", 0.9 -> "p90").map {
         case (p, nm) => cum
-          .filter(col("cum").cast("double") / col("n_total") >= p)
+          .filter(col("cum").cast("double") / col("nodes") >= p)
           .agg(min(col("deg")).as("k")).select(lit(nm).as("q"), col("k"))
       }.reduce(_.union(_))
       val edgeDeg = pairs

@@ -802,16 +802,14 @@ object MixOps {
     // map each doc's WITHIN-SOURCE quality rank onto the GLOBAL quality
     // distribution, so every source contributes the same quality
     // profile. Integer spine end-to-end: within-source rank r (keyed
-    // window), global rank table via the two-pass range-partition
-    // pattern (materialized — the repartitionByRange seed lesson), and
-    // the rank map target = 1 + ⌊(r−1)(N−1)/(n_s−1)⌋ in pure int64; the
+    // window), global rank table from Q.prefixScan, and the rank map
+    // target = 1 + ⌊(r−1)(N−1)/(n_s−1)⌋ in pure int64; the
     // normalized score is a VALUE COPIED from the global table (no
     // interpolation — engine-identical because the 1e-6-snapped quality
     // expression is, proven by h_quality_quantile). One lang-free
     // corpus scan, one source-keyed window, one range shuffle, one
     // rank-keyed join at any scale.
     Q("h_quality_qnorm", (s, d) => {
-      val parts = s.sparkContext.defaultParallelism
       val rt = split(col("text"), " ")
       val nTok = size(rt).cast("double")
       val q = (lit(0.3) * (size(array_distinct(rt)) / nTok) +
@@ -822,31 +820,13 @@ object MixOps {
         .select(col("doc_id"), col("source"), q.as("quality"))
       val wSrc = Window.partitionBy(col("source"))
         .orderBy(col("quality"), col("doc_id"))
-      val wLoc = Window.partitionBy(col("pid"))
-        .orderBy(col("quality"), col("doc_id"))
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      val local = Q.scratch("qnormRanked") {
-        scored.repartitionByRange(parts, col("quality"), col("doc_id"))
-          .withColumn("pid", spark_partition_id())
-          .withColumn("lrn", count(lit(1)).over(wLoc))
-      }
-      val offs = local.groupBy(col("pid")).agg(count(lit(1)).as("pn"))
-        .withColumn("noff", coalesce(sum(col("pn")).over(
-          Window.orderBy(col("pid"))
-            .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-        .select(col("pid"), col("noff"))
-      val glob = local.join(broadcast(offs), "pid")
-        .select((col("lrn") + col("noff")).as("rn"),
-          col("quality").as("q_norm"))
-      // count + per-source ranking read the MATERIALIZED ranked table
-      // (r15): `scored` re-tokenized and re-scored every document text
-      // once per extra consumer (3 executions of the split/score
-      // projection); local carries (doc_id, source, quality) already
-      val n = local.agg(count(lit(1)).as("n"))
-      local.select(col("doc_id"), col("source"), col("quality"))
+      // the per-source ranking reads the ranked table too: `scored`
+      // would re-tokenize and re-score every document text
+      val ranked = Q.prefixScan(scored, "qnormRanked", Seq(col("quality"), col("doc_id")))
+      val glob = ranked.select(col("rn"), col("quality").as("q_norm"))
+      ranked.select(col("doc_id"), col("source"), col("quality"), col("n_total").as("n"))
         .withColumn("src_rank", row_number().over(wSrc))
         .withColumn("ns", count(lit(1)).over(Window.partitionBy(col("source"))))
-        .crossJoin(broadcast(n))
         .withColumn("target", expr("1 + CASE WHEN ns > 1 THEN " +
           "((src_rank - 1) * (n - 1)) DIV (ns - 1) ELSE (n - 1) DIV 2 END"))
         .join(glob, col("target") === col("rn"))

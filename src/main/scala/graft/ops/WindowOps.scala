@@ -62,44 +62,15 @@ object WindowOps {
 
     // Global ntile/percent_rank/cume_dist WITHOUT a global window: a
     // `Window.orderBy` with no partitionBy funnels every row through one
-    // task — the 100 TB scale-killer. Instead, the classic two-pass
-    // range-partitioned rank (what global sort itself does): (1)
-    // repartitionByRange on the sort key samples boundaries and spreads
-    // rows; (2) row_number per range partition (window partitioned by
-    // pid — every partition ranks in parallel); (3) per-partition counts
-    // (one row per partition, cluster-sized not data-sized) prefix-sum
-    // into offsets; (4) global rn = local rn + offset. ntile /
-    // percent_rank / cume_dist are then pure arithmetic on (rn, n) and
-    // the tie-group min/max rn (one value-keyed aggregate) — no ranking
-    // function ever sees a single-partition exchange. Pinned in
-    // PlanShapeSpec.
+    // task — the 100 TB scale-killer. Instead, the global row number
+    // and row count come from Q.prefixScan (range partition, per-part
+    // row_number, per-part offsets), and ntile / percent_rank /
+    // cume_dist are pure arithmetic on (rn, n) and the tie-group min/max
+    // rn (one value-keyed aggregate) — no ranking function ever sees a
+    // single-partition exchange. Pinned in PlanShapeSpec.
     Q("e_win_ntile_pct", (s, d) => {
-      val parts = s.sparkContext.defaultParallelism
       val cust = Io.table(s, d, "customer").select(col("c_custkey"), col("c_acctbal"))
-      val wLocal = Window.partitionBy(col("pid"))
-        .orderBy(col("c_acctbal"), col("c_custkey"))
-      // scratch: two consumers of a range-sampled partitioning —
-      // see g_cusum_changepoint in AnalyticsOps (repartitionByRange
-      // draws bounds per execution; unmaterialized, the offsets branch
-      // and the join branch can see different partitionings)
-      val local = graft.ops.Q.scratch("ntile_ranked") {
-        cust
-          .repartitionByRange(parts, col("c_acctbal"), col("c_custkey"))
-          .withColumn("pid", spark_partition_id())
-          .withColumn("lrn", row_number().over(wLocal))
-      }
-      // partition offsets AND the global count, both from the same
-      // |cluster partitions|-row table (no second scan of the data):
-      // the global windows here run over metadata-sized input only.
-      val offs = local.groupBy(col("pid")).agg(count(lit(1)).as("cnt"))
-        .withColumn("off", coalesce(sum(col("cnt")).over(
-          Window.orderBy(col("pid"))
-            .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-        .withColumn("n_total", sum(col("cnt")).over(
-          Window.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)))
-        .select(col("pid"), col("off"), col("n_total"))
-      val ranked = local.join(broadcast(offs), "pid")
-        .withColumn("rn", col("lrn") + col("off"))
+      val ranked = Q.prefixScan(cust, "ntile_ranked", Seq(col("c_acctbal"), col("c_custkey")))
       // tie groups on the ranking value: rank = min rn, cume numerator =
       // max rn — contiguous in the global order, so one aggregate keyed
       // on the value recovers both (shuffle on c_acctbal, no sort).

@@ -26,7 +26,7 @@ class ArtifactStoreSpec extends AnyFunSuite {
   }
 
   test("dedup chain is store-agnostic and artifacts survive into a fresh session") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_artifacts").toString
+    val tmp = TestSpark.tempDir("graft_artifacts")
     // local-mode reference (the default store)
     val expected = Registry.queries("h_dedup_clusters")(spark, sf)
       .collect().map(_.toSeq).toSeq
@@ -59,7 +59,7 @@ class ArtifactStoreSpec extends AnyFunSuite {
   }
 
   test("parquet store: a second construction leaves the first frame's rows intact") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_artifacts").toString
+    val tmp = TestSpark.tempDir("graft_artifacts")
     for (q <- Seq("h_embed_drift", "g_cuped")) {
       val expected = Registry.queries(q)(spark, sf).collect().map(_.toSeq).toSeq
       val first = withParquetStore(tmp) {

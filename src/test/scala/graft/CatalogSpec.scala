@@ -78,7 +78,7 @@ class CatalogSpec extends AnyFunSuite {
   }
 
   test("external table over existing parquet; temp views stay session-local") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_ext").toString
+    val dir = TestSpark.tempDir("graft_ext")
     Io.table(spark, sf, "region").write.mode("overwrite").parquet(dir)
     spark.sql("DROP TABLE IF EXISTS cat_region_ext")
     spark.sql(s"CREATE TABLE cat_region_ext USING parquet LOCATION '$dir'")
@@ -106,7 +106,7 @@ class CatalogSpec extends AnyFunSuite {
     // (The true two-JVM version of this — publish in one JVM, recover
     // the f_catalog_ddl table in a second — is driven by
     // tools/CatalogBoot; this spec pins the recovery DDL itself.)
-    val dir = java.nio.file.Files.createTempDirectory("graft_survivor").toString
+    val dir = TestSpark.tempDir("graft_survivor")
     val src = Io.table(spark, sf, "orders")
       .withColumn("o_month", month(col("o_orderdate")))
     src.write.mode("overwrite").partitionBy("o_month").parquet(dir)

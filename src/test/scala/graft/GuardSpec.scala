@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The engine's fail-LOUD guards, actually exercised: corrupt inputs
@@ -24,7 +23,7 @@ class GuardSpec extends AnyFunSuite {
 
   test("ragged embedding dimensions fail the PQ build loudly") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft_ragged").toString
+    val dir = TestSpark.tempDir("graft_ragged")
     Seq((1L, Seq(1f, 2f, 3f, 4f, 5f, 6f, 7f, 8f), 0),
       (2L, Seq(1f, 2f, 3f), 1)) // ragged: 3 dims vs 8
       .toDF("vec_id", "embedding", "label")
@@ -43,7 +42,7 @@ class GuardSpec extends AnyFunSuite {
     // docMasks dedup family keeps serving — scale continuity for the
     // sf1 corpus (89-token vocab) where the guard used to refuse.
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft_widevocab").toString
+    val dir = TestSpark.tempDir("graft_widevocab")
     val words = (0 until 70).map(i => f"tok$i%02d")
     // doc1 ~ doc2 at j = 69/70 ≈ 0.9857 (the one ≥0.9 pair); doc3 at
     // j = 0.5 from doc1 must NOT pair

@@ -49,7 +49,7 @@ class IoCatalogSpec extends AnyFunSuite {
   /** A writable copy of the parquet tables of `dir`. */
   private def copyOf(dir: String): String = {
     val src = Paths.get(dir)
-    val dst = Files.createTempDirectory("graft_iocat")
+    val dst = Paths.get(TestSpark.tempDir("graft_iocat"))
     Files.walk(src).iterator().asScala.foreach { p =>
       val t = dst.resolve(src.relativize(p).toString)
       if (Files.isDirectory(p)) Files.createDirectories(t)
@@ -125,7 +125,7 @@ class IoCatalogSpec extends AnyFunSuite {
     import org.apache.parquet.example.data.simple.SimpleGroupFactory
     import org.apache.parquet.hadoop.example.ExampleParquetWriter
     import org.apache.parquet.schema.MessageTypeParser
-    val dir = Files.createTempDirectory("graft_iocat_nanos").toString
+    val dir = TestSpark.tempDir("graft_iocat_nanos")
     val schema = MessageTypeParser.parseMessageType(
       "message m { required int64 id; required int64 ts (TIMESTAMP(NANOS,true)); }")
     val w = ExampleParquetWriter

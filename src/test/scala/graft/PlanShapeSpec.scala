@@ -97,7 +97,7 @@ class PlanShapeSpec extends AnyFunSuite {
     // crawl scale), and no cartesian.
     import org.apache.spark.sql.functions.col
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_wideplan").toString
+    val dir = TestSpark.tempDir("graft_wideplan")
     val words = (0 until 80).map(i => f"tok$i%02d")
     Seq((1L, words.mkString(" "), "en", "s0", 1L),
       (2L, words.take(70).mkString(" "), "en", "s0", 1L))
@@ -540,37 +540,82 @@ class PlanShapeSpec extends AnyFunSuite {
       "SQ8 vectors shuffled through SMJ:\n" + q.take(2000))
   }
 
+  /** The windows of every Q.prefixScan build in `c`'s checkpoints: a
+    * checkpoint that windows by the scan's part id `_pid`. */
+  private def prefixScanBuilds(c: BuildPlans.Captured) = {
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.window.WindowExec
+    object Aqe extends AdaptiveSparkPlanHelper
+    c.checkpoints.map(r => (r, Aqe.collect(r.qe.executedPlan) { case w: WindowExec => w }))
+      .filter(_._2.exists(_.partitionSpec.exists(_.references.exists(_.name == "_pid"))))
+  }
+
+  /** Whether every window of a prefix-scan build is partitioned by `_pid`
+    * alone, below a range exchange. */
+  private def pidPartitioned(build: (BuildPlans.Run,
+      Seq[org.apache.spark.sql.execution.window.WindowExec])): Boolean = {
+    val (run, windows) = build
+    windows.forall(w => w.partitionSpec.nonEmpty &&
+      w.partitionSpec.flatMap(_.references.map(_.name)).toSet == Set("_pid")) &&
+      "Exchange rangepartitioning".r.findFirstIn(run.finalPlan).isDefined
+  }
+
   test("global ntile/pct_rank query has no single-partition window over the data") {
-    // e_win_ntile_pct's two-pass rewrite: the data-sized window must be
-    // partitioned by the range-partition id; the ranking functions
-    // themselves (which would force a global Window.orderBy) must be
-    // gone from the plan — quartile/pct_rank/cume are arithmetic over
-    // (rn, n, tie min/max). The only global window left runs over the
-    // per-partition count table (one row per cluster partition).
-    val p = plan("e_win_ntile_pct")
+    // e_win_ntile_pct ranks through Q.prefixScan: the ranking functions
+    // (which would force a global Window.orderBy) are gone, quartile /
+    // pct_rank / cume are arithmetic over (rn, n, tie min/max), and the
+    // consumer runs no window at all — rn and n come from the scan,
+    // whose one build windows by the range part id.
+    val c = BuildPlans.capture(spark)(Registry.queries("e_win_ntile_pct")(_, sf))
+    val p = c.consumer.finalPlan
     assert(!p.contains("ntile(") && !p.contains("percent_rank(")
       && !p.contains("cume_dist("),
       "global ranking window resurfaced:\n" + p.take(2000))
-    assert(p.contains("windowspecdefinition(pid"),
-      "local rank window not partitioned by range partition id:\n" + p.take(2000))
+    assert(!p.contains("Window"), "the ntile consumer runs a window:\n" + p.take(2000))
+    val builds = prefixScanBuilds(c)
+    assert(builds.size == 1 && builds.forall(pidPartitioned),
+      "rank window not partitioned by the range part id:\n" + c.finalPlans.take(3000))
   }
 
   test("distributed-prefix family: data-sized windows are pid-partitioned") {
-    // the two-pass prefix/rank pattern's load-bearing property, pinned
-    // across all of its users: every window over DATA-sized rows is
-    // partitioned by the range-partition id (spillable, parallel), and
-    // the only unpartitioned window runs over the per-partition offset
-    // table (≤ |partitions| rows). A refactor that reintroduces a
-    // global Window.orderBy over the data would still be CORRECT — and
-    // a 100 TB single-partition sort. Gini is pinned implicitly (same
-    // helper shape); ntile has its own sharper test above.
-    for (q <- Seq("g_abc_classification", "g_mannwhitney_u",
-        "g_cusum_changepoint", "g_pareto_share", "h_quality_qnorm",
-        "g_auc_value")) {
-      val p = plan(q)
-      assert(p.contains("windowspecdefinition(pid"),
-        s"$q: data window not partitioned by range-partition id:\n" + p.take(1500))
+    // the prefix scan's load-bearing property, pinned on the build each
+    // user really runs (captured on a fresh session: the ranked table is
+    // a scratch, so a consumer plan shows only its checkpoint): every
+    // window over DATA-sized rows is partitioned by the range part id
+    // (spillable, parallel), below the range exchange, and no window of
+    // the build is unpartitioned. A refactor that reintroduces a global
+    // Window.orderBy over the data would still be CORRECT — and a
+    // 100 TB single-partition sort.
+    for (q <- Seq("g_abc_classification", "g_mannwhitney_u", "g_auc_value",
+        "g_cusum_changepoint", "g_pareto_share", "h_quality_qnorm", "g_gini_spend",
+        "g_lift_decile", "g_pareto_skyline", "i_graph_rich_club", "e_win_ntile_pct")) {
+      val c = BuildPlans.capture(spark)(Registry.queries(q)(_, sf))
+      val builds = prefixScanBuilds(c)
+      assert(builds.size == 1, s"$q: ${builds.size} prefix-scan builds:\n" +
+        c.finalPlans.take(3000))
+      assert(builds.forall(pidPartitioned),
+        s"$q: a prefix-scan window is not partitioned by the part id alone:\n" +
+          builds.head._1.finalPlan.take(3000))
     }
+  }
+
+  test("one distributed prefix scan: the only spark_partition_id() is Q.prefixScan's") {
+    // every global running total or rank over data-sized rows goes
+    // through Q.prefixScan; a hand-copied range-partition prefix pass
+    // (its own part id, its own offset window over the part table)
+    // fails here
+    import scala.jdk.CollectionConverters._
+    val files = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main/scala"))
+      .iterator().asScala.filter(_.toString.endsWith(".scala")).toSeq
+    def sites(pat: String) = files.flatMap(f =>
+      java.nio.file.Files.readAllLines(f).asScala.zipWithIndex.collect {
+        case (l, i) if l.contains(pat) => s"${f.getFileName}:${i + 1}"
+      })
+    val pids = sites("spark_partition_id()")
+    assert(pids.size == 1 && pids.head.startsWith("Q.scala:"),
+      s"spark_partition_id() call sites: ${pids.mkString(", ")}")
+    val offsetWindows = sites("Window.orderBy(col(\"pid\"))")
+    assert(offsetWindows.isEmpty, s"part-offset windows: ${offsetWindows.mkString(", ")}")
   }
 
   test("bigram LM model join degrades to a shuffle join (no forced broadcast)") {
@@ -1398,20 +1443,8 @@ class PlanShapeSpec extends AnyFunSuite {
     // were measured from the current plans (tools ProbeWinCount) and
     // each is tied to a stated construction bound.
     val bounded = Map[String, (Int, String)](
-      // |cluster partitions|-row offset tables of the two-pass
-      // range-rank pattern (the pattern this gate exists to protect)
-      "e_win_ntile_pct" -> (3, "32-row partition-offset tables (rank + ntile + pct)"),
-      "g_cusum_changepoint" -> (1, "32-row partition-offset table"),
-      "g_mannwhitney_u" -> (1, "32-row partition-offset table"),
-      "g_auc_value" -> (1, "32-row partition-offset table"),
-      "g_abc_classification" -> (1, "32-row partition-offset table"),
-      "g_gini_spend" -> (2, "32-row partition-offset table + customer-rank cumsum census"),
-      "g_pareto_share" -> (1, "32-row partition-offset table"),
-      "g_pareto_skyline" -> (1, "32-row partition-offset table"),
-      "h_quality_qnorm" -> (1, "32-row partition-offset table"),
-      // two windows: the 32-row offset table of the range-rank decile
-      // assignment + the cumulative gain over the ≤10 decile census
-      "g_lift_decile" -> (2, "32-row partition-offset table + 10-row decile census"),
+      // the cumulative gain over the ≤10 decile census
+      "g_lift_decile" -> (1, "10-row decile census"),
       // post-aggregation histograms/censuses with a construction bound
       "g_survival_km" -> (1, "day-grain duration histogram (≤ data range in days)"),
       "g_ks_drift" -> (1, "100-bin value histogram"),
@@ -1461,7 +1494,7 @@ class PlanShapeSpec extends AnyFunSuite {
     }
     assert(offenders.isEmpty,
       s"unjustified single-partition window(s): ${offenders.mkString(", ")} — " +
-        "either convert to the two-pass range-rank pattern or add/update a " +
+        "either run it through Q.prefixScan or add/update a " +
         "justified (count, bound) in the whitelist")
     // the whitelist must not rot: every entry still has to exhibit the
     // window it justifies (a stale entry would mask a future regression

@@ -113,6 +113,79 @@ class PropertySpec extends AnyFunSuite {
     assert(graft.ops.Q.exactPercentiles(df, "k", "v", ps).head().getDouble(1) === 1.5)
   }
 
+  /** `Q.prefixScan` against the one-window form `Window.orderBy(order)`.
+    * Both order tied rows arbitrarily, so they are compared per group of
+    * `keys` (count, first/last rn, the prefix before and through the
+    * group, the totals); inside `got`, every row's prefix must chain to
+    * the previous row's and add its own value. */
+  private def assertPrefixScan(df: org.apache.spark.sql.DataFrame, keys: Seq[String],
+      order: Seq[org.apache.spark.sql.Column], sums: Seq[String], mins: Seq[String]): Unit = {
+    import org.apache.spark.sql.expressions.Window
+    import org.apache.spark.sql.functions._
+    val got = graft.ops.Q.prefixScan(df, "prefixProperty", order, sums, mins)
+    val runs = sums.map(_ -> true) ++ mins.map(_ -> false)
+    def run(c: String, isSum: Boolean) = if (isSum) sum(col(c)) else min(col(c))
+    val (w, all) = (Window.orderBy(order: _*), Window.partitionBy())
+    val ref = df.select(col("*") +: row_number().over(w).cast("long").as("rn") +:
+      count(lit(1)).over(all).as("n_total") +: runs.flatMap { case (c, k) => Seq(
+        run(c, k).over(w.rowsBetween(Window.unboundedPreceding, -1)).as(s"${c}_excl"),
+        run(c, k).over(w.rowsBetween(Window.unboundedPreceding, Window.currentRow))
+          .as(s"${c}_incl"),
+        run(c, k).over(all).as(s"${c}_total"))
+      }: _*)
+    def groups(r: org.apache.spark.sql.DataFrame) = r.groupBy(keys.map(col): _*)
+      .agg(count(lit(1)), min(col("rn")) +: max(col("rn")) +: max(col("n_total")) +:
+        runs.flatMap { case (c, _) => Seq(min_by(col(s"${c}_excl"), col("rn")),
+          max_by(col(s"${c}_incl"), col("rn")), max(col(s"${c}_total"))) }: _*)
+    val (g, r) = (groups(got), groups(ref))
+    val diff = g.except(r).union(r.except(g))
+    assert(diff.isEmpty, "differs from the one-window form:\n" + diff.collect().mkString("\n"))
+    val n = df.count()
+    val Seq(cnt, distinct, lo, hi) = got.agg(count(lit(1)), countDistinct(col("rn")),
+      min(col("rn")), max(col("rn"))).head().toSeq
+    assert((cnt, distinct, lo, hi) === ((n, n, if (n == 0) null else 1L, if (n == 0) null else n)))
+    val chained = got.select(col("rn") +: runs.map(c => col(s"${c._1}_incl").as(s"i_${c._1}")): _*)
+      .join(got.select((col("rn") - 1).as("rn") +:
+        runs.map(c => col(s"${c._1}_excl").as(s"e_${c._1}")): _*), "rn")
+    val unchained = runs.map(c => !(col(s"i_${c._1}") <=> col(s"e_${c._1}")))
+    val steps = runs.map { case (c, k) =>
+      val (e, v) = (col(s"${c}_excl"), col(c))
+      !(col(s"${c}_incl") <=> (if (k) coalesce(e + v, e, v) else least(e, v)))
+    }
+    if (runs.nonEmpty) {
+      assert(chained.filter(unchained.reduce(_ || _)).isEmpty, "a prefix does not chain")
+      assert(got.filter(steps.reduce(_ || _)).isEmpty, "a prefix does not add its row")
+    }
+  }
+
+  test("Q.prefixScan equals the one-window prefix form") {
+    // the distributed prefix scan (range partition, per-part window,
+    // broadcast offsets) against the single-partition window it
+    // replaces: ties and nulls in the order key, a descending key, more
+    // partitions than rows (empty parts), empty input, nulls in summed
+    // and min columns, long/double/decimal sums and a min. Doubles are
+    // multiples of 1/8 and sum exactly in any association.
+    import TestSpark._
+    import org.apache.spark.sql.functions._
+    import org.apache.spark.sql.types.DecimalType
+    val id = col("id")
+    val df = spark.range(0, 600).select(id,
+      when(id % 11 === 0, lit(null)).otherwise(pmod(id * 7919L, lit(13L))).as("k"),
+      when(id % 5 === 0 || id < 40, lit(null))
+        .otherwise(pmod(id * 2654435761L, lit(997L)) - 400).as("v"),
+      (pmod(id * 31L, lit(101L)).cast("double") / 8.0).as("x"),
+      (pmod(id * 17L, lit(89L)).cast(DecimalType(38, 6)) / 100)
+        .cast(DecimalType(38, 6)).as("m"),
+      when(id % 7 === 3, lit(null)).otherwise(pmod(id * 13L, lit(1000L))).as("w"))
+    assertPrefixScan(df, Seq("k"), Seq(col("k")), Seq("v", "x", "m"), Seq("w"))
+    assertPrefixScan(df, Seq("k", "id"), Seq(col("k").desc, id), Seq("v", "m"), Seq("w", "x"))
+    assert(spark.sparkContext.defaultParallelism > 3)
+    assertPrefixScan(df.filter(id >= 38 && id < 41), Seq("id"), Seq(id.desc), Seq("v", "x"),
+      Seq("w"))
+    assertPrefixScan(df.filter(lit(false)), Seq("k"), Seq(col("k")), Seq("v"), Seq("w"))
+    assertPrefixScan(df, Seq("k"), Seq(col("k")), Nil, Nil)
+  }
+
   test("prefix filtering is lossless: every J>=0.9 pair collides in both prefixes") {
     // the AllPairs lemma h_prefix_filter_pairs stands on, checked on
     // generated corpora salted with true near-duplicates (a random

@@ -127,7 +127,7 @@ class ScratchSpec extends AnyFunSuite {
     // session's own root: rewriting the shared one would pull the files
     // from under other sessions' memoized frames
     s.conf.set("spark.graft.artifactDir",
-      java.nio.file.Files.createTempDirectory("graft_sweep").toString)
+      TestSpark.tempDir("graft_sweep"))
     try {
       var seen = Set.empty[Int]
       for (q <- Registry.queries.keys.toSeq.sorted) {

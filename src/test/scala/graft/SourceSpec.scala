@@ -14,7 +14,7 @@ class SourceSpec extends AnyFunSuite {
   import TestSpark._
 
   test("csv round-trips with an explicit schema") {
-    val dir = Files.createTempDirectory("graft_csv").toString
+    val dir = TestSpark.tempDir("graft_csv")
     val src = Io.table(spark, sf, "nation")
     src.coalesce(1).write.mode("overwrite").option("header", "true").csv(dir)
     val back = Io.csv(spark, dir, "n_nationkey INT, n_name STRING, n_regionkey INT")
@@ -23,7 +23,7 @@ class SourceSpec extends AnyFunSuite {
   }
 
   test("json round-trips with an explicit schema") {
-    val dir = Files.createTempDirectory("graft_json").toString
+    val dir = TestSpark.tempDir("graft_json")
     val src = Io.table(spark, sf, "region")
     src.coalesce(1).write.mode("overwrite").json(dir)
     val back = Io.json(spark, dir, "r_regionkey INT, r_name STRING")
@@ -32,7 +32,7 @@ class SourceSpec extends AnyFunSuite {
   }
 
   test("orc round-trips") {
-    val dir = Files.createTempDirectory("graft_orc").toString
+    val dir = TestSpark.tempDir("graft_orc")
     val src = Io.table(spark, sf, "supplier")
     src.write.mode("overwrite").orc(dir)
     val back = spark.read.orc(dir)
@@ -46,7 +46,7 @@ class SourceSpec extends AnyFunSuite {
     // and the decode runs downstream — here the real PNG decoder over
     // the exact bytes the source delivered.
     import graft.io.MediaCodec
-    val dir = Files.createTempDirectory("graft_bin")
+    val dir = java.nio.file.Paths.get(TestSpark.tempDir("graft_bin"))
     val specs = Seq((3, 4, 7L), (8, 2, 21L), (16, 16, 5L))
     specs.zipWithIndex.foreach { case ((w, h, seed), i) =>
       Files.write(dir.resolve(s"img_$i.png"), MediaCodec.encodePng(w, h, seed))
@@ -64,7 +64,7 @@ class SourceSpec extends AnyFunSuite {
   }
 
   test("xml source round-trips with rowTag (Spark 4 native XML)") {
-    val dir = Files.createTempDirectory("graft_xml").toString
+    val dir = TestSpark.tempDir("graft_xml")
     val src = Io.table(spark, sf, "region").select("r_regionkey", "r_name")
     src.write.mode("overwrite").option("rowTag", "region").xml(dir)
     val back = spark.read.option("rowTag", "region")
@@ -74,7 +74,7 @@ class SourceSpec extends AnyFunSuite {
   }
 
   test("text source reads lines") {
-    val dir = Files.createTempDirectory("graft_txt").toString
+    val dir = TestSpark.tempDir("graft_txt")
     Io.table(spark, sf, "region").select(col("r_name"))
       .coalesce(1).write.mode("overwrite").text(dir)
     val lines = spark.read.text(dir).collect().map(_.getString(0)).toSet
@@ -82,7 +82,7 @@ class SourceSpec extends AnyFunSuite {
   }
 
   test("streaming file source + foreachBatch drains a parquet directory") {
-    val dir = Files.createTempDirectory("graft_stream_src").toString
+    val dir = TestSpark.tempDir("graft_stream_src")
     val ev = Io.events(spark, sf).select("event_id", "ts_us", "user_id", "event_type", "value")
     ev.write.mode("overwrite").parquet(dir)
     val schema = ev.schema
@@ -102,7 +102,7 @@ class SourceSpec extends AnyFunSuite {
     // a 100 TB table accretes columns over years of writers; readers
     // must union footers (mergeSchema) and null-fill the files written
     // before a column existed — never error, never drop rows.
-    val dir = Files.createTempDirectory("graft_evolve").toString
+    val dir = TestSpark.tempDir("graft_evolve")
     val n = Io.table(spark, sf, "nation")
     n.select("n_nationkey", "n_name")
       .write.mode("overwrite").parquet(s"$dir/batch=1")
@@ -152,7 +152,7 @@ class SourceSpec extends AnyFunSuite {
   }
 
   test("custom DSv2 source streams in rate-limited micro-batches, parity with batch") {
-    val dir = Files.createTempDirectory("graft_dsv2_stream").toString
+    val dir = TestSpark.tempDir("graft_dsv2_stream")
     val df = spark.readStream.format("graft.sources.SyntheticDocs")
       .option("docs", "100").option("partitions", "4")
       .option("rowsPerBatch", "40").load()
@@ -181,7 +181,7 @@ class SourceSpec extends AnyFunSuite {
     // now derives each batch's end from the ENGINE's start offset
     // (SupportsAdmissionControl), so a resume is append-only from the
     // committed offset.
-    val ckpt = Files.createTempDirectory("graft_dsv2_restart").toString
+    val ckpt = TestSpark.tempDir("graft_dsv2_restart")
     def stream = spark.readStream.format("graft.sources.SyntheticDocs")
       .option("docs", "600").option("partitions", "4")
       .option("rowsPerBatch", "30").load()
@@ -272,7 +272,7 @@ class SourceSpec extends AnyFunSuite {
     spark.conf.set(changelogKey, "true")
     try {
       CountingSink.clearStream("pipe")
-      val ckpt = Files.createTempDirectory("graft_pipe").toString
+      val ckpt = TestSpark.tempDir("graft_pipe")
       def start(failAt: Option[Long]) = {
         val xform = spark.readStream.format("graft.sources.SyntheticDocs")
           .option("docs", "400").option("partitions", "4")
@@ -367,7 +367,7 @@ class SourceSpec extends AnyFunSuite {
   }
 
   test("partition pruning skips non-matching partitions") {
-    val dir = Files.createTempDirectory("graft_part").toString
+    val dir = TestSpark.tempDir("graft_part")
     Io.table(spark, sf, "orders")
       .withColumn("status", col("o_orderstatus"))
       .write.mode("overwrite").partitionBy("status").parquet(dir)

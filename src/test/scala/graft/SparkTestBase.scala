@@ -7,6 +7,13 @@ import org.apache.spark.sql.SparkSession
   */
 object TestSpark {
   val sf: String = "/root/testdata/sf0.001"
+
+  /** A fresh directory for one spec, under a root this JVM owns and
+    * deletes when it exits (`Q.processDir`), so a test run leaves no
+    * directory behind in `java.io.tmpdir`. */
+  def tempDir(prefix: String): String = java.nio.file.Files.createTempDirectory(
+    java.nio.file.Paths.get(graft.ops.Q.processDir("graft-test")), prefix).toString
+
   lazy val spark: SparkSession = {
     val s = SparkSession.builder()
       // local[4, 2] = 4 threads, maxFailures 2: a failed task gets ONE
@@ -21,8 +28,7 @@ object TestSpark {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft_wh").toString)
+      .config("spark.sql.warehouse.dir", tempDir("graft_wh"))
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")

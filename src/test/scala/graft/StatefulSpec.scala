@@ -225,7 +225,7 @@ class StatefulSpec extends AnyFunSuite {
         .collect().filter(_.user_id < 900000L)
       // interrupted run: parquet sink (exactly-once via the sink commit
       // log) + explicit checkpoint dir shared across both incarnations
-      val root = java.nio.file.Files.createTempDirectory("graft_ckpt")
+      val root = java.nio.file.Paths.get(TestSpark.tempDir("graft_ckpt"))
       val outDir = root.resolve("out").toString
       val ckptDir = root.resolve("ckpt").toString
       val mem = MemoryStream[Ev]
@@ -269,7 +269,7 @@ class StatefulSpec extends AnyFunSuite {
     val evs = Io.events(spark, sf).filter("user_id < 20")
       .selectExpr("event_id", "ts_us", "user_id", "event_type", "value")
       .as[Ev].collect().toSeq
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_statesrc").toString
+    val ckpt = TestSpark.tempDir("graft_statesrc")
     val mem = MemoryStream[Ev]
     val q = mem.toDS().groupBy($"user_id").count()
       .writeStream.format("memory").queryName("ssrc")

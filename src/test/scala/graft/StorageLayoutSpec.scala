@@ -92,7 +92,7 @@ class StorageLayoutSpec extends AnyFunSuite {
     // of a partitioned table must replace exactly that partition — in
     // STATIC mode (the default) the same insert wipes every partition
     // first, which at 100 TB silently deletes the rest of the dataset.
-    val dir = java.nio.file.Files.createTempDirectory("graft_dpo").toString
+    val dir = TestSpark.tempDir("graft_dpo")
     val docs = spark.read.parquet(s"$sf/documents.parquet")
       .select("doc_id", "lang", "n_chars")
     docs.write.partitionBy("lang").mode("overwrite").parquet(dir)
@@ -119,7 +119,7 @@ class StorageLayoutSpec extends AnyFunSuite {
     // directory rename, so readers of the live path never observe a
     // partial or failing batch. A failing audit leaves the live path
     // byte-identical.
-    val base = java.nio.file.Files.createTempDirectory("graft_wap")
+    val base = java.nio.file.Paths.get(TestSpark.tempDir("graft_wap"))
     val live = base.resolve("live"); val stage = base.resolve("_stage")
     val docs = spark.read.parquet(s"$sf/documents.parquet")
       .select("doc_id", "lang", "n_chars")
@@ -166,7 +166,7 @@ class StorageLayoutSpec extends AnyFunSuite {
     // the sink-side 100 TB lever: without a per-file record bound a
     // 32-partition write of a huge table produces 32 unsplittable giant
     // files; with it, output file count scales with data volume.
-    val dir = java.nio.file.Files.createTempDirectory("graft_maxrec").toString
+    val dir = TestSpark.tempDir("graft_maxrec")
     withConfs(Seq("spark.sql.files.maxRecordsPerFile" -> "1000")) {
       spark.read.parquet(s"$sf/lineitem.parquet")
         .select("l_orderkey", "l_quantity")
@@ -194,7 +194,7 @@ class StorageLayoutSpec extends AnyFunSuite {
     val z = graft.ops.EtlOps.withMortonZ(e, "user_id", "ts_us")
       .select("user_id", "ts_us", "z")
     def write(sortCol: String): String = {
-      val dir = java.nio.file.Files.createTempDirectory(s"graft_z_$sortCol").toString
+      val dir = TestSpark.tempDir(s"graft_z_$sortCol")
       z.repartitionByRange(16, col(sortCol)).sortWithinPartitions(sortCol)
         .write.mode("overwrite").parquet(dir)
       dir
@@ -229,7 +229,7 @@ class StorageLayoutSpec extends AnyFunSuite {
     // on constructed rows where every expected image is enumerable.
     import graft.io.SnapshotStore
     import spark.implicits._
-    val root = java.nio.file.Files.createTempDirectory("graft_snap").toString
+    val root = TestSpark.tempDir("graft_snap")
     val v0 = Seq((1L, 10.0), (2L, 20.0), (3L, 30.0)).toDF("k", "price")
     SnapshotStore.writeVersion(v0, root, 0)
     assert(SnapshotStore.currentVersion(root) === 0)
@@ -262,7 +262,7 @@ class StorageLayoutSpec extends AnyFunSuite {
   test("snapshot store: vacuum retires old versions, keeps current, is idempotent") {
     import graft.io.SnapshotStore
     import spark.implicits._
-    val root = java.nio.file.Files.createTempDirectory("graft_vac").toString
+    val root = TestSpark.tempDir("graft_vac")
     (0 to 3).foreach { v =>
       SnapshotStore.writeVersion(
         Seq((1L, v.toDouble)).toDF("k", "price"), root, v)
@@ -297,7 +297,7 @@ class StorageLayoutSpec extends AnyFunSuite {
   test("snapshot store: vacuum is failure-atomic and tolerates foreign dirs") {
     import graft.io.SnapshotStore
     import spark.implicits._
-    val root = java.nio.file.Files.createTempDirectory("graft_vac2").toString
+    val root = TestSpark.tempDir("graft_vac2")
     (0 to 2).foreach { v =>
       SnapshotStore.writeVersion(
         Seq((1L, v.toDouble)).toDF("k", "price"), root, v)

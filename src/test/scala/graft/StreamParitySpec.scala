@@ -164,8 +164,8 @@ class StreamParitySpec extends AnyFunSuite {
     // from the restart).
     import spark.implicits._
     implicit val sql = spark.sqlContext
-    val outDir = java.nio.file.Files.createTempDirectory("graft_ckpt_out").toString
-    val ckptDir = java.nio.file.Files.createTempDirectory("graft_ckpt_meta").toString
+    val outDir = TestSpark.tempDir("graft_ckpt_out")
+    val ckptDir = TestSpark.tempDir("graft_ckpt_meta")
     val (first, second) = evRows.splitAt(evRows.size / 2)
     val mem = MemoryStream[Ev]
     def start() = mem.toDF()
@@ -196,8 +196,8 @@ class StreamParitySpec extends AnyFunSuite {
     // the sink still holds every event exactly once.
     import spark.implicits._
     implicit val sql = spark.sqlContext
-    val outDir = java.nio.file.Files.createTempDirectory("graft_feb_out").toString
-    val ckptDir = java.nio.file.Files.createTempDirectory("graft_feb_ckpt").toString
+    val outDir = TestSpark.tempDir("graft_feb_out")
+    val ckptDir = TestSpark.tempDir("graft_feb_ckpt")
     def write(df: DataFrame, batchId: Long): Unit =
       df.write.mode("overwrite").parquet(s"$outDir/batch_id=$batchId")
     val (first, second) = evRows.splitAt(evRows.size / 2)
@@ -248,8 +248,8 @@ class StreamParitySpec extends AnyFunSuite {
     import spark.implicits._
     import org.apache.spark.sql.streaming.Trigger
     implicit val sql = spark.sqlContext
-    val outDir = java.nio.file.Files.createTempDirectory("graft_an_out").toString
-    val ckptDir = java.nio.file.Files.createTempDirectory("graft_an_ckpt").toString
+    val outDir = TestSpark.tempDir("graft_an_out")
+    val ckptDir = TestSpark.tempDir("graft_an_ckpt")
     val (first, second) = evRows.splitAt(evRows.size / 2)
     val mem = MemoryStream[Ev]
     def runOnce(): Unit = {
@@ -285,8 +285,8 @@ class StreamParitySpec extends AnyFunSuite {
     // exactly-once value sequence from 0, the timestamp law on every
     // row, and checkpointed resume continuing the sequence.
     import org.apache.spark.sql.streaming.Trigger
-    val outDir = java.nio.file.Files.createTempDirectory("graft_rate_out").toString
-    val ckptDir = java.nio.file.Files.createTempDirectory("graft_rate_ckpt").toString
+    val outDir = TestSpark.tempDir("graft_rate_out")
+    val ckptDir = TestSpark.tempDir("graft_rate_ckpt")
     def drain(): Unit = {
       val q = spark.readStream.format("rate-micro-batch")
         .option("rowsPerBatch", 50)

@@ -34,7 +34,7 @@ object PlanDump {
       "c_join_skew_salted" -> "hot-key join: ×16 salt replication spreads one key over 16 partitions",
       "g_ohlc" -> "OHLC bars: asc/desc windows + aggregate share ONE hash exchange",
       "e_dq_rules" -> "DQ rules: row-local counters in one scan/table + FK left-join checks",
-      "e_win_ntile_pct" -> "global ranking WITHOUT a global window: range-partitioned two-pass rank",
+      "e_win_ntile_pct" -> "global ranking WITHOUT a global window: Q.prefixScan rank",
       "d_agg_percentile" -> "exact percentiles: sketch brackets broadcast onto ONE bracketed hash aggregate, no holistic buffer, no range shuffle",
       "d_agg_boxplot" -> "boxplot: sketch-bracketed quartiles + broadcast fence census over lineitem, no scratch",
       "h_minhash_widevocab" -> "open-vocabulary MinHash dedup BUILD: adaptive-width masks, no vocab guard",
@@ -47,7 +47,7 @@ object PlanDump {
       "g_click_purchase_semi" -> "stream-semi batch twin: LeftSemi join, no row multiplication",
       "h_pq_encode" -> "PQ codes BUILD: K-row codebook broadcast, map-side sq_dist_dec slices, struct-min argmin",
       "i_graph_bfs" -> "BFS frontier build: per-hop frontier⋈edges + visited anti-join, keyed only",
-      "g_abc_classification" -> "ABC/Pareto: range-partitioned two-pass decimal prefix sum, no global window",
+      "g_abc_classification" -> "ABC/Pareto: Q.prefixScan decimal prefix sum, no global window",
       "c_join_bloom_prefilter" -> "bloom prefilter: broadcast word-table bit tests map-side BEFORE the shuffle-merge join",
       "h_pq_adc_topk" -> "PQ ADC scan: broadcast distance table probed by the code table on (sub, code)",
       "h_bm25_rank" -> "BM25: map-side array-filter tf, ONE scalar stats exchange, TakeOrderedAndProject",
