@@ -239,7 +239,7 @@ object Bench {
       // compile — is partition-count-independent, so warm with 8
       // shuffle partitions and restore the timed setting afterwards.
       spark.conf.set("spark.sql.shuffle.partitions", "8")
-      // Phase A — pre-build the shared artifact chains. Q.memoized
+      // Phase A — pre-build the shared artifact chains. Q.artifact
       // serializes concurrent builders of one artifact behind a per-key
       // monitor (correct: duplicate builds are pure waste), but that
       // means a sweep thread that lands on a chain consumer parks until
@@ -348,7 +348,7 @@ object Bench {
       // Serial: these queries saturate all cores anyway.
       val artifactHeads = Seq(
         "h_dedup_clusters",     // docMasks -> MinHash pairs -> CC labels
-        "h_minhash_lsh_dedup",  // minhashPairs byLang=false
+        "h_minhash_lsh_dedup",  // minhashPairsAll
         "h_minhash_widevocab",  // bigramMasks -> widevocab pair table
         "h_simhash_dedup",      // simhashPairs
         "h_prefix_filter_pairs", // prefixPostings

@@ -31,9 +31,7 @@ object AnalyticsOps {
     * materialized: the squaring chain reads it twice per stage. */
   private[graft] def markovM0(s: org.apache.spark.sql.SparkSession,
       d: String): org.apache.spark.sql.DataFrame =
-    Q.memoized(s, d, "mkvM0") {
-      Q.materialize(s, d, "mkvM0")(markovM0Build(s, d))
-    }
+    Q.artifact(s, d, "mkvM0")(markovM0Build(s, d))
 
   private def markovM0Build(s: org.apache.spark.sql.SparkSession,
       d: String) = {
@@ -85,20 +83,18 @@ object AnalyticsOps {
     * values from [[Q.prefixScan]]. The materialized 1-row aggregate is
     * the memoized artifact (it reads no scratch). */
   private def mwAgg(s: org.apache.spark.sql.SparkSession, d: String) =
-    Q.memoized(s, d, "mannwhitney_agg") {
-      Q.materialize(s, d, "mannwhitney_agg") {
-        val dv = Io.events(s, d)
-          .filter(col("event_type").isin("purchase", "click"))
-          .groupBy(col("value"))
-          .agg(sum(when(col("event_type") === "purchase", 1L).otherwise(0L)).as("na_v"),
-            sum(when(col("event_type") === "click", 1L).otherwise(0L)).as("nb_v"))
-        val t = col("na_v") + col("nb_v")
-        Q.prefixScan(dv, "mannwhitney_ranged", Seq(col("value")), sums = Seq("nb_v"))
-          .agg(sum(col("na_v") *
-              (lit(2L) * coalesce(col("nb_v_excl"), lit(0L)) + col("nb_v"))).as("u2x"),
-            sum(col("na_v")).as("n1"), sum(col("nb_v")).as("n2"),
-            sum(t * t * t - t).as("tsum"))
-      }
+    Q.artifact(s, d, "mannwhitney_agg") {
+      val dv = Io.events(s, d)
+        .filter(col("event_type").isin("purchase", "click"))
+        .groupBy(col("value"))
+        .agg(sum(when(col("event_type") === "purchase", 1L).otherwise(0L)).as("na_v"),
+          sum(when(col("event_type") === "click", 1L).otherwise(0L)).as("nb_v"))
+      val t = col("na_v") + col("nb_v")
+      Q.prefixScan(dv, "mannwhitney_ranged", Seq(col("value")), sums = Seq("nb_v"))
+        .agg(sum(col("na_v") *
+            (lit(2L) * coalesce(col("nb_v_excl"), lit(0L)) + col("nb_v"))).as("u2x"),
+          sum(col("na_v")).as("n1"), sum(col("nb_v")).as("n2"),
+          sum(t * t * t - t).as("tsum"))
     }
 
   /** Deterministic 1e-6 snap (HALF_UP in both engines when fed a
@@ -3602,15 +3598,13 @@ object AnalyticsOps {
       // shares the chain across the session.
       val m0 = markovM0(s, d)
       def sq(k: Int, m: org.apache.spark.sql.DataFrame) =
-        Q.memoized(s, d, s"mkvM$k") {
-          Q.materialize(s, d, s"mkvM$k")(
-            m.as("a").join(m.select(col("variant"), col("src").as("mid"),
-                col("dst"), col("p").as("pb")).as("b"),
-                Seq("variant")).filter(col("a.dst") === col("b.mid"))
-              .groupBy(col("variant"), col("a.src").as("src"),
-                col("b.dst").as("dst"))
-              .agg(snap12(decSum18(snap12(col("a.p") * col("pb")))).as("p")))
-        }
+        Q.artifact(s, d, s"mkvM$k")(
+          m.as("a").join(m.select(col("variant"), col("src").as("mid"),
+              col("dst"), col("p").as("pb")).as("b"),
+              Seq("variant")).filter(col("a.dst") === col("b.mid"))
+            .groupBy(col("variant"), col("a.src").as("src"),
+              col("b.dst").as("dst"))
+            .agg(snap12(decSum18(snap12(col("a.p") * col("pb")))).as("p")))
       val t16 = sq(4, sq(3, sq(2, sq(1, m0))))
       val pc = variants.join(
           t16.filter(col("src") === "START" && col("dst") === "CONV")

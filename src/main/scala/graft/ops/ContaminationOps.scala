@@ -39,13 +39,11 @@ object ContaminationOps {
     * core (no-op at real scale where the scan is parallel).
     */
   private[ops] def docShingles(s: SparkSession, d: String) =
-    Q.memoized(s, d, "docShingles") {
-      Q.materialize(s, d, "docShingles") {
-        Io.table(s, d, "documents")
-          .repartition(s.sparkContext.defaultParallelism)
-          .select(col("doc_id"), expr("explode_ngrams(text, 5)").as("g"))
-          .distinct()
-      }
+    Q.artifact(s, d, "docShingles") {
+      Io.table(s, d, "documents")
+        .repartition(s.sparkContext.defaultParallelism)
+        .select(col("doc_id"), expr("explode_ngrams(text, 5)").as("g"))
+        .distinct()
     }
 
   val all: Seq[Q] = Seq(

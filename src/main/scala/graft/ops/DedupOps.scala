@@ -64,9 +64,7 @@ object DedupOps {
     * matching Jaccard kernel via [[maskJaccard]].
     */
   private[graft] def docMasks(s: SparkSession, d: String): DataFrame =
-    Q.memoized(s, d, "docMasks") {
-      Q.materialize(s, d, "docMasks") { docMasksBuild(s, d) }
-    }
+    Q.artifact(s, d, "docMasks") { docMasksBuild(s, d) }
 
   private def docMasksBuild(s: SparkSession, d: String): DataFrame = {
     // The bench corpus is one parquet file → a 1-task scan, so the
@@ -139,7 +137,7 @@ object DedupOps {
     * h_ngram_jaccard and h_minhash_widevocab.
     */
   private def bigramMasks(s: SparkSession, d: String): DataFrame =
-    Q.memoized(s, d, "bigramMasks") { bigramMasksBuild(s, d) }
+    Q.artifact(s, d, "bigramMasks") { bigramMasksBuild(s, d) }
 
   private def bigramMasksBuild(s: SparkSession, d: String): DataFrame = {
     val docs = Io.table(s, d, "documents")
@@ -150,11 +148,9 @@ object DedupOps {
     }
     val nWords = math.max(1,
       (vocabRow.select(size(col("varr"))).head.getInt(0) + 63) / 64)
-    Q.materialize(s, d, "bigramMasksTable") {
-      docs.crossJoin(broadcast(vocabRow))
-        .select(col("doc_id"), col("lang"),
-          expr(s"ngram_set_mask(text, varr, 2, $nWords)").as("mask"))
-    }
+    docs.crossJoin(broadcast(vocabRow))
+      .select(col("doc_id"), col("lang"),
+        expr(s"ngram_set_mask(text, varr, 2, $nWords)").as("mask"))
   }
 
   /** Wide-vocabulary banded-MinHash pair table (bigram-shingle Jaccard
@@ -186,9 +182,7 @@ object DedupOps {
       |ORDER BY doc_a, doc_b""".stripMargin
 
   private[graft] def widevocabPairs(s: SparkSession, d: String): DataFrame =
-    Q.memoized(s, d, "widevocabPairs") {
-      Q.materialize(s, d, "widevocabPairs") { widevocabPairsBuild(s, d) }
-    }
+    Q.artifact(s, d, "widevocabPairs") { widevocabPairsBuild(s, d) }
 
   /** Prefix-postings build for h_prefix_filter_pairs. The rarity order
     * the prefix cut needs is simply (document frequency, bigram): a total order
@@ -297,18 +291,15 @@ object DedupOps {
     // broadcast-sized doc→lang join on an already-materialized table
     // instead of a second signature+candidate+verify pipeline (the
     // single most expensive artifact in the dedup chain).
-    Q.memoized(s, d, s"minhashPairs:$byLang") {
-      if (!byLang)
-        Q.materialize(s, d, "minhashPairsAll") { minhashNearDupPairsBuild(s, d) }
-      else Q.materialize(s, d, "minhashPairsLang") {
-        val langs = graft.io.Io.table(s, d, "documents")
-          .select(col("doc_id"), col("lang"))
-        minhashNearDupPairs(s, d, byLang = false)
-          .join(langs.select(col("doc_id").as("doc_a"), col("lang").as("la")), "doc_a")
-          .join(langs.select(col("doc_id").as("doc_b"), col("lang").as("lb")), "doc_b")
-          .filter(col("la") === col("lb"))
-          .select(col("doc_a"), col("doc_b"), col("jaccard"), col("la").as("lang"))
-      }
+    if (!byLang) Q.artifact(s, d, "minhashPairsAll") { minhashNearDupPairsBuild(s, d) }
+    else Q.artifact(s, d, "minhashPairsLang") {
+      val langs = graft.io.Io.table(s, d, "documents")
+        .select(col("doc_id"), col("lang"))
+      minhashNearDupPairs(s, d, byLang = false)
+        .join(langs.select(col("doc_id").as("doc_a"), col("lang").as("la")), "doc_a")
+        .join(langs.select(col("doc_id").as("doc_b"), col("lang").as("lb")), "doc_b")
+        .filter(col("la") === col("lb"))
+        .select(col("doc_a"), col("doc_b"), col("jaccard"), col("la").as("lang"))
     }
 
   private def minhashNearDupPairsBuild(s: SparkSession, d: String): DataFrame = {
@@ -423,39 +414,37 @@ object DedupOps {
     * set and doc pairs are reconstituted by membership joins.
     * Within-group pairs are hamming-0 by construction. */
   private def simhashPairs(s: SparkSession, d: String): DataFrame =
-    Q.memoized(s, d, "simhashPairs") {
-      Q.materialize(s, d, "simhashPairs") {
-        val masks = docMasks(s, d).select(col("doc_id"), col("mask"))
-        val nodeIds = masks.groupBy(col("mask")).agg(min(col("doc_id")).as("nid"))
-        val docNode = masks.join(nodeIds, "mask").select(col("doc_id"), col("nid"))
-        val t = docToks(s, d)
-        val sh = nodeIds.join(t, nodeIds("nid") === t("doc_id"))
-          .select(col("nid"), expr("simhash32(toks)").as("simhash"))
-        val banded = sh.select(col("nid"), col("simhash"),
-          explode(sequence(lit(0), lit(3))).as("b"))
-          .withColumn("bandval", expr("(simhash DIV CAST(power(256, b) AS BIGINT)) % 256"))
-        val a = banded.select(col("nid").as("na"), col("simhash").as("ha"),
-          col("b"), col("bandval"))
-        val bb = banded.select(col("nid").as("nb"), col("simhash").as("hb"),
-          col("b").as("b2"), col("bandval").as("bandval2"))
-        val nodePairs = a.join(bb, col("b") === col("b2") && col("bandval") === col("bandval2") &&
-            col("na") < col("nb"))
-          .select(col("na"), col("nb"), col("ha"), col("hb")).distinct()
-          .withColumn("hd", expr("bit_count(ha ^ hb)"))
-          .filter(col("hd") <= 2)
-          .select(col("na"), col("nb"), col("hd").cast("int").as("hamming"))
-        val memA = docNode.select(col("nid").as("na"), col("doc_id").as("da"))
-        val memB = docNode.select(col("nid").as("nb"), col("doc_id").as("db"))
-        val cross = nodePairs.join(memA, "na").join(memB, "nb")
-          .select(least(col("da"), col("db")).as("doc_a"),
-            greatest(col("da"), col("db")).as("doc_b"), col("hamming"))
-        val within = docNode.select(col("nid"), col("doc_id").as("da"))
-          .join(docNode.select(col("nid"), col("doc_id").as("db")), "nid")
-          .filter(col("da") < col("db"))
-          .select(col("da").as("doc_a"), col("db").as("doc_b"),
-            lit(0).cast("int").as("hamming"))
-        cross.union(within)
-      }
+    Q.artifact(s, d, "simhashPairs") {
+      val masks = docMasks(s, d).select(col("doc_id"), col("mask"))
+      val nodeIds = masks.groupBy(col("mask")).agg(min(col("doc_id")).as("nid"))
+      val docNode = masks.join(nodeIds, "mask").select(col("doc_id"), col("nid"))
+      val t = docToks(s, d)
+      val sh = nodeIds.join(t, nodeIds("nid") === t("doc_id"))
+        .select(col("nid"), expr("simhash32(toks)").as("simhash"))
+      val banded = sh.select(col("nid"), col("simhash"),
+        explode(sequence(lit(0), lit(3))).as("b"))
+        .withColumn("bandval", expr("(simhash DIV CAST(power(256, b) AS BIGINT)) % 256"))
+      val a = banded.select(col("nid").as("na"), col("simhash").as("ha"),
+        col("b"), col("bandval"))
+      val bb = banded.select(col("nid").as("nb"), col("simhash").as("hb"),
+        col("b").as("b2"), col("bandval").as("bandval2"))
+      val nodePairs = a.join(bb, col("b") === col("b2") && col("bandval") === col("bandval2") &&
+          col("na") < col("nb"))
+        .select(col("na"), col("nb"), col("ha"), col("hb")).distinct()
+        .withColumn("hd", expr("bit_count(ha ^ hb)"))
+        .filter(col("hd") <= 2)
+        .select(col("na"), col("nb"), col("hd").cast("int").as("hamming"))
+      val memA = docNode.select(col("nid").as("na"), col("doc_id").as("da"))
+      val memB = docNode.select(col("nid").as("nb"), col("doc_id").as("db"))
+      val cross = nodePairs.join(memA, "na").join(memB, "nb")
+        .select(least(col("da"), col("db")).as("doc_a"),
+          greatest(col("da"), col("db")).as("doc_b"), col("hamming"))
+      val within = docNode.select(col("nid"), col("doc_id").as("da"))
+        .join(docNode.select(col("nid"), col("doc_id").as("db")), "nid")
+        .filter(col("da") < col("db"))
+        .select(col("da").as("doc_a"), col("db").as("doc_b"),
+          lit(0).cast("int").as("hamming"))
+      cross.union(within)
     }
 
   /** Oracle twin of [[simhashPairs]]: CTE chain ending in
@@ -497,9 +486,7 @@ object DedupOps {
     // memoized: h_dedup_clusters and h_dedup_best both consume the same
     // cluster-label table; the iterative CC (the expensive part) runs
     // once per (session, corpus) and the final table is materialized.
-    Q.memoized(s, d, "ccDocLabels") {
-      Q.materialize(s, d, "ccDocLabels") { ccDocLabelsBuild(s, d) }
-    }
+    Q.artifact(s, d, "ccDocLabels") { ccDocLabelsBuild(s, d) }
 
   private def ccDocLabelsBuild(s: SparkSession, d: String): DataFrame = {
     val t = docMasks(s, d)
@@ -897,10 +884,8 @@ object DedupOps {
       // prefix postings memoized+materialized per corpus: a production
       // pipeline builds the postings index once; the self-join below
       // would otherwise re-execute the tok/df/window chain twice
-      val prefix = Q.memoized(s, d, "prefixPostings") {
-        Q.materialize(s, d, "prefixPostings")(
-          prefixPostingsBuild(s, d))
-      }
+      val prefix = Q.artifact(s, d, "prefixPostings")(
+        prefixPostingsBuild(s, d))
       // size filter INSIDE the candidate join (postings carry n): at
       // τ=0.9 the 10·min ≥ 9·max cut discards most in-bucket pairs
       // before the distinct and the mask joins ever see them

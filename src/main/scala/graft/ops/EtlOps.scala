@@ -19,19 +19,14 @@ object EtlOps {
     * scalatest-only. */
   private def csvOrders(s: org.apache.spark.sql.SparkSession,
       d: String): org.apache.spark.sql.DataFrame =
-    Q.memoized(s, d, "csvOrders") {
-      val path = Q.artifactPath(s, d, "csv_orders")
-      val t0 = System.nanoTime()
-      Io.table(s, d, "orders")
+    Q.fileArtifact(s, d, "csvOrders")(Io.table(s, d, "orders")
         .select(col("o_orderkey"), col("o_orderstatus"), col("o_totalprice"),
           date_format(col("o_orderdate"), "yyyy-MM-dd").as("od"))
-        .write.mode("overwrite").option("header", "true").csv(path)
-      Q.logArtifact("csvOrders", t0)
+        .write.mode("overwrite").option("header", "true").csv(_))(
       s.read.option("header", "true")
         .schema("o_orderkey LONG, o_orderstatus STRING, " +
           "o_totalprice DOUBLE, od STRING")
-        .csv(path)
-    }
+        .csv(_))
 
   /** Lineitem subset written to ORC once per (session, corpus) and read
     * back — the third interchange codec under the graded gate (columnar
@@ -40,33 +35,22 @@ object EtlOps {
     * writer/reader pair, predicate-pushdown-capable like parquet). */
   private def orcLineitem(s: org.apache.spark.sql.SparkSession,
       d: String): org.apache.spark.sql.DataFrame =
-    Q.memoized(s, d, "orcLineitem") {
-      val path = Q.artifactPath(s, d, "orc_lineitem")
-      val t0 = System.nanoTime()
-      Io.table(s, d, "lineitem")
+    Q.fileArtifact(s, d, "orcLineitem")(Io.table(s, d, "lineitem")
         .select(col("l_orderkey"), col("l_returnflag"), col("l_quantity"),
           col("l_extendedprice"))
-        .write.mode("overwrite").orc(path)
-      Q.logArtifact("orcLineitem", t0)
-      s.read.orc(path)
-    }
+        .write.mode("overwrite").orc(_))(s.read.orc(_))
 
   /** Customer subset written to JSON-lines once per (session, corpus)
     * and read back with an explicit schema — same graded-gate treatment
     * as [[csvOrders]] for the second interchange codec. */
   private def jsonCustomer(s: org.apache.spark.sql.SparkSession,
       d: String): org.apache.spark.sql.DataFrame =
-    Q.memoized(s, d, "jsonCustomer") {
-      val path = Q.artifactPath(s, d, "json_customer")
-      val t0 = System.nanoTime()
-      Io.table(s, d, "customer")
+    Q.fileArtifact(s, d, "jsonCustomer")(Io.table(s, d, "customer")
         .select(col("c_custkey"), col("c_name"), col("c_mktsegment"),
           col("c_acctbal"))
-        .write.mode("overwrite").json(path)
-      Q.logArtifact("jsonCustomer", t0)
+        .write.mode("overwrite").json(_))(
       s.read.schema("c_custkey LONG, c_name STRING, c_mktsegment STRING, " +
-        "c_acctbal DOUBLE").json(path)
-    }
+        "c_acctbal DOUBLE").json(_))
 
   /** Two-generation parquet table under one root (gen=1 lacks the
     * o_orderpriority column added in gen=2) — the schema-EVOLUTION read
@@ -76,9 +60,7 @@ object EtlOps {
     * table reads after a column addition without a rewrite. */
   private def evolvedOrders(s: org.apache.spark.sql.SparkSession,
       d: String): org.apache.spark.sql.DataFrame =
-    Q.memoized(s, d, "evolvedOrders") {
-      val path = Q.artifactPath(s, d, "evolved_orders")
-      val t0 = System.nanoTime()
+    Q.fileArtifact(s, d, "evolvedOrders") { path =>
       val o = Io.table(s, d, "orders")
       o.filter(col("o_orderkey") % 2 === 0)
         .select(col("o_orderkey"), col("o_totalprice"))
@@ -86,10 +68,8 @@ object EtlOps {
       o.filter(col("o_orderkey") % 2 === 1)
         .select(col("o_orderkey"), col("o_totalprice"), col("o_orderpriority"))
         .write.mode("overwrite").parquet(s"$path/gen=2")
-      Q.logArtifact("evolvedOrders", t0)
-      s.read.option("mergeSchema", "true")
-        .parquet(s"$path/gen=1", s"$path/gen=2")
-    }
+    }(path => s.read.option("mergeSchema", "true")
+      .parquet(s"$path/gen=1", s"$path/gen=2"))
 
   val all: Seq[Q] = Seq(
     // Schema-evolution read under the oracle gate: the merged-footer
@@ -253,10 +233,8 @@ object EtlOps {
     // pointer/isolation machinery on constructed data.
     Q("e_snapshot_merge", (s, d) => {
       import graft.io.SnapshotStore
-      val root = Q.artifactPath(s, d, "snap_orders")
-      Q.memoized(s, d, "snapOrders") {
-        val t0 = System.nanoTime()
-        val cur = Io.table(s, d, "orders")
+      val cur = Q.fileArtifact(s, d, "snapOrders") { root =>
+        val src = Io.table(s, d, "orders")
           .select(col("o_orderkey"), col("o_totalprice"))
         // price drift in EXACT integer cents (90% = c − c DIV 10), not
         // ROUND(x*0.9, 2): ROUND is engine-divergent on half boundaries
@@ -264,7 +242,7 @@ object EtlOps {
         // e_cdc_merge's status-only comparison never exposed
         val cents = expr(
           "CAST(CAST(o_totalprice AS DECIMAL(12,2)) * 100 AS BIGINT)")
-        val v0 = cur
+        val v0 = src
           .filter(col("o_orderkey") % 3 =!= 0)
           .select(col("o_orderkey"),
             when(col("o_orderkey") % 5 === 0,
@@ -273,17 +251,13 @@ object EtlOps {
               .otherwise(col("o_totalprice")).as("o_totalprice"))
         SnapshotStore.writeVersion(v0, root, 0)
         val merged = SnapshotStore.merge(
-          SnapshotStore.readVersion(s, root, 0), cur,
+          SnapshotStore.readVersion(s, root, 0), src,
           "o_orderkey", Seq("o_totalprice"))
         SnapshotStore.writeVersion(merged, root, 1)
-        Q.logArtifact("snapOrders", t0)
-        s.range(1).toDF("marker")
-      }
-      val prev = SnapshotStore.readVersion(s, root, 0)
+      }(SnapshotStore.readCurrent(s, _))
+      val prev = SnapshotStore.readVersion(s, Q.artifactPath(s, d, "snapOrders"), 0)
         .select(col("o_orderkey").as("old_key"),
           col("o_totalprice").as("old_price"))
-      val cur = SnapshotStore.readVersion(s, root,
-        SnapshotStore.currentVersion(root))
       cur.join(prev, col("o_orderkey") === col("old_key"), "full_outer")
         .withColumn("status",
           when(col("old_key").isNull, "insert")

@@ -89,16 +89,14 @@ object GraphOps {
     * downstream consumer (5 graph queries × their iterations) reads the
     * stored table instead of re-running the self-join. */
   private def copurchasePairs(s: SparkSession, d: String): DataFrame =
-    Q.memoized(s, d, "copurchasePairs") {
-      Q.materialize(s, d, "copurchasePairs") {
-        val e0 = Io.table(s, d, "lineitem")
-          .select(col("l_orderkey"), col("l_partkey")).distinct()
-        e0.as("a").join(e0.as("b"),
-            col("a.l_orderkey") === col("b.l_orderkey") &&
-              col("a.l_partkey") < col("b.l_partkey"))
-          .groupBy(col("a.l_partkey").as("pa"), col("b.l_partkey").as("pb"))
-          .agg(count(lit(1)).as("support"))
-      }
+    Q.artifact(s, d, "copurchasePairs") {
+      val e0 = Io.table(s, d, "lineitem")
+        .select(col("l_orderkey"), col("l_partkey")).distinct()
+      e0.as("a").join(e0.as("b"),
+          col("a.l_orderkey") === col("b.l_orderkey") &&
+            col("a.l_partkey") < col("b.l_partkey"))
+        .groupBy(col("a.l_partkey").as("pa"), col("b.l_partkey").as("pb"))
+        .agg(count(lit(1)).as("support"))
     }
 
   /** Full-graph (any support) undirected pairs — a narrow projection of
@@ -119,9 +117,9 @@ object GraphOps {
   /** Both-direction full-graph edge list (narrow over the materialized
     * pair table) + per-node degree. Since PageRank moved to the
     * supported graph, i_graph_degree's one-shot histogram is the only
-    * consumer, so this is memoized (per-session dedupe) but no longer
-    * materialized to disk — one hash-agg over the already-materialized
-    * pair table is cheaper than a parquet round-trip. */
+    * consumer, so its degree table ([[fullDeg]]) is no artifact — one
+    * hash-agg over the already-materialized pair table is cheaper than
+    * storing it. */
   private def fullEdges(s: SparkSession, d: String): DataFrame = {
     val p = copurchaseEdges(s, d)
     p.select(col("pa").as("src"), col("pb").as("dst"))
@@ -129,10 +127,8 @@ object GraphOps {
   }
 
   private def fullDeg(s: SparkSession, d: String): DataFrame =
-    Q.memoized(s, d, "gDeg") {
-      fullEdges(s, d).groupBy(col("src").as("node"))
-        .agg(count(lit(1)).as("deg"))
-    }
+    fullEdges(s, d).groupBy(col("src").as("node"))
+      .agg(count(lit(1)).as("deg"))
 
   private val degSql =
     s"""$pairsSql,
@@ -149,19 +145,15 @@ object GraphOps {
       .select(col("pa"), col("pb"))
 
   private def supEdges(s: SparkSession, d: String): DataFrame =
-    Q.memoized(s, d, "gSupEdges") {
-      Q.materialize(s, d, "gSupEdges") {
-        val sp = supPairs(s, d)
-        sp.union(sp.select(col("pb"), col("pa"))).toDF("src", "dst")
-      }
+    Q.artifact(s, d, "gSupEdges") {
+      val sp = supPairs(s, d)
+      sp.union(sp.select(col("pb"), col("pa"))).toDF("src", "dst")
     }
 
   private def supDeg(s: SparkSession, d: String): DataFrame =
-    Q.memoized(s, d, "gSupDeg") {
-      Q.materialize(s, d, "gSupDeg") {
-        supEdges(s, d).groupBy(col("src").as("node"))
-          .agg(count(lit(1)).as("deg"))
-      }
+    Q.artifact(s, d, "gSupDeg") {
+      supEdges(s, d).groupBy(col("src").as("node"))
+        .agg(count(lit(1)).as("deg"))
     }
 
   /** Weighted supported-graph edges: same support-pruned edge set as
@@ -169,13 +161,11 @@ object GraphOps {
     * weight (used by weighted label propagation — weights stay BIGINT
     * end to end, so weighted votes are exact on both engines). */
   private def supWEdges(s: SparkSession, d: String): DataFrame =
-    Q.memoized(s, d, "gSupWEdges") {
-      Q.materialize(s, d, "gSupWEdges") {
-        val p = copurchasePairs(s, d).filter(col("support") >= 2)
-        p.select(col("pa").as("src"), col("pb").as("dst"), col("support").as("w"))
-          .union(p.select(col("pb").as("src"), col("pa").as("dst"),
-            col("support").as("w")))
-      }
+    Q.artifact(s, d, "gSupWEdges") {
+      val p = copurchasePairs(s, d).filter(col("support") >= 2)
+      p.select(col("pa").as("src"), col("pb").as("dst"), col("support").as("w"))
+        .union(p.select(col("pb").as("src"), col("pa").as("dst"),
+          col("support").as("w")))
     }
 
   /** Oracle twin of the supported-graph artifacts (CTEs `sup`,
@@ -273,7 +263,7 @@ object GraphOps {
     * filter + visited anti-join), so an unmaterialized chain re-evaluates
     * early hops 2^h times (see i_graph_bfs's notes). */
   private[graft] def bfsDist(s: SparkSession, d: String): DataFrame =
-    Q.memoized(s, d, "gBfsDist") {
+    Q.artifact(s, d, "gBfsDist") {
       val edges = supEdges(s, d)
       val nodes = supDeg(s, d).select(col("node"))
       var cur = Q.materialize(s, d, "gBfs_0") {
@@ -299,7 +289,7 @@ object GraphOps {
     * notes) and the support-weighted row. */
   private def lpaLabels(s: SparkSession, d: String, memo: String, prefix: String)
       (edges: => DataFrame, w: Column): DataFrame =
-    Q.memoized(s, d, memo) {
+    Q.artifact(s, d, memo) {
       val e = edges
       val nodes = supDeg(s, d).select(col("node"))
       var l = Q.materialize(s, d, s"${prefix}_0") {
@@ -516,7 +506,7 @@ object GraphOps {
     // in-core degree histogram — set-determined, label-free.
     Q("i_graph_kcore", (s, d) => {
       val k = 3
-      val core = Q.memoized(s, d, "gKcore") {
+      val core = Q.artifact(s, d, "gKcore") {
         val edges = supEdges(s, d)
         var keep = Q.materialize(s, d, "gkc_0") {
           supDeg(s, d).filter(col("deg") >= k)
@@ -661,7 +651,7 @@ object GraphOps {
     // algorithm's internal nondeterminism cannot leak into the checked
     // result.
     Q("i_graph_cc", (s, d) => {
-      val labels = Q.memoized(s, d, "gccLabels") {
+      val labels = Q.artifact(s, d, "gccLabels") {
         val edges = supEdges(s, d)
         val l0 = Q.materialize(s, d, "gcc_labels_0") {
           edges.select(col("src").as("nid")).distinct()
@@ -1283,17 +1273,13 @@ object GraphOps {
       // corpus-sized window pass — materialize every stage (all are
       // |types|²-bounded) or the chain re-evaluates the corpus scan
       // 2^depth times (the PCA/BFS lesson; measured 3.1 s warm → 0.2 s).
-      val r0 = Q.memoized(s, d, "sccR0") {
-        Q.materialize(s, d, "sccR0")(
-          edges.union(nodes.select(col("u").as("src"), col("u").as("dst")))
-            .distinct())
-      }
-      def sq(n: Int, r: DataFrame): DataFrame = Q.memoized(s, d, s"sccR$n") {
-        Q.materialize(s, d, s"sccR$n")(
-          r.as("a").join(r.select(col("src").as("mid"), col("dst")).as("b"),
-              col("a.dst") === col("b.mid"))
-            .select(col("a.src").as("src"), col("b.dst").as("dst")).distinct())
-      }
+      val r0 = Q.artifact(s, d, "sccR0")(
+        edges.union(nodes.select(col("u").as("src"), col("u").as("dst")))
+          .distinct())
+      def sq(n: Int, r: DataFrame): DataFrame = Q.artifact(s, d, s"sccR$n")(
+        r.as("a").join(r.select(col("src").as("mid"), col("dst")).as("b"),
+            col("a.dst") === col("b.mid"))
+          .select(col("a.src").as("src"), col("b.dst").as("dst")).distinct())
       val reach = sq(3, sq(2, sq(1, r0)))
       val mutual = reach.intersect(
         reach.select(col("dst").as("src"), col("src").as("dst")))
@@ -1903,7 +1889,7 @@ object GraphOps {
     * artifact — one corpus window pass, consumed by HITS, the motif
     * census, and the undirected adjacency below). */
   private def typeGraphDirEdges(s: SparkSession, d: String): DataFrame =
-    Q.memoized(s, d, "hitsEdges") {
+    Q.artifact(s, d, "hitsEdges") {
       import org.apache.spark.sql.expressions.Window
       val w = Window.partitionBy(col("user_id"))
         .orderBy(col("ts_us"), col("event_id"))
@@ -1914,21 +1900,18 @@ object GraphOps {
         .filter(col("dst").isNotNull)
         .groupBy(col("src"), col("dst")).agg(count(lit(1)).as("n"))
       val tot = trans.groupBy(col("src")).agg(sum(col("n")).as("tot"))
-      Q.materialize(s, d, "hitsEdges")(
-        trans.join(tot, "src").filter(col("n") * 5 >= col("tot"))
-          .select(col("src"), col("dst")))
+      trans.join(tot, "src").filter(col("n") * 5 >= col("tot"))
+        .select(col("src"), col("dst"))
     }
 
   /** Symmetrized dominant-transition type-graph adjacency — shared by
     * eccentricity and betweenness; built on the hitsEdges artifact
     * (the one corpus-sized window pass, shared with i_graph_hits). */
   private def typeGraphAdj(s: SparkSession, d: String): DataFrame =
-    Q.memoized(s, d, "typeAdj") {
+    Q.artifact(s, d, "typeAdj") {
       val dirEdges = typeGraphDirEdges(s, d)
-      Q.materialize(s, d, "typeAdj")(
-        dirEdges.union(
-          dirEdges.select(col("dst").as("src"), col("src").as("dst")))
-          .distinct())
+      dirEdges.union(dirEdges.select(col("dst").as("src"), col("src").as("dst")))
+        .distinct()
     }
 
   /** Walk-count matrix powers [Aᵏ] for k = 1..8 over the undirected
@@ -1938,18 +1921,14 @@ object GraphOps {
     * (σ(u,v) = [A^d(u,v)]ᵤᵥ) and Katz centrality (Σ βᵏ·walk counts). */
   private def typeWalkPowers(s: SparkSession, d: String): DataFrame = {
     val adj = typeGraphAdj(s, d)
-    val a1 = Q.memoized(s, d, "bwA1") {
-      Q.materialize(s, d, "bwA1")(
-        adj.select(col("src"), col("dst"), lit(1L).as("cnt")))
-    }
-    def mul(k: Int, a: DataFrame): DataFrame = Q.memoized(s, d, s"bwA$k") {
-      Q.materialize(s, d, s"bwA$k")(
-        a.as("a").join(a1.select(col("src").as("mid"), col("dst"),
-            col("cnt").as("cb")).as("b"),
-            col("a.dst") === col("b.mid"))
-          .groupBy(col("a.src").as("src"), col("b.dst").as("dst"))
-          .agg(sum(col("a.cnt") * col("cb")).as("cnt")))
-    }
+    val a1 = Q.artifact(s, d, "bwA1")(
+      adj.select(col("src"), col("dst"), lit(1L).as("cnt")))
+    def mul(k: Int, a: DataFrame): DataFrame = Q.artifact(s, d, s"bwA$k")(
+      a.as("a").join(a1.select(col("src").as("mid"), col("dst"),
+          col("cnt").as("cb")).as("b"),
+          col("a.dst") === col("b.mid"))
+        .groupBy(col("a.src").as("src"), col("b.dst").as("dst"))
+        .agg(sum(col("a.cnt") * col("cb")).as("cnt")))
     var pows = Vector(a1)
     for (k <- 2 to 8) pows = pows :+ mul(k, pows.last)
     pows.zipWithIndex.map { case (p, i) =>
@@ -1969,23 +1948,19 @@ object GraphOps {
         lit("ecc: >9 event types — 3 squarings no longer cover the diameter"))
         .isNull)
       .select(col("u"))
-    val d0 = Q.memoized(s, d, "eccD0") {
-      Q.materialize(s, d, "eccD0")(
-        adj.select(col("src"), col("dst"), lit(1L).as("dist"))
-          .union(nodes.select(col("u").as("src"), col("u").as("dst"),
-            lit(0L).as("dist")))
-          .groupBy(col("src"), col("dst")).agg(min(col("dist")).as("dist")))
-    }
-    def sq(n: Int, r: DataFrame): DataFrame = Q.memoized(s, d, s"eccD$n") {
-      Q.materialize(s, d, s"eccD$n")(
-        r.as("a").join(r.select(col("src").as("mid"), col("dst"),
-            col("dist").as("dist_b")).as("b"),
-            col("a.dst") === col("b.mid"))
-          .select(col("a.src").as("src"), col("b.dst").as("dst"),
-            (col("a.dist") + col("dist_b")).as("dist"))
-          .union(r)
-          .groupBy(col("src"), col("dst")).agg(min(col("dist")).as("dist")))
-    }
+    val d0 = Q.artifact(s, d, "eccD0")(
+      adj.select(col("src"), col("dst"), lit(1L).as("dist"))
+        .union(nodes.select(col("u").as("src"), col("u").as("dst"),
+          lit(0L).as("dist")))
+        .groupBy(col("src"), col("dst")).agg(min(col("dist")).as("dist")))
+    def sq(n: Int, r: DataFrame): DataFrame = Q.artifact(s, d, s"eccD$n")(
+      r.as("a").join(r.select(col("src").as("mid"), col("dst"),
+          col("dist").as("dist_b")).as("b"),
+          col("a.dst") === col("b.mid"))
+        .select(col("a.src").as("src"), col("b.dst").as("dst"),
+          (col("a.dist") + col("dist_b")).as("dist"))
+        .union(r)
+        .groupBy(col("src"), col("dst")).agg(min(col("dist")).as("dist")))
     sq(3, sq(2, sq(1, d0)))
   }
 }

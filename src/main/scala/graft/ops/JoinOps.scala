@@ -32,15 +32,9 @@ object JoinOps {
     * whole partition directories at runtime from the dim filter instead
     * of scanning all of them. The single biggest scan-saver at scale. */
   private def dppOrders(s: SparkSession, d: String): DataFrame =
-    Q.memoized(s, d, "dppOrders") {
-      val path = Q.artifactPath(s, d, "dpp_orders")
-      val t0 = System.nanoTime()
-      Io.table(s, d, "orders")
+    Q.fileArtifact(s, d, "dppOrders")(Io.table(s, d, "orders")
         .withColumn("om", date_format(col("o_orderdate"), "yyyy-MM"))
-        .write.mode("overwrite").partitionBy("om").parquet(path)
-      Q.logArtifact("dppOrders", t0)
-      s.read.parquet(path)
-    }
+        .write.mode("overwrite").partitionBy("om").parquet(_))(s.read.parquet(_))
 
   val all: Seq[Q] = Seq(
     Q("c_join_bcast", (s, d) => {

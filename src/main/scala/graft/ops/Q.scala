@@ -22,19 +22,20 @@ final case class Q(
 
 /** Shared query helpers, and the one scratch lifecycle.
   *
-  * A checkpoint has one of two lifetimes. A memoized artifact is
-  * [[materialize]] inside a [[memoized]] build (anywhere else it fails
-  * with [[OutsideBuild]]), held until [[releaseSession]]. A scratch
-  * ([[scratch]]) is capped at [[ScratchCap]] per (session, thread), so
-  * only a later scratch of the thread that built it can evict it.
-  * Every eager checkpoint goes through one private path, `checkpoint`:
-  * an eager `localCheckpoint` at MEMORY_AND_DISK_SER, one `[artifact]`
-  * stderr line, and the checkpoint's RDD id recorded for its session.
-  * [[releaseSession]] unpersists exactly the ids its session recorded,
-  * so sessions sharing a SparkContext never free each other's blocks.
-  * [[memoized]] keys artifacts by session, so a fresh `newSession()`
-  * rebuilds them — the way `graft.BuildPlans` captures a production
-  * build's checkpoint plans for PlanShapeSpec and PlanDump.
+  * A checkpoint has one of two lifetimes. A pipeline artifact is built
+  * by [[artifact]] (or written by [[fileArtifact]]), memoized and held
+  * until [[releaseSession]]; [[materialize]] checkpoints one round of
+  * such a build (anywhere else it fails with [[OutsideBuild]]). A
+  * scratch ([[scratch]]) is capped at [[ScratchCap]] per (session,
+  * thread), so only a later scratch of the thread that built it can
+  * evict it. Every eager checkpoint goes through one private path,
+  * `checkpoint`: an eager `localCheckpoint` at MEMORY_AND_DISK_SER, one
+  * `[artifact]` stderr line, and the checkpoint's RDD id recorded for
+  * its session. [[releaseSession]] unpersists exactly the ids its
+  * session recorded, so sessions sharing a SparkContext never free each
+  * other's blocks. Artifacts are keyed by session, so a fresh
+  * `newSession()` rebuilds them — the way `graft.BuildPlans` captures a
+  * production build's checkpoint plans for PlanShapeSpec and PlanDump.
   */
 object Q {
 
@@ -312,21 +313,57 @@ object Q {
       }: _*)
   }
 
-  /** Session-scoped memo for pipeline-shared materialized intermediates
-    * (doc token masks, near-dup cluster labels): several checked queries
-    * consume the same derived table, and a production pipeline
-    * materializes such artifacts once, not once per downstream consumer.
-    * Keyed by (session, input dir, artifact name); values are already
-    * materialized (localCheckpoint'ed) DataFrames, so a hit costs
-    * nothing and re-runs nothing. Entries die with their SparkSession
-    * (weak keys would need the session; a simple synchronized map is
-    * fine — the value count is O(#artifacts × #dirs), single digits).
-    * Thread-safe: computeIfAbsent guards concurrent warm-up sweeps.
+  /** A pipeline artifact: a table several checked queries consume
+    * (pair tables, CC labels, token masks, walk powers), built once per
+    * (session, store, input dir, name) and stored in the session's
+    * artifact store ([[materialize]]'s two stores), with one `[artifact]`
+    * line. A build that ends on one of its own [[materialize]] rounds
+    * (a BFS hop, an LPA or k-core round, the last CC round) hands that
+    * round over as the artifact: it is not stored a second time. */
+  def artifact(s: SparkSession, dir: String, name: String)
+      (build: => DataFrame): DataFrame =
+    memoized(s, dir, name) {
+      val df = build
+      if (buildStack.get.head.rounds.exists(_ eq df)) df else store(s, dir, name)(df)
+    }
+
+  /** A derived file copy (CSV/ORC/JSON copies, a partitioned layout, a
+    * snapshot root), built once per (session, store, input dir, name):
+    * `write` fills [[artifactPath]] once, one `[artifact]` line times it,
+    * and the artifact is `read` of that path. */
+  def fileArtifact(s: SparkSession, dir: String, name: String)
+      (write: String => Unit)(read: String => DataFrame): DataFrame =
+    memoized(s, dir, name)(written(s, dir, name)(write)(read))
+
+  /** The write-and-reread behind [[fileArtifact]] and the parquet store. */
+  private def written(s: SparkSession, dir: String, name: String)
+      (write: String => Unit)(read: String => DataFrame): DataFrame = {
+    val t0 = System.nanoTime()
+    val path = artifactPath(s, dir, name)
+    write(path)
+    val out = read(path)
+    logArtifact(name, t0)
+    out
+  }
+
+  /** The session-scoped memo behind [[artifact]] and [[fileArtifact]]:
+    * several checked queries consume the same derived table, and a
+    * production pipeline materializes such artifacts once, not once per
+    * downstream consumer. Keyed by (session, store, input dir, artifact
+    * name); values are already materialized (checkpointed, or read back
+    * from written files), so a hit costs nothing and re-runs nothing.
+    * Entries live until [[releaseSession]] (a simple synchronized map is
+    * fine — the value count is O(#artifacts × #dirs)). Thread-safe:
+    * per-key monitors guard concurrent warm-up sweeps.
     */
   private val memo =
     new java.util.concurrent.ConcurrentHashMap[(Int, String, String, String), DataFrame]
   private val buildLocks =
     new java.util.concurrent.ConcurrentHashMap[(Int, String, String, String), Object]
+  /** One in-flight build: its memo key and the rounds it materialized. */
+  private final class Build(val key: (Int, String, String, String)) {
+    val rounds = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+  }
   // cycle guard: the per-key monitors are deadlock-free only while
   // artifact dependencies form a DAG (a build takes other locks solely
   // for its own dependencies). A violation — an artifact whose build
@@ -334,10 +371,10 @@ object Q {
   // infinitely recurse; this thread-local stack of in-flight builds
   // makes it fail LOUDLY instead. (Cross-thread sideways cycles remain
   // convention-enforced; this catches the same-thread form cheaply.)
-  private val buildStack = new ThreadLocal[List[(Int, String, String, String)]] {
-    override def initialValue: List[(Int, String, String, String)] = Nil
+  private val buildStack = new ThreadLocal[List[Build]] {
+    override def initialValue: List[Build] = Nil
   }
-  def memoized(s: SparkSession, dir: String, name: String)
+  private def memoized(s: SparkSession, dir: String, name: String)
       (build: => DataFrame): DataFrame = {
     // NOT computeIfAbsent: artifacts nest (the CC labels build consumes
     // the memoized pair table), and a nested computeIfAbsent on the
@@ -354,14 +391,14 @@ object Q {
     val hit = memo.get(k)
     if (hit != null) hit
     else {
-      require(!buildStack.get.contains(k),
+      require(!buildStack.get.exists(_.key == k),
         s"artifact build cycle: '$name' re-entered while building " +
-          buildStack.get.map(_._4).mkString(" -> "))
+          buildStack.get.map(_.key._4).mkString(" -> "))
       buildLocks.computeIfAbsent(k, _ => new Object).synchronized {
         val h2 = memo.get(k)
         if (h2 != null) h2
         else {
-          buildStack.set(k :: buildStack.get)
+          buildStack.set(new Build(k) :: buildStack.get)
           val v = try build finally buildStack.set(buildStack.get.tail)
           memo.put(k, v)
           v
@@ -419,10 +456,10 @@ object Q {
   }
 
   /** Root-convention path for corpus-derived artifact DIRECTORIES —
-    * [[materialize]]'s parquet store and the copies that live outside
-    * the memo (derived CSV/JSON copies, partitioned-parquet layouts,
-    * snapshot roots): one spelling of the artifact root + corpus
-    * prefix, so a convention change lands everywhere at once.
+    * the parquet store and [[fileArtifact]]'s copies (derived CSV/JSON
+    * copies, partitioned-parquet layouts, snapshot roots): one spelling
+    * of the artifact root + corpus prefix, so a convention change lands
+    * everywhere at once.
     *
     * The root is the session conf `spark.graft.artifactDir`, else a
     * directory of this process ([[processDir]]); the name carries the
@@ -459,7 +496,7 @@ object Q {
 
   /** The one [artifact] stderr line every build prints (bench totals
     * decompose into build-vs-query time from the log alone). */
-  def logArtifact(name: String, t0: Long): Unit =
+  private def logArtifact(name: String, t0: Long): Unit =
     System.err.println(
       f"[artifact] $name built in ${(System.nanoTime() - t0) / 1e9}%.2f s")
 
@@ -468,10 +505,10 @@ object Q {
     catch { case _: Throwable => "local" }
 
   /** RDD ids of the checkpoints one session made. `artifacts` (the
-    * local store of [[materialize]]) live until [[releaseSession]];
-    * `scratch` ([[scratch]]) holds one FIFO per building thread's id,
-    * each keeping only its newest [[ScratchCap]] — the oldest beyond the
-    * cap is unpersisted at once. Ids, not RDD references: an
+    * local store of [[artifact]] and its rounds) live until
+    * [[releaseSession]]; `scratch` ([[scratch]]) holds one FIFO per
+    * building thread's id, each keeping only its newest [[ScratchCap]] —
+    * the oldest beyond the cap is unpersisted at once. Ids, not RDD references: an
     * unreferenced checkpoint stays reapable by ContextCleaner. */
   private final class Checkpoints {
     val artifacts = scala.collection.mutable.ArrayBuffer.empty[Int]
@@ -546,15 +583,18 @@ object Q {
   def scratch(name: String)(df: DataFrame): DataFrame =
     checkpoint(name, scratch = true)(df)
 
-  /** The named error of a [[materialize]] with no [[memoized]] build in
+  /** The named error of a [[materialize]] with no [[artifact]] build in
     * flight on its thread. */
   private[graft] val OutsideBuild = "MATERIALIZE_OUTSIDE_MEMOIZED_BUILD"
 
-  /** Materialize a pipeline-shared artifact (pair table, CC labels,
-    * token masks) or one round of its build — only inside a [[memoized]]
+  /** Materialize one round of an [[artifact]] build (a BFS hop, a CC
+    * round, a vocabulary the build probes) — only inside an artifact
     * build on this thread, else it fails with [[OutsideBuild]]; a
-    * per-construction checkpoint is a [[scratch]]. Two stores, chosen by
-    * the session conf `spark.graft.artifactStore`:
+    * per-construction checkpoint is a [[scratch]]. The round is not
+    * memoized (ContextCleaner may reap it once nothing references it,
+    * unless the build hands it over as its artifact); it is stored like
+    * the artifact itself, in one of two stores chosen by the session
+    * conf `spark.graft.artifactStore`:
     *
     *  - `local` (default): the eager [[checkpoint]] — blocks on
     *    executor block managers, held until [[releaseSession]].
@@ -575,17 +615,19 @@ object Q {
     * build-vs-query time without external probes (VERDICT r6 item 5).
     */
   def materialize(s: SparkSession, dir: String, name: String)(df: DataFrame): DataFrame = {
-    if (buildStack.get.isEmpty) throw new IllegalStateException(
-      s"$OutsideBuild: '$name' is not inside a Q.memoized build; use Q.scratch")
+    val b = buildStack.get
+    if (b.isEmpty) throw new IllegalStateException(
+      s"$OutsideBuild: '$name' is not inside a Q.artifact build; use Q.scratch")
+    val out = store(s, dir, name)(df)
+    b.head.rounds += out
+    out
+  }
+
+  /** The session's artifact store: see [[materialize]]. */
+  private def store(s: SparkSession, dir: String, name: String)(df: DataFrame): DataFrame =
     storeMode(s) match {
       case "parquet" =>
-        val t0 = System.nanoTime()
-        val path = artifactPath(s, dir, name)
-        df.write.mode("overwrite").parquet(path)
-        val out = s.read.parquet(path)
-        logArtifact(name, t0)
-        out
+        written(s, dir, name)(df.write.mode("overwrite").parquet(_))(s.read.parquet(_))
       case _ => checkpoint(name, scratch = false)(df)
     }
-  }
 }

@@ -22,7 +22,7 @@ object TextOps {
 
   /** Shared bigram-LM model artifacts — corpus bigram counts, the
     * first-token continuation histogram, and the unigram vocab size —
-    * built ONCE per corpus (Q.memoized + materialized) and joined by
+    * built ONCE per corpus (Q.artifact) and joined by
     * the three LM-family checked queries (h_ngram_lm_score,
     * h_dsir_weights, h_ccnet_buckets). A production pipeline trains the
     * LM once and scores many consumers; rebuilding the model per query
@@ -35,27 +35,21 @@ object TextOps {
       (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame,
         org.apache.spark.sql.DataFrame) = {
     val docs = Io.table(s, d, "documents")
-    val bg = Q.memoized(s, d, "lmBigrams") {
-      Q.materialize(s, d, "lmBigrams")(
-        docs.select(expr("explode_ngrams(text, 2)").as("g"))
-          .groupBy(col("g")).agg(count(lit(1)).as("c_ab")))
-    }
-    val hist = Q.memoized(s, d, "lmHist") {
-      Q.materialize(s, d, "lmHist")(
-        bg.groupBy(split(col("g"), " ").getItem(0).as("tok_a"))
-          .agg(sum(col("c_ab")).as("c_a")))
-    }
-    val vocab = Q.memoized(s, d, "lmVocab") {
-      Q.materialize(s, d, "lmVocab")(
-        docs.select(explode(toks).as("t"))
-          .agg(countDistinct(col("t")).as("v")))
-    }
+    val bg = Q.artifact(s, d, "lmBigrams")(
+      docs.select(expr("explode_ngrams(text, 2)").as("g"))
+        .groupBy(col("g")).agg(count(lit(1)).as("c_ab")))
+    val hist = Q.artifact(s, d, "lmHist")(
+      bg.groupBy(split(col("g"), " ").getItem(0).as("tok_a"))
+        .agg(sum(col("c_ab")).as("c_a")))
+    val vocab = Q.artifact(s, d, "lmVocab")(
+      docs.select(explode(toks).as("t"))
+        .agg(countDistinct(col("t")).as("v")))
     (bg, hist, vocab)
   }
 
   /** Shared naive-Bayes language-model artifacts — the (vocab × L)
     * smoothed log-likelihood table and the L-row prior table — built
-    * ONCE per corpus (Q.memoized + materialized, the lmModel pattern)
+    * ONCE per corpus (Q.artifact, the lmModel pattern)
     * and joined BY KEY by h_nb_lang_confusion's scoring pass. A
     * production pipeline trains the classifier once and scores every
     * batch against the resident model; the previous train-inline form
@@ -69,12 +63,8 @@ object TextOps {
     */
   private[graft] def nbModel(s: org.apache.spark.sql.SparkSession, d: String):
       (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame) = {
-    val model = Q.memoized(s, d, "nbModel") {
-      Q.materialize(s, d, "nbModel")(nbModelBuild(s, d))
-    }
-    val priors = Q.memoized(s, d, "nbPriors") {
-      Q.materialize(s, d, "nbPriors")(nbPriorsBuild(s, d))
-    }
+    val model = Q.artifact(s, d, "nbModel")(nbModelBuild(s, d))
+    val priors = Q.artifact(s, d, "nbPriors")(nbPriorsBuild(s, d))
     (model, priors)
   }
 
@@ -1094,17 +1084,13 @@ object TextOps {
       val bgRaw = bgAll.select(col("g"), col("c_ab").as("c_r"))
       val histRaw = histAll.select(col("tok_a"), col("c_a").as("ca_r"))
       val docs = Io.table(s, d, "documents")
-      val bgT = Q.memoized(s, d, "lmBigramsEn") {
-        Q.materialize(s, d, "lmBigramsEn")(
-          docs.filter(col("lang") === "en")
-            .select(expr("explode_ngrams(text, 2)").as("g"))
-            .groupBy(col("g")).agg(count(lit(1)).as("c_t")))
-      }
-      val histT = Q.memoized(s, d, "lmHistEn") {
-        Q.materialize(s, d, "lmHistEn")(
-          bgT.groupBy(split(col("g"), " ").getItem(0).as("tok_a"))
-            .agg(sum(col("c_t")).as("ca_t")))
-      }
+      val bgT = Q.artifact(s, d, "lmBigramsEn")(
+        docs.filter(col("lang") === "en")
+          .select(expr("explode_ngrams(text, 2)").as("g"))
+          .groupBy(col("g")).agg(count(lit(1)).as("c_t")))
+      val histT = Q.artifact(s, d, "lmHistEn")(
+        bgT.groupBy(split(col("g"), " ").getItem(0).as("tok_a"))
+          .agg(sum(col("c_t")).as("ca_t")))
       val docBg = docs.select(col("doc_id"), col("lang"),
         expr("explode_ngrams(text, 2)").as("g"))
       // every doc bigram exists in the raw model by construction (inner
@@ -1917,12 +1903,8 @@ object TextOps {
       d: String): Seq[(org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame)] = {
     val words = bpeWords(s, d)
     def round(n: Int, t: org.apache.spark.sql.DataFrame) = {
-      val b = Q.memoized(s, d, s"bpeB$n") {
-        Q.materialize(s, d, s"bpeB$n")(bpeBestPair(t))
-      }
-      val m = Q.memoized(s, d, s"bpeT$n") {
-        Q.materialize(s, d, s"bpeT$n")(bpeApplyMerge(t, b))
-      }
+      val b = Q.artifact(s, d, s"bpeB$n")(bpeBestPair(t))
+      val m = Q.artifact(s, d, s"bpeT$n")(bpeApplyMerge(t, b))
       (b, m)
     }
     val (b1, t1) = round(1, words)
@@ -1936,13 +1918,11 @@ object TextOps {
     * materialized per corpus. */
   private[graft] def bpeWords(s: org.apache.spark.sql.SparkSession,
       d: String): org.apache.spark.sql.DataFrame =
-    Q.memoized(s, d, "bpeWords") {
-      Q.materialize(s, d, "bpeWords")(Io.table(s, d, "documents")
-        .select(explode(expr(
-          "regexp_extract_all(lower(text), '[a-z]+', 0)")).as("w"))
-        .groupBy(col("w")).agg(count(lit(1)).as("freq"))
-        .select(regexp_replace(col("w"), "(.)", "<$1>").as("ws"), col("freq")))
-    }
+    Q.artifact(s, d, "bpeWords")(Io.table(s, d, "documents")
+      .select(explode(expr(
+        "regexp_extract_all(lower(text), '[a-z]+', 0)")).as("w"))
+      .groupBy(col("w")).agg(count(lit(1)).as("freq"))
+      .select(regexp_replace(col("w"), "(.)", "<$1>").as("ws"), col("freq")))
 
   /** Argmax adjacent symbol pair by freq-weighted count, total-ordered
     * (cnt DESC, pair ASC) for a deterministic winner. Vocab-bounded. */

@@ -64,11 +64,8 @@ object TpchOps {
     * re-derived per query. */
   private def psView(s: SparkSession, d: String): String = {
     val view = s"ps_cat_${Q.dirDigest(d)}"
-    Q.memoized(s, d, "tpchPsCat") { // callers register the views first
-      val df = Q.materialize(s, d, "tpchPsCat")(s.sql(psDerivation))
-      df.createOrReplaceTempView(view)
-      df
-    }
+    // callers register the views first
+    Q.artifact(s, d, "tpchPsCat")(s.sql(psDerivation)).createOrReplaceTempView(view)
     view
   }
 
@@ -304,12 +301,8 @@ object TpchOps {
         (s, d) => {
           Io.views(s, d)
           val view = s"q11v_${Q.dirDigest(d)}"
-          Q.memoized(s, d, "tpchQ11V") {
-            val df = Q.materialize(s, d, "tpchQ11V")(
-              s.sql(vBody(s"SELECT * FROM ${psView(s, d)}")))
-            df.createOrReplaceTempView(view)
-            df
-          }
+          Q.artifact(s, d, "tpchQ11V")(s.sql(vBody(s"SELECT * FROM ${psView(s, d)}")))
+            .createOrReplaceTempView(view)
           s.sql(fin(s"SELECT * FROM $view"))
         },
         Some(fin(vBody(psDerivation))))

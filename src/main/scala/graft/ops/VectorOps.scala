@@ -101,17 +101,16 @@ object VectorOps {
     * per corpus and consumed by the k-means and silhouette rows, the
     * way a production pipeline scores against one trained model. */
   private def kmCent1(s: SparkSession, d: String): DataFrame =
-    Q.memoized(s, d, "kmC1") {
+    Q.artifact(s, d, "kmC1") {
       val cent0 = embeddingVecs(s, d).filter(col("vec_id") < 4)
         .select(col("vec_id").cast("int").as("cid"), dvec(col("embedding")).as("carr"))
-      Q.materialize(s, d, "kmC1")(
-        kmAssign(s, d, cent0)
-          .select(col("cid"), posexplode(col("embedding")).as(Seq("pos", "v")))
-          .groupBy(col("cid"), col("pos"))
-          .agg((decSum12(col("v").cast("double")) / count(lit(1))).as("c"))
-          .groupBy(col("cid"))
-          .agg(transform(array_sort(collect_list(struct(col("pos"), col("c")))),
-            x => x.getField("c")).as("carr")))
+      kmAssign(s, d, cent0)
+        .select(col("cid"), posexplode(col("embedding")).as(Seq("pos", "v")))
+        .groupBy(col("cid"), col("pos"))
+        .agg((decSum12(col("v").cast("double")) / count(lit(1))).as("c"))
+        .groupBy(col("cid"))
+        .agg(transform(array_sort(collect_list(struct(col("pos"), col("c")))),
+          x => x.getField("c")).as("carr"))
     }
 
   /** Oracle twin of [[kmCent1]] + the all-centroid distance table
@@ -230,9 +229,7 @@ object VectorOps {
     * 100 TB shape: one (band, band_val) shuffle + one src-keyed window
     * — both key-partitioned; the stored graph is n×M rows. */
   private[graft] def hnswEdges(s: SparkSession, d: String): DataFrame =
-    Q.memoized(s, d, "hnswEdges") {
-      Q.materialize(s, d, "hnswEdges")(hnswEdgesBuild(s, d))
-    }
+    Q.artifact(s, d, "hnswEdges")(hnswEdgesBuild(s, d))
 
   /** The beam search over [[hnswEdges]]. Each query's visited set is
     * SEEDED with its full scored LSH bucket (every candidate sharing ≥1 band — exactly
@@ -387,13 +384,11 @@ object VectorOps {
     * and the IVF cells consume one artifact, exactly as a production
     * index build writes its codebook once. */
   private def pqCent(s: SparkSession, d: String): DataFrame =
-    Q.memoized(s, d, "pqCent") {
-      Q.materialize(s, d, "pqCent") {
-        Io.table(s, d, "embeddings")
-          .select(col("label"), posexplode(col("embedding")).as(Seq("pos0", "f")))
-          .groupBy(col("label"), (col("pos0") + 1).as("pos"))
-          .agg((decSum12(col("f").cast("double")) / count(lit(1))).as("c"))
-      }
+    Q.artifact(s, d, "pqCent") {
+      Io.table(s, d, "embeddings")
+        .select(col("label"), posexplode(col("embedding")).as(Seq("pos0", "f")))
+        .groupBy(col("label"), (col("pos0") + 1).as("pos"))
+        .agg((decSum12(col("f").cast("double")) / count(lit(1))).as("c"))
     }
 
   /** Codebook gathered to pos-ordered double arrays (K rows) — the
@@ -437,9 +432,7 @@ object VectorOps {
     * column fail LOUDLY in Spark (the DuckDB generate_series side would
     * diverge, not error). */
   private[graft] def pqCodes(s: SparkSession, d: String): DataFrame =
-    Q.memoized(s, d, "pqCodes") {
-      Q.materialize(s, d, "pqCodes")(pqCodesBuild(s, d))
-    }
+    Q.artifact(s, d, "pqCodes")(pqCodesBuild(s, d))
 
   private def pqCodesBuild(s: SparkSession, d: String): DataFrame = {
     val (dim, nSubs) = pqDims(s, d)
@@ -2162,9 +2155,7 @@ object VectorOps {
     * top-k vs the broadcast query vector, relevance floor-snapped to
     * integer micros. Memoized + materialized (the retrieval "model"). */
   private[graft] def mmrCand(s: SparkSession, d: String): DataFrame =
-    Q.memoized(s, d, "mmrCand") {
-      Q.materialize(s, d, "mmrCand")(mmrCandBuild(s, d))
-    }
+    Q.artifact(s, d, "mmrCand")(mmrCandBuild(s, d))
 
   private def mmrCandBuild(s: SparkSession, d: String): DataFrame = {
     val e = Io.table(s, d, "embeddings")
@@ -2180,16 +2171,14 @@ object VectorOps {
   /** 20×20 candidate pair similarities in integer micros — the
     * bounded broadcast self-join the greedy penalty terms read. */
   private def mmrPairs(s: SparkSession, d: String): DataFrame =
-    Q.memoized(s, d, "mmrPairs") {
-      Q.materialize(s, d, "mmrPairs") {
-        val c = mmrCand(s, d)
-        val a = c.select(col("doc_id").as("a"), col("embedding").as("ea"))
-        val b = c.select(col("doc_id").as("b"), col("embedding").as("eb"))
-        a.join(broadcast(b), col("a") =!= col("b"))
-          .select(col("a"), col("b"),
-            floor(cosine(col("ea"), col("eb")) * lit(1e6) + lit(0.5))
-              .as("sim_u"))
-      }
+    Q.artifact(s, d, "mmrPairs") {
+      val c = mmrCand(s, d)
+      val a = c.select(col("doc_id").as("a"), col("embedding").as("ea"))
+      val b = c.select(col("doc_id").as("b"), col("embedding").as("eb"))
+      a.join(broadcast(b), col("a") =!= col("b"))
+        .select(col("a"), col("b"),
+          floor(cosine(col("ea"), col("eb")) * lit(1e6) + lit(0.5))
+            .as("sim_u"))
     }
 
   /** Long form of the embeddings table: (vec_id, i, x) with 1-based
@@ -2206,9 +2195,7 @@ object VectorOps {
     * corpus size; the data-sized work is one scan + one (i,j)-keyed
     * aggregate with map-side combine). */
   private[graft] def pcaScatter(s: SparkSession, d: String): DataFrame =
-    Q.memoized(s, d, "pcaScatter") {
-      Q.materialize(s, d, "pcaScatter")(pcaScatterBuild(s, d))
-    }
+    Q.artifact(s, d, "pcaScatter")(pcaScatterBuild(s, d))
 
   private def pcaScatterBuild(s: SparkSession, d: String): DataFrame = {
     val long = pcaLong(s, d)
@@ -2263,16 +2250,14 @@ object VectorOps {
     * math — pure job-scheduling blowup). Each stage is dim-sized, so
     * the materializes are O(dim) rows each. */
   private def pcaW3(s: SparkSession, d: String): DataFrame =
-    Q.memoized(s, d, "pcaW3") {
-      Q.materialize(s, d, "pcaW3") {
-        val smat = pcaScatter(s, d)
-        val w1 = Q.materialize(s, d, "pcaW1")(pcaMv(s, d,
-          smat.select(col("j")).distinct().select(col("j"), lit(1.0).as("v"))))
-        val v2 = Q.materialize(s, d, "pcaV2")(
-          pcaNormalize(Q.materialize(s, d, "pcaW2")(
-            pcaMv(s, d, pcaNormalize(w1)))))
-        pcaMv(s, d, v2)
-      }
+    Q.artifact(s, d, "pcaW3") {
+      val smat = pcaScatter(s, d)
+      val w1 = Q.materialize(s, d, "pcaW1")(pcaMv(s, d,
+        smat.select(col("j")).distinct().select(col("j"), lit(1.0).as("v"))))
+      val v2 = Q.materialize(s, d, "pcaV2")(
+        pcaNormalize(Q.materialize(s, d, "pcaW2")(
+          pcaMv(s, d, pcaNormalize(w1)))))
+      pcaMv(s, d, v2)
     }
 
   /** Shared oracle CTE chain for the PCA family (through w3/n3); every

@@ -60,14 +60,28 @@ class ArtifactStoreSpec extends AnyFunSuite {
 
   test("parquet store: a second construction leaves the first frame's rows intact") {
     val tmp = TestSpark.tempDir("graft_artifacts")
-    for (q <- Seq("h_embed_drift", "g_cuped")) {
+    // every file under the store root with its modification time
+    def stamps(): Map[String, Long] = {
+      import scala.jdk.CollectionConverters._
+      java.nio.file.Files.walk(java.nio.file.Paths.get(tmp)).iterator().asScala
+        .filter(java.nio.file.Files.isRegularFile(_))
+        .map(f => f.toString -> java.nio.file.Files.getLastModifiedTime(f).toMillis).toMap
+    }
+    // c_join_dpp reads a Q.fileArtifact copy (dppOrders): its second
+    // construction in the same session rewrites no file
+    for (q <- Seq("h_embed_drift", "g_cuped", "c_join_dpp")) {
       val expected = Registry.queries(q)(spark, sf).collect().map(_.toSeq).toSeq
-      val first = withParquetStore(tmp) {
+      val (first, before, after) = withParquetStore(tmp) {
         val first = Registry.queries(q)(spark, sf)
+        val before = stamps()
         Registry.queries(q)(spark, sf)
-        first.collect().map(_.toSeq).toSeq
+        val after = stamps()
+        (first.collect().map(_.toSeq).toSeq, before, after)
       }
       assert(first == expected, s"$q: first parquet-store frame diverges from the local store")
+      assert(after == before, s"$q: a second construction rewrote files under the store")
+      if (q == "c_join_dpp")
+        assert(before.keys.exists(_.contains("dppOrders")), s"no dppOrders copy under $tmp")
     }
   }
 
@@ -82,8 +96,8 @@ class ArtifactStoreSpec extends AnyFunSuite {
       val rows = first.collect().map(_.toSeq).toSeq
       assert(rows.nonEmpty)
       assert(second.collect().map(_.toSeq).toSeq == rows)
-      assert(graft.ops.Q.artifactPath(a, sf, "dpp_orders") !=
-        graft.ops.Q.artifactPath(b, sf, "dpp_orders"))
+      assert(graft.ops.Q.artifactPath(a, sf, "dppOrders") !=
+        graft.ops.Q.artifactPath(b, sf, "dppOrders"))
     } finally {
       graft.ops.Q.releaseSession(a)
       graft.ops.Q.releaseSession(b)

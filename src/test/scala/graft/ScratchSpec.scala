@@ -5,7 +5,9 @@ import org.apache.spark.sql.functions.col
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The one scratch lifecycle in `Q`: every eager checkpoint is recorded
-  * for its session, `materialize` runs only inside a memoized build,
+  * for its session, `materialize` runs only inside a `Q.artifact` build,
+  * an artifact is stored once (a build's own last round is not stored
+  * again),
   * scratch checkpoints are capped per (session, thread), and
   * `releaseSession` frees exactly the released session's blocks. */
 class ScratchSpec extends AnyFunSuite {
@@ -99,12 +101,50 @@ class ScratchSpec extends AnyFunSuite {
         Q.materialize(s, sf, "spec_outside")(s.range(0, 10).toDF()))
       assert(e.getMessage.startsWith(Q.OutsideBuild), e.getMessage)
       assert(Q.trackedArtifacts(s).isEmpty)
-      // the same call inside a build is the memoized artifact
-      val art = Q.memoized(s, sf, "spec_inside")(
-        Q.materialize(s, sf, "spec_inside")(s.range(0, 10).toDF()))
+      // an artifact is checkpointed once; a second call with the same
+      // name is the same frame and tracks no new id
+      val art = Q.artifact(s, sf, "spec_inside")(s.range(0, 10).toDF())
       assert(art.count() === 10)
       assert(Q.trackedArtifacts(s) === Seq(rddId(art)))
+      assert(Q.artifact(s, sf, "spec_inside")(s.range(0, 99).toDF()) eq art)
+      assert(Q.trackedArtifacts(s) === Seq(rddId(art)))
+      // a build that ends on its own materialize round hands that round
+      // over: it tracks exactly its rounds, not a second checkpoint
+      val before = Q.trackedArtifacts(s)
+      val looped = Q.artifact(s, sf, "spec_rounds") {
+        var r = Q.materialize(s, sf, "spec_round_0")(s.range(0, 10).toDF())
+        for (i <- 1 to 2)
+          r = Q.materialize(s, sf, s"spec_round_$i")(r.filter(col("id") >= i))
+        r
+      }
+      val rounds = Q.trackedArtifacts(s).drop(before.size)
+      assert(rounds.size === 3, s"tracked ${rounds.size} checkpoints for 3 rounds")
+      assert(rounds.last === rddId(looped))
+      assert(looped.count() === 8)
     } finally Q.releaseSession(s)
+  }
+
+  test("one artifact call: outside Q.scala no hand-paired memo, artifact log or timed write") {
+    // every pipeline artifact goes through Q.artifact / Q.fileArtifact,
+    // which name, memoize, store, time and log it; a hand-rolled memo,
+    // [artifact] line or stopwatch around an artifact write fails here
+    import scala.jdk.CollectionConverters._
+    val files = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main/scala"))
+      .iterator().asScala
+      .filter(f => f.toString.endsWith(".scala") && f.getFileName.toString != "Q.scala")
+      .map(f => f.getFileName.toString ->
+        java.nio.file.Files.readAllLines(f).asScala.toIndexedSeq).toSeq
+    def sites(hit: (IndexedSeq[String], Int) => Boolean) = files.flatMap { case (n, ls) =>
+      ls.indices.filter(hit(ls, _)).map(i => s"$n:${i + 1}")
+    }
+    for (pat <- Seq("Q.memoized(", "Q.logArtifact(")) {
+      val found = sites((ls, i) => ls(i).contains(pat))
+      assert(found.isEmpty, s"$pat call sites: ${found.mkString(", ")}")
+    }
+    val timedWrites = sites((ls, i) => ls(i).contains("System.nanoTime()") &&
+      ls.slice(math.max(i - 10, 0), i + 11).exists(l =>
+        l.contains("Q.artifactPath(") || l.contains(".write")))
+    assert(timedWrites.isEmpty, s"stopwatches next to a write: ${timedWrites.mkString(", ")}")
   }
 
   test("40 g_cuped builds track no artifact and at most 32 scratch checkpoints") {
@@ -141,6 +181,22 @@ class ScratchSpec extends AnyFunSuite {
         case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd.id
       }).toSet
       assert((read & seen).isEmpty, s"memoized frames read scratch ${read & seen}")
+      // the memo holds only built artifacts: a checkpoint, or a scan of
+      // files written under this session's artifact root — never a lazy
+      // plan that re-executes on every read
+      val root = new java.io.File(s.conf.get("spark.graft.artifactDir")).toURI.getPath
+      val loose = memo.map(_.queryExecution.analyzed).filterNot {
+        case _: org.apache.spark.sql.execution.LogicalRDD => true
+        case l: org.apache.spark.sql.execution.datasources.LogicalRelation =>
+          l.relation match {
+            case h: org.apache.spark.sql.execution.datasources.HadoopFsRelation =>
+              h.location.rootPaths.forall(_.toUri.getPath.startsWith(root))
+            case _ => false
+          }
+        case _ => false
+      }
+      assert(loose.isEmpty, s"memoized frames that are no stored artifact:\n" +
+        loose.map(_.treeString.take(300)).mkString("\n"))
     } finally Q.releaseSession(s)
   }
 }

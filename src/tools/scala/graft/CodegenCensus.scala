@@ -34,7 +34,12 @@ import org.apache.spark.sql.catalyst.expressions.codegen.CodeAndComment
   * loaders, source bytes and Janino compile time — the median of
   * [[CompileReps]] compiles taken after the JIT has compiled the whole
   * body set once, so two runs show which classes a change removed and
-  * what each cost.
+  * what each cost. The bodies a row adds on a later execution go to
+  * `DIR/<row>/pass<p>_<nn>_<loader>.java`, and `DIR/warm.tsv` classes
+  * each: `seen` when an earlier execution compiled the same body (in
+  * another loader), `renamed` when it is an earlier body under another
+  * `GeneratedIteratorForCodegenStage<id>` (the id is the stage's place
+  * in the AQE stage order), else `new`.
   *
   * Usage: `graft.CodegenCensus <data dir> <work dir> [--sink parquet|noop]
   *   [--passes N] [--dump DIR] row...` — one JSON line per row, then a
@@ -77,9 +82,16 @@ object CodegenCensus {
     (System.nanoTime() - t0) / 1e6
   }
 
-  /** Writes every row's new bodies and `bodies.tsv` under `dir`. */
+  /** A body with its whole-stage ids blanked: equal for one stage's
+    * code under two places in the stage order. */
+  private def stageFree(body: String): String =
+    body.replaceAll("(CodegenStage|codegenStageId=)[0-9]+", "$1")
+
+  /** Writes every row's new bodies and `bodies.tsv` under `dir`, and
+    * the later executions' bodies with `warm.tsv`. */
   private def dump(dir: String, names: Seq[String],
       entries: collection.Map[String, Set[(Int, String)]],
+      warm: Seq[(String, Int, Set[(Int, String)], Set[String])],
       codes: collection.Map[String, CodeAndComment]): Unit = {
     val byRow = names.map { q =>
       q -> entries(q).groupBy(_._2).toSeq
@@ -102,6 +114,22 @@ object CodegenCensus {
           String.format(Locale.ROOT, "%.1f", Double.box(ms)))
       }
     } finally tsv.close()
+    val wtsv = new java.io.PrintWriter(s"$dir/warm.tsv", "UTF-8")
+    wtsv.println("row\tpass\tfile\tloaders\tbytes\tkind")
+    try warm.foreach { case (q, p, added, before) =>
+      val earlier = before.map(stageFree)
+      added.groupBy(_._2).toSeq.sortBy(-_._1.length).zipWithIndex.foreach {
+        case ((body, ks), i) =>
+          val loaders = ks.map(k => loaderNames.getOrElse(k._1, "?")).toSeq.sorted
+          val file = f"$q/pass$p%d_$i%02d_${loaders.mkString("+")}.java"
+          new java.io.File(s"$dir/$q").mkdirs()
+          val w = new java.io.PrintWriter(s"$dir/$file", "UTF-8")
+          try w.write(body) finally w.close()
+          val kind = if (before.contains(body)) "seen"
+            else if (earlier.contains(stageFree(body))) "renamed" else "new"
+          wtsv.println(s"$q\t$p\t$file\t${loaders.size}\t${body.length}\t$kind")
+      }
+    } finally wtsv.close()
   }
 
   private def compiles(): Long =
@@ -171,8 +199,11 @@ object CodegenCensus {
       now.keySet
     }
     var seen = cacheKeys()
+    // (row, pass, entries added on that later execution, bodies seen before it)
+    val warm = Seq.newBuilder[(String, Int, Set[(Int, String)], Set[String])]
     var out = 0
-    for (_ <- 1 to passes; q <- names) {
+    for (p <- 1 to passes; q <- names) {
+      val before = if (entries.contains(q)) code.keySet.toSet else Set.empty[String]
       val c0 = compiles()
       val t0 = System.nanoTime()
       val df = fns(q)(spark, data)
@@ -189,6 +220,7 @@ object CodegenCensus {
       }
       val now = cacheKeys()
       if (!entries.contains(q)) entries(q) = now -- seen
+      else if ((now -- seen).nonEmpty) warm += ((q, p, now -- seen, before))
       seen = now
     }
     def arr[A](xs: Seq[A]) = xs.map {
@@ -206,7 +238,7 @@ object CodegenCensus {
         names.map(q => comp(q)(p)).sum))}}""")
     dumpDir.foreach { d =>
       new java.io.File(d).mkdirs()
-      dump(d, names, entries, code)
+      dump(d, names, entries, warm.result(), code)
     }
     spark.stop()
   }
