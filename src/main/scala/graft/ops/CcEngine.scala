@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Shared distributed connected-components engine: min-label propagation
@@ -18,9 +18,11 @@ import org.apache.spark.sql.functions._
   *    broadcast.
   *  - Pointer jumping (rep := rep's rep) doubles label-propagation
   *    distance per round → O(log diameter) materialized rounds.
-  *  - Per-round materialization (Q.materialize) bounds lineage; in
-  *    parquet artifact-store mode a lost executor replays at most one
-  *    propagation round from shared storage.
+  *  - The loop — per-round checkpoint, convergence probe, stop rule —
+  *    lives in the one fixpoint loop, `Q.rounds`. Its per-round
+  *    checkpoint bounds lineage; in parquet artifact-store mode a lost
+  *    executor replays at most one propagation round from shared
+  *    storage.
   *  - Each materialized round applies TWO relax+jump steps (the fixed
   *    per-round cost — checkpoint write, scheduling, probe — dominates
   *    on support-pruned graphs with small label tables), and the
@@ -45,25 +47,23 @@ import org.apache.spark.sql.functions._
   */
 object CcEngine {
 
-  /** Run min-label propagation to convergence.
+  /** Run min-label propagation to convergence on the one fixpoint
+    * loop, [[Q.rounds]]: `labels0` is round 0, each round is two
+    * relax+jump steps, the probe is the label sum, and the rounds are
+    * named `<prefix>_<i>` (the prefix keeps the rounds of independent
+    * graphs from colliding in parquet mode). Labels still changing
+    * after `maxIter` rounds fail with [[Q.FixpointNotReached]].
     *
     * @param edges  symmetric edge list (src, dst) — caller materializes
-    * @param labels0 initial labels (nid, rep) with rep = nid — caller
-    *                materializes
-    * @param prefix  artifact-name prefix (keeps the per-round tables of
-    *                independent graphs from colliding in parquet mode)
+    * @param labels0 initial labels (nid, rep) with rep = nid
     * @return converged (nid, rep), materialized
     */
-  def propagate(s: SparkSession, d: String, prefix: String,
-      edges: DataFrame, labels0: DataFrame, maxIter: Int = 30): DataFrame = {
-    var l = labels0
+  def propagate(prefix: String, edges: DataFrame, labels0: DataFrame,
+      maxIter: Int = 30): DataFrame = {
     // coalesce: the graph may be empty at tiny SFs — sum over zero rows
     // is NULL, not 0
     def sumRep(df: DataFrame): Long =
       df.agg(coalesce(sum(col("rep")), lit(0L))).head.getLong(0)
-    var prevSum = sumRep(l)
-    var converged = false
-    var iter = 0
     // One relax + pointer-jump step, built lazily on top of `cur`.
     def step(cur: DataFrame): DataFrame = {
       // relax: rep := min(rep, min over neighbors' reps)
@@ -81,29 +81,10 @@ object CcEngine {
           col("rep") === col("rn"), "left")
         .select(col("nid"), coalesce(col("rr"), col("rep")).as("rep"))
     }
-    while (!converged && iter < maxIter) {
-      // TWO relax+jump steps per materialized round: the round's fixed
-      // cost (checkpoint write + probe job + per-job scheduling) is the
-      // dominant term on support-pruned graphs whose label tables are
-      // tiny, so halving the materialized-round count at the same total
-      // join work is a straight win whenever convergence needs more
-      // than one round (the co-purchase graph at sf0.1 needed 8 single-
-      // step rounds; past the fixpoint an extra step is a no-op, so a
-      // possible half-round overshoot costs one cheap lazy step, not a
-      // correctness risk). Lineage stays bounded: 2 steps (= 6 joins)
-      // between checkpoints.
-      l = Q.materialize(s, d, s"${prefix}_labels_${iter + 1}")(step(step(l)))
-      iter += 1
-      // probe EVERY round: with two steps per round a missed-fixpoint
-      // round costs 6 joins + a checkpoint, an order of magnitude more
-      // than the one-row sum probe on the just-checkpointed table, so
-      // minimizing detection lag beats minimizing probe count (the
-      // opposite trade from the single-step engine this replaced).
-      val sr = sumRep(l)
-      converged = sr == prevSum
-      prevSum = sr
-    }
-    if (converged) System.err.println(s"[cc:$prefix] converged within $iter rounds")
-    l
+    // TWO relax+jump steps per materialized round (see the object
+    // notes): at sf0.1 the co-purchase graph needed 8 single-step rounds;
+    // past the fixpoint an extra step is a no-op. Lineage stays bounded:
+    // 2 steps (= 6 joins) between checkpoints.
+    Q.rounds(prefix, labels0, maxIter, Some(sumRep))((l, _) => step(step(l))).last
   }
 }

@@ -17,7 +17,7 @@ import org.apache.spark.sql.types.DecimalType
   */
 object ContaminationOps {
 
-  private def toks = split(col("text"), " ")
+  import Q.toks
 
   /** Deterministic round-to-nearest at 1e-6 via DECIMAL(38,6): plain
     * ROUND(double, 6) disagrees across engines on half-boundary rationals

@@ -35,7 +35,7 @@ object DedupOps {
 
   private def docToks(s: SparkSession, d: String): DataFrame =
     Io.table(s, d, "documents")
-      .select(col("doc_id"), array_distinct(split(col("text"), " ")).as("toks"))
+      .select(col("doc_id"), array_distinct(Q.toks).as("toks"))
 
   /** Token sets as vocabulary bitmasks, WIDTH-ADAPTIVE. The bench
     * corpus vocabulary is tiny (31 words at every sf), so set
@@ -76,7 +76,7 @@ object DedupOps {
     val docs = Io.table(s, d, "documents")
       .repartition(s.sparkContext.defaultParallelism)
     val tok = docs.select(col("doc_id"), col("lang"),
-      explode(array_distinct(split(col("text"), " "))).as("token"))
+      explode(array_distinct(Q.toks)).as("token"))
     // The whole vocabulary is ONE sorted array row: a two-stage
     // collect_set aggregate + broadcast + array_position replaces the
     // distinct → rank → offset-join pipeline — three fewer shuffles,
@@ -224,7 +224,7 @@ object DedupOps {
     val docNode = Q.materialize(s, d, "wv_docNode") {
       masks.join(nodeIds, "mask").select(col("doc_id"), col("nid"))
     }
-    val toksC = split(col("text"), " ")
+    val toksC = Q.toks
     val bgArr = array_distinct(when(size(toksC) >= 2,
       transform(sequence(lit(1), size(toksC) - 1),
         i => concat(element_at(toksC, i), lit(" "), element_at(toksC, i + 1))))
@@ -361,7 +361,7 @@ object DedupOps {
         lit(b))
     }: _*)
     docs.select(col("doc_id"),
-        array_distinct(split(col("text"), " ")).as("toks"))
+        array_distinct(Q.toks).as("toks"))
       .withColumn("sig", expr(s"minhash_sig(toks, $numHashes)"))
       .select(col("doc_id"), col("toks"),
         posexplode(bandHashes).as(Seq("band", "bh")))
@@ -510,14 +510,12 @@ object DedupOps {
     val edges = Q.materialize(s, d, "cc_edges") {
       pairs.union(pairs.select(col("nb"), col("na"))).toDF("src", "dst")
     }
-    // the propagation loop itself (relax + pointer jump + per-round
-    // materialization + batched convergence probe) lives in the shared
-    // CcEngine — the co-purchase graph components (GraphOps i_graph_cc)
-    // run the same code path on their own node/edge tables.
-    val labels0 = Q.materialize(s, d, "cc_labels_0") {
-      nodes.select(col("nid")).withColumn("rep", col("nid"))
-    }
-    val labels = CcEngine.propagate(s, d, "cc", edges, labels0)
+    // the propagation (relax + pointer jump, on the Q.rounds loop)
+    // lives in the shared CcEngine — the co-purchase graph components
+    // (GraphOps i_graph_cc) run the same code path on their own
+    // node/edge tables.
+    val labels = CcEngine.propagate("cc", edges,
+      nodes.select(col("nid")).withColumn("rep", col("nid")))
     t.join(nodes, Seq("lang", "mask")).join(labels, "nid")
       .select(col("doc_id"), col("rep"))
   }
@@ -590,7 +588,7 @@ object DedupOps {
     // all-pairs stage anywhere.
     Q("h_line_dedup", (s, d) => {
       val segs = Io.table(s, d, "documents")
-        .select(col("doc_id"), split(col("text"), " ").as("toks"))
+        .select(col("doc_id"), Q.toks.as("toks"))
         .selectExpr("doc_id",
           """posexplode(transform(
             |  sequence(0L, CAST((size(toks) - 1) DIV 10 AS LONG)),
@@ -1056,7 +1054,7 @@ object DedupOps {
     // DECIMAL(38,6) before comparison so the argmax pick is identical
     // across engines even when two members' qualities differ below 1e-6.
     Q("h_dedup_best", (s, d) => {
-      val t = split(col("text"), " ")
+      val t = Q.toks
       val nTok = size(t).cast("double")
       val ttr = size(array_distinct(t)) / nTok
       val stopRatio = size(filter(t, x => x === "the" || x === "a")) / nTok
@@ -1416,7 +1414,7 @@ object DedupOps {
         .groupBy(col("doc_id"))
         .agg((sum(coalesce(col("hit"), lit(0))) / count(lit(1)) >= 0.05)
           .as("is_contaminated"))
-      val rt = split(col("text"), " ")
+      val rt = Q.toks
       val nTok = size(rt).cast("double")
       val quality = (lit(0.3) * (size(array_distinct(rt)) / nTok) +
         lit(0.4) * (lit(1.0) - size(filter(rt, x => x === "the" || x === "a")) / nTok) +

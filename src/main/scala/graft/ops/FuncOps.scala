@@ -230,7 +230,7 @@ object FuncOps {
     Q("f_array_explode", (s, d) => {
       Io.table(s, d, "documents")
         .filter(col("doc_id") < 10)
-        .select(col("doc_id"), posexplode(split(col("text"), " ")).as(Seq("pos", "token")))
+        .select(col("doc_id"), posexplode(Q.toks).as(Seq("pos", "token")))
         .orderBy("doc_id", "pos")
     }, Some(
       """SELECT doc_id, CAST(i - 1 AS INT) AS pos, toks[i] AS token

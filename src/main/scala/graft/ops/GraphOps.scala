@@ -259,32 +259,89 @@ object GraphOps {
       |  UNION ALL SELECT src, dst, 8, cnt FROM a8)""".stripMargin
 
   /** BFS distance table (node, dist) over 4 hops — memoized, and
-    * materialized per hop: hop h references hop h−1 TWICE (frontier
-    * filter + visited anti-join), so an unmaterialized chain re-evaluates
-    * early hops 2^h times (see i_graph_bfs's notes). */
+    * materialized per hop by [[Q.rounds]]: hop h references hop h−1
+    * TWICE (frontier filter + visited anti-join), so an unmaterialized
+    * chain re-evaluates early hops 2^h times (see i_graph_bfs's notes). */
   private[graft] def bfsDist(s: SparkSession, d: String): DataFrame =
     Q.artifact(s, d, "gBfsDist") {
       val edges = supEdges(s, d)
-      val nodes = supDeg(s, d).select(col("node"))
-      var cur = Q.materialize(s, d, "gBfs_0") {
-        nodes.filter(col("node") % 50 === 0).withColumn("dist", lit(0))
-      }
-      for (h <- 1 to 4) {
-        val next = cur.filter(col("dist") === h - 1)
+      val seeds = supDeg(s, d).select(col("node"))
+        .filter(col("node") % 50 === 0).withColumn("dist", lit(0))
+      Q.rounds("gBfs", seeds, 4) { (cur, h) =>
+        cur.union(cur.filter(col("dist") === h - 1)
           .join(edges, col("node") === col("src"))
           .select(col("dst").as("node")).distinct()
           .join(cur.select(col("node")), Seq("node"), "left_anti")
-          .withColumn("dist", lit(h))
-        cur = Q.materialize(s, d, s"gBfs_$h")(cur.union(next))
-      }
-      cur
+          .withColumn("dist", lit(h)))
+      }.last
     }
+
+  /** PageRank over the supported graph, 5 lazy iterations (see
+    * i_graph_pagerank's notes): teleport mass restarts only at the
+    * nodes where `seed` holds (`lit(true)`: uniformly), the initial mass
+    * spreads over them the same way, and the top 20 are returned. A
+    * literal-true seed folds away in the optimizer, so both rows plan
+    * as their own hand-written chains did. */
+  private def pagerank(s: SparkSession, d: String, seed: Column): DataFrame = {
+    val edges = supEdges(s, d)
+    val deg = supDeg(s, d)
+    val nsDf = deg.filter(seed).agg(count(lit(1)).cast("double").as("ns"))
+    def tele(mass: Double) = when(seed, lit(mass) / col("ns")).otherwise(lit(0.0))
+    val pr0 = deg.crossJoin(broadcast(nsDf))
+      .select(col("node"), col("deg"), tele(1.0).as("pr"))
+    (1 to 5).foldLeft(pr0) { (pr, _) =>
+      pr.join(edges, pr("node") === edges("src"))
+        .select(col("dst").as("node"), (col("pr") / col("deg")).as("c"))
+        .groupBy(col("node")).agg(decSum18(col("c")).as("s"))
+        .join(deg, "node").crossJoin(broadcast(nsDf))
+        .select(col("node"), col("deg"),
+          snap12(tele(0.15) + lit(0.85) * col("s")).as("pr"))
+    }.orderBy(col("pr").desc, col("node")).limit(20)
+      .select(col("node"), col("deg"), col("pr"))
+  }
+
+  /** Oracle twin of [[pagerank]], the seed a predicate on `sdeg.node`. */
+  private def pagerankSql(seed: String): String = {
+    def tele(mass: String) =
+      s"CASE WHEN $seed THEN $mass / (SELECT ns FROM nn) ELSE CAST(0 AS DOUBLE) END"
+    val iter = (k: Int) =>
+      s"""p$k AS (
+         |  SELECT c.node, sdeg.deg,
+         |    ${dSnap12(s"${tele("0.15")} + 0.85 * c.s")} AS pr
+         |  FROM (SELECT e.dst AS node, ${dSum18("p.pr / p.deg")} AS s
+         |        FROM p${k - 1} p JOIN sedges e ON p.node = e.src
+         |        GROUP BY e.dst) c
+         |  JOIN sdeg ON sdeg.node = c.node)""".stripMargin
+    s"""$supSql,
+       |nn AS (SELECT CAST(COUNT(*) AS DOUBLE) AS ns FROM sdeg WHERE $seed),
+       |p0 AS (SELECT node, deg, ${tele("1.0")} AS pr FROM sdeg),
+       |${(1 to 5).map(iter).mkString(",\n")}
+       |SELECT node, deg, pr FROM p5
+       |ORDER BY pr DESC, node LIMIT 20""".stripMargin
+  }
+
+  /** The k of i_graph_kcore, and the peel rounds its oracle unrolls. */
+  private final val KcoreK = 3
+  private final val KcoreUnroll = 14
+
+  /** Peel `keep` (node, cdeg) against the edge table `(src, dst)` until
+    * no node with in-subgraph degree < [[KcoreK]] is left — the gkc_*
+    * rounds of [[Q.rounds]], probed by survivor count; more than `max`
+    * peels fail with [[Q.FixpointNotReached]]. */
+  private[graft] def kcorePeel(edges: DataFrame, keep: DataFrame, max: Int): DataFrame =
+    Q.rounds("gkc", keep, max, Some(_.count())) { (k, _) =>
+      edges
+        .join(k.select(col("node").as("ka")), col("src") === col("ka"))
+        .join(k.select(col("node").as("kb")), col("dst") === col("kb"))
+        .groupBy(col("src").as("node")).agg(count(lit(1)).as("cdeg"))
+        .filter(col("cdeg") >= KcoreK)
+    }.last
 
   /** Synchronous-LPA labels after 4 fixed iterations over an edge table
     * `(src, dst)` and its BIGINT vote weight `w`: each node adopts the
     * neighbor label of greatest summed weight, ties to the SMALLEST
-    * label. Memoized as `memo` and materialized per iteration
-    * (`${prefix}_0..4`); shared by the community census, the modularity
+    * label. Memoized as `memo`, 4 [[Q.rounds]] named
+    * `${prefix}_0..4`; shared by the community census, the modularity
     * score (unit weights — see i_graph_community_lpa's determinism
     * notes) and the support-weighted row. */
   private def lpaLabels(s: SparkSession, d: String, memo: String, prefix: String)
@@ -292,24 +349,17 @@ object GraphOps {
     Q.artifact(s, d, memo) {
       val e = edges
       val nodes = supDeg(s, d).select(col("node"))
-      var l = Q.materialize(s, d, s"${prefix}_0") {
-        nodes.withColumn("lbl", col("node"))
-      }
-      for (i <- 1 to 4) {
-        val cnt = e.join(l, e("dst") === l("node"))
+      val wMax = org.apache.spark.sql.expressions.Window.partitionBy(col("n2"))
+      Q.rounds(prefix, nodes.withColumn("lbl", col("node")), 4) { (l, _) =>
+        val best = e.join(l, e("dst") === l("node"))
           .groupBy(e("src").as("n2"), col("lbl"))
           .agg(sum(w).as("wt"))
-        val wMax = org.apache.spark.sql.expressions.Window.partitionBy(col("n2"))
-        val best = cnt.withColumn("mx", max(col("wt")).over(wMax))
+          .withColumn("mx", max(col("wt")).over(wMax))
           .filter(col("wt") === col("mx"))
           .groupBy(col("n2")).agg(min(col("lbl")).as("nlbl"))
-        l = Q.materialize(s, d, s"${prefix}_$i") {
-          nodes.join(best, nodes("node") === best("n2"), "left")
-            .select(nodes("node"),
-              coalesce(col("nlbl"), nodes("node")).as("lbl"))
-        }
-      }
-      l
+        nodes.join(best, nodes("node") === best("n2"), "left")
+          .select(nodes("node"), coalesce(col("nlbl"), nodes("node")).as("lbl"))
+      }.last
     }
 
   /** The unit-weight [[lpaLabels]] over [[supEdges]]. */
@@ -425,38 +475,8 @@ object GraphOps {
     // per-iteration 1e-12 rank snap re-aligns both engines every round,
     // making a persistent divergence require a midpoint hit in the
     // final iteration specifically.
-    Q("i_graph_pagerank", (s, d) => {
-      val edges = supEdges(s, d)
-      val deg = supDeg(s, d)
-      val nDf = deg.agg(count(lit(1)).cast("double").as("n"))
-      var pr = deg.crossJoin(broadcast(nDf))
-        .select(col("node"), col("deg"), (lit(1.0) / col("n")).as("pr"))
-      for (_ <- 1 to 5) {
-        val contrib = pr.join(edges, pr("node") === edges("src"))
-          .select(col("dst").as("node"), (col("pr") / col("deg")).as("c"))
-        pr = contrib.groupBy(col("node")).agg(decSum18(col("c")).as("s"))
-          .join(deg, "node").crossJoin(broadcast(nDf))
-          .select(col("node"), col("deg"),
-            snap12(lit(0.15) / col("n") + lit(0.85) * col("s")).as("pr"))
-      }
-      pr.orderBy(col("pr").desc, col("node")).limit(20)
-        .select(col("node"), col("deg"), col("pr"))
-    }, Some {
-      val iter = (k: Int) =>
-        s"""p$k AS (
-           |  SELECT c.node, sdeg.deg,
-           |    ${dSnap12(s"0.15 / (SELECT n FROM nn) + 0.85 * c.s")} AS pr
-           |  FROM (SELECT e.dst AS node, ${dSum18("p.pr / p.deg")} AS s
-           |        FROM p${k - 1} p JOIN sedges e ON p.node = e.src
-           |        GROUP BY e.dst) c
-           |  JOIN sdeg ON sdeg.node = c.node)""".stripMargin
-      s"""$supSql,
-         |nn AS (SELECT CAST(COUNT(*) AS DOUBLE) AS n FROM sdeg),
-         |p0 AS (SELECT node, deg, 1.0 / (SELECT n FROM nn) AS pr FROM sdeg),
-         |${(1 to 5).map(iter).mkString(",\n")}
-         |SELECT node, deg, pr FROM p5
-         |ORDER BY pr DESC, node LIMIT 20""".stripMargin
-    }),
+    Q("i_graph_pagerank", (s, d) => pagerank(s, d, lit(true)),
+      Some(pagerankSql("TRUE"))),
 
     // Neighbor-set similarity on the SUPPORTED co-purchase graph:
     // Jaccard of repeat-co-purchase neighbor sets, top 20. One keyed
@@ -494,50 +514,21 @@ object GraphOps {
     // decomposition at fixed k). Each peel round is one keyed equi-join
     // pair (edge endpoints against the surviving node set) + one
     // hash-agg — shuffles on graph keys only, nothing broadcast or
-    // driver-sized; per-round materialization truncates lineage exactly
-    // like CcEngine. Convergence = survivor count unchanged (the set
+    // driver-sized; the rounds run on the Q.rounds loop like
+    // CcEngine's. Convergence = survivor count unchanged (the set
     // shrinks monotonically, so count equality IS set equality, and the
     // probe is a one-row aggregate). The oracle unrolls 14 peel rounds —
     // peeling is a no-op past its fixpoint, so parity requires only
-    // that the graded corpora converge within 14 (ProbeGcc measures
-    // fixpoint at 1 / 10 / 2 rounds for sf0.001 / 0.01 / 0.1; the
-    // `[kcore]` stderr line makes the bound observable — raise the
-    // unroll if a denser corpus ever needs more). Output is the
-    // in-core degree histogram — set-determined, label-free.
+    // that the graded corpora converge within 14 (fixpoint at 1 / 10 /
+    // 2 rounds for sf0.001 / 0.01 / 0.1), and `max = 14` makes a corpus
+    // that needs more fail with FIXPOINT_NOT_REACHED instead of
+    // diverging from the oracle (raise both in lockstep if a denser
+    // corpus ever trips it). Output is the in-core degree histogram —
+    // set-determined, label-free.
     Q("i_graph_kcore", (s, d) => {
-      val k = 3
       val core = Q.artifact(s, d, "gKcore") {
-        val edges = supEdges(s, d)
-        var keep = Q.materialize(s, d, "gkc_0") {
-          supDeg(s, d).filter(col("deg") >= k)
-            .select(col("node"), col("deg").as("cdeg"))
-        }
-        var n = keep.count()
-        var converged = false
-        var it = 0
-        while (!converged && it < 20) {
-          val next = Q.materialize(s, d, s"gkc_${it + 1}") {
-            edges
-              .join(keep.select(col("node").as("ka")), col("src") === col("ka"))
-              .join(keep.select(col("node").as("kb")), col("dst") === col("kb"))
-              .groupBy(col("src").as("node")).agg(count(lit(1)).as("cdeg"))
-              .filter(col("cdeg") >= k)
-          }
-          val n2 = next.count()
-          converged = n2 == n
-          n = n2
-          keep = next
-          it += 1
-        }
-        // the oracle unrolls 14 peel rounds — a corpus needing more
-        // would silently diverge, so fail LOUDLY instead of returning a
-        // result the oracle cannot reproduce (raise both bounds
-        // together if a denser corpus ever trips this)
-        System.err.println(s"[kcore] fixpoint after $it rounds ($n nodes)")
-        require(it <= 14,
-          s"k-core needed $it peel rounds but the oracle unrolls only 14 " +
-            "— raise the oracle unroll and this bound in lockstep")
-        keep
+        kcorePeel(supEdges(s, d), supDeg(s, d).filter(col("deg") >= KcoreK)
+          .select(col("node"), col("deg").as("cdeg")), KcoreUnroll)
       }
       core.groupBy(col("cdeg").as("core_deg"))
         .agg(count(lit(1)).as("n_nodes"))
@@ -557,8 +548,8 @@ object GraphOps {
            |kc$i AS MATERIALIZED (SELECT node, cdeg FROM kd$i WHERE cdeg >= 3)""".stripMargin
       s"""$supSql,
          |kc0 AS (SELECT node, deg AS cdeg FROM sdeg WHERE deg >= 3),
-         |${(1 to 14).map(peel).mkString(",\n")}
-         |SELECT cdeg AS core_deg, COUNT(*) AS n_nodes FROM kc14
+         |${(1 to KcoreUnroll).map(peel).mkString(",\n")}
+         |SELECT cdeg AS core_deg, COUNT(*) AS n_nodes FROM kc$KcoreUnroll
          |GROUP BY 1 ORDER BY core_deg""".stripMargin
     }),
 
@@ -653,11 +644,8 @@ object GraphOps {
     Q("i_graph_cc", (s, d) => {
       val labels = Q.artifact(s, d, "gccLabels") {
         val edges = supEdges(s, d)
-        val l0 = Q.materialize(s, d, "gcc_labels_0") {
-          edges.select(col("src").as("nid")).distinct()
-            .withColumn("rep", col("nid"))
-        }
-        CcEngine.propagate(s, d, "gcc", edges, l0)
+        CcEngine.propagate("gcc", edges, edges.select(col("src").as("nid")).distinct()
+          .withColumn("rep", col("nid")))
       }
       labels.groupBy(col("rep")).agg(count(lit(1)).as("size"))
         .groupBy(col("size")).agg(count(lit(1)).as("n_components"))
@@ -688,46 +676,8 @@ object GraphOps {
     // 5 hops of every seed hold exactly 0.0 mass in both engines
     // (exact zeros propagate exactly), and the node-id tiebreak totals
     // the order among them.
-    Q("i_graph_pagerank_seeded", (s, d) => {
-      val edges = supEdges(s, d)
-      val deg = supDeg(s, d)
-      val isSeed = col("node") % 10 === 0
-      val nsDf = deg.filter(isSeed).agg(count(lit(1)).cast("double").as("ns"))
-      var pr = deg.crossJoin(broadcast(nsDf))
-        .select(col("node"), col("deg"),
-          when(isSeed, lit(1.0) / col("ns")).otherwise(lit(0.0)).as("pr"))
-      for (_ <- 1 to 5) {
-        val contrib = pr.join(edges, pr("node") === edges("src"))
-          .select(col("dst").as("node"), (col("pr") / col("deg")).as("c"))
-        pr = contrib.groupBy(col("node")).agg(decSum18(col("c")).as("s"))
-          .join(deg, "node").crossJoin(broadcast(nsDf))
-          .select(col("node"), col("deg"),
-            snap12(when(isSeed, lit(0.15) / col("ns")).otherwise(lit(0.0))
-              + lit(0.85) * col("s")).as("pr"))
-      }
-      pr.orderBy(col("pr").desc, col("node")).limit(20)
-        .select(col("node"), col("deg"), col("pr"))
-    }, Some {
-      val tele = "CASE WHEN c.node % 10 = 0" +
-        " THEN 0.15 / (SELECT ns FROM nn) ELSE CAST(0 AS DOUBLE) END"
-      val iter = (k: Int) =>
-        s"""p$k AS (
-           |  SELECT c.node, sdeg.deg,
-           |    ${dSnap12(s"$tele + 0.85 * c.s")} AS pr
-           |  FROM (SELECT e.dst AS node, ${dSum18("p.pr / p.deg")} AS s
-           |        FROM p${k - 1} p JOIN sedges e ON p.node = e.src
-           |        GROUP BY e.dst) c
-           |  JOIN sdeg ON sdeg.node = c.node)""".stripMargin
-      s"""$supSql,
-         |nn AS (SELECT CAST(COUNT(*) AS DOUBLE) AS ns FROM sdeg WHERE node % 10 = 0),
-         |p0 AS (SELECT node, deg,
-         |         CASE WHEN node % 10 = 0 THEN 1.0 / (SELECT ns FROM nn)
-         |              ELSE CAST(0 AS DOUBLE) END AS pr
-         |       FROM sdeg),
-         |${(1 to 5).map(iter).mkString(",\n")}
-         |SELECT node, deg, pr FROM p5
-         |ORDER BY pr DESC, node LIMIT 20""".stripMargin
-    }),
+    Q("i_graph_pagerank_seeded", (s, d) => pagerank(s, d, col("node") % 10 === 0),
+      Some(pagerankSql("sdeg.node % 10 = 0"))),
 
     // Support-WEIGHTED label propagation: neighbor votes are weighted
     // by co-purchase support (an edge seen in 5 orders outvotes 4 seen
@@ -1671,7 +1621,9 @@ object GraphOps {
       val nCnt = deg.crossJoin(broadcast(thr))
         .groupBy(col("q").as("q2"), col("k").as("k2"))
         .agg(sum(when(col("deg") > col("k"), 1L).otherwise(0L)).as("n_club"))
-      eCnt.join(nCnt, col("q") === col("q2"))
+      // both sides are 3 rows: the hint pins the build side, which AQE
+      // otherwise picks per execution (two plan shapes, warm compiles)
+      eCnt.join(broadcast(nCnt), col("q") === col("q2"))
         .select(col("q").as("quantile"), col("k").as("deg_threshold"),
           col("n_club"), col("e_club"),
           when(col("n_club") >= 2,

@@ -21,7 +21,7 @@ import Q._
   */
 object MixOps {
 
-  private def toks = split(col("text"), " ")
+  import Q.toks
 
   /** Deterministic round-to-nearest at 1e-6 (HALF_UP in both engines —
     * plain ROUND(double, 6) disagrees on half-boundary rationals). */
@@ -612,7 +612,7 @@ object MixOps {
     // window + aggregate, broadcast back over the corpus: one shuffle
     // on lang + one map-side join at any scale.
     Q("h_quality_quantile", (s, d) => {
-      val rt = split(col("text"), " ")
+      val rt = toks
       val nTok = size(rt).cast("double")
       val q = (lit(0.3) * (size(array_distinct(rt)) / nTok) +
         lit(0.4) * (lit(1.0) - size(filter(rt, x => x === "the" || x === "a")) / nTok) +
@@ -764,7 +764,7 @@ object MixOps {
     // sample (WindowGroupLimit-friendly). Quality is the proven
     // 1e-6-snapped expression.
     Q("h_curriculum_interleave", (s, d) => {
-      val rt = split(col("text"), " ")
+      val rt = toks
       val nTok = size(rt).cast("double")
       val q = (lit(0.3) * (size(array_distinct(rt)) / nTok) +
         lit(0.4) * (lit(1.0) - size(filter(rt, x => x === "the" || x === "a")) / nTok) +
@@ -810,7 +810,7 @@ object MixOps {
     // corpus scan, one source-keyed window, one range shuffle, one
     // rank-keyed join at any scale.
     Q("h_quality_qnorm", (s, d) => {
-      val rt = split(col("text"), " ")
+      val rt = toks
       val nTok = size(rt).cast("double")
       val q = (lit(0.3) * (size(array_distinct(rt)) / nTok) +
         lit(0.4) * (lit(1.0) - size(filter(rt, x => x === "the" || x === "a")) / nTok) +
@@ -920,7 +920,7 @@ object MixOps {
     // corpus at 100 TB); the mean quality reuses h_quality_score's
     // formula with exact decimal summation.
     Q("h_dataset_card", (s, d) => {
-      val rt = split(col("text"), " ")
+      val rt = toks
       val nTok = size(rt).cast("double")
       val q = (lit(0.3) * (size(array_distinct(rt)) / nTok) +
         lit(0.4) * (lit(1.0) - size(filter(rt, x => x === "the" || x === "a")) / nTok) +

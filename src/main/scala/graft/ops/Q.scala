@@ -25,7 +25,8 @@ final case class Q(
   * A checkpoint has one of two lifetimes. A pipeline artifact is built
   * by [[artifact]] (or written by [[fileArtifact]]), memoized and held
   * until [[releaseSession]]; [[materialize]] checkpoints one round of
-  * such a build (anywhere else it fails with [[OutsideBuild]]). A
+  * such a build (anywhere else it fails with [[OutsideBuild]]), and
+  * [[rounds]] drives an iterative build's rounds. A
   * scratch ([[scratch]]) is capped at [[ScratchCap]] per (session,
   * thread), so only a later scratch of the thread that built it can
   * evict it. Every eager checkpoint goes through one private path,
@@ -53,6 +54,11 @@ object Q {
 
   /** Order-independent mean via exact sum / count. */
   def decAvg(c: Column): Column = decSum(c) / count(lit(1))
+
+  /** THE tokenizer: the `text` column split on single spaces — the same
+    * tokens as the oracles' `string_split(text, ' ')` (Spark `split` and
+    * DuckDB both keep the empty tokens of trailing or doubled spaces). */
+  def toks: Column = split(col("text"), " ")
 
   def r4(c: Column): Column = round(c, 4)
   def r6(c: Column): Column = round(c, 6)
@@ -318,8 +324,9 @@ object Q {
     * (session, store, input dir, name) and stored in the session's
     * artifact store ([[materialize]]'s two stores), with one `[artifact]`
     * line. A build that ends on one of its own [[materialize]] rounds
-    * (a BFS hop, an LPA or k-core round, the last CC round) hands that
-    * round over as the artifact: it is not stored a second time. */
+    * (`rounds(...).last`: a BFS hop, an LPA or k-core round, the last CC
+    * round) hands that round over as the artifact: it is not stored a
+    * second time. */
   def artifact(s: SparkSession, dir: String, name: String)
       (build: => DataFrame): DataFrame =
     memoized(s, dir, name) {
@@ -621,6 +628,47 @@ object Q {
     val out = store(s, dir, name)(df)
     b.head.rounds += out
     out
+  }
+
+  /** The named error of a [[rounds]] loop whose probe still changed
+    * after its last round. */
+  val FixpointNotReached = "FIXPOINT_NOT_REACHED"
+
+  /** The one fixpoint loop for iterative operators (CC, k-core, BFS,
+    * LPA, the HNSW beam, MMR). Round 0 is `init`; round i is
+    * `step(round i−1, i)`. Every round is checkpointed as `<name>_<i>`:
+    * a [[materialize]] round inside an [[artifact]] build (so a build
+    * that ends on `rounds(...).last` hands that round over), a
+    * [[scratch]] anywhere else. A round is read more than once by the
+    * next (a frontier and its visited set, a beam and its union), so an
+    * un-checkpointed chain would re-evaluate early rounds 2^i times.
+    *
+    * Without a `probe` the loop runs exactly `max` rounds. With one it
+    * stops at the first round whose probe equals the previous round's —
+    * the probe must be monotone in the rounds, so an unchanged value
+    * proves the fixpoint — and when `max` rounds pass with the probe
+    * still changing it fails with [[FixpointNotReached]] instead of
+    * returning an unconverged table. Returns every round, round 0 first. */
+  def rounds(name: String, init: DataFrame, max: Int,
+      probe: Option[DataFrame => Long] = None)
+      (step: (DataFrame, Int) => DataFrame): IndexedSeq[DataFrame] = {
+    require(max >= 1, s"rounds '$name': max $max < 1")
+    def keep(i: Int, df: DataFrame): DataFrame = buildStack.get.headOption match {
+      case Some(b) => materialize(df.sparkSession, b.key._3, s"${name}_$i")(df)
+      case None => scratch(s"${name}_$i")(df)
+    }
+    val out = scala.collection.mutable.ArrayBuffer(keep(0, init))
+    val seen = scala.collection.mutable.ArrayBuffer.empty[Long]
+    def fixed = seen.size >= 2 && seen.last == seen(seen.size - 2)
+    probe.foreach(seen += _(out.last))
+    while (out.size <= max && !fixed) {
+      out += keep(out.size, step(out.last, out.size))
+      probe.foreach(seen += _(out.last))
+    }
+    if (probe.nonEmpty && !fixed) throw new IllegalStateException(
+      s"$FixpointNotReached: '$name' still changed after $max rounds " +
+        s"(probe ${seen(seen.size - 2)} -> ${seen.last})")
+    out.toIndexedSeq
   }
 
   /** The session's artifact store: see [[materialize]]. */

@@ -18,7 +18,7 @@ import Q._
   */
 object TextOps {
 
-  private def toks = split(col("text"), " ")
+  import Q.toks
 
   /** Shared bigram-LM model artifacts — corpus bigram counts, the
     * first-token continuation histogram, and the unigram vocab size —
@@ -490,7 +490,7 @@ object TextOps {
     Q("h_substring_dup_spans", (s, d) => {
       val docs = Io.table(s, d, "documents")
         .repartition(s.sparkContext.defaultParallelism)
-      val n = docs.select(col("doc_id"), size(split(col("text"), " ")).as("n_tok"))
+      val n = docs.select(col("doc_id"), size(toks).as("n_tok"))
       // native positional n-gram Generator — one tight per-row loop;
       // the transform/slice/array_join HOF form it replaces evaluated
       // its lambdas interpreted per element
@@ -723,7 +723,7 @@ object TextOps {
     // All outputs are integers — nothing to snap.
     Q("h_feature_hashing", (s, d) => {
       val vocab = Io.table(s, d, "documents")
-        .select(explode(split(col("text"), " ")).as("token"))
+        .select(explode(toks).as("token"))
         .filter(col("token") =!= "")
         .groupBy(col("token")).agg(count(lit(1)).as("occ"))
       val hashed = vocab.select(col("token"), col("occ"),
@@ -770,7 +770,7 @@ object TextOps {
     // √n — bit-identical cross-engine.
     Q("h_watermark_detect", (s, d) => {
       val tf = Io.table(s, d, "documents")
-        .select(col("doc_id"), explode(split(col("text"), " ")).as("token"))
+        .select(col("doc_id"), explode(toks).as("token"))
         .filter(col("token") =!= "")
         .groupBy(col("doc_id"), col("token")).agg(count(lit(1)).as("occ"))
       val vocab = tf.groupBy(col("token")).agg(count(lit(1)).as("_df"))
@@ -824,7 +824,7 @@ object TextOps {
     // aggregation shuffles one row per token.
     Q("h_vocab_topk", (s, d) => {
       Io.table(s, d, "documents")
-        .select(col("doc_id"), explode(split(col("text"), " ")).as("token"))
+        .select(col("doc_id"), explode(toks).as("token"))
         .groupBy(col("token"))
         .agg(countDistinct(col("doc_id")).as("doc_freq"),
           count(lit(1)).as("occurrences"))
@@ -877,7 +877,7 @@ object TextOps {
     // scan parallelism with no shuffle until a downstream groupBy.
     Q("h_text_chunk", (s, d) => {
       Io.table(s, d, "documents").filter(col("doc_id") < 200)
-        .withColumn("toks", split(col("text"), " "))
+        .withColumn("toks", toks)
         .select(col("doc_id"), col("toks"),
           explode(sequence(lit(0), size(col("toks")) - 1, lit(6))).as("st"))
         .select(col("doc_id"),
@@ -906,7 +906,7 @@ object TextOps {
     // row in, one row out); at 100 TB this is a map-side scan.
     Q("h_span_corruption", (s, d) => {
       Io.table(s, d, "documents").filter(col("doc_id") < 200)
-        .withColumn("toks", split(col("text"), " "))
+        .withColumn("toks", toks)
         .withColumn("nb", ceil(size(col("toks")) / lit(3.0)).cast("int"))
         .select(col("doc_id"),
           expr("""array_join(transform(sequence(0, nb - 1), b ->
@@ -1159,7 +1159,7 @@ object TextOps {
     Q("h_cooccur_pairs", (s, d) => {
       val t = Io.table(s, d, "documents")
         .select(col("doc_id"),
-          explode(array_distinct(split(col("text"), " "))).as("tok"))
+          explode(array_distinct(toks)).as("tok"))
       t.as("a").join(t.as("b"),
           col("a.doc_id") === col("b.doc_id") && col("a.tok") < col("b.tok"))
         .groupBy(col("a.tok").as("tok_a"), col("b.tok").as("tok_b"))

@@ -271,7 +271,7 @@ object TpchOps {
     // nations) is referenced TWICE — main block + global-average scalar
     // subquery — and Catalyst plans two full independent copies of its
     // ps→supplier→nation join+aggregate chain (no ReusedExchange, same
-    // pathology q02 had with ps; verified in the r7 ProbeTq plan). So
+    // pathology q02 had with ps; seen in the executed plan). So
     // the Spark side materializes `v` once as a dir-scoped artifact
     // (part-sized, bounded at any SF) and both references scan it; the
     // oracle inlines the identical derivation text. The `v` body and

@@ -287,14 +287,12 @@ object VectorOps {
         Seq("band", "band_val"))
       .filter(col("q_id") =!= col("node"))
       .select("q_id", "node").distinct()
-    val visited0 = Q.scratch(s"${prefix}0")(score(seeds))
-    val visiteds = (1 to hnswH).scanLeft(visited0) { (vis, h) =>
+    val visiteds = Q.rounds(prefix, score(seeds), hnswH) { (vis, _) =>
       val beam = vis.withColumn("rn", row_number().over(wBeam))
         .filter(col("rn") <= hnswB).select(col("q_id"), col("node"))
       val cand = beam.join(edges.withColumnRenamed("src", "node"), "node")
         .select(col("q_id"), col("dst").as("node")).distinct()
-      Q.scratch(s"$prefix$h")(vis.unionByName(score(cand))
-        .select("q_id", "node", "sim").distinct())
+      vis.unionByName(score(cand)).select("q_id", "node", "sim").distinct()
     }
     (visiteds, q, en)
   }
@@ -2008,10 +2006,9 @@ object VectorOps {
     // distributed retrieval shape); fusion touches 100 rows.
     Q("h_rrf_fusion", (s, d) => {
       val terms = Seq("spark", "join", "stream")
-      val toks = split(col("text"), " ")
       val lexTop = Io.table(s, d, "documents")
         .select(col("doc_id"),
-          terms.map(t => size(filter(toks, x => x === t)).cast("long"))
+          terms.map(t => size(filter(Q.toks, x => x === t)).cast("long"))
             .reduce(_ + _).as("lex_score"))
         .filter(col("lex_score") > 0)
         .orderBy(col("lex_score").desc, col("doc_id")).limit(50)
@@ -2084,13 +2081,12 @@ object VectorOps {
     Q("h_mmr_rerank", (s, d) => {
       val cand = mmrCand(s, d).select(col("doc_id"), col("rel_u"))
       val pairs = mmrPairs(s, d)
-      def pick(selected: Vector[DataFrame], k: Int): DataFrame =
-        if (selected.isEmpty)
+      def pick(selected: Option[DataFrame], k: Int): DataFrame = selected match {
+        case None =>
           cand.select(lit(k).as("step"), col("doc_id"),
               (lit(7L) * col("rel_u")).as("score_u10"))
             .orderBy(col("score_u10").desc, col("doc_id")).limit(1)
-        else {
-          val sel = selected.map(_.select(col("doc_id"))).reduce(_ unionByName _)
+        case Some(sel) =>
           val pen = pairs
             .join(sel.select(col("doc_id").as("sb")), col("b") === col("sb"))
             .groupBy(col("a")).agg(max(col("sim_u")).as("pen_u"))
@@ -2102,15 +2098,13 @@ object VectorOps {
               (lit(7L) * col("rel_u") - lit(3L) * col("pen_u")).as("score_u10"))
             .orderBy(col("score_u10").desc, col("doc_id")).limit(1)
         }
-      // each pick is a scratch (r15 — the i_graph_bfs lesson): step k
-      // references EVERY earlier pick (anti-join + penalty union), so
-      // without per-step checkpoints pick 1's subtree re-evaluates
-      // 2^4 times through pick 5 and the final union — dozens of tiny
-      // stages over 1-row frames. Each checkpoint is a single row.
-      var picks = Vector.empty[DataFrame]
-      for (k <- 1 to 5)
-        picks = picks :+ Q.scratch(s"mmrPick$k")(pick(picks, k))
-      picks.reduce(_ unionByName _).orderBy("step")
+      // the picks so far are one Q.rounds state (a scratch per round —
+      // the i_graph_bfs lesson): pick k reads EVERY earlier pick
+      // (anti-join + penalty), so without per-round checkpoints pick 1's
+      // subtree re-evaluates 2^4 times through pick 5. Round i holds
+      // picks 1..i+1 — ≤ 5 rows.
+      Q.rounds("mmr", pick(None, 1), 4)((sel, i) => sel.unionByName(pick(Some(sel), i + 1)))
+        .last.orderBy("step")
     }, Some {
       def sk(k: Int): String =
         (1 to k).map(j => s"SELECT doc_id FROM p$j").mkString(" UNION ALL ")

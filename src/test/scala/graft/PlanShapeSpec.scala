@@ -686,7 +686,7 @@ class PlanShapeSpec extends AnyFunSuite {
     // v (per-part inventory value) is referenced twice — the main block
     // and the global-average threshold subquery. Catalyst planned two
     // full independent ps→supplier→nation join+aggregate chains for it
-    // (r7 ProbeTq plan; no ReusedExchange because column pruning gives
+    // (seen in its executed plan; no ReusedExchange because column pruning gives
     // the branches different schemas). With v materialized once per
     // corpus, the executed plan must contain NO supplier/nation scan at
     // all — both references scan the artifact.
@@ -750,7 +750,8 @@ class PlanShapeSpec extends AnyFunSuite {
     // spark.sql.cbo.{enabled,joinReorder.enabled} with the SAME stats
     // must rebuild the tree so the filtered dim chain joins first and
     // the big fact attaches last (outermost join = the lineitem
-    // attach). Probed deterministic on this build (ProbeCbo).
+    // attach). Deterministic on this build: the assertions below read
+    // the optimized plan before and after the flip.
     for (t <- Seq("lineitem", "orders", "customer", "nation"))
       spark.read.parquet(s"$sf/$t.parquet")
         .write.mode("overwrite").saveAsTable(s"cbo_$t")
@@ -1440,7 +1441,7 @@ class PlanShapeSpec extends AnyFunSuite {
     // justifies, not the query name alone — a future unbounded global
     // window added to a whitelisted query now fails this gate instead
     // of hiding behind the name's existing justification. The counts
-    // were measured from the current plans (tools ProbeWinCount) and
+    // were counted in the current plans (this test's own sweep) and
     // each is tied to a stated construction bound.
     val bounded = Map[String, (Int, String)](
       // the cumulative gain over the ≤10 decile census

@@ -1,6 +1,7 @@
 package graft
 
 import graft.ops.Q
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -109,19 +110,100 @@ class ScratchSpec extends AnyFunSuite {
       assert(Q.artifact(s, sf, "spec_inside")(s.range(0, 99).toDF()) eq art)
       assert(Q.trackedArtifacts(s) === Seq(rddId(art)))
       // a build that ends on its own materialize round hands that round
-      // over: it tracks exactly its rounds, not a second checkpoint
-      val before = Q.trackedArtifacts(s)
-      val looped = Q.artifact(s, sf, "spec_rounds") {
+      // over: it tracks exactly its rounds, not a second checkpoint —
+      // by hand, or as the last round of Q.rounds
+      def byHand = {
         var r = Q.materialize(s, sf, "spec_round_0")(s.range(0, 10).toDF())
         for (i <- 1 to 2)
           r = Q.materialize(s, sf, s"spec_round_$i")(r.filter(col("id") >= i))
         r
       }
-      val rounds = Q.trackedArtifacts(s).drop(before.size)
-      assert(rounds.size === 3, s"tracked ${rounds.size} checkpoints for 3 rounds")
-      assert(rounds.last === rddId(looped))
-      assert(looped.count() === 8)
+      def driven = Q.rounds("spec_driven", s.range(0, 10).toDF(), 2)(
+        (r, i) => r.filter(col("id") >= i)).last
+      for ((name, build) <- Seq[(String, () => DataFrame)](
+          "spec_rounds" -> (() => byHand), "spec_rounds_driven" -> (() => driven))) {
+        val before = Q.trackedArtifacts(s)
+        val looped = Q.artifact(s, sf, name)(build())
+        val rounds = Q.trackedArtifacts(s).drop(before.size)
+        assert(rounds.size === 3, s"$name tracked ${rounds.size} checkpoints for 3 rounds")
+        assert(rounds.last === rddId(looped))
+        assert(looped.count() === 8)
+      }
+      // outside a build the same rounds are scratch
+      val (arts, scr) = (Q.trackedArtifacts(s), Q.trackedScratch(s))
+      assert(driven.count() === 8)
+      assert(Q.trackedArtifacts(s) === arts)
+      assert(Q.trackedScratch(s).size === scr.size + 3)
     } finally Q.releaseSession(s)
+  }
+
+  test("fixed-round driver returns max + 1 rounds, round 0 first") {
+    val s = spark.newSession()
+    try {
+      val rs = Q.rounds("spec_fixed", s.range(0, 10).toDF(), 3)(
+        (r, i) => r.filter(col("id") >= i))
+      assert(rs.map(_.count()) === Seq(10, 9, 8, 7))
+      assert(Q.trackedScratch(s).size === 4)
+    } finally Q.releaseSession(s)
+  }
+
+  /** A symmetric edge table (src, dst) over the given undirected pairs. */
+  private def undirected(s: SparkSession, pairs: (Long, Long)*): DataFrame = {
+    import s.implicits._
+    (pairs ++ pairs.map(_.swap)).toDF("src", "dst")
+  }
+
+  test("CC that has not converged within max rounds fails with the named error") {
+    val s = spark.newSession()
+    try {
+      // an 8-node path needs 3 rounds (two relax+jump steps each) to
+      // label every node 0 and one more to see the label sum hold
+      val edges = undirected(s, (0 until 7).map(i => (i.toLong, i + 1L)): _*)
+      val labels0 = s.range(0, 8).select(col("id").as("nid"), col("id").as("rep"))
+      val e = intercept[IllegalStateException](
+        graft.ops.CcEngine.propagate("spec_cc", edges, labels0, maxIter = 1))
+      assert(e.getMessage.startsWith(Q.FixpointNotReached), e.getMessage)
+      assert(e.getMessage.contains("'spec_cc'") && e.getMessage.contains("28 -> 1"),
+        e.getMessage)
+      val done = graft.ops.CcEngine.propagate("spec_cc", edges, labels0)
+      assert(done.collect().map(_.getLong(1)).toSet === Set(0L))
+    } finally Q.releaseSession(s)
+  }
+
+  test("k-core that needs more peels than max fails with the named error") {
+    val s = spark.newSession()
+    try {
+      // a 4-clique with a tail 1-5, 2-5, 5-6, 3-6, 6-7: node 7 is cut
+      // before the peel, node 6 on peel 1, node 5 on peel 2, and peel 3
+      // sees the clique hold
+      val edges = undirected(s, (1L, 2L), (1L, 3L), (1L, 4L), (2L, 3L), (2L, 4L),
+        (3L, 4L), (1L, 5L), (2L, 5L), (5L, 6L), (3L, 6L), (6L, 7L))
+      val keep0 = edges.groupBy(col("src").as("node")).count()
+        .filter(col("count") >= 3).select(col("node"), col("count").as("cdeg"))
+      val e = intercept[IllegalStateException](
+        graft.ops.GraphOps.kcorePeel(edges, keep0, 2))
+      assert(e.getMessage.startsWith(Q.FixpointNotReached), e.getMessage)
+      assert(e.getMessage.contains("5 -> 4"), e.getMessage)
+      val core = graft.ops.GraphOps.kcorePeel(edges, keep0, 3)
+      assert(core.collect().map(_.getLong(0)).toSet === Set(1L, 2L, 3L, 4L))
+    } finally Q.releaseSession(s)
+  }
+
+  test("one fixpoint loop: no hand-named round checkpoint outside Q.scala") {
+    // an iterative build names its rounds through Q.rounds; a
+    // materialize or scratch call with an interpolated name is a
+    // hand-rolled round loop
+    import scala.jdk.CollectionConverters._
+    val hand = "Q\\.(materialize\\([^,]*,[^,]*, *|scratch\\()s\"".r
+    val found = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main/scala"))
+      .iterator().asScala
+      .filter(f => f.toString.endsWith(".scala") && f.getFileName.toString != "Q.scala")
+      .flatMap { f =>
+        val ls = java.nio.file.Files.readAllLines(f).asScala
+        ls.indices.filter(i => hand.findFirstIn(ls(i)).nonEmpty)
+          .map(i => s"${f.getFileName}:${i + 1}")
+      }.toSeq
+    assert(found.isEmpty, s"hand-named round checkpoints: ${found.mkString(", ")}")
   }
 
   test("one artifact call: outside Q.scala no hand-paired memo, artifact log or timed write") {
